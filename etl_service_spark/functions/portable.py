@@ -22,6 +22,8 @@ Spark-side expressions are plain SQL strings usable with F.expr()
 
 from __future__ import annotations
 
+import threading
+
 HASH_MOD = 1_000_000_007
 HASH_SEED = 7
 HASH_MULT = 31
@@ -211,12 +213,12 @@ def staging_dir(spark) -> str:
 
 
 def session_token(spark) -> str:
-    """Session-unique cache-key component for the staged-relation
-    memos. ``id(spark)`` is NOT safe: CPython recycles addresses, so a
-    new session allocated where a stopped one lived would alias the
-    old cache entries and return temp-view names that only existed in
-    the dead session. A uuid pinned on the session object dies with
-    it."""
+    """Session-unique cache-key component for per-session registries
+    (queries.views). ``id(spark)`` is NOT safe: CPython recycles
+    addresses, so a new session allocated where a stopped one lived
+    would alias the old cache entries and return temp-view names that
+    only existed in the dead session. A uuid pinned on the session
+    object dies with it."""
     import uuid as _uuid
 
     tok = getattr(spark, "_etl_stage_token", None)
@@ -224,6 +226,9 @@ def session_token(spark) -> str:
         tok = _uuid.uuid4().hex
         spark._etl_stage_token = tok
     return tok
+
+
+NO_FILES = "<no-files>"
 
 
 def lineage_key(df) -> tuple:
@@ -238,7 +243,7 @@ def lineage_key(df) -> tuple:
     import uuid as _uuid
 
     files = tuple(sorted(df.inputFiles()))
-    return files if files else ("<no-files>", _uuid.uuid4().hex)
+    return files if files else (NO_FILES, _uuid.uuid4().hex)
 
 
 def stage_name(prefix: str, key: tuple) -> str:
@@ -249,8 +254,8 @@ def stage_name(prefix: str, key: tuple) -> str:
     silently serve each other's rows; with content addressing, sessions
     share a path exactly when they stage identical content (the shared
     staging-table shape the conf advertises), and different content
-    always gets a different path. Pass the cache key MINUS the session
-    id component."""
+    always gets a different path. Pass the ``memo`` key (it carries no
+    session component)."""
     import hashlib
 
     digest = hashlib.sha1(repr(key).encode()).hexdigest()[:12]
@@ -260,9 +265,9 @@ def stage_name(prefix: str, key: tuple) -> str:
 def stage_df(df, name: str):
     """Materialize a staging relation with truncated lineage — via
     parquet under ``STAGING_DIR_CONF`` when configured, else
-    localCheckpoint. Callers that memoize the result must include
-    ``staging_dir(spark)`` in their cache key so flipping the conf
-    re-stages instead of returning the old backend's relation."""
+    localCheckpoint. ``memo`` keys include ``staging_dir(spark)``, so
+    flipping the conf re-stages instead of returning the old backend's
+    relation."""
     import os
 
     spark = df.sparkSession
@@ -274,29 +279,99 @@ def stage_df(df, name: str):
     return df.localCheckpoint(eager=True)
 
 
-_STAGE_VIEW_CACHE: dict[tuple, str] = {}
+# The staging memo: the ONLY cache of staged relations and other
+# per-corpus build products. Staging exists because Catalyst inlines
+# CTEs (a relation referenced twice is computed twice) and the cache
+# manager cannot match plans containing lambdas, so persist() alone
+# does not stop the re-derivation; a materialized relation does.
+#
+# One dict per SparkSession, pinned on the session object like
+# session_token, so entries die with the session:
+#     (kind, params) -> ((lineage, staging dir), value, release)
+# i.e. the cache key is (kind, params, lineage_key(src), staging dir),
+# with ONE entry kept per (kind, params). That is the eviction rule:
+# storing a new lineage (or backend) releases the old entry's value
+# (drops its temp view, unpersists its frames) — a session re-pointed
+# at new data never asks for the old relation again.
+#
+# _MEMO_LOCK guards dict access only. Builds run outside it, under a
+# per-(kind, params) gate: concurrent orchestrator steps building
+# different relations never wait on each other, and two callers of one
+# relation build it once (the parquet backend overwrites <dir>/<name>,
+# so a duplicate build could delete files the first caller is still
+# reading).
+_MEMO_LOCK = threading.Lock()
+
+
+def _session_memo(spark) -> tuple[dict, dict]:
+    with _MEMO_LOCK:
+        state = getattr(spark, "_etl_stage_memo", None)
+        if state is None:
+            state = spark._etl_stage_memo = ({}, {})
+        return state
+
+
+def memo_table(spark) -> dict:
+    """Snapshot of the session's staging memo (see above)."""
+    table = _session_memo(spark)[0]
+    with _MEMO_LOCK:
+        return dict(table)
+
+
+def memo(spark, kind: str, params: tuple, src, build, release=None):
+    """Memoized ``build(key)`` per key = (kind, params,
+    lineage_key(src), staging dir); builders use ``key`` for
+    content-addressed names.
+
+    ``src`` is the relation whose INPUT FILES identify the corpus. A
+    source without input files has no identity: its value is built
+    on every call and never stored (so never evicted while the caller
+    still uses it). Never pass a staged (localCheckpoint) relation for
+    that reason — key a dependent stage on its base view plus params.
+    ``release(value)`` runs when a newer lineage or backend evicts
+    the entry."""
+    params = tuple(params)
+    group = (kind, params)
+    ident = (lineage_key(src), staging_dir(spark))
+    if ident[0][0] == NO_FILES:
+        return build(group + ident)
+    table, gates = _session_memo(spark)
+    with _MEMO_LOCK:
+        gate = gates.setdefault(group, threading.Lock())
+    with gate:
+        with _MEMO_LOCK:
+            old = table.get(group)
+        if old is not None and old[0] == ident:
+            return old[1]
+        value = build(group + ident)
+        with _MEMO_LOCK:
+            table[group] = (ident, value, release)
+    if old is not None and old[2] is not None:
+        old[2](old[1])
+    return value
+
+
+def unpersist_frames(value) -> None:
+    """``memo`` release for a tuple holding persisted DataFrames."""
+    for item in value:
+        if hasattr(item, "unpersist"):
+            item.unpersist()
 
 
 def stage_view(spark, df_fn, kind: str, view: str, params: tuple = ()) -> str:
-    """Generic memoized staged relation over a registered input view —
-    the shared staging discipline (one materialization per (session,
-    kind, params, input lineage, staging backend), content-addressed
-    temp-view name) exposed for the plans layer; operator modules keep
-    their local caches."""
-    key = (
-        session_token(spark),
-        kind,
-        tuple(params),
-        lineage_key(spark.table(view)),
-        staging_dir(spark),
+    """Memoized staged relation over the registered input ``view``:
+    ``df_fn()`` materialized once per (kind, view + params, input
+    lineage, staging backend) and registered under a content-addressed
+    temp-view name, which is returned."""
+    def build(key):
+        name = stage_name(f"{kind}_{view}", key)
+        stage_df(df_fn(), name).createOrReplaceTempView(name)
+        return name
+
+    return memo(
+        spark, kind, (view,) + tuple(params), spark.table(view), build,
+        release=spark.catalog.dropTempView,
     )
-    cached = _STAGE_VIEW_CACHE.get(key)
-    if cached is not None:
-        return cached
-    name = stage_name(f"{kind}_{view}", key[1:])
-    stage_df(df_fn(), name).createOrReplaceTempView(name)
-    _STAGE_VIEW_CACHE[key] = name
-    return name
 
 
 def warm_udfs(spark) -> None:

@@ -38,10 +38,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import portable as P
 
-# (session id, view, input files) -> temp-view name of the materialized
-# shingle-hash-set relation; see materialize_hashsets.
-_HASHSET_CACHE: dict[tuple, str] = {}
-
 # ------------------------------------------------------------ fragments
 TOKENS = (P.spark_tokens("text"), P.duck_tokens("text"))
 # Shingles over a MATERIALIZED token column `t` — never inline the
@@ -117,9 +113,6 @@ def exact_dedup(spark: SparkSession) -> DataFrame:
     return spark.sql(exact_dedup_sql()[0])
 
 
-_TEXTHASH_CACHE: dict[tuple, str] = {}
-
-
 def materialize_texthash(spark: SparkSession, view: str = "documents") -> str:
     """Stage the full-text fingerprint relation (doc_id, source, h) —
     ONE Arrow poly-hash pass over the corpus, memoized per (session,
@@ -139,20 +132,14 @@ def materialize_texthash(spark: SparkSession, view: str = "documents") -> str:
     h), read by every dedup report."""
     from pyspark.sql import functions as F
 
-    src = spark.table(view)
-    key = (P.session_token(spark), view, P.lineage_key(src), P.staging_dir(spark))
-    cached = _TEXTHASH_CACHE.get(key)
-    if cached is not None:
-        return cached
-    rel = (
-        P.fan_out(src, light=True)
+    return P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.table(view), light=True)
         .select("doc_id", "source", F.lower(F.col("text")).alias("lt"))
-        .select("doc_id", "source", P.pd_poly_hash_udf()("lt").alias("h"))
+        .select("doc_id", "source", P.pd_poly_hash_udf()("lt").alias("h")),
+        "texthash",
+        view,
     )
-    name = P.stage_name(f"texthash_{view}", key[1:])
-    P.stage_df(rel, name).createOrReplaceTempView(name)
-    _TEXTHASH_CACHE[key] = name
-    return name
 
 
 def exact_dedup_staged(spark: SparkSession, view: str = "documents") -> DataFrame:
@@ -312,30 +299,15 @@ def materialize_hashsets(spark: SparkSession, view: str = "documents") -> str:
     """
     from pyspark.sql import functions as F
 
-    src = spark.table(view)
-    key = (P.session_token(spark), view, P.lineage_key(src), P.staging_dir(spark))
-    cached = _HASHSET_CACHE.get(key)
-    if cached is not None:
-        return cached
-
-    name = P.stage_name(f"hashsets_{view}", key[1:])
-    hs = (
-        P.fan_out(src)
+    return P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.table(view))
         .select("doc_id", P.pd_shingle_hash_sets_udf()("text").alias("hs"))
         .withColumn("n", F.size("hs"))
-        .filter(F.col("n") > 0)
+        .filter(F.col("n") > 0),
+        "hashsets",
+        view,
     )
-    df = P.stage_df(hs, name)
-    df.createOrReplaceTempView(name)
-    _HASHSET_CACHE[key] = name
-    return name
-
-
-# (session id, view, tau_frac, hashset relation) -> staged temp view of
-# the df-ordered PPJoin prefix posting list. Shared by ngram_jaccard and
-# (via dup_clusters) the clustering consumer; at 100 TB this is the
-# posting-list staging table written next to the fingerprint table.
-_PEXP_CACHE: dict[tuple, str] = {}
 
 
 def materialize_prefix_postings(
@@ -346,25 +318,25 @@ def materialize_prefix_postings(
     """Materialize the df-ascending-ordered prefix posting list ONCE
     (localCheckpoint + temp view). Spark inlines CTEs, so the posting
     relation referenced by BOTH sides of the candidate self-join would
-    otherwise re-run the explode + df-aggregate + per-doc window twice."""
-    hs_rel = materialize_hashsets(spark, view)
-    key = (P.session_token(spark), view, tau_frac, hs_rel, P.staging_dir(spark))
-    cached = _PEXP_CACHE.get(key)
-    if cached is not None:
-        return cached
+    otherwise re-run the explode + df-aggregate + per-doc window twice.
+    Shared by ngram_jaccard and (via dup_clusters) the clustering
+    consumer; at 100 TB this is the posting-list staging table written
+    next to the fingerprint table. Keyed on the base view, not on the
+    staged hash-set relation (which has no input files)."""
     num, den = tau_frac
-    body = P.bi_sql(
-        "WITH " + JACCARD_PREFIX_BODY + "\nSELECT doc_id, n, h FROM pexp",
-        hs_rel=hs_rel,
-        tau_num=str(num),
-        tau_den=str(den),
-        tau_den_m1=str(den - 1),
-        **_hashset_frags(view),
-    )[0]
-    name = P.stage_name("jaccard_pexp", key[1:])
-    P.stage_df(spark.sql(body), name).createOrReplaceTempView(name)
-    _PEXP_CACHE[key] = name
-    return name
+
+    def build() -> DataFrame:
+        body = P.bi_sql(
+            "WITH " + JACCARD_PREFIX_BODY + "\nSELECT doc_id, n, h FROM pexp",
+            hs_rel=materialize_hashsets(spark, view),
+            tau_num=str(num),
+            tau_den=str(den),
+            tau_den_m1=str(den - 1),
+            **_hashset_frags(view),
+        )[0]
+        return spark.sql(body)
+
+    return P.stage_view(spark, build, "jaccard_pexp", view, (num, den))
 
 
 def ngram_jaccard_staged_view(
@@ -435,10 +407,6 @@ def ngram_jaccard_staged(
     return spark.table(
         ngram_jaccard_staged_view(spark, tau, view, tau_frac, src_modulus)
     )
-
-
-def ngram_jaccard_pairs(spark: SparkSession, tau: float = 0.8) -> DataFrame:
-    return ngram_jaccard_staged(spark, tau)
 
 
 # ------------------------------------------- asymmetric containment dedup
@@ -671,10 +639,6 @@ def minhash_lsh_staged(
     return spark.table(
         P.stage_view(spark, build, "mh_pairs", view, (k, bands, str(tau)))
     )
-
-
-def minhash_lsh_pairs(spark: SparkSession, k: int = 16, bands: int = 8, tau: float = 0.8) -> DataFrame:
-    return minhash_lsh_staged(spark, k, bands, tau)
 
 
 # --------------------------------------------------------------- simhash
@@ -1115,24 +1079,18 @@ FROM doc
     return body(spark_ch, "DIV"), body(duck_ch, "//")
 
 
-_CHUNK_CACHE: dict[tuple, str] = {}
-
-
 def chunk_dedup_staged(spark: SparkSession, w: int = 8, view: str = "documents") -> DataFrame:
     """Spark path for chunk_dedup_sql over a STAGED chunk relation —
     same motivation as textops.bigram_lm_score_staged: the chunk CTE
     is referenced twice and CTE inlining would tokenize+chunk the
     corpus twice. Oracle stays the single-statement SQL."""
-    from . import textops  # noqa: F401  (shared staging conventions)
-
-    src = spark.table(view)
-    key = (P.session_token(spark), view, w, P.lineage_key(src), P.staging_dir(spark))
-    name = _CHUNK_CACHE.get(key)
-    if name is None:
-        name = P.stage_name(f"chunks_{view}", key[1:])
-        ch_sql = _chunk_explode_sql(w, view)[0]
-        P.stage_df(P.fan_out(spark.sql(ch_sql)), name).createOrReplaceTempView(name)
-        _CHUNK_CACHE[key] = name
+    name = P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.sql(_chunk_explode_sql(w, view)[0])),
+        "chunks",
+        view,
+        (w,),
+    )
 
     # Round 11: the doc-grain span REPORT is staged as well — the
     # chunk-frequency aggregate + join-back over the (large) chunk
@@ -1675,22 +1633,6 @@ def lsh_band_tuning_sql(
     )
 
 
-# (session id, kind, params, hashset relation, staging dir) -> staged
-# temp-view name; same sharing story as _HASHSET_CACHE.
-_BAND_STAGE_CACHE: dict[tuple, str] = {}
-
-
-def _stage_band_rel(spark: SparkSession, kind: str, params: tuple,
-                    hs_rel: str, df) -> str:
-    key = (P.session_token(spark), kind, params, hs_rel, P.staging_dir(spark))
-    cached = _BAND_STAGE_CACHE.get(key)
-    if cached is None:
-        cached = P.stage_name(kind, key[1:])
-        P.stage_df(df(), cached).createOrReplaceTempView(cached)
-        _BAND_STAGE_CACHE[key] = cached
-    return cached
-
-
 def lsh_band_tuning_staged(
     spark: SparkSession,
     k: int = 16,
@@ -1701,24 +1643,33 @@ def lsh_band_tuning_staged(
     src_modulus: int = 1,
 ) -> DataFrame:
     """Spark path: the signature aggregate and the exact truth pairs
-    are STAGED once per (session, params, hashset lineage) — Spark
+    are STAGED once per (session, params, corpus lineage) — Spark
     inlines CTEs and temp views, so the unstaged form re-runs the
     explode+MIN aggregate once per band config and the PPJoin verify
     once per report row (the same measured hazard materialize_hashsets
     documents). Stage names are content-addressed (params + lineage),
     so concurrent calls with different tau/k never clobber each other."""
-    hs_rel = materialize_hashsets(spark, view)
-    sig_rel = _stage_band_rel(
-        spark, "band_sig", (k, view), hs_rel,
+    sig_rel = P.stage_view(
+        spark,
         lambda: spark.sql(
-            P.bi_sql(_band_sig_sql(k), hs_rel=hs_rel, explode=EXPLODE)[0]
+            P.bi_sql(
+                _band_sig_sql(k),
+                hs_rel=materialize_hashsets(spark, view),
+                explode=EXPLODE,
+            )[0]
         ),
+        "band_sig",
+        view,
+        (k,),
     )
-    exact_rel = _stage_band_rel(
-        spark, "band_exact", (tau, view, src_modulus), hs_rel,
+    exact_rel = P.stage_view(
+        spark,
         lambda: ngram_jaccard_staged(
             spark, tau, view, src_modulus=src_modulus
         ).select("doc_a", "doc_b"),
+        "band_exact",
+        view,
+        (tau, src_modulus),
     )
     # the banded posting relation per config is staged too: the tail
     # references it 3x (mass + both hits sides) and CTE inlining would
@@ -1726,14 +1677,17 @@ def lsh_band_tuning_staged(
     bands_of = {}
     for b in band_configs:
         arr = _band_arr(k, b)[0]
-        bands_of[b] = _stage_band_rel(
-            spark, "band_bands", (k, b, view), hs_rel,
+        bands_of[b] = P.stage_view(
+            spark,
             lambda arr=arr: spark.sql(
                 "SELECT doc_id, band_key, "
                 "ROW_NUMBER() OVER (PARTITION BY band_key ORDER BY doc_id) AS rn "
                 f"FROM (SELECT doc_id, explode({arr}) AS band_key "
                 f"FROM {sig_rel}) e"
             ),
+            "band_bands",
+            view,
+            (k, b),
         )
     tail, _ = _band_tuning_tail(
         k, band_configs, cap_rows, src_modulus, bands_of=bands_of

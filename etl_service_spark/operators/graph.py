@@ -189,14 +189,6 @@ def connected_components_twophase(
     )
 
 
-# (session id, tau, pairs view) -> staged cluster assignment view. The
-# iterative label propagation (checkpoint + convergence probe per
-# round) re-running for every consumer would be like re-deriving a
-# staging table per reader; clusters are written once and joined from
-# there — same story as the pairs and fingerprint relations.
-_CLUSTERS_CACHE: dict[tuple, str] = {}
-
-
 def staged_pairs_view(spark: SparkSession, tau: float = 0.8) -> str:
     """Name of the staged near-dup pair view, shared by the clustering
     path, the triangle census and every other pair consumer. Round 11:
@@ -215,18 +207,21 @@ def dup_clusters(spark: SparkSession, tau: float = 0.8) -> DataFrame:
     memoized fingerprint relation with the other dedup consumers, and
     stages both the pair list and the cluster assignment — clustering
     consumes the pairs table and WRITES the clusters table; readers
-    like the training pipeline join the staged result)."""
+    like the training pipeline join the staged result). The iterative
+    label propagation (checkpoint + convergence probe per round) runs
+    once per (tau, corpus), keyed on the documents view — the staged
+    pair view has no input files to key on."""
     from ..functions import portable as P
 
-    name = staged_pairs_view(spark, tau)
-    ckey = (P.session_token(spark), tau, name)
-    cname = _CLUSTERS_CACHE.get(ckey)
-    if cname is None:
-        cname = P.stage_name("dup_clusters", ckey[1:])
-        cc = connected_components(spark.table(name))
-        P.stage_df(cc, cname).createOrReplaceTempView(cname)
-        _CLUSTERS_CACHE[ckey] = cname
-    return spark.table(cname)
+    return spark.table(
+        P.stage_view(
+            spark,
+            lambda: connected_components(spark.table(staged_pairs_view(spark, tau))),
+            "dup_clusters",
+            "documents",
+            (tau,),
+        )
+    )
 
 
 def dup_clusters_oracle_sql(tau: float = 0.8) -> str:
@@ -274,24 +269,14 @@ FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
 """
 
 
-# (session token, input lineage) -> (persisted contrib_src, persisted
-# nodes, node count). The SAME memoized-staging discipline as every
-# staged relation: exactly ONE pinned copy of the edge relation per
-# (session, data), shared by the plain and salted variants — per-call
-# persist + unpersist was measured to forfeit the cross-call cache
-# reuse (salted-after-plain 2.2 s vs 6.2 s at sf0.1), while never
-# unpersisting accumulated one pinned copy per call.
-_PR_EDGE_CACHE: dict[tuple, tuple] = {}
-
-
 def _broadcast_threshold_bytes(spark) -> int:
     """spark.sql.autoBroadcastJoinThreshold in BYTES, honoring byte-unit
     suffixes ('64MB', '1g', …) — ADVICE r11: a bare int() raises on
     suffixed values and silently fell back to 10 MiB, flipping the
     size-adaptive join branches away from the measured-fastest shape.
     Perf-only in every caller (values are join-strategy-independent).
-    -1 / unset disables auto-broadcast: return 0 so size gates fail
-    closed (nothing "fits")."""
+    -1 (auto-broadcast disabled) and unparseable values return 0, so
+    the size gates fail closed (nothing "fits") and pick SHUFFLE_HASH."""
     raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760"))
     s = raw.strip().lower()
     mult = 1
@@ -306,33 +291,27 @@ def _broadcast_threshold_bytes(spark) -> int:
     try:
         val = int(s) * mult
     except ValueError:
-        val = 10 * 1024 * 1024
+        return 0
     return max(0, val)
 
 
-def _evict_stale(cache: dict, key: tuple) -> None:
-    """Unpersist + drop every cache entry sharing ``key``'s session
-    token but holding a DIFFERENT lineage: a session that re-points its
-    views at new data (a new sf_dir) will never ask for the old edge
-    copy again, and without eviction each lineage switch pins another
-    full edge relation in executor memory for the session's lifetime
-    (round-10 ADVICE). Entries of OTHER live sessions are untouched."""
-    token = key[0]
-    for old in [k for k in cache if k[0] == token and k != key]:
-        for item in cache.pop(old):
-            if hasattr(item, "unpersist"):
-                item.unpersist()
-
-
 def _pagerank_edges(spark: SparkSession) -> tuple:
+    """(persisted contrib_src, persisted nodes, node count), memoized:
+    exactly ONE pinned copy of the edge relation per (session, data),
+    shared by the plain and salted variants — per-call persist +
+    unpersist was measured to forfeit the cross-call cache reuse
+    (salted-after-plain 2.2 s vs 6.2 s at sf0.1), while never
+    unpersisting accumulated one pinned copy per call."""
     from ..functions import portable as P
 
     pairs = spark.sql(PR_PAIRS_SQL)
-    key = (P.session_token(spark), P.lineage_key(pairs))
-    hit = _PR_EDGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _evict_stale(_PR_EDGE_CACHE, key)
+    return P.memo(
+        spark, "pr_edges", (), pairs, lambda _key: _build_pagerank_edges(pairs),
+        release=P.unpersist_frames,
+    )
+
+
+def _build_pagerank_edges(pairs: DataFrame) -> tuple:
     # customer and (offset) supplier ids live in disjoint ranges, so the
     # symmetric union of an already-DISTINCT pair set cannot contain
     # duplicates — no second distinct (saves a full shuffle+dedup over
@@ -355,9 +334,7 @@ def _pagerank_edges(spark: SparkSession) -> tuple:
     # denominator and the rank init); contrib_src is hash-partitioned
     # on a, so this distinct reuses the exchange
     nodes = contrib_src.select("a").distinct().persist()
-    hit = (contrib_src, nodes, nodes.count())
-    _PR_EDGE_CACHE[key] = hit
-    return hit
+    return contrib_src, nodes, nodes.count()
 
 
 def pagerank(
@@ -518,11 +495,15 @@ def triangle_stats(edges: DataFrame, a: str = "doc_a", b: str = "doc_b") -> Data
     # upstream filter/transform of `edges` are invisible to it, so two
     # different edge relations over the same files would map to the
     # same staged path and overwrite each other cross-session. Include
-    # the column pair and a digest of the analyzed edge plan.
+    # the column pair and a digest of the CANONICALIZED analyzed edge
+    # plan: canonicalization normalizes expression IDs, so two
+    # separately built but identical edge relations share one staged
+    # path (the unanalyzed plan cannot be canonicalized: unresolved
+    # attributes throw).
     import hashlib
 
     plan_digest = hashlib.sha1(
-        edges._jdf.queryExecution().analyzed().toString().encode()
+        edges._jdf.queryExecution().analyzed().canonicalized().toString().encode()
     ).hexdigest()[:12]
     lk = P.lineage_key(edges) + (a, b, plan_digest)
     raw = edges.select(F.col(a).alias("x"), F.col(b).alias("y"))
@@ -646,34 +627,27 @@ def degree_distribution_sql() -> tuple[str, str]:
 
 BFS_SEED_MOD = 97  # deterministic seed set: node % 97 == 0
 
-# (session token, pairs lineage) -> (persisted symmetric edges,
-# checkpointed seed distances, seed count). Same memoized-staging
-# discipline as _PR_EDGE_CACHE: ONE pinned copy of the edge relation
-# per (session, data) — the symmetric build + seed derivation was
-# ~2.0 s of graph_bfs_layers' 3.6 s at sf0.1 (round-9 verdict #6
-# profile), paid once per session instead of per call.
-_BFS_STAGE_CACHE: dict[tuple, tuple] = {}
-
-
 def _bfs_stage(spark: SparkSession) -> tuple:
+    """(persisted symmetric edges, checkpointed seed distances, seed
+    count), memoized like _pagerank_edges: ONE pinned copy of the edge
+    relation per (session, data) — the symmetric build + seed
+    derivation was ~2.0 s of graph_bfs_layers' 3.6 s at sf0.1 (round-9
+    verdict #6 profile), paid once per session instead of per call."""
     from ..functions import portable as P
 
     pairs = spark.sql(PR_PAIRS_SQL)
-    key = (P.session_token(spark), P.lineage_key(pairs))
-    hit = _BFS_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    _evict_stale(_BFS_STAGE_CACHE, key)
-    sym = pairs.union(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).repartition("b").persist()
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    seeds = nodes.filter(F.col("node") % BFS_SEED_MOD == 0).withColumn(
-        "d", F.lit(0)
-    ).localCheckpoint()
-    hit = (sym, seeds, seeds.count())
-    _BFS_STAGE_CACHE[key] = hit
-    return hit
+
+    def build(_key) -> tuple:
+        sym = pairs.union(
+            pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        ).repartition("b").persist()
+        nodes = sym.select(F.col("a").alias("node")).distinct()
+        seeds = nodes.filter(F.col("node") % BFS_SEED_MOD == 0).withColumn(
+            "d", F.lit(0)
+        ).localCheckpoint()
+        return sym, seeds, seeds.count()
+
+    return P.memo(spark, "bfs_edges", (), pairs, build, release=P.unpersist_frames)
 
 
 def bfs_layers(spark: SparkSession, k: int = 4) -> DataFrame:

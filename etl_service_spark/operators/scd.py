@@ -206,16 +206,19 @@ def scd2_invariants(spark, sf_dir: str) -> DataFrame:
     # feeds three consumers here (merged audit, the corrupt filter,
     # the control union) and would re-run once per reference
     merged = scd2_customers(spark, sf_dir).localCheckpoint()
-    merged.createOrReplaceTempView("__scd2_audit_m")
     corrupt = (
         merged.filter((F.col("custkey") % 13 == 0) & F.col("valid_to").isNull())
         .withColumn("valid_from", F.lit(CORRUPT_TS))
     )
-    merged.unionByName(corrupt).createOrReplaceTempView("__scd2_audit_c")
+    # relations bind as formatter arguments (session-unique views
+    # dropped after analysis), so concurrent calls cannot clobber each
+    # other's input through a fixed catalog name
     return spark.sql(
-        SCD2_AUDIT_BODY.format(rel="__scd2_audit_m", label="merged")
+        SCD2_AUDIT_BODY.format(rel="{m}", label="merged")
         + "\nUNION ALL\n"
-        + SCD2_AUDIT_BODY.format(rel="__scd2_audit_c", label="control")
+        + SCD2_AUDIT_BODY.format(rel="{c}", label="control"),
+        m=merged,
+        c=merged.unionByName(corrupt),
     )
 
 

@@ -27,27 +27,6 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import portable as P
 
-# (session id, stage kind, params, input files) -> temp-view name of a
-# lineage-truncated staging relation (IVF assignments, LSH buckets).
-# Same sharing story as dedup._HASHSET_CACHE: on a cluster these are
-# written-once staging tables every consumer joins against; changing
-# the underlying files (different sf_dir) misses the cache.
-_STAGE_CACHE: dict[tuple, str] = {}
-
-
-def _stage_view(spark: SparkSession, df_fn, kind: str, view: str, params: tuple) -> str:
-    key = (
-        P.session_token(spark), kind, params,
-        P.lineage_key(spark.table(view)), P.staging_dir(spark),
-    )
-    cached = _STAGE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    name = P.stage_name(f"{kind}_{view}", key[1:])
-    P.stage_df(df_fn(), name).createOrReplaceTempView(name)
-    _STAGE_CACHE[key] = name
-    return name
-
 DIM = 64
 
 
@@ -323,10 +302,7 @@ def embedding_neardup_pandas(
     if n_blocks is None:
         # scalar count only — no embedding rows leave the executors;
         # memoized per (session, view, files) like the staging views
-        ckey = (P.session_token(spark), "neardup_count", view, P.lineage_key(emb))
-        if ckey not in _STAGE_CACHE:
-            _STAGE_CACHE[ckey] = str(emb.count())
-        n = int(_STAGE_CACHE[ckey])
+        n = P.memo(spark, "neardup_count", (view,), emb, lambda _key: emb.count())
         n_blocks = _neardup_blocks(n, rows_per_block)
     # fan-out relation: block blk participates in pair (ba, bb) as
     # role 0 (first block) or role 1 (second); a diagonal pair
@@ -555,7 +531,7 @@ def ivf_assignment_rel(
             schema="vec_id bigint, c_id bigint, rn int, embedding array<float>, nrm double",
         )
 
-    return _stage_view(spark, build_assignment, "ivf_assign", view, (n_cells,))
+    return P.stage_view(spark, build_assignment, "ivf_assign", view, (n_cells,))
 
 
 def ivf_ann_staged(
@@ -804,9 +780,6 @@ def ivf_index_append_batch(
     return snapshots.merge_upsert(spark, assign_dir, assigned, key="vec_id")
 
 
-_IVF_INC_STATE: dict[tuple, tuple[str, str, str]] = {}
-
-
 def _ivf_state_dir(spark, prefix: str) -> str:
     """Snapshot-state directory with a LIFECYCLE (round-5 advisor
     finding: bare mkdtemp per (session, corpus) key accumulated
@@ -839,16 +812,9 @@ def ivf_incremental_staged(
     everything, and emit the per-cell churn report — value-identical to
     :func:`ivf_incremental_drift_sql`'s stateless DuckDB unroll, which
     is exactly the point: the stateful path is oracle-checked."""
-    import uuid
-
     from ..sources import snapshots
 
-    key = (
-        P.session_token(spark), "ivf_inc", view, k,
-        P.lineage_key(spark.table(view)), P.staging_dir(spark),
-    )
-    state = _IVF_INC_STATE.get(key)
-    if state is None:
+    def build(_key):
         index_dir = _ivf_state_dir(spark, "etl_ivf_idx_")
         assign_dir = _ivf_state_dir(spark, "etl_ivf_asg_")
         rebuild_dir = _ivf_state_dir(spark, "etl_ivf_reb_")
@@ -863,16 +829,14 @@ def ivf_incremental_staged(
                 spark.table(view).filter(f"vec_id % 8 = {m}"), big_t,
             )
         ivf_index_build(spark, rebuild_dir, k=k, view=view, big_t=big_t)
-        _IVF_INC_STATE[key] = (index_dir, assign_dir, rebuild_dir)
-    index_dir, assign_dir, rebuild_dir = _IVF_INC_STATE[key]
+        return index_dir, assign_dir, rebuild_dir
 
-    reb = ivf_index_assign(spark, rebuild_dir, spark.table(view), big_t)
-    tag = uuid.uuid4().hex[:10]
-    iv, rv = f"__ivfinc_{tag}", f"__ivfreb_{tag}"
-    snapshots.read_snapshot(spark, assign_dir).createOrReplaceTempView(iv)
-    reb.createOrReplaceTempView(rv)
+    _index_dir, assign_dir, rebuild_dir = P.memo(
+        spark, "ivf_inc", (view, k), spark.table(view), build
+    )
+
     return spark.sql(
-        f"""
+        """
 SELECT i.j AS cell,
        CAST(SUM(CASE WHEN i.vec_id % 8 < 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
        CAST(SUM(CASE WHEN i.vec_id % 8 >= 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
@@ -880,7 +844,9 @@ SELECT i.j AS cell,
        CAST(SUM(CASE WHEN i.j <> r.j THEN 1 ELSE 0 END) * 1000 DIV COUNT(*) AS BIGINT)
          AS churn_permille
 FROM {iv} i JOIN {rv} r ON i.vec_id = r.vec_id
-GROUP BY i.j"""
+GROUP BY i.j""",
+        iv=snapshots.read_snapshot(spark, assign_dir),
+        rv=ivf_index_assign(spark, rebuild_dir, spark.table(view), big_t),
     )
 
 
@@ -964,7 +930,7 @@ def lsh_ann_staged(
                 }
             )
 
-    name = _stage_view(
+    name = P.stage_view(
         spark,
         lambda: P.fan_out(spark.table(view).select("vec_id", "embedding"), light=True).mapInPandas(
             kernel,
@@ -1209,7 +1175,7 @@ def _kmeans_staged_rels(
     big_t-independent, so consumers with different overflow gates
     (emb_kmeans's row-count-gated BIGINT vs the DECIMAL default)
     still share the one corpus pass."""
-    e_rel = _stage_view(
+    e_rel = P.stage_view(
         spark,
         lambda: spark.sql(
             f"WITH dims AS ({_KM_SPARK_DIMS}) "
@@ -1222,7 +1188,7 @@ def _kmeans_staged_rels(
         (),
     )
     cents = [
-        _stage_view(
+        P.stage_view(
             spark,
             lambda: spark.sql(
                 f"SELECT vec_id AS j, dim, v AS s, CAST(1 AS BIGINT) AS n "
@@ -1237,7 +1203,7 @@ def _kmeans_staged_rels(
     for it in range(1, iters + 1):
         a_body = _km_assign_sql(e_rel, cents[-1], big_t)
         assigns.append(
-            _stage_view(
+            P.stage_view(
                 spark,
                 lambda b=a_body: spark.sql(b),
                 "km_a",
@@ -1246,7 +1212,7 @@ def _kmeans_staged_rels(
             )
         )
         cents.append(
-            _stage_view(
+            P.stage_view(
                 spark,
                 lambda a=assigns[-1]: spark.sql(
                     f"SELECT a.j, e.dim, CAST(SUM(e.v) AS BIGINT) AS s, COUNT(*) AS n "
@@ -1403,10 +1369,7 @@ def semantic_dedup_staged(
 
     emb = spark.table(view).select("vec_id", "embedding")
     if n_blocks is None:
-        ckey = (P.session_token(spark), "neardup_count", view, P.lineage_key(emb))
-        if ckey not in _STAGE_CACHE:
-            _STAGE_CACHE[ckey] = str(emb.count())
-        n = int(_STAGE_CACHE[ckey])
+        n = P.memo(spark, "neardup_count", (view,), emb, lambda _key: emb.count())
         n_blocks = _neardup_blocks(n, rows_per_block)
     rel = [
         (blk, a, b, 0 if blk == a else 1)
@@ -2114,7 +2077,7 @@ WHERE a.rn = 1 OR (a.vec_id < {n_queries} AND a.rn <= {nprobe})
 """
         )
 
-    return _stage_view(spark, build, "ivfpq_res", view, params)
+    return P.stage_view(spark, build, "ivfpq_res", view, params)
 
 
 def ivfpq_topk_staged(
@@ -2149,11 +2112,8 @@ WITH assign AS (
 """ + _ivfpq_tail(0, ncent, m, nprobe, k, n_queries, res_src=rres)
         return spark.sql(sql)
 
-    rel = _stage_view(spark, build, "ivfpq_topk", view, params)
+    rel = P.stage_view(spark, build, "ivfpq_topk", view, params)
     return spark.table(rel)
-
-
-_PQ_DIST_CACHE: dict[tuple, str] = {}
 
 
 def _pq_dist_staged(
@@ -2163,18 +2123,12 @@ def _pq_dist_staged(
     (session, view, params): both the code assignment and the ADC
     lookup table consume it, and Spark's CTE inlining would otherwise
     evaluate the 64-term distance chain twice over N×ncent×m rows."""
-    src = spark.table(view)
-    key = (P.session_token(spark), view, m, ncent, P.lineage_key(src), P.staging_dir(spark))
-    name = _PQ_DIST_CACHE.get(key)
-    if name is None:
-        name = P.stage_name("pq_dist", key[1:])
+    def build() -> DataFrame:
         # same builder as the SQL statements — no text scraping
         c_sel, d_sel = _pq_cd_selects(m, ncent, view, 0)
-        P.stage_df(
-            P.fan_out(spark.sql(f"WITH c AS ({c_sel}) {d_sel}"), light=True), name
-        ).createOrReplaceTempView(name)
-        _PQ_DIST_CACHE[key] = name
-    return name
+        return P.fan_out(spark.sql(f"WITH c AS ({c_sel}) {d_sel}"), light=True)
+
+    return P.stage_view(spark, build, "pq_dist", view, (m, ncent))
 
 
 def pq_adc_topk_staged(
@@ -2363,7 +2317,7 @@ def _hamsig_labeled_rel(spark: SparkSession, view: str) -> str:
             f"{_sign_word_sql(1, one_based=False)} AS hi FROM {view}"
         )
 
-    return _stage_view(spark, build, "hamsig", view, ("label",))
+    return P.stage_view(spark, build, "hamsig", view, ("label",))
 
 
 def hamming_knn_graph_staged(
@@ -2514,7 +2468,7 @@ def _guard_assign_rel(
         f"WITH sig AS (SELECT vec_id, label, lo, hi FROM {rel}),\n{chain}\n"
         "SELECT label, vec_id, lo, hi, sub_cell FROM assign"
     ).format(**_GUARD_SPARK_FRAGS)
-    return _stage_view(
+    return P.stage_view(
         spark, lambda: spark.sql(sql), "guard_assign", view, (cell_cap,)
     )
 
@@ -2542,7 +2496,7 @@ SELECT label, src, dst FROM (
   FROM {rel} a JOIN {rel} b
     ON a.label = b.label AND a.vec_id <> b.vec_id{esrc_where}
 ) r WHERE rk <= {k}"""
-    return _stage_view(
+    return P.stage_view(
         spark, lambda: spark.sql(sql), "guard_etopk", view, (k, src_modulus)
     )
 
@@ -2949,10 +2903,6 @@ FROM t{DIM} e LEFT JOIN t{d} a ON a.q_id = e.q_id AND a.n_id = e.n_id"""
     return body(False, "DIV"), body(True, "//")
 
 
-def matryoshka_recall(spark: SparkSession, **kw) -> DataFrame:
-    return spark.sql(matryoshka_recall_sql(**kw)[0])
-
-
 def matryoshka_recall_staged(
     spark: SparkSession,
     dims: tuple[int, ...] = (16, 32),
@@ -3001,7 +2951,7 @@ SELECT q_id, n_id FROM (
          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY c DESC, n_id) AS rk
   FROM s
 ) r WHERE rk <= {k}"""
-        return _stage_view(
+        return P.stage_view(
             spark, lambda: spark.sql(body), "mat_topk", view, (d, k, n_queries)
         )
 
@@ -3167,7 +3117,7 @@ def ivf_nprobe_sweep_staged(
     # Q x N kernel once per config) under a content-addressed name —
     # params in the key, so concurrent sweeps with different k or
     # n_queries never clobber each other.
-    exact_name = _stage_view(
+    exact_name = P.stage_view(
         spark,
         lambda: cosine_topk_staged(spark, k, n_queries, view).select("q_id", "n_id"),
         "nprobe_exact",
@@ -3189,7 +3139,7 @@ def ivf_nprobe_sweep_staged(
     nv_rel = f"(SELECT vec_id, embedding, nrm FROM {assign_rel} WHERE rn = 1)"
     max_p = max(probes)
     sdot = _dot("qv.embedding", "nv2.embedding", one_based=False)
-    scored_name = _stage_view(
+    scored_name = P.stage_view(
         spark,
         lambda: spark.sql(
             f"""
@@ -3386,7 +3336,7 @@ def _hamsig_rel(spark: SparkSession, view: str) -> str:
             f"{_sign_word_sql(1, one_based=False)} AS hi FROM {view}"
         )
 
-    return _stage_view(spark, build, "hamsig", view, ("label",) if has_label else ())
+    return P.stage_view(spark, build, "hamsig", view, ("label",) if has_label else ())
 
 
 def hamming_banded_staged(

@@ -516,24 +516,15 @@ def quality_score_staged(spark, view: str = "documents") -> DataFrame:
     return quality_scores_df(spark.table(view))
 
 
-# (session id, view, input files) -> staged exploded token relation
-# (doc_id, lang, tok, h). The tokenizer + per-token poly-hash run ONCE
+# The staged exploded token relation (doc_id, lang, tok, h), memoized
+# per (view, input files). The tokenizer + per-token poly-hash run ONCE
 # in an Arrow kernel (the SQL forms evaluate an interpreted HOF split
 # per row, and simhash additionally an interpreted per-character hash
 # fold per token occurrence); every token-mass consumer (simhash,
 # tf-idf, per-language top terms) joins the staged relation — at 100 TB
 # this is the tokenized-corpus staging table written next to the
 # fingerprint table.
-_TOKENS_CACHE: dict[tuple, str] = {}
-
-
 def materialize_tokens(spark, view: str = "documents") -> str:
-    src = spark.table(view)
-    key = (P.session_token(spark), view, P.lineage_key(src), P.staging_dir(spark))
-    cached = _TOKENS_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     import re
 
     import pandas as pd
@@ -571,15 +562,14 @@ def materialize_tokens(spark, view: str = "documents") -> str:
                 }
             )
 
-    name = P.stage_name(f"tokens_{view}", key[1:])
-    P.stage_df(
-        P.fan_out(src.select("doc_id", "lang", "text")).mapInArrow(
+    return P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.table(view).select("doc_id", "lang", "text")).mapInArrow(
             kernel, schema="doc_id bigint, lang string, tok string, h bigint"
         ),
-        name,
-    ).createOrReplaceTempView(name)
-    _TOKENS_CACHE[key] = name
-    return name
+        "tokens",
+        view,
+    )
 
 
 def tfidf_top_terms_staged(spark, k: int = 3, view: str = "documents") -> DataFrame:
@@ -631,36 +621,6 @@ SELECT doc_id, token, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df, score_
 FROM (
   SELECT *, ROW_NUMBER() OVER (
     PARTITION BY doc_id ORDER BY score_ppm DESC, token
-  ) AS rk
-  FROM scored
-) ranked
-WHERE rk <= {k}
-"""
-    )
-
-
-def top_terms_per_language_staged(spark, k: int = 5, view: str = "documents") -> DataFrame:
-    """Spark path for top_terms_per_language_sql over the staged token
-    relation (carries lang, so no re-tokenization)."""
-    tok = materialize_tokens(spark, view)
-    return spark.sql(
-        f"""
-WITH tf AS (SELECT lang, tok AS token, COUNT(*) AS tf FROM {tok} GROUP BY lang, tok),
-lm AS (SELECT lang, SUM(tf) AS langmass FROM tf GROUP BY lang),
-gm AS (SELECT token, SUM(tf) AS gmass FROM tf GROUP BY token),
-tot AS (SELECT SUM(tf) AS total FROM tf),
-scored AS (
-  SELECT t.lang, t.token, t.tf,
-         CAST(((t.tf * 1000000 DIV l.langmass) * (SELECT total FROM tot))
-              DIV g.gmass AS BIGINT) AS score_ppm
-  FROM tf t
-  JOIN lm l ON t.lang = l.lang
-  JOIN gm g ON t.token = g.token
-)
-SELECT lang, token, CAST(tf AS BIGINT) AS tf, score_ppm
-FROM (
-  SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY lang ORDER BY score_ppm DESC, token
   ) AS rk
   FROM scored
 ) ranked
@@ -882,27 +842,17 @@ FROM doc
     return body(spark_big, "DIV", "DECIMAL(38,0)"), body(duck_big, "//", "HUGEINT")
 
 
-_BIGRAM_CACHE: dict[tuple, str] = {}
-
-
 def materialize_bigrams(spark, view: str = "documents") -> str:
     """Stage the multiplicity-preserving bigram relation
     (doc_id, bg) once per (session, view, input files) — shared by the
     bigram-LM scorer and the PMI collocation miner, exactly like the
     token stage above. Returns the temp-view name."""
-    src = spark.table(view)
-    key = (P.session_token(spark), view, P.lineage_key(src), P.staging_dir(spark))
-    name = _BIGRAM_CACHE.get(key)
-    if name is None:
-        name = P.stage_name(f"bigrams_{view}", key[1:])
-        big_sql = (
-            f"SELECT doc_id, bg FROM "
-            f"(SELECT doc_id, {P.spark_tokens('text')} AS t FROM {view}) "
-            f"LATERAL VIEW explode({P.spark_ngrams('t', 2)}) x AS bg"
-        )
-        P.stage_df(P.fan_out(spark.sql(big_sql)), name).createOrReplaceTempView(name)
-        _BIGRAM_CACHE[key] = name
-    return name
+    big_sql = (
+        f"SELECT doc_id, bg FROM "
+        f"(SELECT doc_id, {P.spark_tokens('text')} AS t FROM {view}) "
+        f"LATERAL VIEW explode({P.spark_ngrams('t', 2)}) x AS bg"
+    )
+    return P.stage_view(spark, lambda: P.fan_out(spark.sql(big_sql)), "bigrams", view)
 
 
 def bigram_lm_score_staged(spark, view: str = "documents") -> DataFrame:
@@ -1554,28 +1504,31 @@ def _bpe_train_staged(
     the final vocab (tok, cnt, seq after all merges) is what the
     encoder applies to documents; memoized per (session, corpus,
     rounds) so training is paid once per session."""
+    return P.memo(
+        spark, "bpe_train", (view, rounds), spark.table(view),
+        lambda key: _bpe_train(spark, rounds, view, key),
+        # rounds == 0 hands out the w0 view, which its own entry owns
+        release=lambda v: spark.catalog.dropTempView(v[1]) if v[0] else None,
+    )
+
+
+def _bpe_train(spark, rounds: int, view: str, key: tuple):
     from pyspark.sql import functions as F
 
-    key = (P.session_token(spark), "bpe_w0", view, P.lineage_key(spark.table(view)),
-           P.staging_dir(spark))
-    fkey = key + ("train", rounds)
-    done = _TOKENS_CACHE.get(fkey)
-    if done is not None:
-        return done
-    cached = _TOKENS_CACHE.get(key)
-    if cached is None:
-        w0 = spark.sql(
+    w0 = P.stage_view(
+        spark,
+        lambda: spark.sql(
             f"""
 SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt,
        array_join(transform(filter(split(tok, ''), x -> x != ''),
                             c -> concat('|', c, '|')), ' ') AS seq
 FROM (SELECT explode({P.spark_tokens('text')}) AS tok FROM {view}) t
 GROUP BY tok"""
-        )
-        cached = P.stage_name("bpe_w0", key[1:])
-        P.stage_df(w0, cached).createOrReplaceTempView(cached)
-        _TOKENS_CACHE[key] = cached
-    w = spark.table(cached)
+        ),
+        "bpe_w0",
+        view,
+    )
+    w = spark.table(w0)
 
     ngrams = P.spark_ngrams("split(seq, ' ')", 2)
     merges = []
@@ -1602,12 +1555,10 @@ GROUP BY tok"""
         pat = top.pr
         rep = "|" + top.pr.replace("|", "").replace(" ", "") + "|"
         w = w.withColumn("seq", F.expr(f"replace(seq, '{pat}', '{rep}')"))
-    if merges:
-        name = P.stage_name("bpe_w", key[1:] + (rounds, tuple(m[1] for m in merges)))
-        P.stage_df(w, name).createOrReplaceTempView(name)
-    else:  # rounds == 0: the vocabulary IS the staged w0
-        name = cached
-    _TOKENS_CACHE[fkey] = (merges, name)
+    if not merges:  # rounds == 0: the vocabulary IS the staged w0
+        return merges, w0
+    name = P.stage_name("bpe_w", key + (tuple(m[1] for m in merges),))
+    P.stage_df(w, name).createOrReplaceTempView(name)
     return merges, name
 
 
@@ -1696,15 +1647,13 @@ def bpe_token_budget_staged(
     temperature rule (sqrt weights, integer micro-units) so the two
     planners are directly comparable. One |docs|-row join of the
     encode relation against the doc table, then a |langs|-row window."""
-    enc = bpe_encode_staged(spark, rounds, view)
-    enc.createOrReplaceTempView("__bpe_enc")
     return spark.sql(
         f"""
 WITH lt AS (
   SELECT d.lang, COUNT(*) AS n_docs,
          CAST(SUM(e.n_tokens_bpe) AS BIGINT) AS bpe_tokens,
          CAST(SUM(e.est_subwords) AS BIGINT) AS est_tokens
-  FROM {view} d JOIN __bpe_enc e ON e.doc_id = d.doc_id
+  FROM {view} d JOIN {{enc}} e ON e.doc_id = d.doc_id
   GROUP BY d.lang
 ),
 w AS (
@@ -1715,7 +1664,8 @@ w AS (
 SELECT lang, n_docs, bpe_tokens, est_tokens,
        CAST(est_tokens * 1000 DIV bpe_tokens AS BIGINT) AS drift_permille,
        CAST(({budget} * w_micro) DIV SUM(w_micro) OVER () AS BIGINT) AS token_quota
-FROM w"""
+FROM w""",
+        enc=bpe_encode_staged(spark, rounds, view),
     )
 
 
@@ -1929,13 +1879,6 @@ def materialize_gram_positions(spark, k: int = 4, view: str = "documents") -> st
     after an index explode makes Catalyst rebuild the whole gram array
     once per POSITION (O(n²) per doc — measured 15.9 s vs 0.7 s at
     sf0.1)."""
-    src = spark.table(view)
-    key = (P.session_token(spark), "winnow_grams", k, view,
-           P.lineage_key(src), P.staging_dir(spark))
-    cached = _TOKENS_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     import re
 
     import pandas as pd
@@ -1967,13 +1910,15 @@ def materialize_gram_positions(spark, k: int = 4, view: str = "documents") -> st
                 }
             )
 
-    rel = P.fan_out(src.select("doc_id", "text")).mapInArrow(
-        kernel, "doc_id bigint, pos bigint, gh bigint"
+    return P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.table(view).select("doc_id", "text")).mapInArrow(
+            kernel, "doc_id bigint, pos bigint, gh bigint"
+        ),
+        "winnow_grams",
+        view,
+        (k,),
     )
-    name = P.stage_name("winnow_grams", key[1:])
-    P.stage_df(rel, name).createOrReplaceTempView(name)
-    _TOKENS_CACHE[key] = name
-    return name
 
 
 def _winnow_fp_staged(spark, k: int, w: int, view: str) -> str:
@@ -2072,13 +2017,6 @@ def materialize_token_positions(spark, view: str = "documents") -> str:
     pass; same cache/staging discipline as every staged relation. The
     SQL alternative (index explode + element_at) rebuilds the token
     array per position (the measured O(n²)/doc hazard)."""
-    src = spark.table(view)
-    key = (P.session_token(spark), "tok_pos", view, P.lineage_key(src),
-           P.staging_dir(spark))
-    cached = _TOKENS_CACHE.get(key)
-    if cached is not None:
-        return cached
-
     import re
 
     import pyarrow as pa
@@ -2103,13 +2041,14 @@ def materialize_token_positions(spark, view: str = "documents") -> str:
                 }
             )
 
-    rel = P.fan_out(src.select("doc_id", "text")).mapInArrow(
-        kernel, "doc_id bigint, pos bigint, tok string"
+    return P.stage_view(
+        spark,
+        lambda: P.fan_out(spark.table(view).select("doc_id", "text")).mapInArrow(
+            kernel, "doc_id bigint, pos bigint, tok string"
+        ),
+        "tok_pos",
+        view,
     )
-    name = P.stage_name("tok_pos", key[1:])
-    P.stage_df(rel, name).createOrReplaceTempView(name)
-    _TOKENS_CACHE[key] = name
-    return name
 
 
 def _rake_words_body(tokpos_rel: str) -> str:
@@ -2298,15 +2237,13 @@ def bpe_fertility_staged(spark, rounds: int = 3, view: str = "documents"):
     itself is vocabulary-local (see bpe_encode_staged) — nothing here
     re-touches raw text except the word count, which rides the same
     scan that reads n_chars."""
-    enc = bpe_encode_staged(spark, rounds, view)
-    enc.createOrReplaceTempView("__bpe_fert_enc")
     return spark.sql(
         "WITH "
         + _FERTILITY_LT.format(
-            words=f"size({P.spark_tokens('d.text')})",
-            view=view, enc="__bpe_fert_enc",
+            words=f"size({P.spark_tokens('d.text')})", view=view, enc="{enc}"
         )
-        + _FERTILITY_SELECT.format(idiv="DIV")
+        + _FERTILITY_SELECT.format(idiv="DIV"),
+        enc=bpe_encode_staged(spark, rounds, view),
     )
 
 

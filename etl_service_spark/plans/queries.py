@@ -58,9 +58,19 @@ _VIEW_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
 # interleaved-sf oracle run; single-sf sessions never hit this).
 _LAST_SF: dict[int, str] = {}
 
-# (tag, session id, sf_dir) -> staged json-lines directory for the
-# FILE-JSON round-trip case (written once per session+sf).
-_JSONL_STAGE: dict[tuple, str] = {}
+
+def _written_once(spark: SparkSession, kind: str, table: str, write) -> str:
+    """A fresh temp directory filled by ``write(path)`` once per
+    session and ``table``'s input files (the staging memo), for the
+    source round-trip cases."""
+    import tempfile
+
+    def build(_key) -> str:
+        path = tempfile.mkdtemp(prefix=f"etl_{kind}_")
+        write(path)
+        return path
+
+    return P.memo(spark, kind, (), spark.table(table), build)
 
 
 def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -2476,29 +2486,19 @@ GROUP BY a.p_brand, b.p_brand
     # oracle stays the single-statement form. The stage is SHARED with
     # basket_association_rules below (same content-addressed key).
     def _basket_ob_rel(spark: SparkSession) -> str:
-        # standard staging memo: once per (session, input files,
-        # staging backend), content-addressed name — repeats reuse the
-        # staged relation instead of re-running the lineitem⋈part join
-        key = (
-            "basket_ob",
-            P.session_token(spark),
-            P.lineage_key(spark.table("lineitem")),
-            P.staging_dir(spark),
-        )
-        name = _JSONL_STAGE.get(key)
-        if name is None:
-            name = P.stage_name("basket_ob", key[2:])
-            P.stage_df(
-                spark.sql(
-                    """
+        # standard staging memo: repeats reuse the staged relation
+        # instead of re-running the lineitem⋈part join
+        return P.stage_view(
+            spark,
+            lambda: spark.sql(
+                """
 SELECT DISTINCT l.l_orderkey, p.p_brand
 FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 """
-                ),
-                name,
-            ).createOrReplaceTempView(name)
-            _JSONL_STAGE[key] = name
-        return name
+            ),
+            "basket_ob",
+            "lineitem",
+        )
 
     def _basket_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
@@ -3200,19 +3200,16 @@ FROM ranked WHERE rk = 1
     # option assembly.
     def _jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
-        import tempfile
 
         from ..sources.connectors import Connection, reader_for
 
         views(spark, sf_dir)
-        key = ("jsonl_roundtrip", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="etl_jsonl_")
-            spark.table("documents").write.mode("overwrite").json(
-                os.path.join(path, "documents.json")
-            )
-            _JSONL_STAGE[key] = path
+        path = _written_once(
+            spark, "jsonl", "documents",
+            lambda p: spark.table("documents").write.mode("overwrite").json(
+                os.path.join(p, "documents.json")
+            ),
+        )
         conn = Connection(
             conn_id=1,
             type_name="FILE-JSON",
@@ -3236,17 +3233,14 @@ FROM ranked WHERE rk = 1
     # oracle against the parquet originals.
     def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
-        import tempfile
 
         views(spark, sf_dir)
-        key = ("orc_roundtrip", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="etl_orc_")
-            spark.table("documents").write.mode("overwrite").orc(
-                os.path.join(path, "documents.orc")
-            )
-            _JSONL_STAGE[key] = path
+        path = _written_once(
+            spark, "orc", "documents",
+            lambda p: spark.table("documents").write.mode("overwrite").orc(
+                os.path.join(p, "documents.orc")
+            ),
+        )
         return spark.read.orc(os.path.join(path, "documents.orc")).select(
             "doc_id", "text", "lang", "source", "n_chars"
         )
@@ -3267,21 +3261,17 @@ FROM ranked WHERE rk = 1
         """Memoized three-commit snapshot table (v1/v2 appends of
         thirds 0 and 1, v3 overwrite with third 2) — the single owner
         of the memo key, shared by the time-travel and diff cases."""
-        import tempfile
-
         from ..sources import snapshots as S
 
         views(spark, sf_dir)
-        key = ("snap_table", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="etl_snap_")
+
+        def write(path: str) -> None:
             docs = spark.table("documents").select("doc_id", "lang", "source", "n_chars")
             S.commit_append(docs.filter("doc_id % 3 = 0"), path)  # v1
             S.commit_append(docs.filter("doc_id % 3 = 1"), path)  # v2
             S.commit_overwrite(docs.filter("doc_id % 3 = 2"), path)  # v3
-            _JSONL_STAGE[key] = path
-        return path
+
+        return _written_once(spark, "snap", "documents", write)
 
     def _snap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..sources import snapshots as S
@@ -4214,13 +4204,8 @@ FROM sh GROUP BY shard
         import os
 
         views(spark, sf_dir)
-        key = ("binaryfile", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            import tempfile
 
-            path = tempfile.mkdtemp(prefix="etl_binfiles_")
-
+        def write(path: str) -> None:
             def _write(rows):
                 for r in rows:
                     p = os.path.join(path, f"doc_{r['doc_id']}.bin")
@@ -4230,7 +4215,8 @@ FROM sh GROUP BY shard
             spark.table("documents").where("text IS NOT NULL").select(
                 "doc_id", "text"
             ).foreachPartition(_write)
-            _JSONL_STAGE[key] = path
+
+        path = _written_once(spark, "binfiles", "documents", write)
         return (
             spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.bin")
@@ -4261,19 +4247,16 @@ FROM documents WHERE text IS NOT NULL
     # inference scan), value-hashed against the parquet originals.
     def _python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
-        import tempfile
 
         from ..sources.pydatasource import JsonLinesDataSource
 
         views(spark, sf_dir)
-        key = ("pyds_jsonl", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="etl_pyds_")
-            spark.table("documents").write.mode("overwrite").json(
-                os.path.join(path, "documents.json")
-            )
-            _JSONL_STAGE[key] = path
+        path = _written_once(
+            spark, "pyds", "documents",
+            lambda p: spark.table("documents").write.mode("overwrite").json(
+                os.path.join(p, "documents.json")
+            ),
+        )
         if not getattr(spark, "_etl_jsonl_registered", False):
             spark.dataSource.register(JsonLinesDataSource)
             spark._etl_jsonl_registered = True
@@ -4592,13 +4575,10 @@ FROM g
     # drift across ingest epochs is the norm, not the exception.
     def _schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         import os
-        import tempfile
 
         views(spark, sf_dir)
-        key = ("schema_evo", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="etl_schemaevo_")
+
+        def write(path: str) -> None:
             docs = spark.table("documents")
             docs.filter("doc_id % 2 = 0").select("doc_id", "lang", "n_chars").write.mode(
                 "overwrite"
@@ -4606,7 +4586,8 @@ FROM g
             docs.filter("doc_id % 2 = 1").select(
                 "doc_id", "lang", "source", "n_chars"
             ).write.mode("overwrite").parquet(os.path.join(path, "batch=2"))
-            _JSONL_STAGE[key] = path
+
+        path = _written_once(spark, "schemaevo", "documents", write)
         evolved = spark.read.option("mergeSchema", "true").parquet(
             os.path.join(path, "batch=1"), os.path.join(path, "batch=2")
         )
@@ -4634,15 +4615,11 @@ FROM documents GROUP BY lang
     # merged snapshot back. The oracle recomputes the merged state
     # set-algebraically from the source table.
     def _merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import tempfile
-
         from ..sources import snapshots as S
 
         views(spark, sf_dir)
-        key = ("merge_upsert", P.session_token(spark), sf_dir)
-        path = _JSONL_STAGE.get(key)
-        if path is None:
-            path = tempfile.mkdtemp(prefix="etl_merge_")
+
+        def write(path: str) -> None:
             o = spark.table("orders").select("o_orderkey", "o_custkey", "o_totalprice")
             S.commit_append(o, path)  # v1: seed
             upd = (
@@ -4659,7 +4636,8 @@ FROM documents GROUP BY lang
             S.merge_upsert(
                 spark, path, upd.unionByName(dels).unionByName(ins), "o_orderkey", "is_delete"
             )  # v2: merged
-            _JSONL_STAGE[key] = path
+
+        path = _written_once(spark, "merge", "orders", write)
         return S.read_snapshot(spark, path).select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )

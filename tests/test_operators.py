@@ -1766,14 +1766,13 @@ def test_graph_stage_caches_evict_stale_lineage(spark):
     from etl_service_spark.operators import graph
     from etl_service_spark.plans.queries import views
 
-    tok = P.session_token(spark)
     views(spark, "/root/testdata/sf0.001")
     sym1 = graph._bfs_stage(spark)[0]
     assert graph._bfs_stage(spark)[0] is sym1  # same lineage: cache hit
     views(spark, "/root/testdata/sf0.01")
     sym2 = graph._bfs_stage(spark)[0]
     assert sym2 is not sym1
-    keys = [k for k in graph._BFS_STAGE_CACHE if k[0] == tok]
+    keys = [k for k in P.memo_table(spark) if k[0] == "bfs_edges"]
     assert len(keys) == 1  # stale entry gone
     assert not sym1.storageLevel.useMemory  # and unpersisted
     assert sym2.storageLevel.useMemory or sym2.storageLevel.useDisk
