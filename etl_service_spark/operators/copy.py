@@ -55,16 +55,6 @@ class TakeoverWindow:
         )
 
 
-def copy_data(
-    src: DataFrame,
-    dst_schema: StructType,
-    audit: AuditContext,
-) -> DataFrame:
-    """D1: align a source relation to the destination schema with audit
-    columns. The caller appends the result (``.write.mode("append")``)."""
-    return align_to_schema(src, dst_schema, audit)
-
-
 def copy_data_timesliced(
     src: DataFrame,
     ts_col: str,

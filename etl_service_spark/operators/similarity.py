@@ -731,26 +731,24 @@ def ivf_index_assign(
     """Assign ONLY ``batch``'s vectors against the PERSISTED centroids:
     the k*64-row snapshot is broadcast, the distance argmin is the same
     integer-exact kernel as training. Per-batch cost tracks the batch,
-    never the corpus — the incremental half of the maintenance loop."""
-    import uuid
-
+    never the corpus — the incremental half of the maintenance loop.
+    Both relations are formatter arguments, so no temp view outlives
+    the call; the CTE text must therefore carry no literal braces."""
     from ..sources import snapshots
 
     big = big_t or _KM_SPARK_BIG
-    tag = uuid.uuid4().hex[:10]
-    bv, cv = f"__ivfb_{tag}", f"__ivfc_{tag}"
-    batch.select("vec_id", "embedding").createOrReplaceTempView(bv)
-    snapshots.read_snapshot(spark, index_dir).createOrReplaceTempView(cv)
     return spark.sql(
         "WITH "
         + ",\n".join(
             [
                 f"dims AS ({_KM_SPARK_DIMS})",
-                f"e AS ({_ivf_e_cte(_KM_SPARK_ELEM, bv)})",
-                f"d AS ({_ivf_dist_sql(cv, big, hint='/*+ BROADCAST(c) */ ')})",
+                f"e AS ({_ivf_e_cte(_KM_SPARK_ELEM, '{bv}')})",
+                f"d AS ({_ivf_dist_sql('{cv}', big, hint='/*+ BROADCAST(c) */ ')})",
             ]
         )
-        + f"\nSELECT vec_id, j FROM ({_ivf_assign_sql('d')}) z"
+        + f"\nSELECT vec_id, j FROM ({_ivf_assign_sql('d')}) z",
+        bv=batch.select("vec_id", "embedding"),
+        cv=snapshots.read_snapshot(spark, index_dir),
     )
 
 

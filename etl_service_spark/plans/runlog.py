@@ -134,7 +134,7 @@ class RunLog:
             )
             path = os.path.join(self.base_path, f"runlog_{lv}.parquet")
             df.write.mode("append").parquet(path)
-            out[lv] = spark.read.parquet(path)
+            out[lv] = spark.read.schema(self.SCHEMA).parquet(path)
         if self._errors:
             df = spark.createDataFrame(
                 [tuple(r[k] for k in ("level", "run_id", "Zeitpunkt", "Meldung", "Sql_Text"))
@@ -159,16 +159,15 @@ class RunLog:
 
 
 def register_runlog_views(spark: SparkSession, base_path: str) -> None:
-    for lv in LEVELS:
-        p = os.path.join(base_path, f"runlog_{lv}.parquet")
-        if os.path.exists(p):
-            df = spark.read.parquet(p)
-        else:  # level never logged → empty relation keeps A1/A7/A8 unions total
-            df = spark.createDataFrame([], schema=RunLog.SCHEMA)
-        df.createOrReplaceTempView(f"runlog_{lv}")
-    for name, schema in (("errors", RunLog.ERROR_SCHEMA), ("queries", RunLog.QUERY_SCHEMA)):
+    """Every log file was written with a declared schema, so it is read
+    back with that schema: no inference job. A file never written
+    becomes an empty relation, which keeps the A1/A7/A8 unions total."""
+    tables = [(lv, RunLog.SCHEMA) for lv in LEVELS]
+    tables += [("errors", RunLog.ERROR_SCHEMA), ("queries", RunLog.QUERY_SCHEMA)]
+    for name, schema in tables:
         p = os.path.join(base_path, f"runlog_{name}.parquet")
-        df = spark.read.parquet(p) if os.path.exists(p) else spark.createDataFrame([], schema=schema)
+        df = (spark.read.schema(schema).parquet(p) if os.path.exists(p)
+              else spark.createDataFrame([], schema=schema))
         df.createOrReplaceTempView(f"runlog_{name}")
 
 
@@ -229,16 +228,6 @@ def error_messages_sql() -> str:
     return "\nUNION ALL\n".join(branches)
 
 
-def run_duration_sql(level: str = "workflow") -> str:
-    """A2 (Helper.cs:687-702): DATEDIFF with NULL-end fallback to now."""
-    return f"""
-    SELECT run_id, name,
-           CAST((unix_timestamp(coalesce(CAST(Endzeitpunkt AS TIMESTAMP), current_timestamp()))
-               - unix_timestamp(CAST(Startzeitpunkt AS TIMESTAMP))) / 60 AS BIGINT) AS duration_min
-    FROM ({current_state_sql(level)})
-    """
-
-
 def last_run_per_workflow_sql() -> str:
     """A6 (app.R:331-379): argmax Endzeitpunkt per workflow name."""
     return f"""
@@ -265,18 +254,6 @@ def run_tree_sql() -> str:
         SELECT concat('{pfx}', run_id) AS node, {parent_expr} AS parent, name, '{lv}' AS level
         FROM ({current_state_sql(lv)})"""
         )
-    return "\nUNION ALL\n".join(parts)
-
-
-def timeline_sql() -> str:
-    """A8 (app.R:824+): Gantt input — one row per run per level."""
-    parts = [
-        f"""
-        SELECT '{lv}' AS level, run_id, name, Startzeitpunkt AS start_ts,
-               coalesce(Endzeitpunkt, Startzeitpunkt) AS end_ts
-        FROM ({current_state_sql(lv)})"""
-        for lv in LEVELS
-    ]
     return "\nUNION ALL\n".join(parts)
 
 

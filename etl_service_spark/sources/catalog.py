@@ -29,6 +29,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .footer import read_parquet
+
 TABLES = (
     "region",
     "nation",
@@ -44,7 +46,7 @@ TABLES = (
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, [os.path.join(sf_dir, f"{name}.parquet")])
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -60,7 +62,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every test table as a temp view; returns name → DataFrame."""
+    """Register every test table as a temp view; returns name → DataFrame.
+    Schemas come from the footers (``footer.read_parquet``): no Spark job."""
     out: dict[str, DataFrame] = {}
     for name in TABLES:
         df = load_table(spark, sf_dir, name)
@@ -114,12 +117,9 @@ def _wider(a: str | None, b: str) -> str:
 
 
 def _read_with_numeric_widening(spark: SparkSession, landing_dir: str) -> DataFrame:
-    import os
     from functools import reduce
 
     import pyarrow.parquet as pq
-
-    from pyspark.sql import functions as F
 
     # Walk order is filesystem-dependent; sort the discovered paths so
     # schema-group discovery — and therefore the derived union column
@@ -134,7 +134,8 @@ def _read_with_numeric_widening(spark: SparkSession, landing_dir: str) -> DataFr
         by_schema.setdefault(key, []).append(p)
     if not by_schema:
         raise FileNotFoundError(f"no parquet files under {landing_dir}")
-    dfs = [spark.read.parquet(*paths) for paths in by_schema.values()]
+    # files of one group share an arrow schema, so one footer types them all
+    dfs = [read_parquet(spark, paths) for paths in by_schema.values()]
     target: dict[str, str] = {}
     order: list[str] = []
     for df in dfs:

@@ -50,6 +50,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .footer import footer_schema, read_parquet
+
 _MANIFEST_RE = re.compile(r"^v(\d{6})\.manifest\.json$")
 
 
@@ -192,7 +194,8 @@ def read_snapshot(
 ) -> DataFrame:
     """Read one committed version (default: latest). The scan is planned
     from the manifest's explicit file list — orphaned/stage files and
-    files belonging to other versions are never touched."""
+    files belonging to other versions are never touched — and typed
+    from a footer read on the driver, so no inference job runs."""
     versions = list_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no committed versions under {table_dir}")
@@ -203,7 +206,7 @@ def read_snapshot(
     paths = [os.path.join(table_dir, rel) for rel in manifest["files"]]
     if not paths:
         raise ValueError(f"version {v} is empty")
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, paths)
 
 
 def expire_snapshots(
@@ -448,7 +451,7 @@ def merge_upsert(
     else:
         keep = source
     if touched:
-        tgt = spark.read.parquet(*[os.path.join(table_dir, f) for f in sorted(touched)])
+        tgt = read_parquet(spark, [os.path.join(table_dir, f) for f in sorted(touched)])
         survivors = tgt.join(source.select(key), key, "left_anti")
         merged = survivors.unionByName(keep.select(*tgt.columns))
     else:
@@ -456,7 +459,7 @@ def merge_upsert(
         # committing source-ordered files next to table-ordered ones
         # would make later readers' schema depend on which file the
         # reader samples first. One footer read, no data scanned.
-        tbl_cols = spark.read.parquet(os.path.join(table_dir, all_files[0])).columns
+        tbl_cols = footer_schema(spark, os.path.join(table_dir, all_files[0])).fieldNames()
         merged = keep.select(*tbl_cols)
     new_files, new_rows = _stage_data_files(merged, table_dir)
     untouched_rows = sum(
@@ -500,7 +503,7 @@ def compact_files(
     small_abs = [os.path.join(table_dir, f) for f in sorted(small)]
     total = sum(os.path.getsize(p) for p in small_abs)
     n_out = max(1, (total + small_bytes - 1) // small_bytes)
-    df = spark.read.parquet(*small_abs).coalesce(int(n_out))
+    df = read_parquet(spark, small_abs).coalesce(int(n_out))
     new_files, new_rows = _stage_data_files(df, table_dir)
     kept_rows = sum(
         pq.ParquetFile(os.path.join(table_dir, f)).metadata.num_rows for f in kept

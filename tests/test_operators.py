@@ -1780,3 +1780,42 @@ def test_graph_stage_caches_evict_stale_lineage(spark):
     from .conftest import SF_DIR
 
     views(spark, SF_DIR)
+
+
+def test_runlog_reads_use_declared_schemas(spark, tmp_path):
+    """The five log files are read back with the schemas they were
+    written with — which must be exactly what inference would give."""
+    from etl_service_spark.plans.runlog import LEVELS, RunLog, register_runlog_views
+
+    log = RunLog(str(tmp_path))
+    parent = None
+    for lv in LEVELS:
+        parent = log.open(lv, f"{lv}_1", parent, datetime(2026, 1, 1, 2, 0))
+        log.close(lv, parent, success=lv != "step", expected_rows=1)
+    log.error("step", parent, "boom", "SELECT 1")
+    log.log_query(parent, "SELECT 1")
+    flushed = log.flush(spark)
+    register_runlog_views(spark, str(tmp_path))
+    for name in LEVELS + ("errors", "queries"):
+        inferred = spark.read.parquet(str(tmp_path / f"runlog_{name}.parquet")).schema
+        assert spark.table(f"runlog_{name}").schema == inferred, name
+        if name in flushed:
+            assert flushed[name].schema == inferred, name
+
+
+def test_ivf_index_assign_leaves_no_temp_views(spark, tmp_path, sf_dir):
+    from etl_service_spark.operators.similarity import ivf_index_assign, ivf_index_build
+    from etl_service_spark.plans.queries import views
+
+    views(spark, sf_dir)
+    index_dir = str(tmp_path / "idx")
+    ivf_index_build(spark, index_dir, k=4)
+
+    def temp_views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before = temp_views()
+    batch = spark.table("embeddings").filter("vec_id % 8 = 7")
+    counts = [ivf_index_assign(spark, index_dir, batch).count() for _ in range(3)]
+    assert temp_views() == before
+    assert counts == [batch.count()] * 3
