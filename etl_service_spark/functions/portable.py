@@ -212,22 +212,6 @@ def staging_dir(spark) -> str:
     return spark.conf.get(STAGING_DIR_CONF, "") or ""
 
 
-def session_token(spark) -> str:
-    """Session-unique cache-key component for per-session registries
-    (queries.views). ``id(spark)`` is NOT safe: CPython recycles
-    addresses, so a new session allocated where a stopped one lived
-    would alias the old cache entries and return temp-view names that
-    only existed in the dead session. A uuid pinned on the session
-    object dies with it."""
-    import uuid as _uuid
-
-    tok = getattr(spark, "_etl_stage_token", None)
-    if tok is None:
-        tok = _uuid.uuid4().hex
-        spark._etl_stage_token = tok
-    return tok
-
-
 NO_FILES = "<no-files>"
 
 
@@ -285,8 +269,9 @@ def stage_df(df, name: str):
 # manager cannot match plans containing lambdas, so persist() alone
 # does not stop the re-derivation; a materialized relation does.
 #
-# One dict per SparkSession, pinned on the session object like
-# session_token, so entries die with the session:
+# One dict per SparkSession, pinned on the session object (not keyed
+# by id(spark): CPython recycles addresses), so entries die with the
+# session:
 #     (kind, params) -> ((lineage, staging dir), value, release)
 # i.e. the cache key is (kind, params, lineage_key(src), staging dir),
 # with ONE entry kept per (kind, params). That is the eviction rule:
@@ -496,7 +481,8 @@ def duck_chunks(tokens_expr: str, w: int = 8) -> str:
 # shuffle-order independent), then CAST the exact sum to DOUBLE
 # (correctly-rounded conversion, identical in both engines). Scalar
 # double expressions over identical operands are bit-identical by IEEE
-# 754 and need no treatment; where truncation is wanted use floor6.
+# 754 and need no treatment; where truncation is wanted, FLOOR(x * 1e6)
+# / 1e6 is tie-free (unlike ROUND) in any engine.
 
 
 def money_sum(expr: str, alias: str) -> str:
@@ -566,22 +552,25 @@ def ratio(num: str, den: str) -> str:
     return f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE)"
 
 
-def floor6(expr: str) -> str:
-    """Deterministic 6-digit truncation (floor is tie-free, unlike
-    round): identical inputs → identical outputs in any engine."""
-    return f"FLOOR(({expr}) * 1e6) / 1e6"
-
-
 # ----------------------------------------------------- bi-engine templates
 def bi_sql(template: str, **frags: tuple[str, str] | str) -> tuple[str, str]:
     """Render one SQL template for both engines. Each fragment is either
     a (spark_text, duck_text) pair or a single shared string. Returns
     (spark_sql, duckdb_sql). Keeping ONE template per query is what
     guarantees the Spark plan and the oracle stay structurally in sync.
+    For live twins only — queries whose Spark text some path runs; an
+    oracle-only builder renders with :func:`duck_sql`.
     """
     s = {k: (v if isinstance(v, str) else v[0]) for k, v in frags.items()}
+    return template.format(**s), duck_sql(template, **frags)
+
+
+def duck_sql(template: str, **frags: tuple[str, str] | str) -> str:
+    """The DuckDB half of :func:`bi_sql` alone: the oracle text of a
+    query whose Spark path is DataFrame code, not this template. Pair
+    fragments contribute their DuckDB text."""
     d = {k: (v if isinstance(v, str) else v[1]) for k, v in frags.items()}
-    return template.format(**s), template.format(**d)
+    return template.format(**d)
 
 
 def bit_probe(hash_expr: str, j: int) -> str:

@@ -108,22 +108,17 @@ GROUP BY source, lang
     return P.bi_sql(template, idiv=("DIV", "//"), view=view)
 
 
-def dup_rate_by_source_sql(view: str = "documents") -> tuple[str, str]:
+def dup_rate_by_source_sql(view: str = "documents") -> str:
     """Exact-duplicate pressure per source: how much of each source
     survives exact dedup. n_dups is integer-exact (no FP rate)."""
-    template = """
+    return f"""
 SELECT source,
        COUNT(*) AS n_docs,
        COUNT(DISTINCT h) AS n_unique,
        COUNT(*) - COUNT(DISTINCT h) AS n_dups
-FROM (SELECT source, {text_hash} AS h FROM {view}) t
+FROM (SELECT source, {P.duck_poly_hash("lower(text)")} AS h FROM {view}) t
 GROUP BY source
 """
-    return P.bi_sql(
-        template,
-        text_hash=(P.spark_poly_hash("lower(text)"), P.duck_poly_hash("lower(text)")),
-        view=view,
-    )
 
 
 def dup_rate_by_source_staged(spark: SparkSession, view: str = "documents") -> DataFrame:
@@ -144,18 +139,6 @@ def dup_rate_by_source_staged(spark: SparkSession, view: str = "documents") -> D
             (F.count("*") - F.count_distinct("h")).alias("n_dups"),
         )
     )
-
-
-def split_assign(spark: SparkSession) -> DataFrame:
-    return spark.sql(split_assign_sql())
-
-
-def stratified_sample(spark: SparkSession, k: int = 50) -> DataFrame:
-    return spark.sql(stratified_sample_sql(k=k))
-
-
-def source_composition(spark: SparkSession) -> DataFrame:
-    return spark.sql(source_composition_sql()[0])
 
 
 def mixture_sample_sql(budget: int = 1000, view: str = "documents") -> tuple[str, str]:
@@ -389,7 +372,7 @@ GROUP BY lang, seq_id
     return P.bi_sql(template, idiv=("DIV", "//"))
 
 
-def cross_source_overlap_sql(view: str = "documents") -> tuple[str, str]:
+def cross_source_overlap_sql(view: str = "documents") -> str:
     """Cross-source exact-duplicate overlap matrix: for every pair of
     sources, how many distinct texts appear in BOTH. The report you
     read before dropping a source from the mix — a source whose
@@ -401,18 +384,14 @@ def cross_source_overlap_sql(view: str = "documents") -> tuple[str, str]:
     tiny constant (never all-pairs on documents), and the output is at
     most |sources|^2 rows. Integer-only — exact cross-engine hashes.
     """
-    template = f"""
+    return f"""
 WITH h AS (
-  SELECT DISTINCT source, {{text_hash}} AS h FROM {view}
+  SELECT DISTINCT source, {P.duck_poly_hash("lower(text)")} AS h FROM {view}
 )
 SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
 FROM h a JOIN h b ON a.h = b.h AND a.source < b.source
 GROUP BY a.source, b.source
 """
-    return P.bi_sql(
-        template,
-        text_hash=(P.spark_poly_hash("lower(text)"), P.duck_poly_hash("lower(text)")),
-    )
 
 
 def cross_source_overlap_staged(spark: SparkSession, view: str = "documents") -> DataFrame:
@@ -440,7 +419,7 @@ def cross_source_overlap_staged(spark: SparkSession, view: str = "documents") ->
     )
 
 
-def dedup_survivorship_sql(view: str = "documents") -> tuple[str, str]:
+def dedup_survivorship_sql(view: str = "documents") -> str:
     """Exact-dedup survivorship by source: with min-doc_id as the
     canonical keeper of every duplicate class, how many documents each
     source keeps vs loses. The companion report to
@@ -452,9 +431,9 @@ def dedup_survivorship_sql(view: str = "documents") -> tuple[str, str]:
     equi-keyed on h with posting lists bounded by the duplicate-class
     size. Integer-only output.
     """
-    template = f"""
+    return f"""
 WITH h AS (
-  SELECT doc_id, source, {{text_hash}} AS h FROM {view}
+  SELECT doc_id, source, {P.duck_poly_hash("lower(text)")} AS h FROM {view}
 ),
 canon AS (SELECT h, MIN(doc_id) AS keeper FROM h GROUP BY h)
 SELECT source,
@@ -464,10 +443,6 @@ SELECT source,
 FROM h JOIN canon ON h.h = canon.h
 GROUP BY source
 """
-    return P.bi_sql(
-        template,
-        text_hash=(P.spark_poly_hash("lower(text)"), P.duck_poly_hash("lower(text)")),
-    )
 
 
 def dedup_survivorship_staged(spark: SparkSession, view: str = "documents") -> DataFrame:

@@ -1,8 +1,8 @@
 """Deduplication operator family for a training-data pipeline.
 
-Five dedup strategies over the ``documents`` table, each expressed as a
-single declarative Spark plan (and a structurally identical DuckDB
-oracle via the shared bi-engine template):
+Five dedup strategies over the ``documents`` table, each a Spark path
+(``*_staged``, over the memoized fingerprint/token/posting relations)
+checked against a single-statement DuckDB oracle (``*_sql``):
 
 - exact          — hash-groupBy on the full text (one shuffle on a
                    30-bit key; at 100 TB this is the canonical
@@ -44,7 +44,7 @@ TOKENS = (P.spark_tokens("text"), P.duck_tokens("text"))
 # tokenizer into the shingle lambda: element_at(<full tokenizer>, i)
 # re-tokenizes the document once per gram access (~600× per doc).
 SHINGLES_T = (P.spark_shingles("t"), P.duck_shingles("t"))
-TEXT_HASH = (P.spark_poly_hash("lower(text)"), P.duck_poly_hash("lower(text)"))
+TEXT_HASH = P.duck_poly_hash("lower(text)")
 # hash every shingle of an in-scope array column `s0`: array<string> → array<bigint>
 # (outer lambda var `q` avoids colliding with the poly-hash's inner `x`)
 HASHED_SHINGLES = (
@@ -53,7 +53,6 @@ HASHED_SHINGLES = (
 )
 ARR_LEN = ("size", "len")
 EXPLODE = ("explode", "unnest")
-ARR_MIN = ("array_min", "list_min")
 ARR_SORT = ("array_sort", "list_sort")
 ARR_DISTINCT = ("array_distinct", "list_distinct")
 ARR_INTERSECT = ("array_intersect", "list_intersect")
@@ -105,12 +104,8 @@ GROUP BY h
 """
 
 
-def exact_dedup_sql(view: str = "documents") -> tuple[str, str]:
-    return P.bi_sql(EXACT_TEMPLATE, text_hash=TEXT_HASH, view=view)
-
-
-def exact_dedup(spark: SparkSession) -> DataFrame:
-    return spark.sql(exact_dedup_sql()[0])
+def exact_dedup_sql(view: str = "documents") -> str:
+    return P.duck_sql(EXACT_TEMPLATE, text_hash=TEXT_HASH, view=view)
 
 
 def materialize_texthash(spark: SparkSession, view: str = "documents") -> str:
@@ -240,7 +235,7 @@ def ngram_jaccard_sql(
     tau: float = 0.8, view: str = "documents",
     tau_frac: tuple[int, int] | None = None,
     src_modulus: int = 1,
-) -> tuple[str, str]:
+) -> str:
     """Single-statement form (the oracle; DuckDB materializes reused
     CTEs itself). The Spark execution path is :func:`ngram_jaccard_staged`.
 
@@ -251,7 +246,7 @@ def ngram_jaccard_sql(
     afford it); the staged Spark path pushes the same predicate into
     the candidate join so the candidate mass itself divides by ~m."""
     num, den = _tau_frac(tau, tau_frac)
-    s, d = P.bi_sql(
+    sql = P.duck_sql(
         _HASHSET_PROLOGUE + ",\n" + JACCARD_BODY,
         hs_rel="hs",
         tau=str(tau),
@@ -261,12 +256,11 @@ def ngram_jaccard_sql(
         **_hashset_frags(view),
     )
     if src_modulus > 1:
-        wrap = (
-            "SELECT doc_a, doc_b, jaccard FROM ({inner}\n) smp "
+        sql = (
+            f"SELECT doc_a, doc_b, jaccard FROM ({sql}\n) smp "
             f"WHERE doc_a % {src_modulus} = 0"
         )
-        s, d = wrap.format(inner=s), wrap.format(inner=d)
-    return s, d
+    return sql
 
 
 def materialize_hashsets(spark: SparkSession, view: str = "documents") -> str:
@@ -444,10 +438,10 @@ WHERE c2 * {tau_den} >= nx * {tau_num}
 
 def containment_dedup_sql(
     view: str = "documents", tau_frac: tuple[int, int] = (4, 5)
-) -> tuple[str, str]:
-    """Single-statement bi-engine form (the DuckDB side is the oracle)."""
+) -> str:
+    """Single-statement oracle form; the Spark path is containment_staged."""
     num, den = tau_frac
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + ",\n" + CONTAINMENT_BODY,
         hs_rel="hs",
         tau_num=str(num),
@@ -600,10 +594,10 @@ def minhash_lsh_sql(
     bands: int = 8,
     tau: float = 0.8,
     view: str = "documents",
-) -> tuple[str, str]:
+) -> str:
     """Single-statement form (the oracle). Spark path: minhash_lsh_staged."""
     body = _minhash_body(k, bands)
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + ",\n" + body,
         band_arr=_band_arr(k, bands),
         hs_rel="hs",
@@ -642,15 +636,26 @@ def minhash_lsh_staged(
 
 
 # --------------------------------------------------------------- simhash
-def simhash_sql(bits: int = 30, view: str = "documents") -> tuple[str, str]:
-    """Per-doc simhash fingerprint: explode tokens (multiplicity =
-    weight), hash each, vote per bit, assemble fingerprint as
-    Σ bit_j · 2^j. One explode + one groupBy — the same shuffle profile
-    as a word count, so it scales linearly."""
+def _simhash_exprs(bits: int) -> tuple[str, str]:
+    """(votes-select-list, fingerprint-expr) shared by the simhash
+    builders — per-bit majority votes over token hashes `h`, assembled
+    as Σ bit_j·2^j."""
     votes = ",\n         ".join(
         f"SUM(2 * {P.bit_probe('h', j)} - 1) AS v{j}" for j in range(bits)
     )
-    fp = " + ".join(f"(CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits))
+    fp = " + ".join(
+        f"(CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits)
+    )
+    return votes, fp
+
+
+def simhash_sql(bits: int = 30, view: str = "documents") -> str:
+    """Per-doc simhash fingerprint (the oracle; Spark path:
+    simhash_staged): explode tokens (multiplicity = weight), hash each,
+    vote per bit, assemble fingerprint as Σ bit_j · 2^j. One explode +
+    one groupBy — the same shuffle profile as a word count, so it
+    scales linearly."""
+    votes, fp = _simhash_exprs(bits)
     template = (
         """
 WITH tok AS (
@@ -673,17 +678,13 @@ SELECT doc_id, CAST("""
 FROM votes
 """
     )
-    return P.bi_sql(
+    return P.duck_sql(
         template,
         explode=EXPLODE,
         tokens=TOKENS,
-        tok_hash=(P.spark_poly_hash("t"), P.duck_poly_hash("t")),
+        tok_hash=P.duck_poly_hash("t"),
         view=view,
     )
-
-
-def simhash(spark: SparkSession, bits: int = 30) -> DataFrame:
-    return spark.sql(simhash_sql(bits)[0])
 
 
 def simhash_staged(spark: SparkSession, bits: int = 30, view: str = "documents") -> DataFrame:
@@ -704,12 +705,7 @@ def simhash_staged(spark: SparkSession, bits: int = 30, view: str = "documents")
     tok_rel = textops.materialize_tokens(spark, view)
 
     def build() -> DataFrame:
-        votes = ",\n         ".join(
-            f"SUM(2 * {P.bit_probe('h', j)} - 1) AS v{j}" for j in range(bits)
-        )
-        fp = " + ".join(
-            f"(CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits)
-        )
+        votes, fp = _simhash_exprs(bits)
         return spark.sql(
             f"""
 WITH votes AS (
@@ -729,51 +725,33 @@ FROM votes
 def simhash_pairs_staged(spark: SparkSession, bits: int = 30, view: str = "documents") -> DataFrame:
     """Staged twin of simhash_pairs_sql: dup-candidate groups from
     equal fingerprints of the staged simhash relation."""
-    fp = simhash_staged(spark, bits, view)
-    # unique view name: orchestrator step threads share the session
-    view_name = f"__simhash_fp_{id(fp)}"
-    fp.createOrReplaceTempView(view_name)
     return spark.sql(
-        f"""
+        """
 SELECT simhash, MIN(doc_id) AS keeper_id, COUNT(*) AS group_size
-FROM {view_name}
+FROM {fp}
 GROUP BY simhash
 HAVING COUNT(*) > 1
-"""
+""",
+        fp=simhash_staged(spark, bits, view),
     )
 
 
-def simhash_pairs_sql(bits: int = 30, view: str = "documents") -> tuple[str, str]:
+def simhash_pairs_sql(bits: int = 30, view: str = "documents") -> str:
     """Dup-candidate groups from equal simhash fingerprints: one
     hash aggregation over the fingerprints (same shuffle profile as
     exact dedup — fingerprint becomes the group key). Hamming-distance
     widening would explode rotated bands exactly like minhash banding;
     equal-fingerprint is the reference point the oracle can replicate."""
-    sim_s, sim_d = simhash_sql(bits, view)
-    template = """
-WITH fp AS ({inner})
+    return f"""
+WITH fp AS ({simhash_sql(bits, view).strip()})
 SELECT simhash, MIN(doc_id) AS keeper_id, COUNT(*) AS group_size
 FROM fp
 GROUP BY simhash
 HAVING COUNT(*) > 1
 """
-    return template.format(inner=sim_s.strip()), template.format(inner=sim_d.strip())
 
 
 # --------------------------------------------- staged dedup cascade
-def _simhash_exprs(bits: int) -> tuple[str, str]:
-    """(votes-select-list, fingerprint-expr) shared by the simhash
-    builders — per-bit majority votes over token hashes `h`, assembled
-    as Σ bit_j·2^j."""
-    votes = ",\n         ".join(
-        f"SUM(2 * {P.bit_probe('h', j)} - 1) AS v{j}" for j in range(bits)
-    )
-    fp = " + ".join(
-        f"(CASE WHEN v{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits)
-    )
-    return votes, fp
-
-
 def _cascade_tail(view: str) -> str:
     """Per-source funnel tail over `surv` (exact survivors) and `nk`
     (near-dup keepers): doc counts after each stage, removed counts
@@ -799,7 +777,7 @@ LEFT JOIN s2 ON s2.source = b.source
 ORDER BY b.source"""
 
 
-def dedup_cascade_sql(bits: int = 30, view: str = "documents") -> tuple[str, str]:
+def dedup_cascade_sql(bits: int = 30, view: str = "documents") -> str:
     """Per-source dedup FUNNEL — the curation cascade a training-data
     pipeline actually runs (CCNet/RefinedWeb order): exact full-text
     dedup first (cheapest, biggest mass), then simhash near-dup over
@@ -832,12 +810,12 @@ fp AS (SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM votes),
 nk AS (SELECT MIN(doc_id) AS doc_id FROM fp GROUP BY simhash),
 {_cascade_tail(view)}
 """
-    return P.bi_sql(
+    return P.duck_sql(
         template,
         text_hash=TEXT_HASH,
         explode=EXPLODE,
         tokens=TOKENS,
-        tok_hash=(P.spark_poly_hash("t"), P.duck_poly_hash("t")),
+        tok_hash=P.duck_poly_hash("t"),
         idiv=IDIV,
     )
 
@@ -895,7 +873,7 @@ nk AS (SELECT MIN(doc_id) AS doc_id FROM fp GROUP BY simhash),
 
 def contamination_sql(
     k_shared: int = 5, bench_max_id: int = 50, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """Decontamination scan: which training documents share >= k
     shingles with any benchmark document (stand-in benchmark set:
     doc_id < bench_max_id).
@@ -923,7 +901,7 @@ SELECT train_id, bench_id, n_shared
 FROM shared
 WHERE n_shared >= {k_shared}
 """
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + ",\n" + body,
         hs_rel="hs",
         bench_max_id=str(bench_max_id),
@@ -1040,7 +1018,7 @@ def _chunk_explode_sql(w: int, view: str) -> tuple[str, str]:
     return spark_ch, duck_ch
 
 
-def chunk_dedup_sql(w: int = 8, view: str = "documents") -> tuple[str, str]:
+def chunk_dedup_sql(w: int = 8, view: str = "documents") -> str:
     """Cross-document exact-substring deduplication at w-token chunk
     granularity — the bounded-memory proxy for suffix-array ExactSubstr
     dedup (Lee et al., "Deduplicating Training Data Makes Language
@@ -1056,11 +1034,8 @@ def chunk_dedup_sql(w: int = 8, view: str = "documents") -> tuple[str, str]:
     pathological hot chunks are repeated *spans*, exactly the thing
     being measured); one per-doc re-aggregation. No all-pairs stage
     anywhere — cost is linear in corpus token mass at any scale."""
-    spark_ch, duck_ch = _chunk_explode_sql(w, view)
-
-    def body(ch_sql: str, idiv: str) -> str:
-        return f"""
-WITH ch AS ({ch_sql}),
+    return f"""
+WITH ch AS ({_chunk_explode_sql(w, view)[1]}),
 cf AS (SELECT chunk, COUNT(DISTINCT doc_id) AS n_docs FROM ch GROUP BY chunk),
 doc AS (
   SELECT c.doc_id,
@@ -1072,11 +1047,9 @@ doc AS (
 SELECT doc_id,
        CAST(n_chunks AS BIGINT) AS n_chunks,
        CAST(n_shared AS BIGINT) AS n_shared,
-       CAST(n_shared * 1000000 {idiv} n_chunks AS BIGINT) AS dup_span_ppm
+       CAST(n_shared * 1000000 // n_chunks AS BIGINT) AS dup_span_ppm
 FROM doc
 """
-
-    return body(spark_ch, "DIV"), body(duck_ch, "//")
 
 
 def chunk_dedup_staged(spark: SparkSession, w: int = 8, view: str = "documents") -> DataFrame:
@@ -1318,9 +1291,9 @@ SELECT CAST(s.batch AS BIGINT) AS batch,
 FROM sz s LEFT JOIN kept k ON k.batch = s.batch
 GROUP BY s.batch, s.n_in
 """
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + tail, hs_rel="hs", **_hashset_frags(view)
-    )[1]
+    )
 
 
 # ------------------------------------------------------- LSH cost audit
@@ -1344,7 +1317,7 @@ GROUP BY {ladder}
 
 def lsh_cost_audit_sql(
     k: int = 16, bands: int = 8, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """Posting-list cost profile of the minhash-LSH band join — the
     pre-flight check that tells you whether the LSH candidate join is
     safe to run BEFORE paying for it: bucket the band-bucket sizes by
@@ -1365,7 +1338,7 @@ def lsh_cost_audit_sql(
     """
     ladder = " ".join(f"WHEN sz < {2 ** (j + 1)} THEN {j}" for j in range(12))
     body = _lsh_audit_body(k, bands)
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + ",\n" + body,
         band_arr=_band_arr(k, bands),
         hs_rel="hs",
@@ -1446,10 +1419,10 @@ FROM est e JOIN exact x ON x.doc_a = e.doc_a AND x.doc_b = e.doc_b
     )
 
 
-def minhash_estimate_sql(k: int = 16, bands: int = 8, view: str = "documents") -> tuple[str, str]:
+def minhash_estimate_sql(k: int = 16, bands: int = 8, view: str = "documents") -> str:
     """Single-statement oracle for minhash_estimate_staged."""
     body = _minhash_estimate_body(k, bands)
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + ",\n" + body,
         band_arr=_band_arr(k, bands),
         hs_rel="hs",
@@ -1597,7 +1570,7 @@ def lsh_band_tuning_sql(
     view: str = "documents",
     cap_rows: int = 32,
     src_modulus: int = 1,
-) -> tuple[str, str]:
+) -> str:
     """Banding-parameter sweep for the minhash-LSH join: for each
     (bands b x rows r = k/b) configuration over the SAME k-minhash
     signature, the candidate mass the banded self-join would produce
@@ -1620,14 +1593,11 @@ def lsh_band_tuning_sql(
     """
     tail, band_arrs = _band_tuning_tail(k, band_configs, cap_rows, src_modulus)
     exact = ngram_jaccard_sql(tau, view, src_modulus=src_modulus)
-    return P.bi_sql(
+    return P.duck_sql(
         _HASHSET_PROLOGUE + ",\nsig AS (\n" + _band_sig_sql(k) + "\n),\n" + tail,
         hs_rel="hs",
         sig_rel="sig",
-        exact_rel=(
-            f"(SELECT doc_a, doc_b FROM ({exact[0]}) xx)",
-            f"(SELECT doc_a, doc_b FROM ({exact[1]}) xx)",
-        ),
+        exact_rel=f"(SELECT doc_a, doc_b FROM ({exact}) xx)",
         **band_arrs,
         **_hashset_frags(view),
     )
@@ -1839,11 +1809,11 @@ def _ess_oracle(tail: str, k: int, view: str) -> str:
     join)."""
     from . import textops as T
 
-    duck = P.bi_sql(
+    duck = P.duck_sql(
         "WITH " + T._WINNOW_GRAM_CTE + ",\n"
         + _ESS_SPAN_CTES.format(rel="ph", k=k) + tail,
         **T._winnow_gram_frags(k, view),
-    )[1]
+    )
     return duck.replace("ph AS (", "ph AS MATERIALIZED (", 1)
 
 

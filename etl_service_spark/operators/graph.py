@@ -229,7 +229,7 @@ def dup_clusters_oracle_sql(tau: float = 0.8) -> str:
     transitive closure -> min reachable node per node."""
     from . import dedup
 
-    pairs_sql = dedup.ngram_jaccard_sql(tau=tau)[1].strip()
+    pairs_sql = dedup.ngram_jaccard_sql(tau=tau).strip()
     # the pairs query is itself a WITH ... SELECT; splice its CTEs into
     # ours by rebinding its body as a derived-table CTE
     return f"""
@@ -571,7 +571,7 @@ def triangle_stats_oracle_sql(tau: float = 0.8) -> str:
     match exactly."""
     from . import dedup
 
-    pairs_sql = dedup.ngram_jaccard_sql(tau=tau)[1].strip()
+    pairs_sql = dedup.ngram_jaccard_sql(tau=tau).strip()
     return f"""
 WITH pairs AS (SELECT doc_a, doc_b FROM ({pairs_sql}) p),
 e AS (
@@ -839,7 +839,7 @@ def kcore_oracle_sql(tau: float = 0.8, k: int = 2, rounds: int = 4) -> str:
     Spark side's localCheckpoint."""
     from . import dedup
 
-    pairs_sql = dedup.ngram_jaccard_sql(tau=tau)[1].strip()
+    pairs_sql = dedup.ngram_jaccard_sql(tau=tau).strip()
     ctes = [
         f"pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({pairs_sql}) p)",
         "e0 AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs"

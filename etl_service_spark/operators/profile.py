@@ -96,7 +96,7 @@ def scrub_pii(df, text_col: str = "text", patterns: dict[str, str] | None = None
 
 def key_skew_report_sql(
     key: str = "user_id", top_n: int = 10, view: str = "events"
-) -> tuple[str, str]:
+) -> str:
     """Shuffle-key skew report — the diagnostic that decides whether a
     join/aggregate on ``key`` needs salting BEFORE the job runs at
     100 TB (SCALE.md's salting rule is gated on exactly these numbers).
@@ -139,13 +139,10 @@ FROM o
 """
     from etl_service_spark.functions import portable as P
 
-    # max_cnt * n_keys * 1e6 passes 2^63 on a large corpus: Spark
-    # decimals stay exact to precision 38; DuckDB would convert an
-    # over-wide DECIMAL product to (lossy) DOUBLE, so the oracle
-    # multiplies in HUGEINT instead.
-    return P.bi_sql(
-        template, idiv=("DIV", "//"), big_t=("DECIMAL(38,0)", "HUGEINT")
-    )
+    # max_cnt * n_keys * 1e6 passes 2^63 on a large corpus: DuckDB
+    # would convert an over-wide DECIMAL product to (lossy) DOUBLE, so
+    # the oracle multiplies in HUGEINT.
+    return P.duck_sql(template, idiv="//", big_t="HUGEINT")
 
 
 def key_skew_staged(
@@ -251,7 +248,7 @@ FROM sj
 
 def range_boundaries_sql(
     buckets: int = 32, key: str = "user_id", uid: str = "event_id", view: str = "events"
-) -> tuple[str, str]:
+) -> str:
     """Equi-depth range-partition boundary plan — what
     ``repartitionByRange``'s sampler approximates, computed exactly:
     NTILE over the total order (key, uid) yields ``buckets``
@@ -267,7 +264,7 @@ def range_boundaries_sql(
     the per-key count form this docstring always named as the 100 TB
     shape, now implemented.
     """
-    template = f"""
+    return f"""
 WITH b AS (
   SELECT {key} AS k,
          NTILE({buckets}) OVER (ORDER BY {key} ASC, {uid} ASC) AS bucket
@@ -277,7 +274,6 @@ SELECT bucket, MIN(k) AS lo_key, MAX(k) AS hi_key, COUNT(*) AS n_rows
 FROM b
 GROUP BY bucket
 """
-    return template, template
 
 
 def range_boundaries_staged(

@@ -2,20 +2,20 @@
 
 Two paths, as a 100 TB pipeline needs both:
 
-- ``cosine_topk``  — brute-force exact top-k: broadcast the (small)
-  query set against the full corpus; one map-side pass + a per-query
-  top-k (window). Baseline and ground truth.
-- ``lsh_ann``      — random-hyperplane (sign) LSH: 12 deterministic
-  hyperplanes → 12-bit bucket; exact cosine only WITHIN buckets. Cost
-  drops from O(Q·N) to O(collisions); on a cluster the bucket id is the
-  shuffle key, so each bucket is processed co-located.
+- ``cosine_topk_staged`` — brute-force exact top-k: broadcast the
+  (small) query set against the full corpus; one map-side pass + a
+  per-query top-k. Baseline and ground truth.
+- ``lsh_ann_staged``     — random-hyperplane (sign) LSH: 12
+  deterministic hyperplanes → 12-bit bucket; exact cosine only WITHIN
+  buckets. Cost drops from O(Q·N) to O(collisions); on a cluster the
+  bucket id is the shuffle key, so each bucket is processed co-located.
 
-Determinism: the dot product is emitted as an EXPLICIT 64-term
-left-associated expression chain — both engines evaluate the identical
-IEEE-754 operation sequence, so cosine values are bit-identical and no
-tolerance is needed. The hyperplane coefficients come from an integer
-LCG, exact in both engines. Everything is whole-stage-codegen'd JVM
-work — no Python in the loop.
+Each Spark path is checked against the DuckDB oracle its ``*_sql``
+builder renders. Determinism: the oracle's dot product is an EXPLICIT
+64-term left-associated expression chain, and the Arrow kernels replay
+the identical IEEE-754 operation sequence (``np_norms``), so cosine
+values are bit-identical and no tolerance is needed. The hyperplane
+coefficients come from an integer LCG, exact in both engines.
 """
 
 from __future__ import annotations
@@ -96,23 +96,16 @@ SELECT q_id, n_id, rnk, cosine FROM ranked WHERE rnk <= {k}
 """
 
 
-def cosine_topk_sql(k: int = 10, n_queries: int = 5, view: str = "embeddings") -> tuple[str, str]:
-    return P.bi_sql(
+def cosine_topk_sql(k: int = 10, n_queries: int = 5, view: str = "embeddings") -> str:
+    return P.duck_sql(
         TOPK_TEMPLATE,
-        dot=(_dot("qv", "e.embedding", one_based=False), _dot("qv", "e.embedding", one_based=True)),
-        qnorm=(_norm("qv", one_based=False), _norm("qv", one_based=True)),
-        enorm=(
-            _norm("e.embedding", one_based=False),
-            _norm("e.embedding", one_based=True),
-        ),
+        dot=_dot("qv", "e.embedding", one_based=True),
+        qnorm=_norm("qv", one_based=True),
+        enorm=_norm("e.embedding", one_based=True),
         view=view,
         k=str(k),
         n_queries=str(n_queries),
     )
-
-
-def cosine_topk(spark: SparkSession, k: int = 10, n_queries: int = 5) -> DataFrame:
-    return spark.sql(cosine_topk_sql(k, n_queries)[0])
 
 
 def cosine_topk_staged(
@@ -187,15 +180,11 @@ def cosine_topk_staged(
     scored = P.fan_out(emb, light=True).mapInPandas(
         kernel, schema="q_id bigint, n_id bigint, cosine double"
     )
-    # unique view name: steps share one session under the orchestrator's
-    # thread pool, so fixed names would race
-    view_name = f"__topk_cand_{id(scored)}"
-    scored.createOrReplaceTempView(view_name)
     # pandas->Arrow serialization maps the kernel's NaN cosines to SQL
     # NULL (pandas uses NaN as its NA sentinel); the kernel never emits
     # a legitimate NULL, so restore NULL -> NaN here and rank on the
     # restored value — NaN is GREATEST under DESC in both Spark and
-    # DuckDB, so zero-norm candidates rank first, like the SQL twin.
+    # DuckDB, so zero-norm candidates rank first, like the oracle.
     return spark.sql(
         f"""
 SELECT q_id, n_id, rnk, cosine FROM (
@@ -203,9 +192,10 @@ SELECT q_id, n_id, rnk, cosine FROM (
          ROW_NUMBER() OVER (
            PARTITION BY q_id
            ORDER BY coalesce(cosine, CAST('NaN' AS DOUBLE)) DESC, n_id) AS rnk
-  FROM {view_name}
+  FROM {{scored}}
 ) WHERE rnk <= {k}
-"""
+""",
+        scored=scored,
     )
 
 
@@ -221,23 +211,16 @@ WHERE ({dot}) / (a.nrm * b.nrm) >= {tau}
 """
 
 
-def embedding_neardup_sql(tau: float = 0.4, view: str = "embeddings") -> tuple[str, str]:
+def embedding_neardup_sql(tau: float = 0.4, view: str = "embeddings") -> str:
     """Exact all-pairs cosine near-dup (the correctness baseline; the
     LSH path below is the scale path for the same question)."""
-    return P.bi_sql(
+    return P.duck_sql(
         NEARDUP_TEMPLATE,
-        dot=(
-            _dot("a.embedding", "b.embedding", one_based=False),
-            _dot("a.embedding", "b.embedding", one_based=True),
-        ),
-        norm=(_norm("embedding", one_based=False), _norm("embedding", one_based=True)),
+        dot=_dot("a.embedding", "b.embedding", one_based=True),
+        norm=_norm("embedding", one_based=True),
         view=view,
         tau=str(tau),
     )
-
-
-def embedding_neardup(spark: SparkSession, tau: float = 0.4) -> DataFrame:
-    return spark.sql(embedding_neardup_sql(tau)[0])
 
 
 def _neardup_blocks(n: int, rows_per_block: int) -> int:
@@ -423,7 +406,7 @@ def ivf_ann_sql(
     k: int = 10,
     n_queries: int = 5,
     view: str = "embeddings",
-) -> tuple[str, str]:
+) -> str:
     """IVF-style ANN: coarse quantizer = the first ``n_cells`` vectors
     (deterministic, no RNG → exactly reproducible in the oracle), each
     vector assigned to its nearest centroid's inverted list, queries
@@ -434,27 +417,17 @@ def ivf_ann_sql(
     one map-side pass; the probe join shuffles on c_id so each inverted
     list is processed co-located — candidate cost is O(probed lists),
     never O(N) per query. Recall is tunable via nprobe."""
-    return P.bi_sql(
+    return P.duck_sql(
         IVF_TEMPLATE,
-        norm=(_norm("embedding", one_based=False), _norm("embedding", one_based=True)),
-        adot=(
-            _dot("v.embedding", "c.cv", one_based=False),
-            _dot("v.embedding", "c.cv", one_based=True),
-        ),
-        sdot=(
-            _dot("qv.embedding", "nv2.embedding", one_based=False),
-            _dot("qv.embedding", "nv2.embedding", one_based=True),
-        ),
+        norm=_norm("embedding", one_based=True),
+        adot=_dot("v.embedding", "c.cv", one_based=True),
+        sdot=_dot("qv.embedding", "nv2.embedding", one_based=True),
         view=view,
         n_cells=str(n_cells),
         nprobe=str(nprobe),
         k=str(k),
         n_queries=str(n_queries),
     )
-
-
-def ivf_ann(spark: SparkSession, **kw) -> DataFrame:
-    return spark.sql(ivf_ann_sql(**kw)[0])
 
 
 def ivf_assignment_rel(
@@ -629,61 +602,52 @@ def _ivf_refine_sql(arel: str, where: str = "") -> str:
   GROUP BY a.j, e.dim"""
 
 
-def ivf_incremental_drift_sql(
-    k: int = 4, view: str = "embeddings", spark_big: str | None = None
-) -> tuple[str, str]:
-    """Single-statement form of the incremental-vs-rebuild drift gauge
-    (the DuckDB side is the oracle for the PERSISTED Spark path in
-    :func:`ivf_incremental_staged` — stateless unroll vs real state,
+def ivf_incremental_drift_sql(k: int = 4, view: str = "embeddings") -> str:
+    """Single-statement DuckDB oracle of the incremental-vs-rebuild
+    drift gauge, for the PERSISTED Spark path in
+    :func:`ivf_incremental_staged` (stateless unroll vs real state,
     same values). Base corpus = ``vec_id % 8 < 6``; persisted index =
     one Lloyd refinement over the base; rebuild = the same refinement
     over the full corpus. Per stale cell: member counts (base /
     incrementally-added), vectors whose rebuilt cell differs, and
     churn_permille — the re-train trigger metric.
 
-    The DuckDB CTEs are MATERIALIZED (e feeds four distance
+    The CTEs are MATERIALIZED (e feeds four distance
     aggregates; default inlining would replay the explode per
     reference — the kcore-oracle failure class)."""
-
-    def body(e_ix: int, big: str) -> str:
-        elem = _KM_SPARK_ELEM if e_ix == 0 else _KM_DUCK_ELEM
-        dims = _KM_SPARK_DIMS if e_ix == 0 else _KM_DUCK_DIMS
-        mat = "" if e_ix == 0 else " MATERIALIZED"
-        idiv = "DIV" if e_ix == 0 else "//"
-        base_w = f" WHERE e.{_IVF_INC_BASE}"
-        cte = [
-            f"dims AS ({dims})",
-            f"e AS{mat} ({_ivf_e_cte(elem, view)})",
-            f"c0 AS (SELECT vec_id AS j, dim, v AS s, CAST(1 AS BIGINT) AS n"
-            f" FROM e WHERE vec_id < {k})",
-            # persisted index: refine over the base corpus only
-            f"db AS{mat} ({_ivf_dist_sql('c0', big, base_w)})",
-            f"ab AS ({_ivf_assign_sql('db')})",
-            f"cb AS{mat} ({_ivf_refine_sql('ab', base_w)})",
-            # full rebuild: the same refinement over everything
-            f"df_ AS{mat} ({_ivf_dist_sql('c0', big)})",
-            f"af AS ({_ivf_assign_sql('df_')})",
-            f"cf AS{mat} ({_ivf_refine_sql('af')})",
-            # assignments of the whole corpus against each quantizer
-            f"dinc AS{mat} ({_ivf_dist_sql('cb', big)})",
-            f"ainc AS ({_ivf_assign_sql('dinc')})",
-            f"dreb AS{mat} ({_ivf_dist_sql('cf', big)})",
-            f"areb AS ({_ivf_assign_sql('dreb')})",
-        ]
-        return (
-            "WITH " + ",\n".join(cte)
-            + f"""
+    big = _KM_DUCK_BIG
+    base_w = f" WHERE e.{_IVF_INC_BASE}"
+    cte = [
+        f"dims AS ({_KM_DUCK_DIMS})",
+        f"e AS MATERIALIZED ({_ivf_e_cte(_KM_DUCK_ELEM, view)})",
+        f"c0 AS (SELECT vec_id AS j, dim, v AS s, CAST(1 AS BIGINT) AS n"
+        f" FROM e WHERE vec_id < {k})",
+        # persisted index: refine over the base corpus only
+        f"db AS MATERIALIZED ({_ivf_dist_sql('c0', big, base_w)})",
+        f"ab AS ({_ivf_assign_sql('db')})",
+        f"cb AS MATERIALIZED ({_ivf_refine_sql('ab', base_w)})",
+        # full rebuild: the same refinement over everything
+        f"df_ AS MATERIALIZED ({_ivf_dist_sql('c0', big)})",
+        f"af AS ({_ivf_assign_sql('df_')})",
+        f"cf AS MATERIALIZED ({_ivf_refine_sql('af')})",
+        # assignments of the whole corpus against each quantizer
+        f"dinc AS MATERIALIZED ({_ivf_dist_sql('cb', big)})",
+        f"ainc AS ({_ivf_assign_sql('dinc')})",
+        f"dreb AS MATERIALIZED ({_ivf_dist_sql('cf', big)})",
+        f"areb AS ({_ivf_assign_sql('dreb')})",
+    ]
+    return (
+        "WITH " + ",\n".join(cte)
+        + """
 SELECT i.j AS cell,
        CAST(SUM(CASE WHEN i.vec_id % 8 < 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
        CAST(SUM(CASE WHEN i.vec_id % 8 >= 6 THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
        CAST(SUM(CASE WHEN i.j <> r.j THEN 1 ELSE 0 END) AS BIGINT) AS n_churn,
-       CAST(SUM(CASE WHEN i.j <> r.j THEN 1 ELSE 0 END) * 1000 {idiv} COUNT(*) AS BIGINT)
+       CAST(SUM(CASE WHEN i.j <> r.j THEN 1 ELSE 0 END) * 1000 // COUNT(*) AS BIGINT)
          AS churn_permille
 FROM ainc i JOIN areb r ON i.vec_id = r.vec_id
 GROUP BY i.j"""
-        )
-
-    return body(0, spark_big or _KM_SPARK_BIG), body(1, _KM_DUCK_BIG)
+    )
 
 
 def ivf_index_build(
@@ -868,25 +832,15 @@ WHERE ({dot}) / (a.nrm * b2.nrm) >= {tau}
 """
 
 
-def lsh_ann_sql(planes: int = 12, tau: float = 0.2, view: str = "embeddings") -> tuple[str, str]:
-    return P.bi_sql(
+def lsh_ann_sql(planes: int = 12, tau: float = 0.2, view: str = "embeddings") -> str:
+    return P.duck_sql(
         LSH_TEMPLATE,
-        bucket=(
-            _bucket_expr("embedding", planes, one_based=False),
-            _bucket_expr("embedding", planes, one_based=True),
-        ),
-        norm=(_norm("embedding", one_based=False), _norm("embedding", one_based=True)),
-        dot=(
-            _dot("a.embedding", "b2.embedding", one_based=False),
-            _dot("a.embedding", "b2.embedding", one_based=True),
-        ),
+        bucket=_bucket_expr("embedding", planes, one_based=True),
+        norm=_norm("embedding", one_based=True),
+        dot=_dot("a.embedding", "b2.embedding", one_based=True),
         view=view,
         tau=str(tau),
     )
-
-
-def lsh_ann(spark: SparkSession, planes: int = 12, tau: float = 0.2) -> DataFrame:
-    return spark.sql(lsh_ann_sql(planes, tau)[0])
 
 
 def lsh_ann_staged(
@@ -1001,12 +955,12 @@ GROUP BY vec_id
 
 
 # ------------------------------------------------------------- k-means
-def kmeans_sql(k: int = 4, iters: int = 2, view: str = "embeddings") -> tuple[str, str]:
+def kmeans_sql(k: int = 4, iters: int = 2, view: str = "embeddings") -> str:
     """Lloyd's k-means over the embedding column, ``iters`` iterations
-    unrolled into ONE SQL statement per engine — a fixed iteration
-    count needs no recursion, so the whole algorithm stays a single
-    declarative plan in both engines and the oracle is a full value
-    check (like PageRank in operators/graph.py).
+    unrolled into ONE SQL statement (the oracle; Spark path:
+    kmeans_staged) — a fixed iteration count needs no recursion, so the
+    whole algorithm stays a single declarative plan and the oracle is a
+    full value check (like PageRank in operators/graph.py).
 
     Cross-engine exactness: components are quantized once to integer
     1e-4 units (FLOOR(double*1e4) — floor and double multiply are both
@@ -1026,10 +980,7 @@ def kmeans_sql(k: int = 4, iters: int = 2, view: str = "embeddings") -> tuple[st
     map-side partial aggregate. The squared-error sums accumulate in
     DECIMAL(38,0)/HUGEINT (the BIGINT summand overflows near ~3e4
     members per cluster)."""
-    return (
-        _kmeans_body(_KM_SPARK_ELEM, _KM_SPARK_DIMS, _KM_SPARK_BIG, k, iters, view),
-        _kmeans_body(_KM_DUCK_ELEM, _KM_DUCK_DIMS, _KM_DUCK_BIG, k, iters, view),
-    )
+    return _kmeans_body(_KM_DUCK_ELEM, _KM_DUCK_DIMS, _KM_DUCK_BIG, k, iters, view)
 
 
 def _kmeans_body(elem: str, dims: str, big_t: str, k: int, iters: int, view: str) -> str:
@@ -1282,7 +1233,7 @@ SELECT j, rk, vec_id, CAST(dist_num AS BIGINT) AS dist_num, n_members FROM (
 
 def semantic_dedup_sql(
     k: int = 4, iters: int = 2, tau: float = 0.4, view: str = "embeddings"
-) -> tuple[str, str]:
+) -> str:
     """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication", arXiv:2303.09540):
     cluster the embedding space, then prune near-duplicate pairs ONLY
@@ -1303,32 +1254,27 @@ def semantic_dedup_sql(
     shuffles on the cluster id, centroids broadcast in the assignment
     stage, and nothing corpus-wide is ever quadratic. The fixed k here
     just keeps the sf-scale oracle exact."""
-
-    def body(elem: str, dims: str, one_based: bool, big_t: str) -> str:
-        cte, _cent, assign = _kmeans_chain(elem, dims, k, iters, view, big_t)
-        dot = _dot("a.embedding", "b.embedding", one_based=one_based)
-        nrm = _norm("embedding", one_based=one_based)
-        cte.append(f"""n AS (
+    cte, _cent, assign = _kmeans_chain(
+        _KM_DUCK_ELEM, _KM_DUCK_DIMS, k, iters, view, _KM_DUCK_BIG
+    )
+    dot = _dot("a.embedding", "b.embedding", one_based=True)
+    nrm = _norm("embedding", one_based=True)
+    cte.append(f"""n AS (
   SELECT vec_id, embedding, ({nrm}) AS nrm FROM {view}
 )""")
-        cte.append(f"""pairs AS (
+    cte.append(f"""pairs AS (
   SELECT aa.j AS cluster, aa.vec_id AS keep_id, ab.vec_id AS prune_id
   FROM {assign} aa JOIN {assign} ab ON ab.j = aa.j AND ab.vec_id > aa.vec_id
   JOIN n a ON a.vec_id = aa.vec_id
   JOIN n b ON b.vec_id = ab.vec_id
   WHERE ({dot}) / (a.nrm * b.nrm) >= {tau}
 )""")
-        final = """
+    final = """
 SELECT cluster, prune_id AS vec_id, MIN(keep_id) AS kept_id,
        COUNT(*) AS n_neighbors
 FROM pairs
 GROUP BY cluster, prune_id"""
-        return "WITH " + ",\n".join(cte) + final
-
-    return (
-        body(_KM_SPARK_ELEM, _KM_SPARK_DIMS, False, _KM_SPARK_BIG),
-        body(_KM_DUCK_ELEM, _KM_DUCK_DIMS, True, _KM_DUCK_BIG),
-    )
+    return "WITH " + ",\n".join(cte) + final
 
 
 def semantic_dedup_staged(
@@ -1457,7 +1403,7 @@ WHERE ({dot}) / (({qnorm}) * ({enorm})) >= {tau}
 
 def int8_topk_sql(
     k: int = 10, n_queries: int = 5, view: str = "embeddings"
-) -> tuple[str, str]:
+) -> str:
     """Top-k retrieval over the int8-QUANTIZED vectors — the search
     half of quantize_int8_sql's storage story (the recall against
     exact f64 cosine is what ann_int8_recall measures; PQ and
@@ -1476,16 +1422,10 @@ def int8_topk_sql(
     join is map-side; the per-(query, neighbor) aggregate is
     map-side-combinable (Q·N rows out of Q·N·64 in); the final
     top-k is a per-query window over hash-partitioned q_id."""
-    spark_dims = "SELECT CAST(id AS INT) AS i FROM range(64)"
-    duck_dims = "SELECT range AS i FROM range(64)"
-    spark_elem = "element_at(embedding, i + 1)"
-    duck_elem = "embedding[i + 1]"
-
-    def body(elem: str, dims: str) -> str:
-        return f"""
-WITH dims AS ({dims}),
+    return f"""
+WITH dims AS (SELECT range AS i FROM range(64)),
 e AS (
-  SELECT vec_id, i, CAST({elem} AS DOUBLE) AS v
+  SELECT vec_id, i, CAST(embedding[i + 1] AS DOUBLE) AS v
   FROM {view} CROSS JOIN dims
 ),
 m AS (SELECT vec_id, MAX(ABS(v)) AS mx FROM e GROUP BY vec_id),
@@ -1519,8 +1459,6 @@ ranked AS (
 )
 SELECT q_id, n_id FROM ranked WHERE rk <= {k}
 """
-
-    return body(spark_elem, spark_dims), body(duck_elem, duck_dims)
 
 
 def int8_topk_staged(
@@ -1614,16 +1552,15 @@ def int8_topk_staged(
     scored = P.fan_out(emb, light=True).mapInPandas(
         kernel, schema="q_id bigint, n_id bigint, cos8 double"
     )
-    view_name = f"__int8_cand_{id(scored)}"
-    scored.createOrReplaceTempView(view_name)
     return spark.sql(
         f"""
 SELECT q_id, n_id FROM (
   SELECT q_id, n_id,
          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos8 DESC, n_id) AS rk
-  FROM {view_name}
+  FROM {{scored}}
 ) WHERE rk <= {k}
-"""
+""",
+        scored=scored,
     )
 
 
@@ -1682,23 +1619,18 @@ def range_search_staged(
 
 def range_search_sql(
     tau: float = 0.4, n_queries: int = 5, view: str = "embeddings"
-) -> tuple[str, str]:
+) -> str:
     """Radius (range) search: ALL neighbors above a similarity floor,
     the retrieval complement of top-k (recall-bounded instead of
     count-bounded — what dedup-against-index and contamination checks
     want). Exact O(Q·N) scan with the bit-exact dot chain; Q stays
     small, and the same LSH/IVF stages remain the linear-scale path
-    when it grows. Since round 10 the [1] (DuckDB) side is the oracle
-    for range_search_staged; the [0] side remains for the SQL-twin
-    tests."""
-    return P.bi_sql(
+    when it grows. The oracle for range_search_staged."""
+    return P.duck_sql(
         RANGE_SEARCH_TEMPLATE,
-        dot=(_dot("qv", "e.embedding", one_based=False), _dot("qv", "e.embedding", one_based=True)),
-        qnorm=(_norm("qv", one_based=False), _norm("qv", one_based=True)),
-        enorm=(
-            _norm("e.embedding", one_based=False),
-            _norm("e.embedding", one_based=True),
-        ),
+        dot=_dot("qv", "e.embedding", one_based=True),
+        qnorm=_norm("qv", one_based=True),
+        enorm=_norm("e.embedding", one_based=True),
         view=view,
         tau=str(tau),
         n_queries=str(n_queries),
@@ -1707,7 +1639,7 @@ def range_search_sql(
 
 def pq_codes_sql(
     m: int = 4, ncent: int = 8, view: str = "embeddings"
-) -> tuple[str, str]:
+) -> str:
     """Product quantization (Jégou et al., "Product Quantization for
     Nearest Neighbor Search", TPAMI'11) — the storage path that turns a
     64-float vector into m sub-codes (here 4×3 bits vs 64×32 bits, a
@@ -1728,12 +1660,11 @@ def pq_codes_sql(
     producing N×ncent×m candidate rows collapsed by one per-(vec,sub)
     window; no data-sized shuffle except the final per-vector pivot
     aggregate."""
-    def body(off: int) -> str:
-        c_sel, d_sel = _pq_cd_selects(m, ncent, view, off)
-        codes = ", ".join(
-            f"MAX(CASE WHEN s = {s} THEN c_id END) AS code_{s}" for s in range(m)
-        )
-        return f"""
+    c_sel, d_sel = _pq_cd_selects(m, ncent, view, 1)
+    codes = ", ".join(
+        f"MAX(CASE WHEN s = {s} THEN c_id END) AS code_{s}" for s in range(m)
+    )
+    return f"""
 WITH c AS (
   {c_sel}
 ),
@@ -1750,8 +1681,6 @@ SELECT vec_id, {codes}, CAST(SUM(dist) AS BIGINT) AS sq_err
 FROM ranked WHERE rk = 1
 GROUP BY vec_id
 """
-
-    return body(0), body(1)
 
 
 def _pq_dist_case(m: int, off: int) -> str:
@@ -1793,7 +1722,7 @@ def pq_adc_topk_sql(
     k: int = 10,
     n_queries: int = 5,
     view: str = "embeddings",
-) -> tuple[str, str]:
+) -> str:
     """PQ search by asymmetric distance computation (ADC): the query
     stays un-quantized; each database vector's distance is approximated
     as the sum over subspaces of the query→centroid[code] distance —
@@ -1807,9 +1736,8 @@ def pq_adc_topk_sql(
     on vec_id. The LUT is broadcast-sized by construction; the only
     data-sized operation is the per-(query, vector) partial-sum
     aggregate over N×m code rows."""
-    def body(off: int) -> str:
-        c_sel, d_sel = _pq_cd_selects(m, ncent, view, off)
-        return f"""
+    c_sel, d_sel = _pq_cd_selects(m, ncent, view, 1)
+    return f"""
 WITH c AS (
   {c_sel}
 ),
@@ -1838,8 +1766,6 @@ SELECT q_id, n_id, CAST(adc_dist AS BIGINT) AS adc_dist, rnk FROM (
   FROM est
 ) r WHERE rnk <= {k}
 """
-
-    return body(0), body(1)
 
 
 def _ivfpq_res_arr(off: int, arr_open: str, arr_close: str, x: str, xc: str) -> str:
@@ -1881,7 +1807,7 @@ def ivfpq_adc_topk_sql(
     k: int = 10,
     n_queries: int = 5,
     view: str = "embeddings",
-) -> tuple[str, str]:
+) -> str:
     """IVF-PQ — the composed index every production-scale vector store
     actually deploys (faiss IndexIVFPQ; Jégou TPAMI'11 §V): an IVF
     coarse quantizer prunes the search to ``nprobe`` inverted lists,
@@ -1907,10 +1833,9 @@ def ivfpq_adc_topk_sql(
     aggregate — candidate cost O(probed lists), never O(N) per query,
     and the stored representation scanned per candidate is m codes,
     not 64 floats."""
-
-    head = f"""
+    return f"""
 WITH nv AS (
-  SELECT vec_id, embedding, ({{norm}}) AS nrm FROM {view}
+  SELECT vec_id, embedding, ({_norm("embedding", one_based=True)}) AS nrm FROM {view}
 ),
 c AS (
   SELECT vec_id AS c_id, embedding AS cv, nrm AS cnrm FROM nv WHERE vec_id < {n_cells}
@@ -1919,23 +1844,11 @@ assign AS (
   SELECT v.vec_id, c.c_id, v.embedding, c.cv,
          ROW_NUMBER() OVER (
            PARTITION BY v.vec_id
-           ORDER BY ({{adot}}) / (v.nrm * c.cnrm) DESC, c.c_id
+           ORDER BY ({_dot("v.embedding", "c.cv", one_based=True)}) / (v.nrm * c.cnrm) DESC, c.c_id
          ) AS rn
   FROM nv v JOIN c ON 1 = 1
 ),
-"""
-
-    def body(off: int) -> str:
-        one_based = off == 1
-        return (
-            head.format(
-                norm=_norm("embedding", one_based=one_based),
-                adot=_dot("v.embedding", "c.cv", one_based=one_based),
-            )
-            + _ivfpq_tail(off, ncent, m, nprobe, k, n_queries)
-        )
-
-    return body(0), body(1)
+""" + _ivfpq_tail(1, ncent, m, nprobe, k, n_queries)
 
 
 def _ivfpq_tail(
@@ -2200,7 +2113,7 @@ def _sign_word_sql(word: int, *, one_based: bool) -> str:
 
 def hamming_knn_graph_sql(
     k: int = 3, view: str = "embeddings", src_modulus: int = 1
-) -> tuple[str, str]:
+) -> str:
     """k-NN graph over 64-bit sign-bit (SimHash-style) signatures with
     exact Hamming distance, blocked by label: each vector's k nearest
     neighbors WITHIN its label cell. The adjacency SemDeDup-style
@@ -2233,16 +2146,14 @@ def hamming_knn_graph_sql(
     cutting the per-label pair mass by m while keeping exactness for
     the sampled sources. m=1 (default) is the full-exact form.
     """
-    xor_lo = ("(a.lo ^ b.lo)", "xor(a.lo, b.lo)")
-    xor_hi = ("(a.hi ^ b.hi)", "xor(a.hi, b.hi)")
     src_where = f" AND a.vec_id % {src_modulus} = 0" if src_modulus > 1 else ""
-    template = f"""
+    return f"""
 WITH s AS (
-  SELECT vec_id, label, {{sig_lo}} AS lo, {{sig_hi}} AS hi FROM {view}
+  SELECT vec_id, label, {_sign_word_sql(0, one_based=True)} AS lo, {_sign_word_sql(1, one_based=True)} AS hi FROM {view}
 ),
 pairs AS (
   SELECT a.label AS label, a.vec_id AS src, b.vec_id AS dst,
-         CAST(bit_count({{xor_lo}}) + bit_count({{xor_hi}}) AS BIGINT) AS dist
+         CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) AS BIGINT) AS dist
   FROM s a JOIN s b ON a.label = b.label AND a.vec_id <> b.vec_id{src_where}
 ),
 ranked AS (
@@ -2252,18 +2163,11 @@ ranked AS (
 )
 SELECT label, src, dst, dist, rk FROM ranked WHERE rk <= {k}
 """
-    return P.bi_sql(
-        template,
-        sig_lo=(_sign_word_sql(0, one_based=False), _sign_word_sql(0, one_based=True)),
-        sig_hi=(_sign_word_sql(1, one_based=False), _sign_word_sql(1, one_based=True)),
-        xor_lo=xor_lo,
-        xor_hi=xor_hi,
-    )
 
 
 def centroid_outliers_sql(
     k: int = 4, iters: int = 2, topn: int = 10, view: str = "embeddings"
-) -> tuple[str, str]:
+) -> str:
     """Embedding-QA outlier report: the ``topn`` vectors FURTHEST from
     their assigned k-means centroid, per cluster — mislabeled/corrupt
     embeddings, encoder drift, and wrong-modality rows all surface
@@ -2280,24 +2184,18 @@ def centroid_outliers_sql(
     distance relation — WindowGroupLimit cuts each cluster's sort at
     ``topn``. Output is k·topn rows.
     """
-
-    def body(elem: str, dims: str, big_t: str) -> str:
-        cte, _cent, assign = _kmeans_chain(elem, dims, k, iters, view, big_t)
-        d_last = f"d{iters}"
-        final = f"""
+    cte, _cent, assign = _kmeans_chain(
+        _KM_DUCK_ELEM, _KM_DUCK_DIMS, k, iters, view, _KM_DUCK_BIG
+    )
+    final = f"""
 SELECT j, rk, vec_id, CAST(dist_num AS BIGINT) AS dist_num, n_members FROM (
   SELECT a.j, d.vec_id, d.dist_num, d.n AS n_members,
          ROW_NUMBER() OVER (
            PARTITION BY a.j ORDER BY d.dist_num DESC, d.vec_id ASC
          ) AS rk
-  FROM {assign} a JOIN {d_last} d ON d.vec_id = a.vec_id AND d.j = a.j
+  FROM {assign} a JOIN d{iters} d ON d.vec_id = a.vec_id AND d.j = a.j
 ) r WHERE rk <= {topn}"""
-        return "WITH " + ",\n".join(cte) + final
-
-    return (
-        body(_KM_SPARK_ELEM, _KM_SPARK_DIMS, _KM_SPARK_BIG),
-        body(_KM_DUCK_ELEM, _KM_DUCK_DIMS, _KM_DUCK_BIG),
-    )
+    return "WITH " + ",\n".join(cte) + final
 
 
 def _hamsig_labeled_rel(spark: SparkSession, view: str) -> str:
@@ -2524,8 +2422,8 @@ def hamming_knn_guarded_sql(
     cell_cap: int = 40,
     view: str = "embeddings",
     src_modulus: int = 1,
-) -> tuple[str, str]:
-    """Single-statement (spark, duckdb) form of the GUARDED
+) -> str:
+    """Single-statement DuckDB oracle of the GUARDED
     label-blocked k-NN graph — same output relation (label, src, dst,
     dist, rk) as :func:`hamming_knn_graph_sql`, with per-cell pair
     mass bounded by the hot-cell split documented above. Identical to
@@ -2538,10 +2436,10 @@ WITH sig AS (
 {chain}
 SELECT label, src, dst, dist, rk FROM granked WHERE rk <= {k}
 """
-    return P.bi_sql(
+    return P.duck_sql(
         template,
-        sig_lo=(_sign_word_sql(0, one_based=False), _sign_word_sql(0, one_based=True)),
-        sig_hi=(_sign_word_sql(1, one_based=False), _sign_word_sql(1, one_based=True)),
+        sig_lo=_sign_word_sql(0, one_based=True),
+        sig_hi=_sign_word_sql(1, one_based=True),
         **_GUARD_FRAGS,
     )
 
@@ -2641,8 +2539,8 @@ def knn_cell_guard_report_sql(
     cell_cap: int = 40,
     view: str = "embeddings",
     src_modulus: int = 8,
-) -> tuple[str, str]:
-    """Single-statement (spark, duckdb) hot-cell guard REPORT: one row
+) -> str:
+    """Single-statement DuckDB oracle of the hot-cell guard REPORT: one row
     per label with the cell gauge and the guarded-vs-exact recall.
     ``src_modulus`` applies the sampled-exact protocol to BOTH graphs
     symmetrically (the exact side is the quadratic one; the guarded
@@ -2658,10 +2556,10 @@ WITH sig AS (
 {chain},
 {tail}
 """
-    return P.bi_sql(
+    return P.duck_sql(
         template,
-        sig_lo=(_sign_word_sql(0, one_based=False), _sign_word_sql(0, one_based=True)),
-        sig_hi=(_sign_word_sql(1, one_based=False), _sign_word_sql(1, one_based=True)),
+        sig_lo=_sign_word_sql(0, one_based=True),
+        sig_hi=_sign_word_sql(1, one_based=True),
         **_GUARD_FRAGS,
     )
 
@@ -2773,8 +2671,8 @@ def knn_guard_cap_sweep_sql(
     k: int = 3,
     view: str = "embeddings",
     src_modulus: int = 8,
-) -> tuple[str, str]:
-    """Single-statement (spark, duckdb) cap tuning curve: one row per
+) -> str:
+    """Single-statement DuckDB oracle of the cap tuning curve: one row per
     candidate cell_cap with total guarded pair mass, largest sub-cell,
     and measured recall vs the sampled exact graph — pick the smallest
     cap whose recall clears the corpus's bar ("measure, don't
@@ -2786,10 +2684,10 @@ WITH sig AS (
 ),
 {body}
 """
-    return P.bi_sql(
+    return P.duck_sql(
         template,
-        sig_lo=(_sign_word_sql(0, one_based=False), _sign_word_sql(0, one_based=True)),
-        sig_hi=(_sign_word_sql(1, one_based=False), _sign_word_sql(1, one_based=True)),
+        sig_lo=_sign_word_sql(0, one_based=True),
+        sig_hi=_sign_word_sql(1, one_based=True),
         **_GUARD_FRAGS,
     )
 
@@ -2823,7 +2721,7 @@ def matryoshka_recall_sql(
     k: int = 10,
     n_queries: int = 5,
     view: str = "embeddings",
-) -> tuple[str, str]:
+) -> str:
     """Prefix-dimension ("Matryoshka", Kusupati et al. NeurIPS'22)
     retrieval tradeoff report: top-k by cosine over only the FIRST
     ``d`` dimensions, scored against the full-dimension exact top-k —
@@ -2853,52 +2751,47 @@ def matryoshka_recall_sql(
             "comparing the full dimension against itself is vacuous"
         )
 
-    def body(one_based: bool, idiv: str) -> str:
-        off = 1 if one_based else 0
+    def dot(a: str, b: str, d: int) -> str:
+        return " + ".join(
+            f"CAST({a}[{i + 1}] AS DOUBLE) * CAST({b}[{i + 1}] AS DOUBLE)"
+            for i in range(d)
+        )
 
-        def dot(a: str, b: str, d: int) -> str:
-            return " + ".join(
-                f"CAST({a}[{i + off}] AS DOUBLE) * CAST({b}[{i + off}] AS DOUBLE)"
-                for i in range(d)
-            )
-
-        # LIMIT is semantically a no-op (vec_id < n_queries admits
-        # exactly n_queries rows) but makes the broadcast build side
-        # STRUCTURALLY bounded — the plan audit can prove the nested
-        # loop is a bounded expand without knowing filter selectivity.
-        parts = [
-            f"q AS (SELECT vec_id AS q_id, embedding AS qv "
-            f"FROM {view} WHERE vec_id < {n_queries} LIMIT {n_queries})"
-        ]
-        for d in (*dims, DIM):
-            parts.append(
-                f"""s{d} AS (
+    # LIMIT is semantically a no-op (vec_id < n_queries admits
+    # exactly n_queries rows) but makes the broadcast build side
+    # STRUCTURALLY bounded — the plan audit can prove the nested
+    # loop is a bounded expand without knowing filter selectivity.
+    parts = [
+        f"q AS (SELECT vec_id AS q_id, embedding AS qv "
+        f"FROM {view} WHERE vec_id < {n_queries} LIMIT {n_queries})"
+    ]
+    for d in (*dims, DIM):
+        parts.append(
+            f"""s{d} AS (
   SELECT q.q_id, e.vec_id AS n_id,
          ({dot('qv', 'e.embedding', d)})
            / (sqrt({dot('qv', 'qv', d)}) * sqrt({dot('e.embedding', 'e.embedding', d)})) AS c
   FROM q JOIN {view} e ON e.vec_id <> q.q_id
 )"""
-            )
-            parts.append(
-                f"""t{d} AS (
+        )
+        parts.append(
+            f"""t{d} AS (
   SELECT q_id, n_id FROM (
     SELECT q_id, n_id,
            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY c DESC, n_id) AS rk
     FROM s{d}
   ) r WHERE rk <= {k}
 )"""
-            )
-        unions = "\nUNION ALL\n".join(
-            f"""SELECT {d} AS dims, COUNT(*) AS n_true,
+        )
+    unions = "\nUNION ALL\n".join(
+        f"""SELECT {d} AS dims, COUNT(*) AS n_true,
        CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
        CAST(SUM(CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-            {idiv} COUNT(*) AS BIGINT) AS recall_ppm
+            // COUNT(*) AS BIGINT) AS recall_ppm
 FROM t{DIM} e LEFT JOIN t{d} a ON a.q_id = e.q_id AND a.n_id = e.n_id"""
-            for d in dims
-        )
-        return "WITH " + ",\n".join(parts) + "\n" + unions
-
-    return body(False, "DIV"), body(True, "//")
+        for d in dims
+    )
+    return "WITH " + ",\n".join(parts) + "\n" + unions
 
 
 def matryoshka_recall_staged(
@@ -3032,7 +2925,7 @@ def ivf_nprobe_sweep_sql(
     k: int = 10,
     n_queries: int = 5,
     view: str = "embeddings",
-) -> tuple[str, str]:
+) -> str:
     """nprobe sweep for the IVF path: for each probe count, the
     candidate mass the probed inverted lists admit and the measured
     recall of the re-ranked top-k against the exact top-k — the
@@ -3048,24 +2941,20 @@ def ivf_nprobe_sweep_sql(
     k·Q-sized rank/compare tails; global-aggregate 1-row relations
     cross-join for the report row. Output is |probes| rows.
     """
-
-    def body(one_based: bool, idiv: str) -> str:
-        norm = _norm("embedding", one_based=one_based)
-        adot = _dot("v.embedding", "c.cv", one_based=one_based)
-        sdot = _dot("qv.embedding", "nv2.embedding", one_based=one_based)
-        # DuckDB variant: MATERIALIZED, or the inliner re-derives nv's
-        # 64-element norm per reference and assign's N x n_cells dot
-        # ranking once per probe config — the kcore re-derivation class
-        # (DETERMINISM.md), observed as a 4GB-budget OOM at the sf1.0
-        # twin in round 7. The Spark side is the staged path anyway.
-        mat = " MATERIALIZED" if one_based else ""
-        head = f"""nv AS{mat} (
+    norm = _norm("embedding", one_based=True)
+    adot = _dot("v.embedding", "c.cv", one_based=True)
+    sdot = _dot("qv.embedding", "nv2.embedding", one_based=True)
+    # MATERIALIZED, or DuckDB's inliner re-derives nv's 64-element
+    # norm per reference and assign's N x n_cells dot ranking once per
+    # probe config — the kcore re-derivation class (DETERMINISM.md),
+    # observed as a 4GB-budget OOM at the sf1.0 twin in round 7.
+    head = f"""nv AS MATERIALIZED (
   SELECT vec_id, embedding, ({norm}) AS nrm FROM {view}
 ),
-c AS{mat} (
+c AS MATERIALIZED (
   SELECT vec_id AS c_id, embedding AS cv, nrm AS cnrm FROM nv WHERE vec_id < {n_cells}
 ),
-assign AS{mat} (
+assign AS MATERIALIZED (
   SELECT v.vec_id, v.c_id, v.rn FROM (
     SELECT v.vec_id, c.c_id,
            ROW_NUMBER() OVER (
@@ -3081,20 +2970,18 @@ exscored AS (
   FROM nv qv JOIN nv nv2 ON nv2.vec_id <> qv.vec_id
   WHERE qv.vec_id < {n_queries}
 ),
-exact AS{mat} (
+exact AS MATERIALIZED (
   SELECT q_id, n_id FROM (
     SELECT q_id, n_id,
            ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rk
     FROM exscored
   ) r WHERE rk <= {k}
 )"""
-        tail = _nprobe_tail(
-            probes, "nv", "assign", "exact", k, n_queries,
-            one_based=one_based, idiv=idiv,
-        )
-        return "WITH " + head + ",\n" + tail
-
-    return body(False, "DIV"), body(True, "//")
+    tail = _nprobe_tail(
+        probes, "nv", "assign", "exact", k, n_queries,
+        one_based=True, idiv="//",
+    )
+    return "WITH " + head + ",\n" + tail
 
 
 def ivf_nprobe_sweep_staged(
@@ -3271,7 +3158,7 @@ ranked AS (
 SELECT src, dst, dist, rk FROM ranked WHERE rk <= {k}"""
 
 
-def hamming_banded_sql(k: int = 3, view: str = "embeddings") -> tuple[str, str]:
+def hamming_banded_sql(k: int = 3, view: str = "embeddings") -> str:
     """Multi-index Hamming KNN (Norouzi, Punjani, Fleet, "Fast Search
     in Hamming Space with Multi-Index Hashing", CVPR'12) — the SCALE
     PATH the exact label-blocked reference (emb_hamming_knn_graph)
@@ -3293,24 +3180,18 @@ def hamming_banded_sql(k: int = 3, view: str = "embeddings") -> tuple[str, str]:
     dedupes the ≤4 band hits, one per-src window ranks. Measured at
     the sf1.0 twin: exact reference 18.9 s, banded ~1 s at the same k.
     """
-
-    def body(s_cte: str, s: str, xor_lo: str, xor_hi: str, idiv: str) -> str:
-        return "WITH " + s_cte + _HAM_BAND_TAIL.format(
-            s=s, k=k, xor_lo=xor_lo, xor_hi=xor_hi, idiv=idiv
-        )
-
-    spark_cte = (
-        f"s AS (SELECT vec_id, {_sign_word_sql(0, one_based=False)} AS lo, "
-        f"{_sign_word_sql(1, one_based=False)} AS hi FROM {view}),\n"
+    return "WITH " + _ham_sig_cte(view) + _HAM_BAND_TAIL.format(
+        s="s", k=k, xor_lo="xor(sa.lo, sb.lo)", xor_hi="xor(sa.hi, sb.hi)", idiv="//"
     )
-    duck_cte = (
+
+
+def _ham_sig_cte(view: str) -> str:
+    """The oracle's sign-word signature CTE `s`, shared by the banded
+    path and its recall report."""
+    return (
         f"s AS MATERIALIZED (SELECT vec_id, "
         f"{_sign_word_sql(0, one_based=True)} AS lo, "
         f"{_sign_word_sql(1, one_based=True)} AS hi FROM {view}),\n"
-    )
-    return (
-        body(spark_cte, "s", "(sa.lo ^ sb.lo)", "(sa.hi ^ sb.hi)", "DIV"),
-        body(duck_cte, "s", "xor(sa.lo, sb.lo)", "xor(sa.hi, sb.hi)", "//"),
     )
 
 
@@ -3412,7 +3293,7 @@ GROUP BY CASE WHEN ex.dist <= 3 THEN 'within_radius3' ELSE 'beyond' END"""
 
 def hamming_banded_recall_sql(
     k: int = 3, n_queries: int = 64, view: str = "embeddings"
-) -> tuple[str, str]:
+) -> str:
     """Recall of the banded Hamming path against the EXACT global
     top-k, sampled-query protocol (same as ann_recall_report /
     ann_pq_recall_report — recall is MEASURED, not assumed): for the
@@ -3429,32 +3310,12 @@ def hamming_banded_recall_sql(
     -recall standard — bounded by the sample, not the corpus); the
     banded arm reuses the banded join restricted to sampled sources.
     One LEFT JOIN on (src, dst), one 2-row aggregate."""
-
-    def body(s_cte: str, frags: dict) -> str:
-        return "WITH " + s_cte + _HAM_RECALL_TAIL.format(
-            s="s", k=k, nq=n_queries, **frags
-        )
-
-    spark_cte = (
-        f"s AS (SELECT vec_id, {_sign_word_sql(0, one_based=False)} AS lo, "
-        f"{_sign_word_sql(1, one_based=False)} AS hi FROM {view}),\n"
-    )
-    duck_cte = (
-        f"s AS MATERIALIZED (SELECT vec_id, "
-        f"{_sign_word_sql(0, one_based=True)} AS lo, "
-        f"{_sign_word_sql(1, one_based=True)} AS hi FROM {view}),\n"
-    )
-    sp = dict(
-        idiv="DIV",
-        xor_ab_lo="(a.lo ^ b.lo)", xor_ab_hi="(a.hi ^ b.hi)",
-        xor_sab_lo="(sa.lo ^ sb.lo)", xor_sab_hi="(sa.hi ^ sb.hi)",
-    )
-    du = dict(
+    return "WITH " + _ham_sig_cte(view) + _HAM_RECALL_TAIL.format(
+        s="s", k=k, nq=n_queries,
         idiv="//",
         xor_ab_lo="xor(a.lo, b.lo)", xor_ab_hi="xor(a.hi, b.hi)",
         xor_sab_lo="xor(sa.lo, sb.lo)", xor_sab_hi="xor(sa.hi, sb.hi)",
     )
-    return (body(spark_cte, sp), body(duck_cte, du))
 
 
 def hamming_banded_recall_staged(

@@ -763,7 +763,7 @@ FROM t WHERE rk <= {k}
     from etl_service_spark.functions import portable as P
 
     frags = dict(ts_us=("ts_us", "epoch_us(ts)"), idiv=("DIV", "//"))
-    return P.bi_sql(spark_t, **frags)[0], P.bi_sql(duck_t, **frags)[1]
+    return P.bi_sql(spark_t, **frags)[0], P.duck_sql(duck_t, **frags)
 
 
 def moment_stats_sql() -> tuple[str, str]:

@@ -200,7 +200,7 @@ def oracle_normalize(view: str = "documents") -> str:
     """
 
 
-def tfidf_top_terms_sql(k: int = 3, view: str = "documents") -> tuple[str, str]:
+def tfidf_top_terms_sql(k: int = 3, view: str = "documents") -> str:
     """Top-k most-distinctive terms per document by a log-free tf-idf
     weighting, fully in integer arithmetic.
 
@@ -219,24 +219,15 @@ def tfidf_top_terms_sql(k: int = 3, view: str = "documents") -> tuple[str, str]:
     window partitioned by doc_id. The df relation is vocabulary-sized
     (bounded), so its join broadcasts at any corpus size; the only
     data-sized shuffles are the explode agg and the per-doc window."""
-    spark_tok = (
-        f"SELECT doc_id, token FROM {view} "
-        f"LATERAL VIEW explode({P.spark_tokens('text')}) x AS token"
-    )
-    duck_tok = (
-        f"SELECT doc_id, unnest({P.duck_tokens('text')}) AS token FROM {view}"
-    )
-
-    def body(tok_sql: str, idiv: str) -> str:
-        return f"""
-WITH tok AS ({tok_sql}),
+    return f"""
+WITH tok AS (SELECT doc_id, unnest({P.duck_tokens('text')}) AS token FROM {view}),
 tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token),
 dl AS (SELECT doc_id, SUM(tf) AS doclen FROM tf GROUP BY doc_id),
 df AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
 nn AS (SELECT COUNT(*) AS n FROM {view}),
 scored AS (
   SELECT t.doc_id, t.token, t.tf, f.df,
-         CAST(((t.tf * 1000000 {idiv} l.doclen) * (SELECT n FROM nn)) {idiv} f.df
+         CAST(((t.tf * 1000000 // l.doclen) * (SELECT n FROM nn)) // f.df
               AS BIGINT) AS score_ppm
   FROM tf t
   JOIN dl l ON t.doc_id = l.doc_id
@@ -250,8 +241,6 @@ FROM (
 ) ranked
 WHERE rk <= {k}
 """
-
-    return body(spark_tok, "DIV"), body(duck_tok, "//")
 
 
 def top_terms_per_language_sql(k: int = 5, view: str = "documents") -> tuple[str, str]:
@@ -306,61 +295,6 @@ WHERE rk <= {k}
 
 
 # ------------------------------------------- repetition quality (Gopher-style)
-def repetition_quality(docs: DataFrame) -> DataFrame:
-    """Per-document repetition metrics in the style of the Gopher quality
-    rules: total/distinct token counts, the most-repeated unigram and
-    bigram counts, the number of tokens belonging to duplicated unigrams,
-    and an integer ppm duplicate-token share.
-
-    All metrics are exact integers (no floats, no logs — DETERMINISM.md
-    rule: transcendental-free scoring), so both engines agree bitwise.
-
-    Scale shape: explode → per-(doc, token) count → per-doc agg. Both
-    aggregations partial-combine map-side (every token of a document sits
-    in one input partition, so the first shuffle moves at most one row
-    per distinct (doc, token) pair — the shuffle is bounded by vocabulary
-    mass, not token mass). The bigram pass is the same plan over a
-    zip_with-shifted token array; the per-doc join reuses the doc_id hash
-    partitioning. No Python in the hot path.
-    """
-    toks = P.spark_tokens("text")
-    n = f"size({toks})"
-    bigrams = (
-        f"if({n} >= 2, zip_with(slice({toks}, 1, {n} - 1), slice({toks}, 2, {n} - 1),"
-        " (a, b) -> concat(a, ' ', b)), array())"
-    )
-    uni = (
-        docs.selectExpr("doc_id", f"explode({toks}) AS tok")
-        .groupBy("doc_id", "tok")
-        .count()
-        .groupBy("doc_id")
-        .agg(
-            F.sum("count").alias("n_tokens"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.max("count").alias("max_unigram_cnt"),
-            F.coalesce(F.sum(F.when(F.col("count") > 1, F.col("count"))), F.lit(0))
-            .cast("bigint")
-            .alias("dup_token_cnt"),
-        )
-    )
-    big = (
-        docs.selectExpr("doc_id", f"explode({bigrams}) AS bg")
-        .groupBy("doc_id", "bg")
-        .count()
-        .groupBy("doc_id")
-        .agg(F.max("count").alias("max_bigram_cnt"))
-    )
-    return uni.join(big, "doc_id", "left").selectExpr(
-        "doc_id",
-        "n_tokens",
-        "n_distinct",
-        "max_unigram_cnt",
-        "dup_token_cnt",
-        "coalesce(max_bigram_cnt, CAST(0 AS BIGINT)) AS max_bigram_cnt",
-        "dup_token_cnt * 1000000 DIV n_tokens AS dup_ppm",
-    )
-
-
 def oracle_repetition_quality(view: str = "documents") -> str:
     dt = P.duck_tokens("text")
     return f"""
@@ -393,9 +327,10 @@ def oracle_repetition_quality(view: str = "documents") -> str:
 
 
 def repetition_quality_staged(spark, view: str = "documents") -> DataFrame:
-    """Spark execution path for repetition_quality: every metric is a
+    """Spark execution path for the Gopher-style repetition metrics
+    (oracle: :func:`oracle_repetition_quality`): every metric is a
     pure function of ONE document, so the whole operator is a single
-    Arrow ``mapInPandas`` pass — ZERO shuffles, against the declarative
+    Arrow ``mapInPandas`` pass — ZERO shuffles, against a declarative
     form's two explode→(doc,token)-aggregate→doc-aggregate pipelines
     plus a join (whose shuffles are bounded by vocabulary mass but are
     still three exchanges of every document's vocabulary). Same
@@ -773,7 +708,7 @@ LEFT JOIN (
 """
 
 
-def bigram_lm_score_sql(view: str = "documents") -> tuple[str, str]:
+def bigram_lm_score_sql(view: str = "documents") -> str:
     """Corpus-frequency bigram fluency score per document — the log-free
     stand-in for the LM-perplexity quality filter (CCNet trains a
     5-gram KenLM and keeps low-perplexity text; reference has no text
@@ -798,27 +733,17 @@ def bigram_lm_score_sql(view: str = "documents") -> tuple[str, str]:
     re-aggregation. Docs with < 2 tokens have no bigrams and drop out,
     matching SQL's empty-group elimination."""
     # tokenize ONCE in an inner projection: the n-gram builder
-    # references its token array several times per element (element_at
-    # ×2, size, guard), and inlining the tokenizer expression would
-    # re-split the document for every bigram — O(tokens²) per doc
-    # (measured 12.7 s → 1.15 s at sf0.1 for this exact query).
-    spark_big = (
-        f"SELECT doc_id, bg FROM "
-        f"(SELECT doc_id, {P.spark_tokens('text')} AS t FROM {view}) "
-        f"LATERAL VIEW explode({P.spark_ngrams('t', 2)}) x AS bg"
-    )
-    duck_big = (
+    # references its token array several times per element, and
+    # inlining the tokenizer expression would re-split the document
+    # for every bigram — O(tokens²) per doc. freq_mass * 1e6 passes
+    # 2^63 on a large corpus (~1e12-token mass x common-bigram
+    # counts): widen to HUGEINT before the multiply — the same guard
+    # _PMI_FRAGS documents.
+    big_sql = (
         f"SELECT doc_id, unnest({P.duck_ngrams('t', 2)}) AS bg "
         f"FROM (SELECT doc_id, {P.duck_tokens('text')} AS t FROM {view})"
     )
-
-    def body(big_sql: str, idiv: str, big_t: str) -> str:
-        # freq_mass * 1e6 passes 2^63 on a large corpus (~1e12-token
-        # mass x common-bigram counts): widen to DECIMAL(38,0)/HUGEINT
-        # before the multiply — the same guard _PMI_FRAGS documents.
-        # DuckDB's SUM is already HUGEINT; Spark's BIGINT sum would
-        # raise ARITHMETIC_OVERFLOW under ANSI mode.
-        return f"""
+    return f"""
 WITH big AS ({big_sql}),
 bf AS (SELECT bg, COUNT(*) AS cnt FROM big GROUP BY bg),
 tot AS (SELECT SUM(cnt) AS mass FROM bf),
@@ -832,14 +757,12 @@ doc AS (
 )
 SELECT doc_id,
        CAST(n_bigrams AS BIGINT) AS n_bigrams,
-       CAST(n_singleton * 1000000 {idiv} n_bigrams AS BIGINT) AS singleton_ppm,
-       CAST(CAST(freq_mass AS {big_t}) * 1000000
-            {idiv} (CAST(n_bigrams AS {big_t}) * (SELECT mass FROM tot))
+       CAST(n_singleton * 1000000 // n_bigrams AS BIGINT) AS singleton_ppm,
+       CAST(CAST(freq_mass AS HUGEINT) * 1000000
+            // (CAST(n_bigrams AS HUGEINT) * (SELECT mass FROM tot))
             AS BIGINT) AS avg_freq_ppm
 FROM doc
 """
-
-    return body(spark_big, "DIV", "DECIMAL(38,0)"), body(duck_big, "//", "HUGEINT")
 
 
 def materialize_bigrams(spark, view: str = "documents") -> str:
@@ -934,7 +857,7 @@ GROUP BY source, {bucket}
     return P.bi_sql(template, tok_sql=(spark_tok, duck_tok))
 
 
-def ngram_novelty_sql(view: str = "documents") -> tuple[str, str]:
+def ngram_novelty_sql(view: str = "documents") -> str:
     """Per-document shingle novelty: the share of a document's distinct
     word 3-gram shingles (in 64-bit hash space — the dedup family's
     fingerprint domain, see dedup._HASHSET_PROLOGUE) that no earlier
@@ -967,7 +890,7 @@ SELECT ex.doc_id,
 FROM ex JOIN firsts f ON ex.h = f.h
 GROUP BY ex.doc_id
 """
-    return P.bi_sql(template, **_hashset_frags(view))
+    return P.duck_sql(template, **_hashset_frags(view))
 
 
 def ngram_novelty_staged(spark: SparkSession, view: str = "documents") -> DataFrame:
@@ -1081,7 +1004,7 @@ _PMI_FRAGS = dict(
 
 def pmi_collocations_sql(
     min_count: int = 3, k: int = 50, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """Top-k adjacent-word collocations by PMI lift — the classic
     phrase miner (Church & Hanks, CL'90; word2vec's phrase pass uses
     the same count ratio). lift_ppm = p(ab) / (p(a)·p(b)) in ppm with
@@ -1101,28 +1024,12 @@ def pmi_collocations_sql(
     (Helper.cs:606-1292 aggregates over run metadata) to corpus
     phrase statistics; the reference has no text plane.
     """
-    spark_big = (
-        f"SELECT doc_id, bg FROM "
-        f"(SELECT doc_id, {P.spark_tokens('text')} AS t FROM {view}) "
-        f"LATERAL VIEW explode({P.spark_ngrams('t', 2)}) x AS bg"
-    )
-    duck_big = (
+    big = (
         f"SELECT doc_id, unnest({P.duck_ngrams('t', 2)}) AS bg "
         f"FROM (SELECT doc_id, {P.duck_tokens('text')} AS t FROM {view})"
     )
-    spark_uni = (
-        f"SELECT tok AS w FROM (SELECT explode({P.spark_tokens('text')}) AS tok "
-        f"FROM {view})"
-    )
-    duck_uni = f"SELECT unnest({P.duck_tokens('text')}) AS w FROM {view}"
-    return (
-        _pmi_body(spark_big, spark_uni, min_count, k).format(
-            **{f: v[0] for f, v in _PMI_FRAGS.items()}
-        ),
-        _pmi_body(duck_big, duck_uni, min_count, k).format(
-            **{f: v[1] for f, v in _PMI_FRAGS.items()}
-        ),
-    )
+    uni = f"SELECT unnest({P.duck_tokens('text')}) AS w FROM {view}"
+    return P.duck_sql(_pmi_body(big, uni, min_count, k), **_PMI_FRAGS)
 
 
 def pmi_collocations_staged(
@@ -1161,7 +1068,7 @@ def pmi_collocations_staged(
 # ------------------------------------------------------- RAG chunking
 def chunk_overlap_sql(
     w: int = 12, stride: int = 8, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """Overlapping token-window chunk plan — the retrieval/packing
     chunker (RAG indexing, long-doc training windows): each document
     explodes into windows of ``w`` tokens every ``stride`` tokens
@@ -1181,41 +1088,24 @@ def chunk_overlap_sql(
     (CommandExecuter.cs batching) slices by row windows; this is the
     token-level analogue the LLM pipeline needs.
     """
-    spark_toks = P.spark_tokens("text")
-    duck_toks = P.duck_tokens("text")
+    chunk_text = (
+        f"array_to_string(list_slice(toks, j * {stride} + 1, j * {stride} + {w}), ' ')"
+    )
     # chunk j covers tokens [j*stride+1, j*stride+w]; j ranges over
     # 0 .. floor((n-1)/stride) for n > 0 (last window may be short).
-    template = f"""
-WITH t AS (SELECT doc_id, {{toks}} AS toks FROM {view}),
+    return f"""
+WITH t AS (SELECT doc_id, {P.duck_tokens("text")} AS toks FROM {view}),
 c AS (
   SELECT doc_id,
          j AS chunk_id,
          j * {stride} AS start_token,
-         {{chunk_len}} AS n_tokens,
-         {{chunk_hash}} AS chunk_hash
-  FROM t {{explode_j}}
-  WHERE {{nonempty}}
+         least({w}, len(toks) - j * {stride}) AS n_tokens,
+         {P.duck_poly_hash(chunk_text)} AS chunk_hash
+  FROM t , LATERAL (SELECT unnest(range(0, greatest(len(toks) - 1, 0) // {stride} + 1)) AS j) x
+  WHERE len(toks) > 0
 )
 SELECT doc_id, chunk_id, start_token, n_tokens, chunk_hash FROM c
 """
-    spark_slice = f"concat_ws(' ', slice(toks, j * {stride} + 1, {w}))"
-    duck_slice = (
-        f"array_to_string(list_slice(toks, j * {stride} + 1, j * {stride} + {w}), ' ')"
-    )
-    return P.bi_sql(
-        template,
-        toks=(spark_toks, duck_toks),
-        explode_j=(
-            f"LATERAL VIEW explode(sequence(0, greatest(size(toks) - 1, 0) DIV {stride})) x AS j",
-            f", LATERAL (SELECT unnest(range(0, greatest(len(toks) - 1, 0) // {stride} + 1)) AS j) x",
-        ),
-        nonempty=("size(toks) > 0", "len(toks) > 0"),
-        chunk_len=(
-            f"least({w}, size(toks) - j * {stride})",
-            f"least({w}, len(toks) - j * {stride})",
-        ),
-        chunk_hash=(P.spark_poly_hash(spark_slice), P.duck_poly_hash(duck_slice)),
-    )
 
 
 # --------------------------------------------------- Gopher-style rules
@@ -1282,7 +1172,7 @@ GROUP BY source
 # ------------------------------------------- hashed linear quality model
 def hashed_linear_score_sql(
     d: int = 64, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """fastText-style hashed-feature linear scorer: each token hashes
     into one of ``d`` buckets, a (deterministic, integer) weight table
     maps buckets to weights, and a document's score is the sum of its
@@ -1292,38 +1182,27 @@ def hashed_linear_score_sql(
 
     Scale shape: tokens explode once; bucket = hash % d is computed in
     the same projection, and the weight relation is ``d`` rows — a
-    broadcast build side by construction (Spark hint below; at 100 TB
+    broadcast build side by construction (the Spark path hints it; at 100 TB
     the weight table for a real model is O(vocab buckets), still MBs).
     The per-doc sum is one hash aggregate keyed on doc_id. Integer
     weights keep the score exact across engines.
     """
-    template = f"""
+    return f"""
 WITH w AS (
-  SELECT {{bucket_col}} AS bucket, ({{bucket_col}} * 37) % 13 - 6 AS wt
-  FROM {{gen}}
+  SELECT id AS bucket, (id * 37) % 13 - 6 AS wt
+  FROM range(0, {d}) t(id)
 ),
 tok AS (
-  SELECT doc_id, {{ph}} % {d} AS bucket
-  FROM (SELECT doc_id, {{explode_tok}} FROM {view}) t
+  SELECT doc_id, {P.duck_poly_hash("tk")} % {d} AS bucket
+  FROM (SELECT doc_id, unnest({P.duck_tokens('text')}) AS tk FROM {view}) t
 )
-SELECT {{hint}} tok.doc_id AS doc_id,
+SELECT  tok.doc_id AS doc_id,
        CAST(SUM(w.wt) AS BIGINT) AS score,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
        (SUM(w.wt) > 0) AS keep
 FROM tok JOIN w ON tok.bucket = w.bucket
 GROUP BY tok.doc_id
 """
-    return P.bi_sql(
-        template,
-        gen=(f"range(0, {d})", f"range(0, {d}) t(id)"),
-        bucket_col="id",
-        explode_tok=(
-            f"explode({P.spark_tokens('text')}) AS tk",
-            f"unnest({P.duck_tokens('text')}) AS tk",
-        ),
-        ph=(P.spark_poly_hash("tk"), P.duck_poly_hash("tk")),
-        hint=("/*+ BROADCAST(w) */", ""),
-    )
 
 
 def hashed_linear_score_staged(spark, d: int = 64, view: str = "documents"):
@@ -1382,7 +1261,7 @@ def chunk_overlap_df(spark, w: int = 12, stride: int = 8, view: str = "documents
 
 
 # ----------------------------------------------------------- BPE trainer
-def bpe_merges_sql(rounds: int = 3, view: str = "documents") -> tuple[str, str]:
+def bpe_merges_sql(rounds: int = 3, view: str = "documents") -> str:
     """BPE merge training (Sennrich et al., ACL'16), ``rounds`` merge
     rounds unrolled into ONE declarative statement per engine — the
     tokenizer-training step of an LLM pipeline run where it belongs:
@@ -1410,75 +1289,49 @@ def bpe_merges_sql(rounds: int = 3, view: str = "documents") -> tuple[str, str]:
     regardless of corpus size — the reason real BPE trainers run on
     word counts.
     """
-    chars = {
-        0: "array_join(transform(filter(split(tok, ''), x -> x != ''), c -> concat('|', c, '|')), ' ')",
-        1: "array_to_string(list_transform(list_filter(regexp_split_to_array(tok, ''), x -> x != ''), c -> concat('|', c, '|')), ' ')",
-    }
-    tokens = {0: P.spark_tokens("text"), 1: P.duck_tokens("text")}
-    explode_tok = {
-        0: f"SELECT explode({tokens[0]}) AS tok FROM {view}",
-        1: f"SELECT unnest({tokens[1]}) AS tok FROM {view}",
-    }
-    sp = {0: "split(seq, ' ')", 1: "str_split(seq, ' ')"}
-
-    def body(e: int) -> str:
-        cte = _bpe_merge_ctes(e, rounds, view)
-        union = "\nUNION ALL\n".join(
-            f"SELECT {r} AS round, replace(pr, '|', '') AS merged_pair, "
-            f"pcnt AS pair_count FROM b{r}"
-            for r in range(1, rounds + 1)
-        )
-        return "WITH " + ",\n".join(cte) + "\n" + union
-
-    return body(0), body(1)
+    cte = _bpe_merge_ctes(rounds, view)
+    union = "\nUNION ALL\n".join(
+        f"SELECT {r} AS round, replace(pr, '|', '') AS merged_pair, "
+        f"pcnt AS pair_count FROM b{r}"
+        for r in range(1, rounds + 1)
+    )
+    return "WITH " + ",\n".join(cte) + "\n" + union
 
 
-def _bpe_merge_ctes(e: int, rounds: int, view: str) -> list[str]:
-    """The unrolled BPE merge-training CTE chain (engine e: 0=Spark,
-    1=DuckDB) shared by bpe_merges_sql and oracle_bpe_encode. Relations:
-    w{r} = vocabulary after r merges (tok, cnt, seq), b{r} = round r's
-    elected pair. The DuckDB CTEs are AS MATERIALIZED: w{r} is
+def _bpe_merge_ctes(rounds: int, view: str) -> list[str]:
+    """The unrolled BPE merge-training CTE chain (DuckDB) shared by
+    bpe_merges_sql and the BPE encode/budget/fertility oracles.
+    Relations: w{r} = vocabulary after r merges (tok, cnt, seq), b{r} =
+    round r's elected pair. The CTEs are AS MATERIALIZED: w{r} is
     referenced by both p{r+1} and w{r+1}, so default inlining re-derives
     the corpus explode 2^rounds times (the kcore-oracle failure class)."""
-    chars = {
-        0: "array_join(transform(filter(split(tok, ''), x -> x != ''), c -> concat('|', c, '|')), ' ')",
-        1: "array_to_string(list_transform(list_filter(regexp_split_to_array(tok, ''), x -> x != ''), c -> concat('|', c, '|')), ' ')",
-    }
-    tokens = {0: P.spark_tokens("text"), 1: P.duck_tokens("text")}
-    explode_tok = {
-        0: f"SELECT explode({tokens[0]}) AS tok FROM {view}",
-        1: f"SELECT unnest({tokens[1]}) AS tok FROM {view}",
-    }
-    sp = {0: "split(seq, ' ')", 1: "str_split(seq, ' ')"}
-    mat = " MATERIALIZED" if e == 1 else ""
-    ngrams = P.spark_ngrams(sp[0], 2) if e == 0 else P.duck_ngrams(sp[1], 2)
-    pair_explode = (
-        f"SELECT cnt, pr FROM w{{r}} LATERAL VIEW explode({ngrams}) x AS pr"
-        if e == 0
-        else f"SELECT cnt, unnest({ngrams}) AS pr FROM w{{r}}"
+    chars = (
+        "array_to_string(list_transform(list_filter(regexp_split_to_array(tok, ''), "
+        "x -> x != ''), c -> concat('|', c, '|')), ' ')"
     )
+    ngrams = P.duck_ngrams("str_split(seq, ' ')", 2)
     cte = [
-        f"""w0 AS{mat} (
-  SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt, {chars[e]} AS seq
-  FROM ({explode_tok[e]}) t
+        f"""w0 AS MATERIALIZED (
+  SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt, {chars} AS seq
+  FROM (SELECT unnest({P.duck_tokens("text")}) AS tok FROM {view}) t
   GROUP BY tok
 )"""
     ]
     for r in range(1, rounds + 1):
         cte.append(
-            f"""p{r} AS{mat} (
+            f"""p{r} AS MATERIALIZED (
   SELECT pr, CAST(SUM(cnt) AS BIGINT) AS pcnt
-  FROM ({pair_explode.format(r=r - 1)}) x
+  FROM (SELECT cnt, unnest({ngrams}) AS pr FROM w{r - 1}) x
   GROUP BY pr
 )"""
         )
         cte.append(
-            f"""b{r} AS{mat} (
+            f"""b{r} AS MATERIALIZED (
   SELECT pr, pcnt FROM p{r} ORDER BY pcnt DESC, pr ASC LIMIT 1
 )"""
         )
         cte.append(
-            f"""w{r} AS{mat} (
+            f"""w{r} AS MATERIALIZED (
   SELECT w.tok, w.cnt,
          replace(w.seq, b.pr,
                  concat('|', replace(replace(b.pr, '|', ''), ' ', ''), '|')) AS seq
@@ -1607,7 +1460,7 @@ def oracle_bpe_encode(rounds: int = 3, view: str = "documents") -> str:
     """Single-statement DuckDB oracle for :func:`bpe_encode_staged`:
     the same unrolled merge training (materialized CTEs), then the
     vocab join + per-doc aggregate."""
-    ctes = _bpe_merge_ctes(1, rounds, view)
+    ctes = _bpe_merge_ctes(rounds, view)
     ctes.append(
         f"""v AS MATERIALIZED (
   SELECT tok, CAST(len(str_split(seq, ' ')) AS BIGINT) AS n_sym FROM w{rounds}
@@ -1672,7 +1525,7 @@ FROM w""",
 def oracle_bpe_token_budget(
     rounds: int = 3, budget: int = 500000, view: str = "documents"
 ) -> str:
-    ctes = _bpe_merge_ctes(1, rounds, view)
+    ctes = _bpe_merge_ctes(rounds, view)
     ctes.append(
         f"""v AS MATERIALIZED (
   SELECT tok, CAST(len(str_split(seq, ' ')) AS BIGINT) AS n_sym FROM w{rounds}
@@ -1811,17 +1664,11 @@ ph AS (
 
 def _winnow_gram_frags(k: int, view: str) -> dict:
     return dict(
-        toks=(P.spark_tokens("text"), P.duck_tokens("text")),
-        grams=(P.spark_ngrams("toks", k), P.duck_ngrams("toks", k)),
-        glen=("size(grams)", "len(grams)"),
-        explode_pos=(
-            "explode(sequence(1, size(grams))) AS pos",
-            "unnest(range(1, len(grams) + 1)) AS pos",
-        ),
-        gram_hash=(
-            P.spark_poly_hash("element_at(grams, pos)"),
-            P.duck_poly_hash("grams[pos]"),
-        ),
+        toks=P.duck_tokens("text"),
+        grams=P.duck_ngrams("toks", k),
+        glen="len(grams)",
+        explode_pos="unnest(range(1, len(grams) + 1)) AS pos",
+        gram_hash=P.duck_poly_hash("grams[pos]"),
         view=view,
     )
 
@@ -1838,7 +1685,7 @@ GROUP BY doc_id
 
 def winnowing_sql(
     k: int = 4, w: int = 5, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """Winnowing fingerprint selection (Schleimer, Wilkerson, Aiken,
     SIGMOD'03 — the MOSS algorithm): hash every k-gram, slide a
     w-position window, select each window's minimum hash; the DISTINCT
@@ -1868,7 +1715,7 @@ def winnowing_sql(
         + _winnow_select("ph", w, with_n_grams=True)
         + _WINNOW_REPORT_TAIL
     )
-    return P.bi_sql(template, **_winnow_gram_frags(k, view))
+    return P.duck_sql(template, **_winnow_gram_frags(k, view))
 
 
 def materialize_gram_positions(spark, k: int = 4, view: str = "documents") -> str:
@@ -1958,14 +1805,14 @@ def winnowing_staged(spark, k: int = 4, w: int = 5, view: str = "documents"):
     )
 
 
-def _winnow_fp_cte(k: int, w: int, view: str) -> tuple[str, str]:
+def _winnow_fp_cte(k: int, w: int, view: str) -> str:
     """The (doc_id, gh) fingerprint CTE chain of winnowing_sql, for
-    composition into pair reports — same _winnow_select core. Returns
-    (spark_cte, duck_cte) each ending with a relation named fp."""
+    composition into pair reports — same _winnow_select core. The
+    DuckDB CTE text, ending with a relation named fp."""
     template = (
         _WINNOW_GRAM_CTE + ",\n" + _winnow_select("ph", w, with_n_grams=False)
     )
-    return P.bi_sql(template, **_winnow_gram_frags(k, view))
+    return P.duck_sql(template, **_winnow_gram_frags(k, view))
 
 
 _WINNOW_PAIR_TAIL = """
@@ -1984,7 +1831,7 @@ SELECT doc_a, doc_b, n_shared FROM pairs WHERE n_shared >= {min_shared}
 
 def winnowing_pairs_sql(
     k: int = 4, w: int = 5, cap: int = 50, min_shared: int = 3, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """Copy-pair detection over shared winnowing fingerprints — the
     MOSS report itself: documents sharing >= ``min_shared`` selected
     fingerprints, with the shared count. The posting-size cap drops
@@ -1993,9 +1840,8 @@ def winnowing_pairs_sql(
     prefix index and LSH bands: the join is fingerprint-keyed and
     never all-pairs, and no single fingerprint can contribute more
     than cap² pair terms)."""
-    s_cte, d_cte = _winnow_fp_cte(k, w, view)
     tail = _WINNOW_PAIR_TAIL.format(cap=cap, min_shared=min_shared)
-    return "WITH " + s_cte + ",\n" + tail, "WITH " + d_cte + ",\n" + tail
+    return "WITH " + _winnow_fp_cte(k, w, view) + ",\n" + tail
 
 
 def winnowing_pairs_staged(
@@ -2117,7 +1963,7 @@ FROM top
 
 def rake_keywords_sql(
     topk: int = 50, max_phrase: int = 4, view: str = "documents"
-) -> tuple[str, str]:
+) -> str:
     """RAKE keyword extraction (Rose et al. 2010): candidate phrases
     are maximal stopword-free token runs (the gaps-and-islands window
     trick applied to text — segment id = running stopword count);
@@ -2138,25 +1984,16 @@ def rake_keywords_sql(
     RAKE practice — unbounded runs in stopword-poor text otherwise
     dominate degree mass).
     """
-    # oracle side: positions from a one-shot unnest (DuckDB evaluates
-    # the list column once per row, so the index form is linear there)
-    duck_tokpos = (
+    # positions from a one-shot unnest (DuckDB evaluates the list
+    # column once per row, so the index form is linear there)
+    tokpos = (
         f"(SELECT doc_id, unnest(range(1, len(toks) + 1)) AS pos, "
         f"toks[unnest(range(1, len(toks) + 1))] AS tok "
         f"FROM (SELECT doc_id, {P.duck_tokens('text')} AS toks FROM {view}) tt)"
     )
-    spark_phrase = (
-        "array_join(transform(array_sort(collect_list(struct(w.pos, w.tok))), "
-        "s -> s.tok), ' ')"
+    return "WITH " + _rake_body(tokpos, topk, max_phrase).format(
+        phrase_text="string_agg(w.tok, ' ' ORDER BY w.pos)", idiv="//"
     )
-    duck_phrase = "string_agg(w.tok, ' ' ORDER BY w.pos)"
-    spark_sql = "WITH " + _rake_body("{rel}", topk, max_phrase).format(
-        phrase_text=spark_phrase, idiv="DIV", rel="{rel}"
-    )
-    duck_sql = "WITH " + _rake_body(duck_tokpos, topk, max_phrase).format(
-        phrase_text=duck_phrase, idiv="//"
-    )
-    return spark_sql, duck_sql
 
 
 def rake_keywords_staged(
@@ -2248,7 +2085,7 @@ def bpe_fertility_staged(spark, rounds: int = 3, view: str = "documents"):
 
 
 def oracle_bpe_fertility(rounds: int = 3, view: str = "documents") -> str:
-    ctes = _bpe_merge_ctes(1, rounds, view)
+    ctes = _bpe_merge_ctes(rounds, view)
     ctes.append(
         f"""v AS MATERIALIZED (
   SELECT tok, CAST(len(str_split(seq, ' ')) AS BIGINT) AS n_sym FROM w{rounds}

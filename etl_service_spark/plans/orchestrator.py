@@ -41,10 +41,6 @@ class CycleError(ValueError):
     pass
 
 
-class RunAborted(RuntimeError):
-    pass
-
-
 @dataclass(frozen=True)
 class Step:
     """pc.ETL_Paketschritte row essentials (res/pc/ETL_Paketschritte.sql:

@@ -44,19 +44,7 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 class Case(NamedTuple):
     spark: SparkQuery
-    oracle: str | None  # None → driver records rows-only check
-
-
-_VIEW_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
-# session id -> sf_dir whose temp views are CURRENTLY registered. The
-# DataFrame dict is memoizable per (session, sf_dir), but the session's
-# temp views are global state: switching BACK to a previously-seen
-# sf_dir must re-register them, or spark.table()/spark.sql() consumers
-# silently read the other scale factor's files (caught by an
-# interleaved-sf oracle run; single-sf sessions never hit this).
-_LAST_SF: dict[int, str] = {}
+    oracle: str
 
 
 def _written_once(spark: SparkSession, kind: str, table: str, write) -> str:
@@ -74,13 +62,21 @@ def _written_once(spark: SparkSession, kind: str, table: str, write) -> str:
 
 
 def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (P.session_token(spark), sf_dir)
-    if key not in _VIEW_CACHE:
-        _VIEW_CACHE[key] = register_views(spark, sf_dir)
-    elif _LAST_SF.get(P.session_token(spark)) != sf_dir:
+    """``sf_dir``'s tables, registered as the session's temp views.
+
+    The state, (sf_dir whose views are CURRENTLY registered, {sf_dir:
+    frames}), is pinned on the session and dies with it. The frames
+    are reused per sf_dir, but temp views are session-global:
+    switching BACK to a previously-seen sf_dir must re-register them,
+    or spark.table()/spark.sql() consumers silently read the other
+    scale factor's files (caught by an interleaved-sf oracle run)."""
+    current, frames = getattr(spark, "_etl_views", (None, {}))
+    if sf_dir not in frames:
+        frames[sf_dir] = register_views(spark, sf_dir)
+    elif current != sf_dir:
         register_views(spark, sf_dir)
-    _LAST_SF[P.session_token(spark)] = sf_dir
-    return _VIEW_CACHE[key]
+    spark._etl_views = (sf_dir, frames)
+    return frames[sf_dir]
 
 
 # events.ts fragments (see sources/catalog.py for the Spark-side conversion)
@@ -1769,351 +1765,6 @@ def unpivot_stats(df: DataFrame, measures: tuple[str, ...]) -> DataFrame:
     )
 
 
-# Names the driver already value-verified, one tuple per round (the
-# green rows of CORRECTNESS_r01..r05.json). The driver samples a PREFIX
-# of the registry, so registry() floats unverified entries first, then
-# orders the verified tail STALEST ROUND FIRST — each round's 50-sample
-# refreshes the oldest driver-green currency (VERDICT r5 item 6).
-_VERIFIED_R4 = (
-        # round 4 (CORRECTNESS_r04.json, 32 green rows)
-        "ann_ivf_nprobe_sweep", "ann_matryoshka_recall", "ann_pq_adc_topk",
-        "ann_pq_recall_report", "ann_recall_report",
-        "corpus_cross_source_overlap", "corpus_dedup_survivorship",
-        "corpus_length_histogram", "corpus_resample_plan",
-        "corpus_shard_plan", "corpus_weighted_sample", "dedup_best_keeper",
-        "dedup_lsh_cost_audit", "dedup_lsh_recall_report", "dedup_semantic",
-        "emb_centroid_outliers", "emb_pq_codes", "events_anomaly_mad",
-        "events_burst_windows", "events_distribution_drift",
-        "events_late_data_audit", "events_variant_extract",
-        "media_video_meta_sniff", "orders_ltv_cohort",
-        "profile_join_size_estimate", "profile_key_skew",
-        "src_python_datasource", "src_schema_evolution",
-        "text_langid_confusion", "text_ngram_novelty",
-        "text_token_estimate_bpe", "text_vocab_growth",
-)
-
-_VERIFIED_R3 = (
-        # round 3 (CORRECTNESS_r03.json, 44 green rows)
-        "ana_report_rows", "ann_range_search", "corpus_contamination",
-        "corpus_dup_rate_by_source", "corpus_quality_curriculum",
-        "corpus_temperature_mixture", "corpus_token_budget",
-        "dedup_cluster_twophase", "dedup_containment", "dedup_fuzzy_names",
-        "dedup_strategy_sweep", "dim_scd2_pit_lookup",
-        "events_dau_wau_stickiness", "events_funnel_windowed",
-        "events_gapfill_hourly", "events_gaps_islands",
-        "events_interarrival_stats", "events_json_extract",
-        "events_moving_average", "events_multires_rollup",
-        "events_pivot_by_user", "events_salted_agg", "events_salted_join",
-        "events_value_quantiles", "events_zscore_outliers",
-        "graph_degree_distribution", "graph_pagerank_salted",
-        "graph_triangle_count", "join_bloom_prefilter_revenue",
-        "lineitem_unpivot_stats", "media_audio_meta_sniff",
-        "media_feature_extract", "media_image_dims_sniff",
-        "privacy_l_diversity", "privacy_scrub_pii",
-        "sketch_hll_sliding_distinct", "sketch_hll_weekly_rollup",
-        "src_binaryfile_ingest", "src_jsonl_roundtrip", "src_orc_roundtrip",
-        "text_repetition_quality", "text_sentence_split",
-        "text_top_terms_per_language", "text_vocab_by_source",
-)
-
-_VERIFIED_R1 = (
-        # round 1 (CORRECTNESS_r01.json)
-        "ana_argmax_last_run", "ana_drilldown_levels", "ana_duration_datediff",
-        "ana_hierarchy_tree", "ana_running_filter", "ana_runstructure_real",
-        "ana_timeline_union", "ana_today_runs", "ana_union_report",
-        "cfg_dependency_edges", "cfg_filter_due", "cfg_join_priority",
-        "cfg_left_join_steps", "cfg_params_threeway", "dim_scd2_merge",
-        "etl_copy_align_audit", "etl_copy_timesliced", "etl_csv_export_lines",
-        "etl_dedup_filename", "etl_excel_ingest_audit", "etl_placeholder_window",
-        "etl_sql_target_dialect", "events_attribution_join",
-        "events_cohort_retention", "events_value_deciles",
-        "events_value_time_corr", "nation_top_customer_argmax",
-        "orders_halfyear_setops", "orders_running_spend",
-        "tpch_q10_returned_items", "tpch_q11_important_stock",
-        "tpch_q12_priority_classes", "tpch_q13_custdist", "tpch_q14_promo_share",
-        "tpch_q15_top_supplier", "tpch_q16_supplier_variety",
-        "tpch_q18_bulk_customers", "tpch_q19_or_pushdown", "tpch_q1_pricing",
-        "tpch_q20_volume_suppliers", "tpch_q21_lone_late_supplier",
-        "tpch_q22_idle_rich", "tpch_q2_min_cost_supplier", "tpch_q3_shipping",
-        "tpch_q4_late_priority", "tpch_q5_local_supplier",
-        "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-        "tpch_q8_market_share", "tpch_q9_product_profit",
-)
-
-_VERIFIED_R2 = (
-        # round 2 (CORRECTNESS_r02.json)
-        "ann_cosine_topk",
-        "ann_ivf_topk", "ann_lsh_bucketed", "anti_join_never_shipped",
-        "chain_join_revenue", "corpus_mixture_sample", "corpus_pack_sequences",
-        "corpus_source_composition", "corpus_split_assign",
-        "corpus_stratified_sample", "corpus_training_pipeline",
-        "dedup_cluster_components", "dedup_exact", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_pairs",
-        "dq_expectation_report", "emb_cosine_neardup", "emb_kmeans",
-        "emb_quantize_int8", "events_asof_join", "events_funnel",
-        "events_range_join", "events_session_window_native", "events_sessionize",
-        "events_window_agg", "graph_pagerank", "media_binary_stats",
-        "media_chunk_windows", "media_frame_sample", "orders_cube_revenue",
-        "privacy_k_anonymity", "privacy_pseudonymize", "profile_orders_columns",
-        "q17_small_qty_revenue", "semi_join_urgent_customers",
-        "sketch_bloom_membership", "sketch_cms_heavy_hitters",
-        "sketch_histogram_quantiles", "sketch_hll_distinct",
-        "sketch_kmv_audience_overlap", "sketch_kmv_distinct", "text_fingerprint",
-        "text_lang_id", "text_normalize", "text_quality_score",
-        "text_tfidf_top_terms", "text_token_stats", "top_parts_by_revenue",
-)
-
-_VERIFIED_R5 = (
-        # round 5 (CORRECTNESS_r05.json, 50 green rows)
-        "ann_ivf_incremental", "basket_brand_pairs", "corpus_domain_quota",
-        "corpus_domain_quota_salted", "corpus_dsir_quota",
-        "corpus_dsir_weights", "corpus_filter_waterfall",
-        "corpus_split_leakage", "corpus_token_budget_bpe",
-        "dedup_chunk_exact", "dedup_lsh_band_tuning",
-        "dedup_minhash_estimate_audit", "dedup_winnowing_pairs",
-        "emb_hamming_knn_graph", "etl_copy_align_audit",
-        "etl_copy_timesliced", "etl_placeholder_window",
-        "etl_sql_target_dialect", "events_ab_lift",
-        "events_changepoint_scan", "events_forecast_backtest",
-        "events_hopping_window", "events_markov_transitions",
-        "events_moment_stats", "events_seasonal_residuals",
-        "events_top_paths", "events_user_rate_cap", "graph_kcore",
-        "orders_gap_distribution", "orders_pareto_share",
-        "orders_rfm_segments", "orders_yoy_growth",
-        "profile_group_cardinality", "profile_range_boundaries",
-        "recon_users_customers_full_outer", "snap_incremental_agg",
-        "snap_merge_upsert", "snap_time_travel", "snap_version_diff",
-        "text_bigram_lm_score", "text_boilerplate_prefixes",
-        "text_bpe_encode", "text_bpe_merges", "text_chunk_overlap",
-        "text_gopher_rules", "text_hashed_linear_score",
-        "text_pmi_collocations", "text_rake_keywords",
-        "text_winnowing_fingerprints", "text_zipf_profile",
-)
-
-_VERIFIED_R6 = (
-        # round 6 (CORRECTNESS_r06.json, 50 green rows)
-        "ana_argmax_last_run", "ana_drilldown_levels", "ana_duration_datediff",
-        "ana_hierarchy_tree", "ana_running_filter", "ana_runstructure_real",
-        "ana_timeline_union", "ana_today_runs", "ana_union_report",
-        "ann_hamming_banded", "ann_hamming_banded_recall",
-        "cfg_dependency_edges", "cfg_filter_due", "cfg_join_priority",
-        "cfg_left_join_steps", "cfg_mail_recipients", "cfg_param_reload",
-        "cfg_params_threeway", "dedup_exact_substr_removal",
-        "dedup_exact_substr_spans", "dim_scd2_merge", "dq_volume_anomaly",
-        "emb_kmeans", "emb_whitening_stats", "etl_csv_export_lines",
-        "etl_dedup_filename", "etl_excel_ingest_audit",
-        "events_attribution_join", "events_cohort_retention",
-        "events_sessionize", "events_value_deciles", "events_value_time_corr",
-        "events_watermark_lateness", "media_resize",
-        "nation_top_customer_argmax", "orders_halfyear_setops",
-        "orders_running_spend", "text_bpe_fertility", "text_ngram_coverage",
-        "tpch_q10_returned_items", "tpch_q11_important_stock",
-        "tpch_q12_priority_classes", "tpch_q13_custdist",
-        "tpch_q14_promo_share", "tpch_q15_top_supplier",
-        "tpch_q16_supplier_variety", "tpch_q18_bulk_customers",
-        "tpch_q19_or_pushdown", "tpch_q1_pricing", "tpch_q20_volume_suppliers",
-)
-
-_VERIFIED_R7 = (
-        # round 7 (CORRECTNESS_r07.json, 50 green rows)
-        "ann_cosine_topk", "ann_ivf_topk", "ann_lsh_bucketed",
-        "anti_join_never_shipped", "cfg_stale_reset", "chain_join_revenue",
-        "corpus_epoch_mix_schedule", "corpus_mixture_sample",
-        "corpus_pack_sequences", "corpus_source_composition",
-        "corpus_split_assign", "corpus_stratified_sample",
-        "corpus_training_pipeline", "dedup_cluster_components", "dedup_exact",
-        "dedup_lsh_band_tuning", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-        "dedup_simhash", "dedup_simhash_pairs", "dedup_threshold_curve",
-        "dedup_url_canonical", "dq_expectation_report", "dq_volume_anomaly",
-        "emb_cosine_neardup", "emb_hamming_knn_graph", "emb_quantize_int8",
-        "events_asof_join", "events_funnel", "events_range_join",
-        "events_session_window_native", "events_window_agg", "graph_pagerank",
-        "media_binary_stats", "media_chunk_windows", "media_frame_sample",
-        "media_wav_rms_windows", "orders_cube_revenue",
-        "privacy_dp_epsilon_ledger", "privacy_k_anonymity",
-        "tpch_q21_lone_late_supplier", "tpch_q22_idle_rich",
-        "tpch_q2_min_cost_supplier", "tpch_q3_shipping",
-        "tpch_q4_late_priority", "tpch_q5_local_supplier",
-        "tpch_q6_forecast_revenue", "tpch_q7_volume_shipping",
-        "tpch_q8_market_share", "tpch_q9_product_profit",
-)
-
-_VERIFIED_R8 = (
-        # round 8 (CORRECTNESS_r08.json, 50 green rows)
-        "ana_report_rows", "ann_range_search", "corpus_contamination",
-        "corpus_dedup_cascade", "corpus_dup_rate_by_source",
-        "corpus_quality_curriculum", "corpus_temperature_mixture",
-        "corpus_token_budget", "dedup_cluster_twophase", "dedup_containment",
-        "dedup_fuzzy_names", "dedup_lsh_band_tuning",
-        "dedup_sentence_boilerplate", "dedup_strategy_sweep",
-        "dedup_url_canonical", "dim_scd2_pit_lookup",
-        "dq_benford_first_digit", "dq_referential_integrity",
-        "emb_guard_cap_sweep", "emb_knn_cell_guard_report",
-        "emb_knn_guarded_graph", "events_dau_wau_stickiness",
-        "events_funnel_windowed", "events_gapfill_hourly",
-        "events_gaps_islands", "events_interarrival_stats",
-        "events_json_extract", "events_ohlc_windows",
-        "layout_zorder_skipping", "privacy_pseudonymize",
-        "privacy_t_closeness", "profile_fd_violations",
-        "profile_orders_columns", "q17_small_qty_revenue",
-        "semi_join_urgent_customers", "sketch_bloom_membership",
-        "sketch_cms_heavy_hitters", "sketch_histogram_quantiles",
-        "sketch_hll_distinct", "sketch_kmv_audience_overlap",
-        "sketch_kmv_distinct", "snap_cdc_compaction", "text_fingerprint",
-        "text_lang_id", "text_normalize", "text_quality_score",
-        "text_tfidf_top_terms", "text_token_stats", "top_parts_by_revenue",
-        "tpch_q17_small_quantity",
-)
-
-_VERIFIED_R9 = (
-        # round 9 (CORRECTNESS_r09.json, 50 green rows)
-        'ann_ivf_nprobe_sweep', 'ann_ivfpq_recall', 'ann_ivfpq_topk',
-        'ann_matryoshka_recall', 'ann_pq_adc_topk',
-        'ann_pq_recall_report', 'basket_association_rules',
-        'corpus_quality_curriculum', 'dedup_lsh_band_tuning',
-        'events_gaps_islands', 'events_moving_average',
-        'events_multires_rollup', 'events_ohlc_windows',
-        'events_peak_concurrency', 'events_pivot_by_user',
-        'events_rollup_consistency', 'events_salted_agg',
-        'events_salted_join', 'events_seasonal_residuals',
-        'events_value_quantiles', 'events_zscore_outliers',
-        'graph_bfs_layers', 'graph_degree_distribution',
-        'graph_pagerank_salted', 'graph_triangle_count',
-        'join_bloom_prefilter_revenue', 'layout_zorder_skipping',
-        'lineitem_unpivot_stats', 'media_audio_meta_sniff',
-        'media_feature_extract', 'media_image_dims_sniff',
-        'orders_rfm_segments', 'privacy_k_map', 'privacy_l_diversity',
-        'privacy_scrub_pii', 'privacy_t_closeness', 'profile_key_skew',
-        'profile_range_boundaries', 'sketch_hll_sliding_distinct',
-        'sketch_hll_weekly_rollup', 'src_binaryfile_ingest',
-        'src_jsonl_roundtrip', 'src_orc_roundtrip',
-        'text_rake_keywords', 'text_repetition_quality',
-        'text_sentence_split', 'text_source_overlap_jaccard',
-        'text_source_unigram_tvd', 'text_top_terms_per_language',
-        'text_vocab_by_source',
-)
-
-_VERIFIED_R10 = (
-        # round 10 (CORRECTNESS_r10.json, 50 green rows)
-        'ann_int8_recall', 'ann_ivf_incremental', 'ann_range_search',
-        'ann_recall_report', 'basket_brand_pairs',
-        'corpus_cross_source_overlap', 'corpus_dedup_survivorship',
-        'corpus_domain_quota', 'corpus_domain_quota_salted',
-        'corpus_dsir_quota', 'corpus_dsir_weights',
-        'corpus_filter_waterfall', 'corpus_length_histogram',
-        'corpus_resample_plan', 'corpus_shard_plan',
-        'corpus_split_leakage', 'corpus_token_budget_bpe',
-        'corpus_weighted_sample', 'dedup_best_keeper',
-        'dedup_chunk_exact', 'dedup_incremental_exact',
-        'dedup_incremental_neardup', 'dedup_lsh_cost_audit',
-        'dedup_lsh_recall_report', 'dedup_minhash_estimate_audit',
-        'dedup_semantic', 'dedup_winnowing_pairs',
-        'dim_scd2_invariants', 'dq_order_totals_recon',
-        'emb_centroid_outliers', 'emb_pq_codes', 'etl_copy_align_audit',
-        'etl_copy_timesliced', 'events_anomaly_mad',
-        'events_burst_windows', 'events_distribution_drift',
-        'events_late_data_audit', 'events_peak_concurrency',
-        'events_variant_extract', 'graph_bfs_layers',
-        'media_video_meta_sniff', 'orders_ltv_cohort',
-        'profile_join_size_estimate', 'src_python_datasource',
-        'src_schema_evolution', 'text_langid_confusion',
-        'text_ngram_novelty', 'text_source_diversity_gini',
-        'text_token_estimate_bpe', 'text_vocab_growth',
-)
-
-# Stalest driver row first: the oldest-round tier leads the verified
-# tail; a name verified in several rounds keeps only its FRESHEST
-# (latest-round) position.
-_seen: set[str] = set()
-_stale_tiers: list[tuple[str, ...]] = []
-for _tier in (
-    _VERIFIED_R10,
-    _VERIFIED_R9, _VERIFIED_R8, _VERIFIED_R7, _VERIFIED_R6, _VERIFIED_R5,
-    _VERIFIED_R4, _VERIFIED_R3, _VERIFIED_R2, _VERIFIED_R1,
-):
-    _stale_tiers.append(tuple(n for n in _tier if n not in _seen))
-    _seen.update(_tier)
-_VERIFIED_STALE_ORDER: tuple[str, ...] = tuple(
-    n for tier in reversed(_stale_tiers) for n in tier
-)
-_DRIVER_VERIFIED = frozenset(_VERIFIED_STALE_ORDER)
-del _seen, _stale_tiers, _tier
-
-# Family buckets for the interleave: a prefix of the reordered registry
-# hits every family after ~one round-robin pass.
-_FAMILY_PREFIXES: tuple[tuple[str, ...], ...] = (
-    ("dedup_",),
-    ("ann_", "emb_"),
-    ("sketch_",),
-    ("text_",),
-    ("corpus_",),
-    ("media_",),
-    ("privacy_", "dq_", "profile_"),
-    ("graph_",),
-    ("events_",),
-    ("src_",),
-)
-
-
-# Round 11 priority tier (VERDICT.md round 10, "Next round" #3): every
-# query whose PLAN changed since its last driver-green row — the
-# IVF-PQ Janino-overflow fix rebuilt both consumers' plans around the
-# materialized residual relation (_ivfpq_res_rel), so both must be
-# driver-RE-verified before anything else. The one NEW registry entry
-# (ana_hierarchy_tree_recursive) floats right behind as
-# driver-unverified; the verified tail then leads with the r5
-# staleness tier, so the driver's 50-sample retires r5 entirely and
-# bites into r6.
-_PRIORITY_PENDING = (
-    # round-10 verdict #2: residual relation materialized once per
-    # session; downstream ADC/exact distance CASEs compile again
-    # (allowlist now empty). Values oracle-identical, plan changed.
-    "ann_ivfpq_recall", "ann_ivfpq_topk",
-    # round-10 verdict #4: in-batch winner is one struct-min hash
-    # aggregate (the old groupBy+self-join ran the Arrow hash kernel
-    # on both exchange sides — ~1.8x fold wall at sf0.1). Values
-    # oracle-identical, plan changed.
-    "dedup_incremental_exact",
-    # same rewrite applied to the near-dup gate: one band_key window
-    # pass over (batch bands ∪ state bands tagged doc_id=-1) replaces
-    # the state semi-join + bucket-min groupBy + join-back (bk was
-    # exchanged three times per batch). Values oracle-identical, plan
-    # changed.
-    "dedup_incremental_neardup",
-)
-
-
-def _driver_order(cases: dict[str, Case]) -> dict[str, Case]:
-    """Order the registry for the driver's prefix sample: first the
-    priority tier (new entries + re-verify rows whose plan changed since
-    their last green row), then the remaining driver-unverified entries
-    interleaved one-per-family, then the already-verified tail ordered
-    stalest driver row first — a 50-entry prefix refreshes the oldest
-    green currency every round. Pure reordering — same keys/cases."""
-    names = list(cases)
-    prio = [n for n in _PRIORITY_PENDING if n in cases]
-    pending = [n for n in names if n not in _DRIVER_VERIFIED and n not in prio]
-    queues = []
-    claimed: set[str] = set()
-    for prefixes in _FAMILY_PREFIXES:
-        q = [n for n in pending if n.startswith(prefixes)]
-        queues.append(q)
-        claimed.update(q)
-    queues.append([n for n in pending if n not in claimed])  # unfamiliar tail
-    ordered: list[str] = list(prio)
-    while any(queues):
-        for q in queues:
-            if q:
-                ordered.append(q.pop(0))
-    placed = set(ordered)
-    ordered.extend(
-        n for n in _VERIFIED_STALE_ORDER if n in cases and n not in placed
-    )
-    placed.update(ordered)
-    ordered.extend(n for n in names if n not in placed)  # safety net
-    return {n: cases[n] for n in ordered}
-
-
 # Watermark-lateness audit for a batched-per-entity ingest: the event
 # table is time-ordered by event_id, but a bulk per-entity export
 # replayed into a stream arrives ordered by (user_id, event_id) —
@@ -2407,7 +2058,7 @@ GROUP BY 1
     )
     # native session_window twin: oracle is the same LAG template with
     # the exclusive-end (>=) gap rule — see _q_session_window_native
-    _, _sess_ge_oracle = P.bi_sql(
+    _sess_ge_oracle = P.duck_sql(
         EVENTS_SESSIONIZE_TEMPLATE.replace("> {gap_us}", ">= {gap_us}"),
         ts_us=TS_US,
         gap_us=str(SESSION_GAP_US),
@@ -2565,7 +2216,7 @@ FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
         tail, _ = P.bi_sql("WITH ob AS (SELECT * FROM " + name + "),\n" + _ASSOC_TAIL, **_assoc_frags)
         return spark.sql(tail)
 
-    _, _assoc_duck = P.bi_sql(
+    _assoc_duck = P.duck_sql(
         "WITH ob AS (" + _ASSOC_OB + "),\n" + _ASSOC_TAIL, **_assoc_frags
     )
     cases["basket_association_rules"] = Case(_assoc_staged, _assoc_duck)
@@ -2873,7 +2524,7 @@ GROUP BY event_type
         return corpus.dup_rate_by_source_staged(spark)
 
     cases["corpus_dup_rate_by_source"] = Case(
-        _dup_rate_staged, corpus.dup_rate_by_source_sql()[1]
+        _dup_rate_staged, corpus.dup_rate_by_source_sql()
     )
 
     # --- dedup family
@@ -2881,7 +2532,7 @@ GROUP BY event_type
         views(spark, sf_dir)
         return dedup.exact_dedup_staged(spark)
 
-    cases["dedup_exact"] = Case(_exact_staged, dedup.exact_dedup_sql()[1])
+    cases["dedup_exact"] = Case(_exact_staged, dedup.exact_dedup_sql())
 
     # Spark side: staged execution (shingle-hash sets materialized once,
     # cached, then self-joined) — Spark's CTE inlining would otherwise
@@ -2895,8 +2546,8 @@ GROUP BY event_type
         views(spark, sf_dir)
         return dedup.minhash_lsh_staged(spark)
 
-    cases["dedup_ngram_jaccard"] = Case(_jaccard_staged, dedup.ngram_jaccard_sql()[1])
-    cases["dedup_minhash_lsh"] = Case(_minhash_staged, dedup.minhash_lsh_sql()[1])
+    cases["dedup_ngram_jaccard"] = Case(_jaccard_staged, dedup.ngram_jaccard_sql())
+    cases["dedup_minhash_lsh"] = Case(_minhash_staged, dedup.minhash_lsh_sql())
 
     # asymmetric containment (quote-expansion dups Jaccard misses):
     # A-prefix vs full posting list, integer-only thresholding
@@ -2905,7 +2556,7 @@ GROUP BY event_type
         return dedup.containment_staged(spark)
 
     cases["dedup_containment"] = Case(
-        _containment_staged, dedup.containment_dedup_sql()[1]
+        _containment_staged, dedup.containment_dedup_sql()
     )
 
     # ---- LSH self-evaluation: recall of the banded-minhash candidate
@@ -2940,8 +2591,8 @@ GROUP BY event_type
     _lsh_recall_oracle = f"""
 WITH j AS (
   SELECT CASE WHEN l.doc_a IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({dedup.ngram_jaccard_sql()[1].strip()}) e
-  LEFT JOIN ({dedup.minhash_lsh_sql()[1].strip()}) l
+  FROM ({dedup.ngram_jaccard_sql().strip()}) e
+  LEFT JOIN ({dedup.minhash_lsh_sql().strip()}) l
     ON l.doc_a = e.doc_a AND l.doc_b = e.doc_b
 )
 SELECT COUNT(*) AS n_true_pairs, CAST(SUM(hit) AS BIGINT) AS n_hits,
@@ -2961,9 +2612,9 @@ FROM j
         views(spark, sf_dir)
         return dedup.simhash_pairs_staged(spark)
 
-    cases["dedup_simhash"] = Case(_simhash_staged, dedup.simhash_sql()[1])
+    cases["dedup_simhash"] = Case(_simhash_staged, dedup.simhash_sql())
     cases["dedup_simhash_pairs"] = Case(
-        _simhash_pairs_staged, dedup.simhash_pairs_sql()[1]
+        _simhash_pairs_staged, dedup.simhash_pairs_sql()
     )
 
     def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3039,23 +2690,23 @@ FROM j
 
     _SWEEP_ORACLE = f"""
 SELECT 'exact' AS strategy, CAST(SUM(n_copies) - COUNT(*) AS BIGINT) AS n_flagged
-FROM ({dedup.exact_dedup_sql()[1].strip()})
+FROM ({dedup.exact_dedup_sql().strip()})
 UNION ALL
 SELECT 'jaccard_cluster',
        CAST(COUNT(DISTINCT doc_id) - COUNT(DISTINCT cluster_id) AS BIGINT)
 FROM ({graph.dup_clusters_oracle_sql().strip()})
 UNION ALL
 SELECT 'minhash_pair', CAST(COUNT(DISTINCT doc_b) AS BIGINT)
-FROM ({dedup.minhash_lsh_sql()[1].strip()})
+FROM ({dedup.minhash_lsh_sql().strip()})
 UNION ALL
 SELECT 'simhash_group', CAST(SUM(group_size) - COUNT(*) AS BIGINT)
-FROM ({dedup.simhash_pairs_sql()[1].strip()})
+FROM ({dedup.simhash_pairs_sql().strip()})
 UNION ALL
 SELECT 'chunk_span', CAST(COUNT(*) AS BIGINT)
-FROM ({dedup.chunk_dedup_sql()[1].strip()}) WHERE dup_span_ppm >= 500000
+FROM ({dedup.chunk_dedup_sql().strip()}) WHERE dup_span_ppm >= 500000
 UNION ALL
 SELECT 'semantic_embedding', CAST(COUNT(*) AS BIGINT)
-FROM ({similarity.semantic_dedup_sql()[1].strip()})
+FROM ({similarity.semantic_dedup_sql().strip()})
 """
     cases["dedup_strategy_sweep"] = Case(_dedup_sweep, _SWEEP_ORACLE)
 
@@ -3091,7 +2742,7 @@ FROM ({similarity.semantic_dedup_sql()[1].strip()})
 
     _keeper_oracle = f"""
 WITH RECURSIVE pairs AS (
-  SELECT doc_a, doc_b FROM ({dedup.ngram_jaccard_sql(tau=0.8)[1].strip()}) p
+  SELECT doc_a, doc_b FROM ({dedup.ngram_jaccard_sql(tau=0.8).strip()}) p
 ),
 edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
@@ -3159,7 +2810,7 @@ FROM ranked WHERE rk = 1
         return dedup.contamination_staged(spark)
 
     cases["corpus_contamination"] = Case(
-        _contamination, dedup.contamination_sql()[1]
+        _contamination, dedup.contamination_sql()
     )
     cases["sketch_kmv_distinct"] = _sql_case(
         sketch.kmv_distinct_sql(), sketch.kmv_distinct_sql()
@@ -3185,7 +2836,7 @@ FROM ranked WHERE rk = 1
         return textops.tfidf_top_terms_staged(spark)
 
     cases["text_tfidf_top_terms"] = Case(
-        _tfidf_staged, textops.tfidf_top_terms_sql()[1]
+        _tfidf_staged, textops.tfidf_top_terms_sql()
     )
     cases["text_top_terms_per_language"] = _pair_case(
         textops.top_terms_per_language_sql()
@@ -3467,7 +3118,7 @@ FROM d GROUP BY decile
     # Spark runs the O(n) cumulative-difference form; the declarative
     # RANGE-frame template stays as the DuckDB oracle (see the comment
     # at EVENTS_MOVING_AVG_SPARK_SQL for why they differ).
-    _, _mov_duck = P.bi_sql(EVENTS_MOVING_AVG_TEMPLATE, ts_us=TS_US)
+    _mov_duck = P.duck_sql(EVENTS_MOVING_AVG_TEMPLATE, ts_us=TS_US)
     cases["events_moving_average"] = _sql_case(EVENTS_MOVING_AVG_SPARK_SQL, _mov_duck)
     cases["events_interarrival_stats"] = _bi_case(
         EVENTS_INTERARRIVAL_TEMPLATE, ts_us=TS_US
@@ -3502,12 +3153,12 @@ FROM d GROUP BY decile
         n = pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
         return similarity.kmeans_staged(spark, n)
 
-    cases["emb_kmeans"] = Case(_q_kmeans, similarity.kmeans_sql()[1])
+    cases["emb_kmeans"] = Case(_q_kmeans, similarity.kmeans_sql())
     def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
         return similarity.semantic_dedup_staged(spark)
 
-    cases["dedup_semantic"] = Case(_semantic_dedup, similarity.semantic_dedup_sql()[1])
+    cases["dedup_semantic"] = Case(_semantic_dedup, similarity.semantic_dedup_sql())
     cases["emb_quantize_int8"] = _pair_case(similarity.quantize_int8_sql())
     cases["events_value_quantiles"] = _pair_case(sketch.quantiles_sql())
 
@@ -3518,7 +3169,7 @@ FROM d GROUP BY decile
 
     # Spark side: Arrow/numpy replay of the oracle's exact FP chain with
     # per-partition top-k pruning; oracle stays the explicit-chain SQL.
-    cases["ann_cosine_topk"] = Case(_topk_staged, similarity.cosine_topk_sql()[1])
+    cases["ann_cosine_topk"] = Case(_topk_staged, similarity.cosine_topk_sql())
 
     def _neardup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
@@ -3527,18 +3178,18 @@ FROM d GROUP BY decile
     # Spark side: Arrow/numpy replay of the oracle's exact FP sequence
     # (the N²×64-term SQL chain is interpreted, ~60x slower); oracle
     # stays the explicit-chain SQL.
-    cases["emb_cosine_neardup"] = Case(_neardup_pandas, similarity.embedding_neardup_sql()[1])
+    cases["emb_cosine_neardup"] = Case(_neardup_pandas, similarity.embedding_neardup_sql())
 
     def _lsh_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
         return similarity.lsh_ann_staged(spark)
 
-    cases["ann_lsh_bucketed"] = Case(_lsh_staged, similarity.lsh_ann_sql()[1])
+    cases["ann_lsh_bucketed"] = Case(_lsh_staged, similarity.lsh_ann_sql())
     def _ivf_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
         return similarity.ivf_ann_staged(spark)
 
-    cases["ann_ivf_topk"] = Case(_ivf_staged, similarity.ivf_ann_sql()[1])
+    cases["ann_ivf_topk"] = Case(_ivf_staged, similarity.ivf_ann_sql())
 
     # Spark side: the cosine_topk_staged Arrow kernel with a threshold
     # filter (the SQL twin's doubly-inlined 64-term chains overflow the
@@ -3549,7 +3200,7 @@ FROM d GROUP BY decile
         return similarity.range_search_staged(spark)
 
     cases["ann_range_search"] = Case(
-        _range_staged, similarity.range_search_sql()[1]
+        _range_staged, similarity.range_search_sql()
     )
     # PQ paths run over the SHARED staged distance relation (code
     # assignment and the ADC LUT both consume it; CTE inlining would
@@ -3563,8 +3214,8 @@ FROM d GROUP BY decile
         views(spark, sf_dir)
         return similarity.pq_adc_topk_staged(spark)
 
-    cases["emb_pq_codes"] = Case(_pq_codes_staged, similarity.pq_codes_sql()[1])
-    cases["ann_pq_adc_topk"] = Case(_pq_adc_staged, similarity.pq_adc_topk_sql()[1])
+    cases["emb_pq_codes"] = Case(_pq_codes_staged, similarity.pq_codes_sql())
+    cases["ann_pq_adc_topk"] = Case(_pq_adc_staged, similarity.pq_adc_topk_sql())
 
     # IVF-PQ: the composed coarse-prune + residual-code index (see
     # similarity.ivfpq_adc_topk_sql) — both dialects from the shared
@@ -3573,7 +3224,7 @@ FROM d GROUP BY decile
         views(spark, sf_dir)
         return similarity.ivfpq_topk_staged(spark)
 
-    cases["ann_ivfpq_topk"] = Case(_ivfpq_topk, similarity.ivfpq_adc_topk_sql()[1])
+    cases["ann_ivfpq_topk"] = Case(_ivfpq_topk, similarity.ivfpq_adc_topk_sql())
 
     # ---- ANN self-evaluation: recall@k of the IVF path against the
     # exact top-k ground truth ("measure, don't guess" — the number
@@ -3603,8 +3254,8 @@ FROM d GROUP BY decile
     _ann_recall_oracle = f"""
 WITH j AS (
   SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql()[1].strip()}) e
-  LEFT JOIN ({similarity.ivf_ann_sql()[1].strip()}) a
+  FROM ({similarity.cosine_topk_sql().strip()}) e
+  LEFT JOIN ({similarity.ivf_ann_sql().strip()}) a
     ON a.q_id = e.q_id AND a.n_id = e.n_id
 )
 SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
@@ -3640,8 +3291,8 @@ FROM j GROUP BY q_id
     _int8_recall_oracle = f"""
 WITH j AS (
   SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql()[1].strip()}) e
-  LEFT JOIN ({similarity.int8_topk_sql()[1].strip()}) a
+  FROM ({similarity.cosine_topk_sql().strip()}) e
+  LEFT JOIN ({similarity.int8_topk_sql().strip()}) a
     ON a.q_id = e.q_id AND a.n_id = e.n_id
 )
 SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
@@ -3677,8 +3328,8 @@ FROM j GROUP BY q_id
     _ivfpq_recall_oracle = f"""
 WITH j AS (
   SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql()[1].strip()}) e
-  LEFT JOIN ({similarity.ivfpq_adc_topk_sql()[1].strip()}) a
+  FROM ({similarity.cosine_topk_sql().strip()}) e
+  LEFT JOIN ({similarity.ivfpq_adc_topk_sql().strip()}) a
     ON a.q_id = e.q_id AND a.n_id = e.n_id
 )
 SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
@@ -3696,7 +3347,7 @@ FROM j GROUP BY q_id
         return similarity.ivf_nprobe_sweep_staged(spark)
 
     cases["ann_ivf_nprobe_sweep"] = Case(
-        _nprobe_sweep, similarity.ivf_nprobe_sweep_sql()[1]
+        _nprobe_sweep, similarity.ivf_nprobe_sweep_sql()
     )
 
     # ---- Matryoshka prefix-dimension tradeoff: top-k over only the
@@ -3712,7 +3363,7 @@ FROM j GROUP BY q_id
         return similarity.matryoshka_recall_staged(spark)
 
     cases["ann_matryoshka_recall"] = Case(
-        _q_matryoshka, similarity.matryoshka_recall_sql()[1]
+        _q_matryoshka, similarity.matryoshka_recall_sql()
     )
 
     # same measurement for the PQ/ADC path — coarse 8-centroid
@@ -3740,8 +3391,8 @@ FROM j GROUP BY q_id
     _pq_recall_oracle = f"""
 WITH j AS (
   SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql()[1].strip()}) e
-  LEFT JOIN ({similarity.pq_adc_topk_sql()[1].strip()}) a
+  FROM ({similarity.cosine_topk_sql().strip()}) e
+  LEFT JOIN ({similarity.pq_adc_topk_sql().strip()}) a
     ON a.q_id = e.q_id AND a.n_id = e.n_id
 )
 SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
@@ -3915,9 +3566,7 @@ FROM inj
 
     # --- Gopher-style repetition quality (text family). Spark side:
     # per-doc metrics are a pure function of one document → single
-    # zero-shuffle Arrow pass (repetition_quality_staged); the
-    # declarative explode/aggregate form stays available in textops and
-    # the oracle is unchanged.
+    # zero-shuffle Arrow pass (repetition_quality_staged).
     def _repetition_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
         return textops.repetition_quality_staged(spark)
@@ -4070,7 +3719,7 @@ GROUP BY lang, length(bin(n_chars))
         views(spark, sf_dir)
         return textops.bigram_lm_score_staged(spark)
 
-    cases["text_bigram_lm_score"] = Case(_bigram_staged, textops.bigram_lm_score_sql()[1])
+    cases["text_bigram_lm_score"] = Case(_bigram_staged, textops.bigram_lm_score_sql())
 
     # ---- cross-doc exact-substring dedup at 8-token chunk granularity
     # (ExactSubstr proxy; see dedup.chunk_dedup_sql). Staged Spark path
@@ -4079,7 +3728,7 @@ GROUP BY lang, length(bin(n_chars))
         views(spark, sf_dir)
         return dedup.chunk_dedup_staged(spark, 8)
 
-    cases["dedup_chunk_exact"] = Case(_chunk_staged, dedup.chunk_dedup_sql(8)[1])
+    cases["dedup_chunk_exact"] = Case(_chunk_staged, dedup.chunk_dedup_sql(8))
 
     # ---- hopping (sliding) time windows: Spark's native F.window with
     # a slide — each event lands in windowDuration/slide = 2 windows.
@@ -4286,7 +3935,7 @@ FROM documents WHERE text IS NOT NULL
         return corpus.cross_source_overlap_staged(spark)
 
     cases["corpus_cross_source_overlap"] = Case(
-        _cross_overlap, corpus.cross_source_overlap_sql()[1]
+        _cross_overlap, corpus.cross_source_overlap_sql()
     )
 
     # --- Zipf rank-frequency health profile per source
@@ -4302,7 +3951,7 @@ FROM documents WHERE text IS NOT NULL
         return corpus.dedup_survivorship_staged(spark)
 
     cases["corpus_dedup_survivorship"] = Case(
-        _survivorship, corpus.dedup_survivorship_sql()[1]
+        _survivorship, corpus.dedup_survivorship_sql()
     )
 
     # --- marginal shingle novelty per document (doc_id order); Spark
@@ -4311,7 +3960,7 @@ FROM documents WHERE text IS NOT NULL
         views(spark, sf_dir)
         return textops.ngram_novelty_staged(spark)
 
-    cases["text_ngram_novelty"] = Case(_novelty, textops.ngram_novelty_sql()[1])
+    cases["text_ngram_novelty"] = Case(_novelty, textops.ngram_novelty_sql())
 
     # --- inter-order gap distribution: LAG over (custkey, date) — one
     # shuffle on o_custkey, then a day-gap histogram whose output is
@@ -4349,7 +3998,7 @@ GROUP BY {daydiff}
         return similarity.hamming_knn_graph_staged(spark, src_modulus=8)
 
     cases["emb_hamming_knn_graph"] = Case(
-        _hamming_knn, similarity.hamming_knn_graph_sql(src_modulus=8)[1]
+        _hamming_knn, similarity.hamming_knn_graph_sql(src_modulus=8)
     )
 
     # --- hot-cell GUARDED twin of the graph above (r8, VERDICT r7 #1):
@@ -4367,7 +4016,7 @@ GROUP BY {daydiff}
         return similarity.hamming_knn_guarded_staged(spark, cell_cap=40)
 
     cases["emb_knn_guarded_graph"] = Case(
-        _knn_guarded, similarity.hamming_knn_guarded_sql(cell_cap=40)[1]
+        _knn_guarded, similarity.hamming_knn_guarded_sql(cell_cap=40)
     )
 
     # --- the guard's gauge report: per-label sub-cell count, largest
@@ -4388,7 +4037,7 @@ GROUP BY {daydiff}
 
     cases["emb_knn_cell_guard_report"] = Case(
         _knn_guard_report,
-        similarity.knn_cell_guard_report_sql(cell_cap=40, src_modulus=8)[1],
+        similarity.knn_cell_guard_report_sql(cell_cap=40, src_modulus=8),
     )
 
     # --- cap tuning curve for the guard (the dedup_lsh_band_tuning
@@ -4403,7 +4052,7 @@ GROUP BY {daydiff}
         return similarity.knn_guard_cap_sweep_staged(spark, src_modulus=8)
 
     cases["emb_guard_cap_sweep"] = Case(
-        _guard_cap_sweep, similarity.knn_guard_cap_sweep_sql(src_modulus=8)[1]
+        _guard_cap_sweep, similarity.knn_guard_cap_sweep_sql(src_modulus=8)
     )
 
     # --- per-source dedup FUNNEL (exact -> simhash near-dup over the
@@ -4415,7 +4064,7 @@ GROUP BY {daydiff}
         return dedup.dedup_cascade_staged(spark)
 
     cases["corpus_dedup_cascade"] = Case(
-        _dedup_cascade, dedup.dedup_cascade_sql()[1]
+        _dedup_cascade, dedup.dedup_cascade_sql()
     )
 
     # --- trailing-baseline burst detection over hourly counts
@@ -4439,7 +4088,7 @@ GROUP BY {daydiff}
         views(spark, sf_dir)
         return textops.pmi_collocations_staged(spark)
 
-    cases["text_pmi_collocations"] = Case(_pmi, textops.pmi_collocations_sql()[1])
+    cases["text_pmi_collocations"] = Case(_pmi, textops.pmi_collocations_sql())
 
     # --- single-changepoint scan per event type (binary-segmentation
     # step over running decimal sums — O(n), one shuffle)
@@ -4457,7 +4106,7 @@ GROUP BY {daydiff}
         views(spark, sf_dir)
         return profile.key_skew_staged(spark)
 
-    cases["profile_key_skew"] = Case(_key_skew, profile.key_skew_report_sql()[1])
+    cases["profile_key_skew"] = Case(_key_skew, profile.key_skew_report_sql())
 
     # --- minhash-LSH band-bucket cost audit (shares the staged
     # hashset relation with the whole dedup family)
@@ -4465,7 +4114,7 @@ GROUP BY {daydiff}
         views(spark, sf_dir)
         return dedup.lsh_cost_audit_staged(spark)
 
-    cases["dedup_lsh_cost_audit"] = Case(_lsh_audit, dedup.lsh_cost_audit_sql()[1])
+    cases["dedup_lsh_cost_audit"] = Case(_lsh_audit, dedup.lsh_cost_audit_sql())
 
     # ---- banding-parameter sweep over the SAME 16-minhash signature:
     # candidate mass + measured recall/precision vs the exact PPJoin
@@ -4484,7 +4133,7 @@ GROUP BY {daydiff}
         return dedup.lsh_band_tuning_staged(spark, src_modulus=8)
 
     cases["dedup_lsh_band_tuning"] = Case(
-        _band_tuning, dedup.lsh_band_tuning_sql(src_modulus=8)[1]
+        _band_tuning, dedup.lsh_band_tuning_sql(src_modulus=8)
     )
 
     # --- duplicate-mass-vs-threshold curve: PPJoin once at a LOW tau
@@ -4522,7 +4171,7 @@ FROM g
 
     cases["dedup_threshold_curve"] = Case(
         _threshold_curve,
-        _CURVE_TAIL.format(pairs=f"({dedup.ngram_jaccard_sql(0.6)[1]}) pp"),
+        _CURVE_TAIL.format(pairs=f"({dedup.ngram_jaccard_sql(0.6)}) pp"),
     )
 
     # --- overlapping token-window chunk plan (RAG indexing / long-doc
@@ -4532,7 +4181,7 @@ FROM g
         views(spark, sf_dir)
         return textops.chunk_overlap_df(spark)
 
-    cases["text_chunk_overlap"] = Case(_chunk_overlap, textops.chunk_overlap_sql()[1])
+    cases["text_chunk_overlap"] = Case(_chunk_overlap, textops.chunk_overlap_sql())
 
     # --- Gopher-style quality-rule report: one integer-exact scan,
     # zero joins, |sources| output rows
@@ -4546,7 +4195,7 @@ FROM g
         return textops.hashed_linear_score_staged(spark)
 
     cases["text_hashed_linear_score"] = Case(
-        _hashed_linear, textops.hashed_linear_score_sql()[1]
+        _hashed_linear, textops.hashed_linear_score_sql()
     )
 
     # --- pre-flight join-cardinality estimate (dim-fact + self-join
@@ -4560,7 +4209,7 @@ FROM g
         return profile.range_boundaries_staged(spark)
 
     cases["profile_range_boundaries"] = Case(
-        _range_boundaries, profile.range_boundaries_sql()[1]
+        _range_boundaries, profile.range_boundaries_sql()
     )
 
     # --- length-weighted deterministic Bernoulli sample (token-uniform
@@ -4663,7 +4312,7 @@ WHERE o_orderkey % 103 = 0
         views(spark, sf_dir)
         return textops.winnowing_staged(spark)
 
-    cases["text_winnowing_fingerprints"] = Case(_winnow, textops.winnowing_sql()[1])
+    cases["text_winnowing_fingerprints"] = Case(_winnow, textops.winnowing_sql())
 
     # --- seasonal-naive forecast backtest: forecast(h) = count(h-24),
     # per-type MAE/bias in ppm over evaluable hours — the baseline
@@ -4695,7 +4344,7 @@ GROUP BY a.event_type
         views(spark, sf_dir)
         return textops.rake_keywords_staged(spark)
 
-    cases["text_rake_keywords"] = Case(_rake, textops.rake_keywords_sql()[1])
+    cases["text_rake_keywords"] = Case(_rake, textops.rake_keywords_sql())
 
     # --- MOSS copy-pair report over shared winnowing fingerprints
     # (posting-capped fingerprint-keyed join, never all-pairs)
@@ -4704,7 +4353,7 @@ GROUP BY a.event_type
         return textops.winnowing_pairs_staged(spark)
 
     cases["dedup_winnowing_pairs"] = Case(
-        _winnow_pairs, textops.winnowing_pairs_sql()[1]
+        _winnow_pairs, textops.winnowing_pairs_sql()
     )
 
     # --- byte-level image dimension sniffing (PNG IHDR fixed offsets,
@@ -4780,7 +4429,7 @@ GROUP BY a.event_type
         return dedup.minhash_estimate_staged(spark)
 
     cases["dedup_minhash_estimate_audit"] = Case(
-        _minhash_est, dedup.minhash_estimate_sql()[1]
+        _minhash_est, dedup.minhash_estimate_sql()
     )
 
     # --- trailing-window distinct via HLL register merging (map-side
@@ -4816,7 +4465,7 @@ GROUP BY a.event_type
         views(spark, sf_dir)
         return textops.bpe_merges_staged(spark)
 
-    cases["text_bpe_merges"] = Case(_bpe, textops.bpe_merges_sql()[1])
+    cases["text_bpe_merges"] = Case(_bpe, textops.bpe_merges_sql())
 
     # --- apply the learned merges: TRUE BPE token counts per document
     # (closes round-4 VERDICT #3 — the budget planners ran on the
@@ -4851,7 +4500,7 @@ GROUP BY a.event_type
         return similarity.ivf_incremental_staged(spark, big_t=big)
 
     cases["ann_ivf_incremental"] = Case(
-        _ivf_incremental, similarity.ivf_incremental_drift_sql()[1]
+        _ivf_incremental, similarity.ivf_incremental_drift_sql()
     )
 
     # --- embedding-QA outliers: top-n furthest-from-centroid vectors
@@ -4865,7 +4514,7 @@ GROUP BY a.event_type
         return similarity.centroid_outliers_staged(spark)
 
     cases["emb_centroid_outliers"] = Case(
-        _q_centroid_outliers, similarity.centroid_outliers_sql()[1]
+        _q_centroid_outliers, similarity.centroid_outliers_sql()
     )
 
     # --- train/test leakage through near-duplicates: clusters from the
@@ -5104,7 +4753,7 @@ GROUP BY source
         return similarity.hamming_banded_staged(spark, 3)
 
     cases["ann_hamming_banded"] = Case(
-        _ham_banded, similarity.hamming_banded_sql(3)[1]
+        _ham_banded, similarity.hamming_banded_sql(3)
     )
 
     # --- measured recall of the banded path vs the exact global top-k
@@ -5116,7 +4765,7 @@ GROUP BY source
         return similarity.hamming_banded_recall_staged(spark, 3, 64)
 
     cases["ann_hamming_banded_recall"] = Case(
-        _ham_banded_recall, similarity.hamming_banded_recall_sql(3, 64)[1]
+        _ham_banded_recall, similarity.hamming_banded_recall_sql(3, 64)
     )
 
     # --- TRUE ExactSubstr spans (Lee et al.): maximal duplicated
@@ -5263,7 +4912,7 @@ GROUP BY source
             ).alias("removed_ppm"),
         )
 
-    _, _boiler_duck = P.bi_sql(
+    _boiler_duck = P.duck_sql(
         _BOILER_TEMPLATE,
         idiv=("DIV", "//"),
         unnest_split=(
@@ -5553,7 +5202,7 @@ FROM events WHERE ts IS NOT NULL AND event_id IS NOT NULL
         )
 
     cases["events_peak_concurrency"] = Case(
-        _peak_concurrency, P.bi_sql(_SWEEP_ORACLE, ts_us=TS_US)[1]
+        _peak_concurrency, P.duck_sql(_SWEEP_ORACLE, ts_us=TS_US)
     )
 
     # --- Z-order layout data-skipping scorer (the Delta/Iceberg
@@ -5750,7 +5399,7 @@ GROUP BY layout, dim
             "unnest(generate_series(0, 7))",
         ),
     )
-    _, _z_duck = P.bi_sql(_Z_PRE + _Z_FILES_NTILE + _Z_POST, **_Z_FRAGS)
+    _z_duck = P.duck_sql(_Z_PRE + _Z_FILES_NTILE + _Z_POST, **_Z_FRAGS)
     _z_stage_sql = P.bi_sql(
         _Z_PRE + "fin AS (SELECT 1 AS x)\nSELECT o_orderkey, qc, qd, zval FROM z",
         **_Z_FRAGS,
@@ -6270,4 +5919,4 @@ FROM d GROUP BY band
         _incr_neardup, dedup.incremental_neardup_oracle_sql()
     )
 
-    return _driver_order(cases)
+    return cases

@@ -129,19 +129,17 @@ def cms_grid(events: DataFrame, depth: int = 4, width: int = 1024) -> DataFrame:
     fixed-size (d×w cells) MERGEABLE summary; merge operator is
     cell-wise SUM."""
     depths = " UNION ALL ".join(f"SELECT {i} AS d" for i in range(depth))
-    spark = events.sparkSession
-    # id-suffixed view name: two rollup streams (or threads) in one
-    # session must not race on a shared fixed name between view
-    # creation and SQL analysis (same rule as similarity's staged views)
-    view = f"__cms_batch_{id(events)}"
-    events.createOrReplaceTempView(view)
-    return spark.sql(
+    # the batch goes in as a formatter argument: spark.sql registers it
+    # under a generated name for the analysis and drops it again, so
+    # concurrent streams never share a view and none outlives the call
+    return events.sparkSession.sql(
         f"""
 SELECT d, {_cms_bucket(width)} AS bucket, COUNT(*) AS cnt
-FROM {view} CROSS JOIN ({depths}) depths
+FROM {{ev}} CROSS JOIN ({depths}) depths
 WHERE user_id IS NOT NULL
 GROUP BY d, {_cms_bucket(width)}
-"""
+""",
+        ev=events,
     )
 
 

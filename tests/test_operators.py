@@ -1045,7 +1045,7 @@ def test_neardup_kernel_drops_zero_norm_like_oracle(spark):
         "emb_zero_norm_probe",
         pd.DataFrame({"vec_id": [0, 1, 2], "embedding": [r[1] for r in rows]}),
     )
-    duck_sql = sim.embedding_neardup_sql(0.4, view="emb_zero_norm_probe")[1]
+    duck_sql = sim.embedding_neardup_sql(0.4, view="emb_zero_norm_probe")
     duck_pairs = {(a, b) for a, b, _cos in con.execute(duck_sql).fetchall()}
 
     assert kernel_pairs == duck_pairs
@@ -1164,31 +1164,6 @@ def test_scale_twin_generator_scales_every_table(tmp_path):
     assert len(keys) == len(set(keys))
 
 
-def test_driver_order_invariants():
-    """The registry reordering is pure and total: same key set, the
-    priority tier leads in its declared order, and BEHIND it every
-    pending (never-driver-verified) entry precedes every verified one.
-    The priority tier itself is exempt from the pending-first rule —
-    since round 9 it holds RE-verify rows (plan changed after their
-    last green row), which are by definition already verified."""
-    from etl_service_spark.plans.queries import (
-        _DRIVER_VERIFIED,
-        _PRIORITY_PENDING,
-        registry,
-    )
-
-    names = list(registry())
-    assert len(names) == len(set(names))
-    prio = [n for n in _PRIORITY_PENDING if n in names]
-    assert names[: len(prio)] == prio
-    tail = names[len(prio):]
-    first_verified = min(
-        (tail.index(n) for n in tail if n in _DRIVER_VERIFIED), default=len(tail)
-    )
-    for n in tail[first_verified:]:
-        assert n in _DRIVER_VERIFIED, f"pending {n} sorted after a verified entry"
-
-
 def test_stage_name_is_content_addressed():
     """Same staging inputs -> same name (cross-process path sharing);
     different inputs -> different name (no counter collisions)."""
@@ -1275,7 +1250,7 @@ def test_ngram_jaccard_lower_tau_keeps_sub08_pairs(spark, sf_dir):
     hi_pairs = set(zip(hi.doc_a, hi.doc_b))
     assert hi_pairs <= lo_pairs
     con = duck_connect(sf_dir)
-    du = con.execute(dedup.ngram_jaccard_sql(tau=0.7)[1]).fetchdf()
+    du = con.execute(dedup.ngram_jaccard_sql(tau=0.7)).fetchdf()
     con.close()
     assert not compare(lo, du), "tau=0.7 engines disagree"
 
@@ -1306,7 +1281,7 @@ def test_kmeans_bigint_gate_is_provably_safe_and_applied(spark, sf_dir):
     views(spark, sf_dir)
     sp = spark.sql(lo).toPandas()
     con = duck_connect(sf_dir)
-    du = con.execute(similarity.kmeans_sql()[1]).fetchdf()
+    du = con.execute(similarity.kmeans_sql()).fetchdf()
     con.close()
     assert not compare(sp, du), "BIGINT fast path diverges from HUGEINT oracle"
 
@@ -1652,7 +1627,7 @@ def test_band_tuning_sampled_truth_matches_full_restriction(spark, sf_dir):
 
     con = duck_connect(sf_dir)
     du = con.execute(
-        dedup.lsh_band_tuning_sql(src_modulus=m)[1]
+        dedup.lsh_band_tuning_sql(src_modulus=m)
     ).fetchdf()
     con.close()
     assert not compare(rep_smp.reset_index(), du), "sampled report vs oracle"
@@ -1819,3 +1794,32 @@ def test_ivf_index_assign_leaves_no_temp_views(spark, tmp_path, sf_dir):
     counts = [ivf_index_assign(spark, index_dir, batch).count() for _ in range(3)]
     assert temp_views() == before
     assert counts == [batch.count()] * 3
+
+
+@pytest.mark.parametrize("site", ["simhash_pairs", "cosine_topk", "int8_topk", "cms_grid"])
+def test_staged_sql_leaves_no_temp_views(spark, sf_dir, site):
+    """Each of these Spark paths hands a DataFrame to one SQL
+    statement. It goes in as a ``spark.sql`` formatter argument, which
+    drops its generated view after analysis; three calls leave no
+    temp view behind besides the staging memo's own."""
+    from etl_service_spark.functions import portable as P
+    from etl_service_spark.operators import dedup, similarity
+    from etl_service_spark.plans.queries import views
+    from etl_service_spark.streaming.sketch_stream import cms_grid
+
+    views(spark, sf_dir)
+    run = {
+        "simhash_pairs": lambda: dedup.simhash_pairs_staged(spark),
+        "cosine_topk": lambda: similarity.cosine_topk_staged(spark),
+        "int8_topk": lambda: similarity.int8_topk_staged(spark),
+        "cms_grid": lambda: cms_grid(spark.table("events")),
+    }[site]
+
+    def unowned_views():
+        owned = {e[1] for e in P.memo_table(spark).values() if isinstance(e[1], str)}
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary} - owned
+
+    before = unowned_views()
+    counts = [run().count() for _ in range(3)]
+    assert unowned_views() == before
+    assert counts[0] > 0 and len(set(counts)) == 1

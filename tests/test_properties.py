@@ -705,7 +705,7 @@ def test_winnowing_sql_matches_replica(docs):
     )
     got = {
         r[0]: (r[2], r[3], r[4])  # n_fingerprints, fp_checksum, fp_min
-        for r in con.execute(winnowing_sql()[1]).fetchall()
+        for r in con.execute(winnowing_sql()).fetchall()
     }
     for doc_id, toks in enumerate(docs):
         fps = _winnow_fps(toks)

@@ -37,8 +37,6 @@ def lint(sf_dir: str = "/root/testdata/sf0.001") -> list[str]:
     con = duck_connect(sf_dir)
     problems: list[str] = []
     for name, case in registry().items():
-        if case.oracle is None:
-            continue
         try:
             desc = con.execute(f"DESCRIBE {case.oracle}").fetchall()
         except Exception as e:  # noqa: BLE001 — surface as a lint failure
