@@ -57,232 +57,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from etl_service_spark.plans.queries import registry, views  # noqa: E402
 from etl_service_spark.session import get_spark  # noqa: E402
 
-HEADLINERS = [
-    "tpch_q1_pricing",
-    "tpch_q3_shipping",
-    "tpch_q5_local_supplier",
-    "tpch_q13_custdist",
-    "chain_join_revenue",
-    "top_parts_by_revenue",
-    "events_window_agg",
-    "events_sessionize",
-    "events_session_window_native",
-    "events_asof_join",
-    "events_funnel",
-    "events_range_join",
-    "events_multires_rollup",
-    "ana_argmax_last_run",
-    "etl_copy_timesliced",
-    "etl_copy_align_audit",
-    "dim_scd2_merge",
-    "dim_scd2_pit_lookup",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_cluster_components",
-    "dedup_cluster_twophase",
-    "graph_pagerank",
-    "graph_bfs_layers",
-    "sketch_kmv_distinct",
-    "sketch_cms_heavy_hitters",
-    "sketch_histogram_quantiles",
-    "sketch_bloom_membership",
-    "text_quality_score",
-    "text_fingerprint",
-    "text_tfidf_top_terms",
-    "text_top_terms_per_language",
-    "events_moving_average",
-    "events_interarrival_stats",
-    "orders_cube_revenue",
-    "dedup_fuzzy_names",
-    "profile_orders_columns",
-    "corpus_dup_rate_by_source",
-    "corpus_stratified_sample",
-    "corpus_training_pipeline",
-    "corpus_contamination",
-    "ann_cosine_topk",
-    "emb_cosine_neardup",
-    "ann_lsh_bucketed",
-    "ann_ivf_topk",
-    "emb_kmeans",
-    "emb_quantize_int8",
-    "media_binary_stats",
-    "media_frame_sample",
-    "media_chunk_windows",
-    "tpch_q6_forecast_revenue",
-    "tpch_q7_volume_shipping",
-    "tpch_q10_returned_items",
-    "tpch_q15_top_supplier",
-    "tpch_q19_or_pushdown",
-    "tpch_q21_lone_late_supplier",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_stock",
-    "tpch_q12_priority_classes",
-    "tpch_q16_supplier_variety",
-    "tpch_q20_volume_suppliers",
-    "orders_running_spend",
-    "events_value_time_corr",
-    "nation_top_customer_argmax",
-    "events_value_deciles",
-    "q17_small_qty_revenue",
-    "tpch_q18_bulk_customers",
-    "events_cohort_retention",
-    "anti_join_never_shipped",
-    "events_salted_agg",
-    "events_salted_join",
-    "events_attribution_join",
-    "text_repetition_quality",
-    "lineitem_unpivot_stats",
-    "privacy_k_anonymity",
-    "privacy_pseudonymize",
-    "dq_expectation_report",
-    "corpus_pack_sequences",
-    "sketch_kmv_audience_overlap",
-    "sketch_hll_distinct",
-    "events_gapfill_hourly",
-    "text_bigram_lm_score",
-    "dedup_chunk_exact",
-    "events_hopping_window",
-    "events_user_rate_cap",
-    "privacy_l_diversity",
-    "privacy_scrub_pii",
-    "corpus_shard_plan",
-    "dedup_best_keeper",
-    "dedup_semantic",
-    "text_sentence_split",
-    "ann_recall_report",
-    "ann_matryoshka_recall",
-    "ann_ivf_nprobe_sweep",
-    # ann_ivf_incremental is registry-gated but not benched: it is a
-    # stateful multi-commit maintenance simulation (build/merge/rebuild
-    # snapshots), not a single query wall - its per-tick cost is what
-    # test_ivf_assign_stream_* pins.
-    "dedup_lsh_recall_report",
-    "dedup_strategy_sweep",
-    "events_variant_extract",
-    "events_gaps_islands",
-    "orders_rfm_segments",
-    "text_langid_confusion",
-    "corpus_resample_plan",
-    "corpus_length_histogram",
-    "events_anomaly_mad",
-    "emb_pq_codes",
-    "ann_pq_adc_topk",
-    "ann_pq_recall_report",
-    "graph_triangle_count",
-    "dedup_containment",
-    "corpus_temperature_mixture",
-    "orders_pareto_share",
-    "join_bloom_prefilter_revenue",
-    "sketch_hll_weekly_rollup",
-    "corpus_token_budget",
-    "events_markov_transitions",
-    "events_top_paths",
-    "corpus_cross_source_overlap",
-    "text_zipf_profile",
-    "events_distribution_drift",
-    "corpus_dedup_survivorship",
-    "text_ngram_novelty",
-    "orders_gap_distribution",
-    "emb_hamming_knn_graph",
-    "events_burst_windows",
-    "graph_kcore",
-    "privacy_k_map",
-    "events_rollup_consistency",
-    "ann_ivfpq_topk",
-    "ann_ivfpq_recall",
-    "events_peak_concurrency",
-    "text_source_unigram_tvd",
-    "text_source_overlap_jaccard",
-    "basket_association_rules",
-    "text_boilerplate_prefixes",
-    "text_pmi_collocations",
-    "events_changepoint_scan",
-    "events_late_data_audit",
-    "events_seasonal_residuals",
-    "profile_key_skew",
-    "dedup_lsh_cost_audit",
-    "dedup_lsh_band_tuning",
-    "text_chunk_overlap",
-    "text_gopher_rules",
-    "text_hashed_linear_score",
-    "profile_join_size_estimate",
-    "profile_range_boundaries",
-    "corpus_weighted_sample",
-    "corpus_split_leakage",
-    "corpus_domain_quota",
-    "src_schema_evolution",
-    "snap_merge_upsert",
-    "emb_centroid_outliers",
-    "text_bpe_merges",
-    "text_bpe_encode",
-    "corpus_token_budget_bpe",
-    "events_moment_stats",
-    "profile_group_cardinality",
-    "corpus_domain_quota_salted",
-    "corpus_filter_waterfall",
-    "events_ab_lift",
-    "sketch_hll_sliding_distinct",
-    "dedup_minhash_estimate_audit",
-    "recon_users_customers_full_outer",
-    "media_image_dims_sniff",
-    "media_audio_meta_sniff",
-    "media_video_meta_sniff",
-    "text_winnowing_fingerprints",
-    "dedup_winnowing_pairs",
-    "text_rake_keywords",
-    "snap_incremental_agg",
-    "events_forecast_backtest",
-    "corpus_dsir_weights",
-    "corpus_dsir_quota",
-    "cfg_param_reload",
-    "cfg_mail_recipients",
-    "media_resize",
-    "dedup_exact_substr_spans",
-    "dedup_exact_substr_removal",
-    "text_bpe_fertility",
-    "text_ngram_coverage",
-    "emb_whitening_stats",
-    "events_watermark_lateness",
-    "dq_volume_anomaly",
-    "ann_hamming_banded",
-    "ann_hamming_banded_recall",
-    "cfg_stale_reset",
-    "media_wav_rms_windows",
-    "dedup_threshold_curve",
-    "privacy_dp_epsilon_ledger",
-    "corpus_epoch_mix_schedule",
-    "dedup_url_canonical",
-    "emb_knn_guarded_graph",
-    "emb_knn_cell_guard_report",
-    "emb_guard_cap_sweep",
-    "tpch_q17_small_quantity",
-    "corpus_dedup_cascade",
-    "dedup_sentence_boilerplate",
-    "dq_benford_first_digit",
-    "profile_fd_violations",
-    "events_ohlc_windows",
-    "layout_zorder_skipping",
-    "snap_cdc_compaction",
-    "privacy_t_closeness",
-    "dq_referential_integrity",
-    "text_source_diversity_gini",
-    "ann_int8_recall",
-    "dim_scd2_invariants",
-    "dq_order_totals_recon",
-]
-
 # Registry entries NOT in the standing headline set, each with its
 # stated reason (the repo's no-silent-caps rule applied to the bench
-# itself — VERDICT r7 #5). The partition is machine-checked:
-# tests/test_correctness.py asserts HEADLINERS ∪ EXCLUDED == registry()
-# with no overlap, so a new registry entry must land in one of the two
-# lists explicitly. `python bench.py --full` benches the ENTIRE
-# registry (headliners + excluded) and writes BENCH_FULL.json — the
-# one-off record proving nothing excluded hides a pathological cost.
+# itself — VERDICT r7 #5). Every other entry is a headliner, so a new
+# registry entry is benched unless it is excluded here with a reason;
+# tests/test_correctness.py checks that every name below is a registry
+# entry with a non-empty reason. `python bench.py --full` benches the
+# ENTIRE registry (headliners + excluded) and writes BENCH_FULL.json —
+# the one-off record proving nothing excluded hides a pathological cost.
 _R = {
     "fixture": "times a tempdir write+read fixture build, not a data plan",
     "config": "config/control-plane scan over tables that do not scale "
@@ -357,6 +139,9 @@ EXCLUDED = {
     "tpch_q22_idle_rich": _R["sibling"],          # tpch_q13_custdist family
     "tpch_q4_late_priority": _R["sibling"],       # tpch_q12_priority_classes
 }
+
+# The standing headline set, in registry declaration order.
+HEADLINERS = [n for n in registry() if n not in EXCLUDED]
 
 
 def _env_stanza() -> dict:
@@ -481,11 +266,6 @@ def main() -> None:
             prev = {}
     spark = get_spark("etl_service_spark_bench")
     cases = registry()
-    if full:
-        # whole registry, and fail loudly if the partition drifted
-        missing = set(cases) - set(HEADLINERS) - set(EXCLUDED)
-        if missing:
-            raise SystemExit(f"registry entries in neither list: {sorted(missing)}")
     names = list(cases) if full else HEADLINERS
     views(spark, sf_dir)  # pay view registration once, like a real session
 

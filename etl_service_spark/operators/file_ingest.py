@@ -33,18 +33,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-AUDIT_COLUMNS = (
-    "Dateiname",
-    "Exportdatum",
-    "Mandanten_ID",
-    "LoeschDatum",
-    "Datenherkunft",
-    "DataVorsystemPK",
-    "Datenproduzent",
-    "Abfragezeitpunkt",
-)
-
-
 @dataclass(frozen=True)
 class IngestContext:
     mandant_id: int
@@ -170,12 +158,6 @@ def reset_file(staged_path: str, directory: str) -> None:
     ins = os.path.join(directory, "Insert")
     os.makedirs(ins, exist_ok=True)
     shutil.move(staged_path, os.path.join(ins, os.path.basename(staged_path)))
-
-
-def remove_transferred(staged_paths: list[str]) -> None:
-    for p in staged_paths:
-        if os.path.exists(p):
-            os.remove(p)
 
 
 def ingest_directory(

@@ -337,9 +337,7 @@ def _build_pagerank_edges(pairs: DataFrame) -> tuple:
     return contrib_src, nodes, nodes.count()
 
 
-def pagerank(
-    spark: SparkSession, sf_dir: str, salted: bool = False, n_salts: int = 16
-) -> DataFrame:
+def pagerank(spark: SparkSession, salted: bool = False, n_salts: int = 16) -> DataFrame:
     """Five damped PageRank iterations on the customer-supplier graph.
 
     ``salted=True`` routes each round's destination re-aggregation

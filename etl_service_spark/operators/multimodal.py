@@ -26,16 +26,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("n_bytes", LongType()),
-        StructField("source", StringType()),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),

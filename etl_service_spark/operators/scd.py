@@ -91,7 +91,7 @@ def scd2_merge(
 V0, V1 = "2025-01-01", "2025-06-01"
 
 
-def scd2_customers(spark, sf_dir: str) -> DataFrame:
+def scd2_customers(spark) -> DataFrame:
     """Deterministic instance: v0 dimension = customers at V0 (balance
     in exact cents); snapshot = every 7th key with balance +100.00 and
     5 brand-new keys. The merge must close/reopen exactly the %7 keys
@@ -188,7 +188,7 @@ FROM (
 """
 
 
-def scd2_invariants(spark, sf_dir: str) -> DataFrame:
+def scd2_invariants(spark) -> DataFrame:
     """SCD2 history-consistency audit — the data-quality contract a
     versioned dimension must keep for point-in-time lookups to be
     well-defined: exactly one open version per key, no overlapping
@@ -205,7 +205,7 @@ def scd2_invariants(spark, sf_dir: str) -> DataFrame:
     # per-call checkpoint (not a cross-call memo): the merge output
     # feeds three consumers here (merged audit, the corrupt filter,
     # the control union) and would re-run once per reference
-    merged = scd2_customers(spark, sf_dir).localCheckpoint()
+    merged = scd2_customers(spark).localCheckpoint()
     corrupt = (
         merged.filter((F.col("custkey") % 13 == 0) & F.col("valid_to").isNull())
         .withColumn("valid_from", F.lit(CORRUPT_TS))
@@ -240,7 +240,7 @@ UNION ALL
 """
 
 
-def scd2_pit_lookup(spark, sf_dir: str) -> DataFrame:
+def scd2_pit_lookup(spark) -> DataFrame:
     """Point-in-time dimension lookup — the query SCD2 history exists
     FOR: join each fact row to the dimension version in effect at its
     event time (valid_from <= t < valid_to, open version = NULL
@@ -257,7 +257,7 @@ def scd2_pit_lookup(spark, sf_dir: str) -> DataFrame:
     destructive truncate-and-fill loads (CommandExecuter.cs) have no
     history to probe; this is the standard warehouse companion of D1's
     dimension copy."""
-    dim = scd2_customers(spark, sf_dir)
+    dim = scd2_customers(spark)
     probes = spark.table("orders").select(
         F.col("o_custkey").alias("custkey"),
         F.when(F.col("o_orderkey") % 2 == 0, F.lit("2025-03-01"))

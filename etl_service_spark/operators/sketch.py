@@ -760,10 +760,10 @@ t AS (
 SELECT event_id, event_type, hod, FLOOR(resid * 1e6) / 1e6 AS resid
 FROM t WHERE rk <= {k}
 """
-    from etl_service_spark.functions import portable as P
-
-    frags = dict(ts_us=("ts_us", "epoch_us(ts)"), idiv=("DIV", "//"))
-    return P.bi_sql(spark_t, **frags)[0], P.duck_sql(duck_t, **frags)
+    return (
+        spark_t.format(ts_us="ts_us", idiv="DIV"),
+        duck_t.format(ts_us="epoch_us(ts)", idiv="//"),
+    )
 
 
 def moment_stats_sql() -> tuple[str, str]:

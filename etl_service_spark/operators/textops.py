@@ -513,7 +513,7 @@ def tfidf_top_terms_staged(spark, k: int = 3, view: str = "documents") -> DataFr
     full-volume work left is the (doc, token) hash aggregate.
 
     Round 11 (now the registry path for text_tfidf_top_terms — the
-    _pair_case SQL twin re-tokenized the corpus once per tf reference:
+    bi-engine SQL twin re-tokenized the corpus once per tf reference:
     4 parquet scans in the before plan): the tf relation is
     additionally materialized ONCE per execution — it feeds dl, df and
     scored, and CTE inlining re-ran the explode-aggregate per

@@ -31,7 +31,7 @@ from pyspark.sql.types import (
 from ..functions import portable as P
 from ..functions import udtf as udtf_fns
 from ..functions.placeholders import resolve_placeholders
-from ..operators import asof, corpus, dedup, graph, multimodal, profile, scan, similarity, sketch, skew, textops
+from ..operators import asof, corpus, dedup, graph, multimodal, profile, scan, scd, similarity, sketch, skew, textops
 from ..operators.align import AuditContext, align_to_schema
 from ..operators.copy import TakeoverWindow, copy_data_timesliced
 from ..operators.file_ingest import IngestContext, apply_mapping, inject_audit_columns
@@ -79,21 +79,42 @@ def views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return frames[sf_dir]
 
 
+def _embedding_rows(spark: SparkSession) -> int:
+    """Row count of the registered ``embeddings`` view, summed from its
+    files' parquet footers on the driver: no Spark job, no data read."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(unquote(urlparse(f).path)).metadata.num_rows
+        for f in spark.table("embeddings").inputFiles()
+    )
+
+
 # events.ts fragments (see sources/catalog.py for the Spark-side conversion)
 TS_US = ("ts_us", "epoch_us(ts)")
 
 
-def _sql_case(spark_sql: str, duck_sql: str) -> Case:
+def _case(build: Callable[[SparkSession], DataFrame], oracle: str) -> Case:
+    """The one views adapter between a query and the catalog:
+    ``Case.spark(spark, sf_dir)`` registers ``sf_dir``'s tables as the
+    session's temp views, then runs ``build(spark)``, which reads them
+    by name (``spark.table`` / ``spark.sql``)."""
+
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         views(spark, sf_dir)
-        return spark.sql(spark_sql)
+        return build(spark)
 
-    return Case(run, duck_sql)
+    return Case(run, oracle)
+
+
+def _sql_case(spark_sql: str, duck_sql: str) -> Case:
+    return _case(lambda spark: spark.sql(spark_sql), duck_sql)
 
 
 def _bi_case(template: str, **frags) -> Case:
-    s, d = P.bi_sql(template, **frags)
-    return _sql_case(s, d)
+    return _sql_case(*P.bi_sql(template, **frags))
 
 
 # =====================================================================
@@ -115,11 +136,10 @@ _COPY_DST_SCHEMA = StructType(
 )
 
 
-def _q_copy_align(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_copy_align(spark: SparkSession) -> DataFrame:
     """D1+D10: COPY with schema alignment + audit columns
     (CommandExecuter.cs:322-544, :603-678)."""
-    v = views(spark, sf_dir)
-    src = v["orders"].filter(F.col("o_totalprice") > 150000.0)
+    src = spark.table("orders").filter(F.col("o_totalprice") > 150000.0)
     return align_to_schema(src, _COPY_DST_SCHEMA, _AUDIT)
 
 
@@ -133,15 +153,14 @@ FROM orders WHERE o_totalprice > 150000.0
 """
 
 
-def _q_copy_timesliced(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_copy_timesliced(spark: SparkSession) -> DataFrame:
     """D2: time-sliced incremental copy (CommandExecuter.cs:50-304) —
     one pushed-down window filter + month-slice tag, aggregated to the
     per-slice ErwarteteDaten metric."""
     from datetime import datetime
 
-    v = views(spark, sf_dir)
     w = TakeoverWindow(datetime(1995, 1, 1), datetime(1995, 12, 31))
-    sliced = copy_data_timesliced(v["orders"], "o_orderdate", w)
+    sliced = copy_data_timesliced(spark.table("orders"), "o_orderdate", w)
     return sliced.groupBy("Zeitscheibe_Monat").agg(
         F.count("*").alias("n_rows"),
         F.sum(F.col("o_totalprice").cast("decimal(12,2)")).cast("double").alias("slice_value"),
@@ -171,10 +190,9 @@ ORDER BY revenue DESC, nation
 """
 
 
-def _q_sql_target(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_sql_target(spark: SparkSession) -> DataFrame:
     """D3: push an MS-SQL-flavored command through the dialect shim and
     execute on the target catalog (CommandExecuter.cs:997-1075)."""
-    views(spark, sf_dir)
     return execute_sql_target(spark, _SQL_TARGET_COMMAND)
 
 
@@ -199,9 +217,8 @@ WHERE o_orderdate BETWEEN '##Uebernahme_von##' AND '##Uebernahme_bis##'
 """
 
 
-def _q_placeholder(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_placeholder(spark: SparkSession) -> DataFrame:
     """E1: ##token## substitution (Helper.cs:3152-3239) feeding a query."""
-    views(spark, sf_dir)
     sql = resolve_placeholders(
         _PLACEHOLDER_TEMPLATE,
         {"Uebernahme_von": "1996-01-01", "Uebernahme_bis": "1996-06-30 23:59:59", "Workflow_ID": "7"},
@@ -217,14 +234,13 @@ WHERE o_orderdate BETWEEN '1996-01-01' AND '1996-06-30 23:59:59'
 """
 
 
-def _q_dedup_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_dedup_filename(spark: SparkSession) -> DataFrame:
     """D7: dedup-by-filename as a broadcast left-anti join
     (CommandExecuter.cs:1736-1786)."""
     from ..operators.file_ingest import dedup_new_files
 
-    v = views(spark, sf_dir)
     fname = F.concat(F.col("source"), F.lit("_"), (F.col("doc_id") % 20).cast("string"))
-    docs = v["documents"].withColumn("Dateiname", fname)
+    docs = spark.table("documents").withColumn("Dateiname", fname)
     incoming = docs.filter(F.col("doc_id") % 2 == 1)
     loaded = docs.filter(F.col("doc_id") % 2 == 0).select("Dateiname")
     fresh = dedup_new_files(incoming, loaded)
@@ -245,12 +261,11 @@ GROUP BY i."Dateiname"
 """
 
 
-def _q_csv_export(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_csv_export(spark: SparkSession) -> DataFrame:
     """D8: the CSV serialization matrix (delimiter/qualifier/escape/null
     token/date format — CommandExecuter.cs:2252-2345) as data."""
-    v = views(spark, sf_dir)
     src = (
-        v["orders"]
+        spark.table("orders")
         .filter(F.col("o_orderkey") % 100 == 0)
         .select(
             "o_orderkey",
@@ -274,10 +289,9 @@ FROM orders WHERE o_orderkey % 100 = 0
 """
 
 
-def _q_excel_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_excel_ingest(spark: SparkSession) -> DataFrame:
     """D6: sheet ingest — mapping.csv column renames + the 8 audit
     columns (CommandExecuter.cs:1854-1868, :1974-1982)."""
-    v = views(spark, sf_dir)
     mapping = {"p_name": "Produktname", "p_brand": "Marke", "p_retailprice": "Preis"}
     ctx = IngestContext(
         mandant_id=1,
@@ -286,7 +300,7 @@ def _q_excel_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_time="2026-01-01 00:00:00",
         export_date="2026-01-01",
     )
-    df = apply_mapping(v["part"].select("p_partkey", "p_name", "p_brand", "p_retailprice"), mapping)
+    df = apply_mapping(spark.table("part").select("p_partkey", "p_name", "p_brand", "p_retailprice"), mapping)
     df = inject_audit_columns(df, "parts_2026.xlsx", ctx, pk_col="p_partkey")
     # DATE columns surface as strings for the cross-engine compare
     return df.withColumn("Exportdatum", F.date_format("Exportdatum", "yyyy-MM-dd")).withColumn(
@@ -840,7 +854,7 @@ GROUP BY user_id, session_seq
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
-def _q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_session_window_native(spark: SparkSession) -> DataFrame:
     """Native F.session_window twin of EVENTS_SESSIONIZE: Spark's
     built-in gap-merging session aggregation (state-store-ready — the
     same operator powers streaming sessionization without the custom
@@ -853,7 +867,6 @@ def _q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAG-based template uses diff > gap."""
     from pyspark.sql import Window
 
-    views(spark, sf_dir)
     e = spark.table("events").where("ts_us IS NOT NULL AND user_id IS NOT NULL")
     s = (
         e.groupBy(
@@ -1706,16 +1719,7 @@ GROUP BY {json_k}
 # Registry assembly
 # =====================================================================
 def _text_case(fn, oracle_fn) -> Case:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        return fn(v["documents"])
-
-    return Case(run, oracle_fn())
-
-
-def _pair_case(sql_builder: tuple[str, str]) -> Case:
-    s, d = sql_builder
-    return _sql_case(s, d)
+    return _case(lambda spark: fn(spark.table("documents")), oracle_fn())
 
 
 _UNPIVOT_MEASURES = ("l_discount", "l_extendedprice", "l_quantity", "l_tax")
@@ -1878,13 +1882,13 @@ def registry() -> dict[str, Case]:
     cases: dict[str, Case] = {}
 
     # --- ETL data plane
-    cases["etl_copy_align_audit"] = Case(_q_copy_align, ETL_COPY_ORACLE)
-    cases["etl_copy_timesliced"] = Case(_q_copy_timesliced, ETL_TIMESLICED_ORACLE)
-    cases["etl_sql_target_dialect"] = Case(_q_sql_target, SQL_TARGET_ORACLE)
-    cases["etl_placeholder_window"] = Case(_q_placeholder, PLACEHOLDER_ORACLE)
-    cases["etl_dedup_filename"] = Case(_q_dedup_filename, DEDUP_FILENAME_ORACLE)
-    cases["etl_csv_export_lines"] = Case(_q_csv_export, CSV_EXPORT_ORACLE)
-    cases["etl_excel_ingest_audit"] = Case(_q_excel_ingest, EXCEL_INGEST_ORACLE)
+    cases["etl_copy_align_audit"] = _case(_q_copy_align, ETL_COPY_ORACLE)
+    cases["etl_copy_timesliced"] = _case(_q_copy_timesliced, ETL_TIMESLICED_ORACLE)
+    cases["etl_sql_target_dialect"] = _case(_q_sql_target, SQL_TARGET_ORACLE)
+    cases["etl_placeholder_window"] = _case(_q_placeholder, PLACEHOLDER_ORACLE)
+    cases["etl_dedup_filename"] = _case(_q_dedup_filename, DEDUP_FILENAME_ORACLE)
+    cases["etl_csv_export_lines"] = _case(_q_csv_export, CSV_EXPORT_ORACLE)
+    cases["etl_excel_ingest_audit"] = _case(_q_excel_ingest, EXCEL_INGEST_ORACLE)
 
     # --- config-plane shapes
     cases["cfg_filter_due"] = _bi_case(CFG_FILTER_TEMPLATE, ts_us=TS_US)
@@ -1968,33 +1972,9 @@ def registry() -> dict[str, Case]:
     )
     cases["events_value_deciles"] = _bi_case(EVENTS_DECILES_TEMPLATE)
 
-    def _q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..operators import scd
-
-        views(spark, sf_dir)
-        return scd.scd2_customers(spark, sf_dir)
-
-    from ..operators import scd as _scd
-
-    cases["dim_scd2_merge"] = Case(_q_scd2, _scd.scd2_oracle_sql())
-
-    def _q_scd2_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..operators import scd
-
-        views(spark, sf_dir)
-        return scd.scd2_invariants(spark, sf_dir)
-
-    cases["dim_scd2_invariants"] = Case(
-        _q_scd2_invariants, _scd.scd2_invariants_oracle_sql()
-    )
-
-    def _q_scd2_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..operators import scd
-
-        views(spark, sf_dir)
-        return scd.scd2_pit_lookup(spark, sf_dir)
-
-    cases["dim_scd2_pit_lookup"] = Case(_q_scd2_pit, _scd.scd2_pit_oracle_sql())
+    cases["dim_scd2_merge"] = _case(scd.scd2_customers, scd.scd2_oracle_sql())
+    cases["dim_scd2_invariants"] = _case(scd.scd2_invariants, scd.scd2_invariants_oracle_sql())
+    cases["dim_scd2_pit_lookup"] = _case(scd.scd2_pit_lookup, scd.scd2_pit_oracle_sql())
     cases["events_value_time_corr"] = _bi_case(
         EVENTS_CORR_TEMPLATE, ts_us=TS_US, idiv=("DIV", "//")
     )
@@ -2032,11 +2012,10 @@ WHERE o_custkey IN (
 GROUP BY 1
 """
 
-    def _bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        seg = v["customer"].filter(F.col("c_mktsegment") == "AUTOMOBILE")
+    def _bloom_join(spark: SparkSession) -> DataFrame:
+        seg = spark.table("customer").filter(F.col("c_mktsegment") == "AUTOMOBILE")
         pruned = skew.bloom_prefilter_semi_join(
-            v["orders"], seg, "o_custkey", "c_custkey"
+            spark.table("orders"), seg, "o_custkey", "c_custkey"
         )
         return pruned.groupBy(
             (F.year("o_orderdate") * 100 + F.month("o_orderdate"))
@@ -2049,7 +2028,7 @@ GROUP BY 1
             .alias("revenue_cents"),
         )
 
-    cases["join_bloom_prefilter_revenue"] = Case(_bloom_join, _BLOOM_ORACLE)
+    cases["join_bloom_prefilter_revenue"] = _case(_bloom_join, _BLOOM_ORACLE)
 
     # --- events
     cases["events_window_agg"] = _bi_case(EVENTS_WINDOW_TEMPLATE, ts_us=TS_US)
@@ -2063,12 +2042,12 @@ GROUP BY 1
         ts_us=TS_US,
         gap_us=str(SESSION_GAP_US),
     )
-    cases["events_session_window_native"] = Case(
+    cases["events_session_window_native"] = _case(
         _q_session_window_native, _sess_ge_oracle
     )
-    cases["events_asof_join"] = _pair_case(asof.asof_join_sql())
-    cases["events_funnel"] = _pair_case(asof.funnel_sql())
-    cases["events_funnel_windowed"] = _pair_case(asof.funnel_windowed_sql())
+    cases["events_asof_join"] = _sql_case(*asof.asof_join_sql())
+    cases["events_funnel"] = _sql_case(*asof.funnel_sql())
+    cases["events_funnel_windowed"] = _sql_case(*asof.funnel_windowed_sql())
 
     # customer-LTV cohort triangle: cohort = first-order month, value
     # accumulated per months-since-cohort — the money-grain companion
@@ -2151,8 +2130,7 @@ FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
             "lineitem",
         )
 
-    def _basket_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _basket_staged(spark: SparkSession) -> DataFrame:
         name = _basket_ob_rel(spark)
         return spark.sql(
             f"""
@@ -2164,7 +2142,7 @@ GROUP BY a.p_brand, b.p_brand
 """
         )
 
-    cases["basket_brand_pairs"] = Case(_basket_staged, _BASKET_SQL)
+    cases["basket_brand_pairs"] = _case(_basket_staged, _BASKET_SQL)
 
     # --- association rules over the same basket relation: every
     # directed rule antecedent→consequent with support / confidence /
@@ -2210,8 +2188,7 @@ FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
 """
     _assoc_frags = dict(idiv=("DIV", "//"), big_t=("DECIMAL(38,0)", "HUGEINT"))
 
-    def _assoc_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _assoc_staged(spark: SparkSession) -> DataFrame:
         name = _basket_ob_rel(spark)
         tail, _ = P.bi_sql("WITH ob AS (SELECT * FROM " + name + "),\n" + _ASSOC_TAIL, **_assoc_frags)
         return spark.sql(tail)
@@ -2219,7 +2196,7 @@ FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
     _assoc_duck = P.duck_sql(
         "WITH ob AS (" + _ASSOC_OB + "),\n" + _ASSOC_TAIL, **_assoc_frags
     )
-    cases["basket_association_rules"] = Case(_assoc_staged, _assoc_duck)
+    cases["basket_association_rules"] = _case(_assoc_staged, _assoc_duck)
 
     # engagement stickiness: per calendar week, distinct weekly actives
     # and the peak daily actives inside the week — the DAU/WAU ratio in
@@ -2250,17 +2227,16 @@ SELECT MIN(event_id) AS island_start, MAX(event_id) AS island_end,
 FROM d GROUP BY grp
 """
 
-    def _gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
+    def _gaps_islands(spark: SparkSession) -> DataFrame:
         ids = (
-            v["events"]
+            spark.table("events")
             .select("event_id")
             .filter(F.col("event_id") % 97 != 0)
             .distinct()
         )
         return scan.islands(ids, "event_id")
 
-    cases["events_gaps_islands"] = Case(_gaps_islands, _ISLANDS_ORACLE)
+    cases["events_gaps_islands"] = _case(_gaps_islands, _ISLANDS_ORACLE)
 
     # RFM segmentation (recency/frequency/monetary quintiles — the
     # classic customer-value grid). Quintiles are made deterministic by
@@ -2295,7 +2271,7 @@ SELECT r_bucket, f_bucket, m_bucket, COUNT(*) AS n_customers
 FROM scored GROUP BY r_bucket, f_bucket, m_bucket
 """
 
-    def _rfm_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _rfm_staged(spark: SparkSession) -> DataFrame:
         # Round 11: the three ranks used to CHAIN (each global_rank fed
         # the previous pass's output), which (a) serialized three
         # sample+checkpoint barriers — 24 sequential jobs — and (b) ran
@@ -2310,8 +2286,7 @@ FROM scored GROUP BY r_bucket, f_bucket, m_bucket
         # values are identical to the chained form (oracle-checked).
         from concurrent.futures import ThreadPoolExecutor
 
-        v = views(spark, sf_dir)
-        per_cust = v["orders"].groupBy(
+        per_cust = spark.table("orders").groupBy(
             F.col("o_custkey").alias("custkey")
         ).agg(
             F.max("o_orderdate").alias("last_order"),
@@ -2345,7 +2320,7 @@ FROM scored GROUP BY r_bucket, f_bucket, m_bucket
             F.count("*").alias("n_customers")
         )
 
-    cases["orders_rfm_segments"] = Case(_rfm_staged, _RFM_ORACLE)
+    cases["orders_rfm_segments"] = _case(_rfm_staged, _RFM_ORACLE)
 
     # Pareto / revenue-concentration curve ("how many customers make
     # half the revenue; what share does the top 20% hold"). The oracle
@@ -2380,10 +2355,9 @@ FROM r CROSS JOIN t
 GROUP BY t.n_customers, t.total_cents
 """
 
-    def _pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _pareto(spark: SparkSession) -> DataFrame:
         from ..operators import scan
 
-        views(spark, sf_dir)
         c = spark.sql(_PARETO_CENTS)
         r = scan.global_ranked_cumsum(c, "cents", "o_custkey")
         t = c.agg(
@@ -2418,11 +2392,10 @@ GROUP BY t.n_customers, t.total_cents
             )
         )
 
-    cases["orders_pareto_share"] = Case(_pareto, _PARETO_ORACLE)
+    cases["orders_pareto_share"] = _case(_pareto, _PARETO_ORACLE)
 
-    cases["events_dau_wau_stickiness"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["events_dau_wau_stickiness"] = _bi_case(
+        """
 WITH ud AS (
   SELECT DISTINCT user_id,
          {ts_us} {idiv} 86400000000 AS day_idx,
@@ -2437,13 +2410,12 @@ SELECT w.week_idx, w.wau,
 FROM wau w JOIN dau d ON d.week_idx = w.week_idx
 GROUP BY w.week_idx, w.wau
 """,
-            ts_us=TS_US,
-            idiv=("DIV", "//"),
-        )
+        ts_us=TS_US,
+        idiv=("DIV", "//"),
     )
-    cases["events_range_join"] = _pair_case(asof.range_join_sql())
+    cases["events_range_join"] = _sql_case(*asof.range_join_sql())
     cases["events_pivot_by_user"] = _sql_case(EVENTS_PIVOT_TEMPLATE, EVENTS_PIVOT_TEMPLATE)
-    cases["events_multires_rollup"] = _pair_case(asof.multires_rollup_sql())
+    cases["events_multires_rollup"] = _sql_case(*asof.multires_rollup_sql())
     cases["events_json_extract"] = _bi_case(
         EVENTS_JSON_TEMPLATE,
         json_k=(
@@ -2488,15 +2460,11 @@ GROUP BY event_type
     cases["text_token_stats"] = _text_case(textops.token_stats, textops.oracle_token_stats)
     # quality: zero-shuffle Arrow kernel replaying the oracle's exact FP
     # chain (see quality_score_staged); declarative form stays in textops
-    def _quality_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.quality_score_staged(spark)
-
-    cases["text_quality_score"] = Case(_quality_staged, textops.oracle_quality_score())
+    cases["text_quality_score"] = _case(textops.quality_score_staged, textops.oracle_quality_score())
     cases["text_lang_id"] = _text_case(textops.lang_id, textops.oracle_lang_id)
     cases["text_fingerprint"] = _text_case(textops.fingerprint, textops.oracle_fingerprint)
     cases["text_normalize"] = _text_case(textops.normalize, textops.oracle_normalize)
-    cases["events_zscore_outliers"] = _pair_case(sketch.zscore_outliers_sql())
+    cases["events_zscore_outliers"] = _sql_case(*sketch.zscore_outliers_sql())
 
     # --- corpus management (deterministic splits / sampling / reports)
     cases["corpus_split_assign"] = _sql_case(
@@ -2505,58 +2473,34 @@ GROUP BY event_type
     cases["corpus_stratified_sample"] = _sql_case(
         corpus.stratified_sample_sql(), corpus.stratified_sample_sql()
     )
-    cases["corpus_source_composition"] = _pair_case(corpus.source_composition_sql())
-    cases["corpus_mixture_sample"] = _pair_case(corpus.mixture_sample_sql())
-    cases["corpus_temperature_mixture"] = _pair_case(corpus.temperature_mixture_sql())
-    cases["corpus_token_budget"] = _pair_case(corpus.token_budget_sql())
-    cases["corpus_pack_sequences"] = _pair_case(corpus.pack_sequences_sql())
+    cases["corpus_source_composition"] = _sql_case(*corpus.source_composition_sql())
+    cases["corpus_mixture_sample"] = _sql_case(*corpus.mixture_sample_sql())
+    cases["corpus_temperature_mixture"] = _sql_case(*corpus.temperature_mixture_sql())
+    cases["corpus_token_budget"] = _sql_case(*corpus.token_budget_sql())
+    cases["corpus_pack_sequences"] = _sql_case(*corpus.pack_sequences_sql())
 
-    def _training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.training_pipeline(spark)
-
-    cases["corpus_training_pipeline"] = Case(
-        _training_pipeline, corpus.training_pipeline_oracle_sql()
+    cases["corpus_training_pipeline"] = _case(
+        corpus.training_pipeline, corpus.training_pipeline_oracle_sql()
     )
 
-    def _dup_rate_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.dup_rate_by_source_staged(spark)
-
-    cases["corpus_dup_rate_by_source"] = Case(
-        _dup_rate_staged, corpus.dup_rate_by_source_sql()
+    cases["corpus_dup_rate_by_source"] = _case(
+        corpus.dup_rate_by_source_staged, corpus.dup_rate_by_source_sql()
     )
 
     # --- dedup family
-    def _exact_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.exact_dedup_staged(spark)
-
-    cases["dedup_exact"] = Case(_exact_staged, dedup.exact_dedup_sql())
+    cases["dedup_exact"] = _case(dedup.exact_dedup_staged, dedup.exact_dedup_sql())
 
     # Spark side: staged execution (shingle-hash sets materialized once,
     # cached, then self-joined) — Spark's CTE inlining would otherwise
     # re-run the interpreted shingling pipeline 3x. Oracle: the
     # single-statement form of the SAME pipeline.
-    def _jaccard_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.ngram_jaccard_staged(spark)
-
-    def _minhash_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.minhash_lsh_staged(spark)
-
-    cases["dedup_ngram_jaccard"] = Case(_jaccard_staged, dedup.ngram_jaccard_sql())
-    cases["dedup_minhash_lsh"] = Case(_minhash_staged, dedup.minhash_lsh_sql())
+    cases["dedup_ngram_jaccard"] = _case(dedup.ngram_jaccard_staged, dedup.ngram_jaccard_sql())
+    cases["dedup_minhash_lsh"] = _case(dedup.minhash_lsh_staged, dedup.minhash_lsh_sql())
 
     # asymmetric containment (quote-expansion dups Jaccard misses):
     # A-prefix vs full posting list, integer-only thresholding
-    def _containment_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.containment_staged(spark)
-
-    cases["dedup_containment"] = Case(
-        _containment_staged, dedup.containment_dedup_sql()
+    cases["dedup_containment"] = _case(
+        dedup.containment_staged, dedup.containment_dedup_sql()
     )
 
     # ---- LSH self-evaluation: recall of the banded-minhash candidate
@@ -2567,8 +2511,7 @@ GROUP BY event_type
     # construction (identical Jaccard predicate over the same staged
     # hashsets), so the report is: how many true pairs the bands
     # surfaced, and the miss count the banding trades away.
-    def _lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _lsh_recall(spark: SparkSession) -> DataFrame:
         exact = dedup.ngram_jaccard_staged(spark, tau=0.8).select("doc_a", "doc_b")
         lsh = dedup.minhash_lsh_staged(spark).select("doc_a", "doc_b")
         return (
@@ -2600,29 +2543,17 @@ SELECT COUNT(*) AS n_true_pairs, CAST(SUM(hit) AS BIGINT) AS n_hits,
        CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
 FROM j
 """
-    cases["dedup_lsh_recall_report"] = Case(_lsh_recall, _lsh_recall_oracle)
+    cases["dedup_lsh_recall_report"] = _case(_lsh_recall, _lsh_recall_oracle)
     # simhash consumes the shared staged token relation (the SQL twin
     # hashes every token with an interpreted per-char fold — see
     # dedup.simhash_staged); oracles stay the single-statement forms.
-    def _simhash_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.simhash_staged(spark)
-
-    def _simhash_pairs_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.simhash_pairs_staged(spark)
-
-    cases["dedup_simhash"] = Case(_simhash_staged, dedup.simhash_sql())
-    cases["dedup_simhash_pairs"] = Case(
-        _simhash_pairs_staged, dedup.simhash_pairs_sql()
+    cases["dedup_simhash"] = _case(dedup.simhash_staged, dedup.simhash_sql())
+    cases["dedup_simhash_pairs"] = _case(
+        dedup.simhash_pairs_staged, dedup.simhash_pairs_sql()
     )
 
-    def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return graph.dup_clusters(spark)
-
-    cases["dedup_cluster_components"] = Case(
-        _dup_clusters, graph.dup_clusters_oracle_sql()
+    cases["dedup_cluster_components"] = _case(
+        graph.dup_clusters, graph.dup_clusters_oracle_sql()
     )
 
     # ---- the O(log n)-round scale path for the same clustering:
@@ -2631,15 +2562,14 @@ FROM j
     # oracle — label propagation (above) pays O(diameter) rounds, which
     # a chain-shaped component (transitive near-dups) turns into a
     # wall; star contraction does not care about shape.
-    def _dup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _dup_clusters_twophase(spark: SparkSession) -> DataFrame:
         # consume the staged pairs table (written once, shared with the
         # propagation path and the triangle census) instead of re-running
         # the PPJoin candidate stage — measured 6.0 s -> 1.3 s at sf0.1
         pairs = spark.table(graph.staged_pairs_view(spark, tau=0.8))
         return graph.connected_components_twophase(pairs)
 
-    cases["dedup_cluster_twophase"] = Case(
+    cases["dedup_cluster_twophase"] = _case(
         _dup_clusters_twophase, graph.dup_clusters_oracle_sql()
     )
 
@@ -2654,9 +2584,7 @@ FROM j
     # with a smaller near-dup partner; chunk = docs with >= 50% of
     # token chunks shared; semantic = pruned embedding vectors
     # (embeddings plane, labeled as such).
-    def _dedup_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-
+    def _dedup_sweep(spark: SparkSession) -> DataFrame:
         def one(tag: str, agg_df: DataFrame) -> DataFrame:
             return agg_df.select(
                 F.lit(tag).alias("strategy"),
@@ -2708,7 +2636,7 @@ UNION ALL
 SELECT 'semantic_embedding', CAST(COUNT(*) AS BIGINT)
 FROM ({similarity.semantic_dedup_sql().strip()})
 """
-    cases["dedup_strategy_sweep"] = Case(_dedup_sweep, _SWEEP_ORACLE)
+    cases["dedup_strategy_sweep"] = _case(_dedup_sweep, _SWEEP_ORACLE)
 
     # ---- keeper election by QUALITY: per near-dup cluster keep the
     # highest-quality member (production curation policy; the training
@@ -2717,10 +2645,9 @@ FROM ({similarity.semantic_dedup_sql().strip()})
     # the engine-shared floor-6 expression, so the argmax (quality
     # DESC, doc_id tiebreak) is deterministic in both engines. One
     # window over the cluster table — cluster-grain, tiny output.
-    def _best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _best_keeper(spark: SparkSession) -> DataFrame:
         from pyspark.sql import Window
 
-        views(spark, sf_dir)
         clusters = graph.dup_clusters(spark)
         q = textops.quality_score(spark.table("documents")).select("doc_id", "quality")
         m = clusters.join(q, "doc_id")
@@ -2773,54 +2700,43 @@ SELECT cluster_id,
        quality AS keeper_quality
 FROM ranked WHERE rk = 1
 """
-    cases["dedup_best_keeper"] = Case(_best_keeper, _keeper_oracle)
+    cases["dedup_best_keeper"] = _case(_best_keeper, _keeper_oracle)
 
-    def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return graph.pagerank(spark, sf_dir)
-
-    cases["graph_pagerank"] = Case(_pagerank, graph.pagerank_oracle_sql())
+    cases["graph_pagerank"] = _case(graph.pagerank, graph.pagerank_oracle_sql())
 
     # skew-hardened twin: per-round destination aggregation runs as a
     # two-stage salted partial aggregate; integer SUM associativity
     # makes it bit-identical to the unsalted recurrence, so the SAME
     # recursive-CTE oracle value-checks it.
-    def _pagerank_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return graph.pagerank(spark, sf_dir, salted=True)
-
-    cases["graph_pagerank_salted"] = Case(_pagerank_salted, graph.pagerank_oracle_sql())
+    cases["graph_pagerank_salted"] = _case(
+        lambda spark: graph.pagerank(spark, salted=True), graph.pagerank_oracle_sql()
+    )
 
     # triangle/wedge census of the near-dup pair graph (degree-oriented
     # enumeration; shares the staged pairs view with the clustering
     # path). Transitivity is the go/no-go gauge for the cluster-keeper
     # collapse: near-clique pair graphs collapse safely, chain-shaped
     # ones over-merge.
-    def _triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _triangles(spark: SparkSession) -> DataFrame:
         pairs = spark.table(graph.staged_pairs_view(spark, tau=0.8))
         return graph.triangle_stats(pairs)
 
-    cases["graph_triangle_count"] = Case(
+    cases["graph_triangle_count"] = _case(
         _triangles, graph.triangle_stats_oracle_sql(tau=0.8)
     )
 
-    def _contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.contamination_staged(spark)
-
-    cases["corpus_contamination"] = Case(
-        _contamination, dedup.contamination_sql()
+    cases["corpus_contamination"] = _case(
+        dedup.contamination_staged, dedup.contamination_sql()
     )
     cases["sketch_kmv_distinct"] = _sql_case(
         sketch.kmv_distinct_sql(), sketch.kmv_distinct_sql()
     )
-    cases["sketch_hll_weekly_rollup"] = _pair_case(sketch.hll_rollup_sql())
-    cases["sketch_cms_heavy_hitters"] = _pair_case(sketch.cms_heavy_hitters_sql())
-    cases["sketch_histogram_quantiles"] = _pair_case(sketch.histogram_quantiles_sql())
-    cases["sketch_bloom_membership"] = _pair_case(sketch.bloom_membership_sql())
-    cases["sketch_kmv_audience_overlap"] = _pair_case(sketch.kmv_set_ops_sql())
-    cases["sketch_hll_distinct"] = _pair_case(sketch.hll_distinct_sql())
+    cases["sketch_hll_weekly_rollup"] = _sql_case(*sketch.hll_rollup_sql())
+    cases["sketch_cms_heavy_hitters"] = _sql_case(*sketch.cms_heavy_hitters_sql())
+    cases["sketch_histogram_quantiles"] = _sql_case(*sketch.histogram_quantiles_sql())
+    cases["sketch_bloom_membership"] = _sql_case(*sketch.bloom_membership_sql())
+    cases["sketch_kmv_audience_overlap"] = _sql_case(*sketch.kmv_set_ops_sql())
+    cases["sketch_hll_distinct"] = _sql_case(*sketch.hll_distinct_sql())
     # tf-idf / per-language top terms: the fused explode+aggregate SQL
     # beats the staged-token route here (measured 0.87s vs 1.0s — these
     # never hash tokens, and the LATERAL VIEW explode fuses into the
@@ -2831,16 +2747,10 @@ FROM ranked WHERE rk = 1
     # the tf aggregate materialized once (the SQL twin re-tokenized the
     # corpus per tf reference — 4 parquet scans); oracle stays the
     # single-statement form.
-    def _tfidf_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.tfidf_top_terms_staged(spark)
-
-    cases["text_tfidf_top_terms"] = Case(
-        _tfidf_staged, textops.tfidf_top_terms_sql()
+    cases["text_tfidf_top_terms"] = _case(
+        textops.tfidf_top_terms_staged, textops.tfidf_top_terms_sql()
     )
-    cases["text_top_terms_per_language"] = _pair_case(
-        textops.top_terms_per_language_sql()
-    )
+    cases["text_top_terms_per_language"] = _sql_case(*textops.top_terms_per_language_sql())
 
     # --- vocabulary statistics over the staged token relation
     # --- FILE-JSON source round-trip: documents written once per
@@ -2849,12 +2759,11 @@ FROM ranked WHERE rk = 1
     # inference is a full extra read), value-hashed against the parquet
     # originals. Proves the JSON source path end-to-end, not just the
     # option assembly.
-    def _jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _jsonl_roundtrip(spark: SparkSession) -> DataFrame:
         import os
 
         from ..sources.connectors import Connection, reader_for
 
-        views(spark, sf_dir)
         path = _written_once(
             spark, "jsonl", "documents",
             lambda p: spark.table("documents").write.mode("overwrite").json(
@@ -2873,7 +2782,7 @@ FROM ranked WHERE rk = 1
             "doc_id", "text", "lang", "source", "n_chars"
         )
 
-    cases["src_jsonl_roundtrip"] = Case(
+    cases["src_jsonl_roundtrip"] = _case(
         _jsonl_roundtrip,
         "SELECT doc_id, text, lang, source, n_chars FROM documents",
     )
@@ -2882,10 +2791,9 @@ FROM ranked WHERE rk = 1
     # migration target the reference's MS-SQL-centric world never had);
     # same write-once-per-(session, sf) staging and the same value-hash
     # oracle against the parquet originals.
-    def _orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _orc_roundtrip(spark: SparkSession) -> DataFrame:
         import os
 
-        views(spark, sf_dir)
         path = _written_once(
             spark, "orc", "documents",
             lambda p: spark.table("documents").write.mode("overwrite").orc(
@@ -2896,7 +2804,7 @@ FROM ranked WHERE rk = 1
             "doc_id", "text", "lang", "source", "n_chars"
         )
 
-    cases["src_orc_roundtrip"] = Case(
+    cases["src_orc_roundtrip"] = _case(
         _orc_roundtrip,
         "SELECT doc_id, text, lang, source, n_chars FROM documents",
     )
@@ -2908,13 +2816,11 @@ FROM ranked WHERE rk = 1
     # The oracle recomputes that state from the source table, proving
     # the overwrite neither leaked into nor destroyed the older
     # snapshot. Scan is planned from the manifest's explicit file list.
-    def _snap_table_path(spark: SparkSession, sf_dir: str) -> str:
+    def _snap_table_path(spark: SparkSession) -> str:
         """Memoized three-commit snapshot table (v1/v2 appends of
         thirds 0 and 1, v3 overwrite with third 2) — the single owner
         of the memo key, shared by the time-travel and diff cases."""
         from ..sources import snapshots as S
-
-        views(spark, sf_dir)
 
         def write(path: str) -> None:
             docs = spark.table("documents").select("doc_id", "lang", "source", "n_chars")
@@ -2924,17 +2830,17 @@ FROM ranked WHERE rk = 1
 
         return _written_once(spark, "snap", "documents", write)
 
-    def _snap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _snap_time_travel(spark: SparkSession) -> DataFrame:
         from ..sources import snapshots as S
 
-        path = _snap_table_path(spark, sf_dir)
+        path = _snap_table_path(spark)
         snap = S.read_snapshot(spark, path, version=2)
         return snap.groupBy("source").agg(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
         )
 
-    cases["snap_time_travel"] = Case(
+    cases["snap_time_travel"] = _case(
         _snap_time_travel,
         """
 SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -2948,10 +2854,10 @@ FROM documents WHERE doc_id % 3 IN (0, 1) GROUP BY source
     # are full snapshots, so the delta is a set difference). The
     # per-source aggregate oracle recomputes both sides from the
     # documents thirds.
-    def _snap_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _snap_version_diff(spark: SparkSession) -> DataFrame:
         from ..sources import snapshots as S
 
-        path = _snap_table_path(spark, sf_dir)
+        path = _snap_table_path(spark)
         old = S.read_snapshot(spark, path, version=2)
         new = S.read_snapshot(spark, path, version=3)
         added = new.join(old.select("doc_id"), "doc_id", "left_anti").select(
@@ -2966,7 +2872,7 @@ FROM documents WHERE doc_id % 3 IN (0, 1) GROUP BY source
             .agg(F.count("*").alias("n_docs"))
         )
 
-    cases["snap_version_diff"] = Case(
+    cases["snap_version_diff"] = _case(
         _snap_version_diff,
         """
 SELECT source, 'added' AS change, COUNT(*) AS n_docs
@@ -2988,10 +2894,10 @@ FROM documents WHERE doc_id % 3 IN (0, 1) GROUP BY source
     # The diff is on the FULL ROW, not doc_id membership: an in-place
     # update (same doc_id, changed n_chars/source) must appear in both
     # the removed and added legs or the maintained sums drift.
-    def _snap_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _snap_incremental_agg(spark: SparkSession) -> DataFrame:
         from ..sources import snapshots as S
 
-        path = _snap_table_path(spark, sf_dir)
+        path = _snap_table_path(spark)
         old = S.read_snapshot(spark, path, version=2)
         new = S.read_snapshot(spark, path, version=3)
         row_cols = new.columns  # doc_id, lang, source, n_chars
@@ -3017,7 +2923,7 @@ FROM documents WHERE doc_id % 3 IN (0, 1) GROUP BY source
             .filter(F.col("n_docs") > 0)
         )
 
-    cases["snap_incremental_agg"] = Case(
+    cases["snap_incremental_agg"] = _case(
         _snap_incremental_agg,
         """
 SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
@@ -3029,10 +2935,9 @@ FROM documents WHERE doc_id % 3 = 2 GROUP BY source
     # per-row 1→N fan-out callable from SQL via LATERAL — scan →
     # generate, zero shuffle; Arrow-batched transfer. The oracle
     # replays the same regex split with DuckDB's parallel unnest.
-    def _sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _sentence_split(spark: SparkSession) -> DataFrame:
         from ..functions.udtf import register_udtfs
 
-        views(spark, sf_dir)
         register_udtfs(spark)
         return spark.sql(
             "SELECT d.doc_id, s.sent_idx, s.sentence, s.n_chars "
@@ -3040,36 +2945,18 @@ FROM documents WHERE doc_id % 3 = 2 GROUP BY source
             f"LATERAL sentence_split(d.text, '{udtf_fns.SENTENCE_PATTERN}') s"
         )
 
-    cases["text_sentence_split"] = Case(_sentence_split, udtf_fns.SENTENCE_SPLIT_ORACLE)
+    cases["text_sentence_split"] = _case(_sentence_split, udtf_fns.SENTENCE_SPLIT_ORACLE)
 
-    def _degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return spark.sql(graph.degree_distribution_sql()[0])
+    cases["graph_degree_distribution"] = _sql_case(*graph.degree_distribution_sql())
 
-    cases["graph_degree_distribution"] = Case(
-        _degree_dist, graph.degree_distribution_sql()[1]
+    cases["text_vocab_by_source"] = _case(
+        textops.vocab_by_source_staged, textops.oracle_vocab_by_source()
     )
 
-    def _vocab_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.vocab_by_source_staged(spark)
+    cases["text_vocab_growth"] = _case(textops.vocab_growth_staged, textops.oracle_vocab_growth())
 
-    cases["text_vocab_by_source"] = Case(
-        _vocab_by_source, textops.oracle_vocab_by_source()
-    )
-
-    def _vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.vocab_growth_staged(spark)
-
-    cases["text_vocab_growth"] = Case(_vocab_growth, textops.oracle_vocab_growth())
-
-    def _token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.token_estimate_staged(spark)
-
-    cases["text_token_estimate_bpe"] = Case(
-        _token_estimate, textops.oracle_token_estimate()
+    cases["text_token_estimate_bpe"] = _case(
+        textops.token_estimate_staged, textops.oracle_token_estimate()
     )
 
     # --- curriculum deciles over the quality score with a full
@@ -3092,9 +2979,8 @@ SELECT decile, COUNT(*) AS n_docs,
 FROM d GROUP BY decile
 """
 
-    def _curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        q = textops.quality_score(v["documents"]).select(
+    def _curriculum(spark: SparkSession) -> DataFrame:
+        q = textops.quality_score(spark.table("documents")).select(
             "doc_id", "n_tokens", "quality"
         )
         ranked = scan.global_rank(q, [("quality", True), ("doc_id", True)], out="_rk")
@@ -3111,7 +2997,7 @@ FROM d GROUP BY decile
             )
         )
 
-    cases["corpus_quality_curriculum"] = Case(
+    cases["corpus_quality_curriculum"] = _case(
         _curriculum,
         _CURRICULUM_BODY.format(q=textops.oracle_quality_score()),
     )
@@ -3140,91 +3026,49 @@ FROM d GROUP BY decile
         other_cols=["o_orderstatus", "o_orderdate", "o_orderpriority"],
     )
     cases["profile_orders_columns"] = _sql_case(_profile_sql, _profile_sql)
-    def _q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # gate the distance summand's integer type on the table size
-        # (parquet-footer row count, no data read): BIGINT keeps the
-        # hot aggregate in whole-stage-codegen long arithmetic wherever
-        # it provably cannot overflow; only large tables pay DECIMAL.
-        import os
-
-        import pyarrow.parquet as pq
-
-        views(spark, sf_dir)
-        n = pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
-        return similarity.kmeans_staged(spark, n)
-
-    cases["emb_kmeans"] = Case(_q_kmeans, similarity.kmeans_sql())
-    def _semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.semantic_dedup_staged(spark)
-
-    cases["dedup_semantic"] = Case(_semantic_dedup, similarity.semantic_dedup_sql())
-    cases["emb_quantize_int8"] = _pair_case(similarity.quantize_int8_sql())
-    cases["events_value_quantiles"] = _pair_case(sketch.quantiles_sql())
+    # gate the distance summand's integer type on the table size:
+    # BIGINT keeps the hot aggregate in whole-stage-codegen long
+    # arithmetic wherever it provably cannot overflow; only large
+    # tables pay DECIMAL.
+    cases["emb_kmeans"] = _case(
+        lambda spark: similarity.kmeans_staged(spark, _embedding_rows(spark)),
+        similarity.kmeans_sql(),
+    )
+    cases["dedup_semantic"] = _case(similarity.semantic_dedup_staged, similarity.semantic_dedup_sql())
+    cases["emb_quantize_int8"] = _sql_case(*similarity.quantize_int8_sql())
+    cases["events_value_quantiles"] = _sql_case(*sketch.quantiles_sql())
 
     # --- similarity search
-    def _topk_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.cosine_topk_staged(spark)
-
     # Spark side: Arrow/numpy replay of the oracle's exact FP chain with
     # per-partition top-k pruning; oracle stays the explicit-chain SQL.
-    cases["ann_cosine_topk"] = Case(_topk_staged, similarity.cosine_topk_sql())
-
-    def _neardup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.embedding_neardup_pandas(spark)
+    cases["ann_cosine_topk"] = _case(similarity.cosine_topk_staged, similarity.cosine_topk_sql())
 
     # Spark side: Arrow/numpy replay of the oracle's exact FP sequence
     # (the N²×64-term SQL chain is interpreted, ~60x slower); oracle
     # stays the explicit-chain SQL.
-    cases["emb_cosine_neardup"] = Case(_neardup_pandas, similarity.embedding_neardup_sql())
+    cases["emb_cosine_neardup"] = _case(similarity.embedding_neardup_pandas, similarity.embedding_neardup_sql())
 
-    def _lsh_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.lsh_ann_staged(spark)
-
-    cases["ann_lsh_bucketed"] = Case(_lsh_staged, similarity.lsh_ann_sql())
-    def _ivf_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.ivf_ann_staged(spark)
-
-    cases["ann_ivf_topk"] = Case(_ivf_staged, similarity.ivf_ann_sql())
+    cases["ann_lsh_bucketed"] = _case(similarity.lsh_ann_staged, similarity.lsh_ann_sql())
+    cases["ann_ivf_topk"] = _case(similarity.ivf_ann_staged, similarity.ivf_ann_sql())
 
     # Spark side: the cosine_topk_staged Arrow kernel with a threshold
     # filter (the SQL twin's doubly-inlined 64-term chains overflow the
     # Janino codegen method limit — see range_search_staged docstring);
     # oracle stays the explicit-chain SQL.
-    def _range_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.range_search_staged(spark)
-
-    cases["ann_range_search"] = Case(
-        _range_staged, similarity.range_search_sql()
+    cases["ann_range_search"] = _case(
+        similarity.range_search_staged, similarity.range_search_sql()
     )
     # PQ paths run over the SHARED staged distance relation (code
     # assignment and the ADC LUT both consume it; CTE inlining would
     # evaluate the 64-term distance chain twice) — oracles stay the
     # single-statement forms.
-    def _pq_codes_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.pq_codes_staged(spark)
-
-    def _pq_adc_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.pq_adc_topk_staged(spark)
-
-    cases["emb_pq_codes"] = Case(_pq_codes_staged, similarity.pq_codes_sql())
-    cases["ann_pq_adc_topk"] = Case(_pq_adc_staged, similarity.pq_adc_topk_sql())
+    cases["emb_pq_codes"] = _case(similarity.pq_codes_staged, similarity.pq_codes_sql())
+    cases["ann_pq_adc_topk"] = _case(similarity.pq_adc_topk_staged, similarity.pq_adc_topk_sql())
 
     # IVF-PQ: the composed coarse-prune + residual-code index (see
     # similarity.ivfpq_adc_topk_sql) — both dialects from the shared
     # builder, so the Spark text and the oracle cannot drift.
-    def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.ivfpq_topk_staged(spark)
-
-    cases["ann_ivfpq_topk"] = Case(_ivfpq_topk, similarity.ivfpq_adc_topk_sql())
+    cases["ann_ivfpq_topk"] = _case(similarity.ivfpq_topk_staged, similarity.ivfpq_adc_topk_sql())
 
     # ---- ANN self-evaluation: recall@k of the IVF path against the
     # exact top-k ground truth ("measure, don't guess" — the number
@@ -3232,8 +3076,7 @@ FROM d GROUP BY decile
     # index). Reuses both staged relations; the comparison is one
     # (q_id, n_id) left join + a query-grain aggregate — query-set
     # sized, trivial next to the searches themselves.
-    def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _ann_recall(spark: SparkSession) -> DataFrame:
         exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
         approx = similarity.ivf_ann_staged(spark).select("q_id", "n_id")
         return (
@@ -3262,15 +3105,14 @@ SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
        CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
 FROM j GROUP BY q_id
 """
-    cases["ann_recall_report"] = Case(_ann_recall, _ann_recall_oracle)
+    cases["ann_recall_report"] = _case(_ann_recall, _ann_recall_oracle)
 
     # Recall of int8-quantized retrieval against the same exact ground
     # truth — completes the quantization family's self-evaluation (PQ
     # and matryoshka have theirs): the number that says whether 4x
     # smaller vectors still retrieve the right neighbors. Same
     # query-grain join shape as ann_recall_report.
-    def _int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _int8_recall(spark: SparkSession) -> DataFrame:
         exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
         approx = similarity.int8_topk_staged(spark).select("q_id", "n_id")
         return (
@@ -3299,15 +3141,14 @@ SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
        CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
 FROM j GROUP BY q_id
 """
-    cases["ann_int8_recall"] = Case(_int8_recall, _int8_recall_oracle)
+    cases["ann_int8_recall"] = _case(_int8_recall, _int8_recall_oracle)
 
     # Recall of the composed IVF-PQ index against the same exact
     # ground truth — read NEXT TO ann_recall_report (IVF alone): the
     # delta is the price of scanning m-byte codes instead of 64-float
     # vectors inside the probed cells, the storage-vs-recall trade an
     # IVF-PQ deployment actually tunes. Same query-grain join shape.
-    def _ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _ivfpq_recall(spark: SparkSession) -> DataFrame:
         exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
         approx = similarity.ivfpq_topk_staged(spark).select("q_id", "n_id")
         return (
@@ -3336,18 +3177,14 @@ SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
        CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
 FROM j GROUP BY q_id
 """
-    cases["ann_ivfpq_recall"] = Case(_ivfpq_recall, _ivfpq_recall_oracle)
+    cases["ann_ivfpq_recall"] = _case(_ivfpq_recall, _ivfpq_recall_oracle)
 
     # ---- nprobe sweep over the SAME staged IVF assignment relation:
     # recall-vs-candidate-mass per probe budget (see
     # similarity.ivf_nprobe_sweep_sql) — picks nprobe from the corpus's
     # own numbers, completing the measured-tuning set.
-    def _nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.ivf_nprobe_sweep_staged(spark)
-
-    cases["ann_ivf_nprobe_sweep"] = Case(
-        _nprobe_sweep, similarity.ivf_nprobe_sweep_sql()
+    cases["ann_ivf_nprobe_sweep"] = _case(
+        similarity.ivf_nprobe_sweep_staged, similarity.ivf_nprobe_sweep_sql()
     )
 
     # ---- Matryoshka prefix-dimension tradeoff: top-k over only the
@@ -3358,19 +3195,14 @@ FROM j GROUP BY q_id
     # Spark side: each prefix-dim top-k staged (the single statement
     # re-ran the full-dim Q x N scored pass once per union branch);
     # oracle stays the single-statement SQL.
-    def _q_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.matryoshka_recall_staged(spark)
-
-    cases["ann_matryoshka_recall"] = Case(
-        _q_matryoshka, similarity.matryoshka_recall_sql()
+    cases["ann_matryoshka_recall"] = _case(
+        similarity.matryoshka_recall_staged, similarity.matryoshka_recall_sql()
     )
 
     # same measurement for the PQ/ADC path — coarse 8-centroid
     # codebooks trade recall for ~21× storage; this query is the
     # number that trade is judged by.
-    def _pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _pq_recall(spark: SparkSession) -> DataFrame:
         exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
         approx = similarity.pq_adc_topk_staged(spark).select("q_id", "n_id")
         return (
@@ -3399,15 +3231,14 @@ SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
        CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
 FROM j GROUP BY q_id
 """
-    cases["ann_pq_recall_report"] = Case(_pq_recall, _pq_recall_oracle)
+    cases["ann_pq_recall_report"] = _case(_pq_recall, _pq_recall_oracle)
 
     # --- skew handling: salted plans are RESULT-IDENTICAL to the plain
     # plans, so the oracles are the unsalted SQL — proving the salt
     # never leaks into results.
-    def _q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
+    def _q_salted_agg(spark: SparkSession) -> DataFrame:
         out = skew.salted_agg(
-            v["events"],
+            spark.table("events"),
             "event_type",
             [
                 (F.count("*"), F.sum("n_events_p"), "n_events"),
@@ -3422,7 +3253,7 @@ FROM j GROUP BY q_id
             "event_type", "n_events", F.col("total_value").cast("double").alias("total_value")
         )
 
-    cases["events_salted_agg"] = Case(
+    cases["events_salted_agg"] = _case(
         _q_salted_agg,
         """
 SELECT event_type, COUNT(*) AS n_events,
@@ -3431,15 +3262,14 @@ FROM events GROUP BY event_type
 """,
     )
 
-    def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        dim = v["events"].select("event_type").distinct().withColumn(
+    def _q_salted_join(spark: SparkSession) -> DataFrame:
+        dim = spark.table("events").select("event_type").distinct().withColumn(
             "label", F.upper(F.col("event_type"))
         )
-        joined = skew.salted_broadcastable_join(v["events"], dim, "event_type")
+        joined = skew.salted_broadcastable_join(spark.table("events"), dim, "event_type")
         return joined.groupBy("label").agg(F.count("*").alias("n"))
 
-    cases["events_salted_join"] = Case(
+    cases["events_salted_join"] = _case(
         _q_salted_join,
         """
 SELECT upper(event_type) AS label, COUNT(*) AS n
@@ -3451,15 +3281,14 @@ GROUP BY upper(event_type)
     # --- multimodal: 1->N frame expansion (UDTF shape), aggregated to
     # an exactly-oracle-able per-media view (frame slicing is a pure
     # function of payload length)
-    def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        frames = multimodal.sample_frames(multimodal.documents_as_media(v["documents"]))
+    def _q_frame_sample(spark: SparkSession) -> DataFrame:
+        frames = multimodal.sample_frames(multimodal.documents_as_media(spark.table("documents")))
         return frames.groupBy("media_id").agg(
             F.count("*").alias("n_frames"),
             F.sum("frame_bytes").alias("total_frame_bytes"),
         )
 
-    cases["media_frame_sample"] = Case(
+    cases["media_frame_sample"] = _case(
         _q_frame_sample,
         """
 SELECT doc_id AS media_id,
@@ -3470,19 +3299,17 @@ FROM documents
     )
 
     # --- multimodal plumbing
-    cases["media_binary_stats"] = _pair_case(multimodal.media_stats_sql())
+    cases["media_binary_stats"] = _sql_case(*multimodal.media_stats_sql())
 
     # the Arrow feature-extraction kernel (the slot a real image/audio
     # decoder plugs into) with a FULL value oracle: the deterministic
     # byte-histogram features are recomputed per-codepoint in DuckDB —
     # equivalent because the synthetic corpus is ASCII (byte == codepoint);
     # the kernel itself is byte-true for arbitrary payloads.
-    def _feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        return multimodal.extract_features(multimodal.documents_as_media(v["documents"]))
-
-    cases["media_feature_extract"] = Case(
-        _feature_extract,
+    cases["media_feature_extract"] = _case(
+        lambda spark: multimodal.extract_features(
+            multimodal.documents_as_media(spark.table("documents"))
+        ),
         """
 SELECT doc_id AS media_id,
        'text/plain' AS media_type,
@@ -3496,13 +3323,12 @@ FROM documents
 """,
     )
 
-    def _q_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
+    def _q_chunk(spark: SparkSession) -> DataFrame:
         return multimodal.chunk_payload(
-            v["documents"].select(F.col("doc_id").alias("media_id"), "text")
+            spark.table("documents").select(F.col("doc_id").alias("media_id"), "text")
         )
 
-    cases["media_chunk_windows"] = Case(_q_chunk, multimodal.chunk_oracle_sql())
+    cases["media_chunk_windows"] = _case(_q_chunk, multimodal.chunk_oracle_sql())
 
     # --- data-quality expectation gate
     cases["dq_expectation_report"] = _bi_case(DQ_EXPECTATIONS_TEMPLATE)
@@ -3533,8 +3359,7 @@ FROM documents
             "'23 ip 10.0.', CAST(doc_id % 250 AS " + cast_str + "), '.7')"
         )
 
-    def _q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _q_scrub_pii(spark: SparkSession) -> DataFrame:
         injected = spark.sql(
             f"SELECT doc_id, {_scrub_inject('STRING')} AS text FROM documents"
         )
@@ -3562,29 +3387,21 @@ SELECT doc_id,
        {_m3} AS text_scrubbed
 FROM inj
 """
-    cases["privacy_scrub_pii"] = Case(_q_scrub_pii, _SCRUB_ORACLE)
+    cases["privacy_scrub_pii"] = _case(_q_scrub_pii, _SCRUB_ORACLE)
 
     # --- Gopher-style repetition quality (text family). Spark side:
     # per-doc metrics are a pure function of one document → single
     # zero-shuffle Arrow pass (repetition_quality_staged).
-    def _repetition_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.repetition_quality_staged(spark)
-
-    cases["text_repetition_quality"] = Case(
-        _repetition_staged, textops.oracle_repetition_quality()
+    cases["text_repetition_quality"] = _case(
+        textops.repetition_quality_staged, textops.oracle_repetition_quality()
     )
 
     # --- UNPIVOT relational shape: wide measures → long stats. Oracle:
     # ANSI UNPIVOT + GROUP BY (DuckDB materializes the long form only
     # logically). Spark path: unpivot_stats (module level) — one
     # map-side pass, no Expand; see its docstring.
-    def _q_unpivot_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = views(spark, sf_dir)
-        return unpivot_stats(v["lineitem"], _UNPIVOT_MEASURES)
-
-    cases["lineitem_unpivot_stats"] = Case(
-        _q_unpivot_stats,
+    cases["lineitem_unpivot_stats"] = _case(
+        lambda spark: unpivot_stats(spark.table("lineitem"), _UNPIVOT_MEASURES),
         """
 SELECT metric,
        count(*) AS n_rows,
@@ -3603,15 +3420,14 @@ ORDER BY metric
     # don't guess" discipline as ann_recall_report, for the text
     # plane. One aggregate over the lang-id projection; output bounded
     # by |langs|².
-    def _langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _langid_confusion(spark: SparkSession) -> DataFrame:
         return (
             textops.lang_id(spark.table("documents"))
             .groupBy("lang_true", "lang_pred")
             .agg(F.count("*").alias("n_docs"))
         )
 
-    cases["text_langid_confusion"] = Case(
+    cases["text_langid_confusion"] = _case(
         _langid_confusion,
         f"""
 SELECT lang_true, lang_pred, COUNT(*) AS n_docs
@@ -3628,9 +3444,8 @@ GROUP BY lang_true, lang_pred
     # of rows), so the corpus is scanned exactly ONCE — scalar
     # subqueries on the aggregate CTE would re-inline and re-scan it
     # (the plan audit showed 4 scans in that form).
-    cases["corpus_resample_plan"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["corpus_resample_plan"] = _bi_case(
+        """
 WITH m AS (
   SELECT source, SUM((n_chars + 3) {idiv} 4) AS toks
   FROM documents GROUP BY source
@@ -3642,8 +3457,7 @@ SELECT source,
             {idiv} (COUNT(*) OVER () * toks) AS BIGINT) AS repeat_ppm
 FROM m
 """,
-            idiv=("DIV", "//"),
-        )
+        idiv=("DIV", "//"),
     )
 
     # ---- robust outlier detection: median absolute deviation (MAD) —
@@ -3654,9 +3468,8 @@ FROM m
     # subtractions over identical operands (IEEE-identical). Shape:
     # inherently two passes (median, then deviations) + the flag agg;
     # the med/mad relations are event-type-sized → broadcast back.
-    cases["events_anomaly_mad"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["events_anomaly_mad"] = _bi_case(
+        """
 WITH med AS (
   SELECT event_type, {pd} AS med
   FROM events WHERE value IS NOT NULL GROUP BY event_type
@@ -3679,24 +3492,22 @@ JOIN mad d ON e.event_type = d.event_type
 WHERE e.value IS NOT NULL
 GROUP BY e.event_type, m.med, d.mad
 """,
-            pd=(
-                "percentile_disc(0.5) WITHIN GROUP (ORDER BY value)",
-                "quantile_disc(value, 0.5)",
-            ),
-            pd_adev=(
-                "percentile_disc(0.5) WITHIN GROUP (ORDER BY adev)",
-                "quantile_disc(adev, 0.5)",
-            ),
-        )
+        pd=(
+            "percentile_disc(0.5) WITHIN GROUP (ORDER BY value)",
+            "quantile_disc(value, 0.5)",
+        ),
+        pd_adev=(
+            "percentile_disc(0.5) WITHIN GROUP (ORDER BY adev)",
+            "quantile_disc(adev, 0.5)",
+        ),
     )
 
     # ---- doc-length histogram per language: log2 buckets via the
     # integer msb (length(bin(x)) — float log2 is libm-dependent at
     # exact powers of two). The corpus profile a packing/batching
     # planner reads first; output bounded by 64 × languages.
-    cases["corpus_length_histogram"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["corpus_length_histogram"] = _bi_case(
+        """
 SELECT lang,
        length(bin(n_chars)) AS len_msb,
        COUNT(*) AS n_docs,
@@ -3707,7 +3518,6 @@ FROM documents
 WHERE n_chars > 0
 GROUP BY lang, length(bin(n_chars))
 """
-        )
     )
 
     # ---- corpus-frequency bigram LM score (CCNet-style quality filter
@@ -3715,20 +3525,15 @@ GROUP BY lang, length(bin(n_chars))
     # Spark side runs over the STAGED bigram relation (the exploded CTE
     # is consumed twice and Spark inlines CTEs); oracle stays the
     # single-statement SQL.
-    def _bigram_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.bigram_lm_score_staged(spark)
-
-    cases["text_bigram_lm_score"] = Case(_bigram_staged, textops.bigram_lm_score_sql())
+    cases["text_bigram_lm_score"] = _case(textops.bigram_lm_score_staged, textops.bigram_lm_score_sql())
 
     # ---- cross-doc exact-substring dedup at 8-token chunk granularity
     # (ExactSubstr proxy; see dedup.chunk_dedup_sql). Staged Spark path
     # for the same double-consumption reason.
-    def _chunk_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.chunk_dedup_staged(spark, 8)
-
-    cases["dedup_chunk_exact"] = Case(_chunk_staged, dedup.chunk_dedup_sql(8))
+    cases["dedup_chunk_exact"] = _case(
+        lambda spark: dedup.chunk_dedup_staged(spark, 8),
+        dedup.chunk_dedup_sql(8),
+    )
 
     # ---- hopping (sliding) time windows: Spark's native F.window with
     # a slide — each event lands in windowDuration/slide = 2 windows.
@@ -3739,8 +3544,7 @@ GROUP BY lang, length(bin(n_chars))
     # ONE hash agg keyed (window, type) — grain is windows × types, far
     # below event count; partial aggregation absorbs the 2× expansion
     # before the shuffle.
-    def _hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _hopping(spark: SparkSession) -> DataFrame:
         e = spark.table("events").where("ts_us IS NOT NULL")
         return (
             e.groupBy(
@@ -3759,7 +3563,7 @@ GROUP BY lang, length(bin(n_chars))
             )
         )
 
-    cases["events_hopping_window"] = Case(
+    cases["events_hopping_window"] = _case(
         _hopping,
         """
 WITH ev AS (
@@ -3779,9 +3583,8 @@ FROM w GROUP BY win_start_us, event_type
     # (user, hour) — the dedup-adjacent sampling gate a firehose
     # ingestion applies before the expensive pipeline stages. One
     # window over (user, hour); deterministic via the event_id tiebreak.
-    cases["events_user_rate_cap"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["events_user_rate_cap"] = _bi_case(
+        """
 SELECT user_id, event_id, ts_us, rn
 FROM (
   SELECT user_id, event_id, {ts_us} AS ts_us,
@@ -3793,17 +3596,15 @@ FROM (
 ) t
 WHERE rn <= 5
 """,
-            ts_us=TS_US,
-        )
+        ts_us=TS_US,
     )
 
     # ---- l-diversity audit: k-anonymity's companion — a QI group is
     # safe only if the SENSITIVE attribute is diverse within it.
     # QI = (nation, acctbal band), sensitive = market segment. One hash
     # agg with a distinct-count; output bounded by the QI domain.
-    cases["privacy_l_diversity"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["privacy_l_diversity"] = _bi_case(
+        """
 SELECT c_nationkey,
        CAST(FLOOR(c_acctbal / 1000) AS BIGINT) AS acct_band,
        COUNT(*) AS grp_n,
@@ -3812,7 +3613,6 @@ SELECT c_nationkey,
 FROM customer
 GROUP BY c_nationkey, CAST(FLOOR(c_acctbal / 1000) AS BIGINT)
 """
-        )
     )
 
     # ---- shard plan: deterministic hash-mod shard assignment + per-
@@ -3821,9 +3621,8 @@ GROUP BY c_nationkey, CAST(FLOOR(c_acctbal / 1000) AS BIGINT)
     # a pure function of doc_id, reproducible across runs and engines.
     # One scan + one 64-group agg; the balance check (max_doc_tokens)
     # rides the same aggregate.
-    cases["corpus_shard_plan"] = _sql_case(
-        *P.bi_sql(
-            """
+    cases["corpus_shard_plan"] = _bi_case(
+        """
 WITH sh AS (
   SELECT ((doc_id * 2654435761) % 1000000007) % 64 AS shard,
          n_chars,
@@ -3837,8 +3636,7 @@ SELECT shard,
        MAX(tok_est) AS max_doc_tokens
 FROM sh GROUP BY shard
 """,
-            idiv=("DIV", "//"),
-        )
+        idiv=("DIV", "//"),
     )
 
     # ---- binaryFile source: Spark's ingestion path for raw media
@@ -3849,10 +3647,8 @@ FROM sh GROUP BY shard
     # path→key parse. At 100 TB this is the entry point for image/
     # audio/video archives: one task per file group, no driver hop.
     # Oracle: byte length + poly hash of the same text from parquet.
-    def _binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _binaryfile(spark: SparkSession) -> DataFrame:
         import os
-
-        views(spark, sf_dir)
 
         def write(path: str) -> None:
             def _write(rows):
@@ -3879,7 +3675,7 @@ FROM sh GROUP BY shard
             )
         )
 
-    cases["src_binaryfile_ingest"] = Case(
+    cases["src_binaryfile_ingest"] = _case(
         _binaryfile,
         f"""
 SELECT doc_id,
@@ -3894,12 +3690,11 @@ FROM documents WHERE text IS NOT NULL
     # round-tripping the documents table through the custom etl_jsonl
     # format — partition-per-file parallel read, explicit schema (no
     # inference scan), value-hashed against the parquet originals.
-    def _python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _python_datasource(spark: SparkSession) -> DataFrame:
         import os
 
         from ..sources.pydatasource import JsonLinesDataSource
 
-        views(spark, sf_dir)
         path = _written_once(
             spark, "pyds", "documents",
             lambda p: spark.table("documents").write.mode("overwrite").json(
@@ -3918,49 +3713,37 @@ FROM documents WHERE text IS NOT NULL
             .load(os.path.join(path, "documents.json"))
         )
 
-    cases["src_python_datasource"] = Case(
+    cases["src_python_datasource"] = _case(
         _python_datasource,
         "SELECT doc_id, text, lang, source, n_chars FROM documents",
     )
 
     # --- event-sequence mining: first-order Markov transition matrix
     # and frequent day-start paths (see asof.py for the scale notes).
-    cases["events_markov_transitions"] = _pair_case(asof.markov_transitions_sql())
-    cases["events_top_paths"] = _pair_case(asof.top_paths_sql())
+    cases["events_markov_transitions"] = _sql_case(*asof.markov_transitions_sql())
+    cases["events_top_paths"] = _sql_case(*asof.top_paths_sql())
 
     # --- cross-source duplicate overlap matrix: Arrow-kernel hash on
     # the Spark side, SQL-lambda hash in the oracle (same function).
-    def _cross_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.cross_source_overlap_staged(spark)
-
-    cases["corpus_cross_source_overlap"] = Case(
-        _cross_overlap, corpus.cross_source_overlap_sql()
+    cases["corpus_cross_source_overlap"] = _case(
+        corpus.cross_source_overlap_staged, corpus.cross_source_overlap_sql()
     )
 
     # --- Zipf rank-frequency health profile per source
-    cases["text_zipf_profile"] = _pair_case(textops.zipf_bucket_profile_sql())
+    cases["text_zipf_profile"] = _sql_case(*textops.zipf_bucket_profile_sql())
 
     # --- temporal mix-shift monitor over the event stream
-    cases["events_distribution_drift"] = _pair_case(sketch.distribution_drift_sql())
+    cases["events_distribution_drift"] = _sql_case(*sketch.distribution_drift_sql())
 
     # --- exact-dedup survivorship by source (keeper = min doc_id);
     # Spark path carries the keeper with ONE window over h, no join.
-    def _survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.dedup_survivorship_staged(spark)
-
-    cases["corpus_dedup_survivorship"] = Case(
-        _survivorship, corpus.dedup_survivorship_sql()
+    cases["corpus_dedup_survivorship"] = _case(
+        corpus.dedup_survivorship_staged, corpus.dedup_survivorship_sql()
     )
 
     # --- marginal shingle novelty per document (doc_id order); Spark
     # path shares the dedup family's staged Arrow hashset relation
-    def _novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.ngram_novelty_staged(spark)
-
-    cases["text_ngram_novelty"] = Case(_novelty, textops.ngram_novelty_sql())
+    cases["text_ngram_novelty"] = _case(textops.ngram_novelty_staged, textops.ngram_novelty_sql())
 
     # --- inter-order gap distribution: LAG over (custkey, date) — one
     # shuffle on o_custkey, then a day-gap histogram whose output is
@@ -3993,12 +3776,9 @@ GROUP BY {daydiff}
     # its own scored queries. This keeps the one quadratic-by-design
     # relation out of the headline bench at sf >= 1 (18.8 s exact ->
     # pair mass / 8 at the sf1.0 twin) without weakening any oracle.
-    def _hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.hamming_knn_graph_staged(spark, src_modulus=8)
-
-    cases["emb_hamming_knn_graph"] = Case(
-        _hamming_knn, similarity.hamming_knn_graph_sql(src_modulus=8)
+    cases["emb_hamming_knn_graph"] = _case(
+        lambda spark: similarity.hamming_knn_graph_staged(spark, src_modulus=8),
+        similarity.hamming_knn_graph_sql(src_modulus=8),
     )
 
     # --- hot-cell GUARDED twin of the graph above (r8, VERDICT r7 #1):
@@ -4011,12 +3791,9 @@ GROUP BY {daydiff}
     # identity-when-cold is proved by the planted-skew pytest and the
     # report's recall_ppm column. Unsampled: the guarded pair mass is
     # ~n*cell_cap per label, never quadratic.
-    def _knn_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.hamming_knn_guarded_staged(spark, cell_cap=40)
-
-    cases["emb_knn_guarded_graph"] = Case(
-        _knn_guarded, similarity.hamming_knn_guarded_sql(cell_cap=40)
+    cases["emb_knn_guarded_graph"] = _case(
+        lambda spark: similarity.hamming_knn_guarded_staged(spark, cell_cap=40),
+        similarity.hamming_knn_guarded_sql(cell_cap=40),
     )
 
     # --- the guard's gauge report: per-label sub-cell count, largest
@@ -4029,13 +3806,12 @@ GROUP BY {daydiff}
     # cluster structure; on clusterable real embeddings the same split
     # follows the clusters. That data-dependence is exactly what the
     # report measures ("measure, don't guess").
-    def _knn_guard_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _knn_guard_report(spark: SparkSession) -> DataFrame:
         return similarity.knn_cell_guard_report_staged(
             spark, cell_cap=40, src_modulus=8
         )
 
-    cases["emb_knn_cell_guard_report"] = Case(
+    cases["emb_knn_cell_guard_report"] = _case(
         _knn_guard_report,
         similarity.knn_cell_guard_report_sql(cell_cap=40, src_modulus=8),
     )
@@ -4047,74 +3823,54 @@ GROUP BY {daydiff}
     # clears the corpus's bar. The cap-independent seed/count bases are
     # shared across the swept chains; per-cap summaries are 1-row
     # relations, so the final combines are broadcast-trivial.
-    def _guard_cap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.knn_guard_cap_sweep_staged(spark, src_modulus=8)
-
-    cases["emb_guard_cap_sweep"] = Case(
-        _guard_cap_sweep, similarity.knn_guard_cap_sweep_sql(src_modulus=8)
+    cases["emb_guard_cap_sweep"] = _case(
+        lambda spark: similarity.knn_guard_cap_sweep_staged(spark, src_modulus=8),
+        similarity.knn_guard_cap_sweep_sql(src_modulus=8),
     )
 
     # --- per-source dedup FUNNEL (exact -> simhash near-dup over the
     # exact survivors, CCNet/RefinedWeb stage order) with the removed
     # mass surfaced per stage. Rides the shared staged text-hash and
     # hashed-token relations; adds only hash aggs + O(sources) tails.
-    def _dedup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.dedup_cascade_staged(spark)
-
-    cases["corpus_dedup_cascade"] = Case(
-        _dedup_cascade, dedup.dedup_cascade_sql()
+    cases["corpus_dedup_cascade"] = _case(
+        dedup.dedup_cascade_staged, dedup.dedup_cascade_sql()
     )
 
     # --- trailing-baseline burst detection over hourly counts
-    cases["events_burst_windows"] = _pair_case(sketch.burst_windows_sql())
+    cases["events_burst_windows"] = _sql_case(*sketch.burst_windows_sql())
 
     # --- bounded 2-core peel of the near-dup pair graph (shares the
     # staged pairs view with clustering and the triangle census)
-    def _kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _kcore(spark: SparkSession) -> DataFrame:
         pairs = spark.table(graph.staged_pairs_view(spark, tau=0.8))
         return graph.kcore_peel(pairs)
 
-    cases["graph_kcore"] = Case(_kcore, graph.kcore_oracle_sql(tau=0.8))
+    cases["graph_kcore"] = _case(_kcore, graph.kcore_oracle_sql(tau=0.8))
 
     # --- shared-prefix boilerplate candidates
-    cases["text_boilerplate_prefixes"] = _pair_case(textops.boilerplate_prefixes_sql())
+    cases["text_boilerplate_prefixes"] = _sql_case(*textops.boilerplate_prefixes_sql())
 
     # --- adjacent-word PMI collocations; Spark path reuses the staged
     # bigram relation (bigram-LM) and token relation (tf-idf family)
-    def _pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.pmi_collocations_staged(spark)
-
-    cases["text_pmi_collocations"] = Case(_pmi, textops.pmi_collocations_sql())
+    cases["text_pmi_collocations"] = _case(textops.pmi_collocations_staged, textops.pmi_collocations_sql())
 
     # --- single-changepoint scan per event type (binary-segmentation
     # step over running decimal sums — O(n), one shuffle)
-    cases["events_changepoint_scan"] = _pair_case(sketch.changepoint_scan_sql())
+    cases["events_changepoint_scan"] = _sql_case(*sketch.changepoint_scan_sql())
 
     # --- watermark late-data audit: per-hour share of rows a
     # delay-bounded watermark would drop (per-ingest-shard running max)
-    cases["events_late_data_audit"] = _pair_case(sketch.late_data_audit_sql())
+    cases["events_late_data_audit"] = _sql_case(*sketch.late_data_audit_sql())
 
     # --- hour-of-day seasonal-baseline residual anomalies
-    cases["events_seasonal_residuals"] = _pair_case(sketch.seasonal_residuals_sql())
+    cases["events_seasonal_residuals"] = _sql_case(*sketch.seasonal_residuals_sql())
 
     # --- shuffle-key skew report (the salting pre-flight gauge)
-    def _key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return profile.key_skew_staged(spark)
-
-    cases["profile_key_skew"] = Case(_key_skew, profile.key_skew_report_sql())
+    cases["profile_key_skew"] = _case(profile.key_skew_staged, profile.key_skew_report_sql())
 
     # --- minhash-LSH band-bucket cost audit (shares the staged
     # hashset relation with the whole dedup family)
-    def _lsh_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.lsh_cost_audit_staged(spark)
-
-    cases["dedup_lsh_cost_audit"] = Case(_lsh_audit, dedup.lsh_cost_audit_sql())
+    cases["dedup_lsh_cost_audit"] = _case(dedup.lsh_cost_audit_staged, dedup.lsh_cost_audit_sql())
 
     # ---- banding-parameter sweep over the SAME 16-minhash signature:
     # candidate mass + measured recall/precision vs the exact PPJoin
@@ -4128,12 +3884,9 @@ GROUP BY {daydiff}
     # (the r8 three-point bench measured the full-truth form at
     # exponent 1.5 per decade — truth-side PPJoin mass, not the
     # report itself); the mass/dropped columns stay closed-form exact.
-    def _band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.lsh_band_tuning_staged(spark, src_modulus=8)
-
-    cases["dedup_lsh_band_tuning"] = Case(
-        _band_tuning, dedup.lsh_band_tuning_sql(src_modulus=8)
+    cases["dedup_lsh_band_tuning"] = _case(
+        lambda spark: dedup.lsh_band_tuning_staged(spark, src_modulus=8),
+        dedup.lsh_band_tuning_sql(src_modulus=8),
     )
 
     # --- duplicate-mass-vs-threshold curve: PPJoin once at a LOW tau
@@ -4164,12 +3917,11 @@ SELECT bucket, CAST(bucket * 50000 AS BIGINT) AS tau_ppm_lo,
 FROM g
 """
 
-    def _threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _threshold_curve(spark: SparkSession) -> DataFrame:
         pv = graph.staged_pairs_view(spark, tau=0.6)
         return spark.sql(_CURVE_TAIL.format(pairs=pv))
 
-    cases["dedup_threshold_curve"] = Case(
+    cases["dedup_threshold_curve"] = _case(
         _threshold_curve,
         _CURVE_TAIL.format(pairs=f"({dedup.ngram_jaccard_sql(0.6)}) pp"),
     )
@@ -4177,44 +3929,32 @@ FROM g
     # --- overlapping token-window chunk plan (RAG indexing / long-doc
     # training windows): shuffle-free explode of one per-doc chunk
     # array, Arrow-hashed chunk text (1.5x the interpreted SQL fold)
-    def _chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.chunk_overlap_df(spark)
-
-    cases["text_chunk_overlap"] = Case(_chunk_overlap, textops.chunk_overlap_sql())
+    cases["text_chunk_overlap"] = _case(textops.chunk_overlap_df, textops.chunk_overlap_sql())
 
     # --- Gopher-style quality-rule report: one integer-exact scan,
     # zero joins, |sources| output rows
-    cases["text_gopher_rules"] = _pair_case(textops.gopher_rules_sql())
+    cases["text_gopher_rules"] = _sql_case(*textops.gopher_rules_sql())
 
     # --- hashed-feature linear scorer (fastText shape): broadcast
     # weight relation joined to the SHARED staged token relation
     # (2.6x the self-contained statement, which re-hashes the corpus)
-    def _hashed_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.hashed_linear_score_staged(spark)
-
-    cases["text_hashed_linear_score"] = Case(
-        _hashed_linear, textops.hashed_linear_score_sql()
+    cases["text_hashed_linear_score"] = _case(
+        textops.hashed_linear_score_staged, textops.hashed_linear_score_sql()
     )
 
     # --- pre-flight join-cardinality estimate (dim-fact + self-join
     # quadratic-mass) from per-key counts, without running the join
-    cases["profile_join_size_estimate"] = _pair_case(profile.join_size_estimate_sql())
+    cases["profile_join_size_estimate"] = _sql_case(*profile.join_size_estimate_sql())
 
     # --- exact equi-depth range-partition boundaries (NTILE over the
     # (key, uid) total order) — the repartitionByRange planning gauge
-    def _range_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return profile.range_boundaries_staged(spark)
-
-    cases["profile_range_boundaries"] = Case(
-        _range_boundaries, profile.range_boundaries_sql()
+    cases["profile_range_boundaries"] = _case(
+        profile.range_boundaries_staged, profile.range_boundaries_sql()
     )
 
     # --- length-weighted deterministic Bernoulli sample (token-uniform
     # downsampling): pure row filter, no shuffle
-    cases["corpus_weighted_sample"] = _pair_case(corpus.weighted_sample_sql())
+    cases["corpus_weighted_sample"] = _sql_case(*corpus.weighted_sample_sql())
 
     # Schema evolution across parquet batches: an early batch lacks
     # columns later batches carry; mergeSchema=true unions the file
@@ -4222,10 +3962,8 @@ FROM g
     # proves both the union (row counts) and the NULL backfill
     # (n_with_source counts only the evolved batch). At 100 TB schema
     # drift across ingest epochs is the norm, not the exception.
-    def _schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _schema_evolution(spark: SparkSession) -> DataFrame:
         import os
-
-        views(spark, sf_dir)
 
         def write(path: str) -> None:
             docs = spark.table("documents")
@@ -4246,7 +3984,7 @@ FROM g
             F.sum("n_chars").alias("total_chars"),
         )
 
-    cases["src_schema_evolution"] = Case(
+    cases["src_schema_evolution"] = _case(
         _schema_evolution,
         """
 SELECT lang, COUNT(*) AS n_rows,
@@ -4263,10 +4001,8 @@ FROM documents GROUP BY lang
     # inserts (keys %103 shifted by 10M) — then the query reads the
     # merged snapshot back. The oracle recomputes the merged state
     # set-algebraically from the source table.
-    def _merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _merge_upsert(spark: SparkSession) -> DataFrame:
         from ..sources import snapshots as S
-
-        views(spark, sf_dir)
 
         def write(path: str) -> None:
             o = spark.table("orders").select("o_orderkey", "o_custkey", "o_totalprice")
@@ -4291,7 +4027,7 @@ FROM documents GROUP BY lang
             "o_orderkey", "o_custkey", "o_totalprice"
         )
 
-    cases["snap_merge_upsert"] = Case(
+    cases["snap_merge_upsert"] = _case(
         _merge_upsert,
         """
 SELECT o_orderkey, o_custkey, o_totalprice FROM orders
@@ -4308,11 +4044,7 @@ WHERE o_orderkey % 103 = 0
     # --- winnowing fingerprint selection (MOSS): sliding-window min
     # over k-gram hashes — position-robust local sampling; staged
     # gram-position relation (SQL form is O(n^2)/doc, 15.9 s -> 0.7 s)
-    def _winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.winnowing_staged(spark)
-
-    cases["text_winnowing_fingerprints"] = Case(_winnow, textops.winnowing_sql())
+    cases["text_winnowing_fingerprints"] = _case(textops.winnowing_staged, textops.winnowing_sql())
 
     # --- seasonal-naive forecast backtest: forecast(h) = count(h-24),
     # per-type MAE/bias in ppm over evaluable hours — the baseline
@@ -4340,41 +4072,31 @@ GROUP BY a.event_type
 
     # --- RAKE keyword extraction (stopword-segmented phrase mining,
     # integer degree/frequency scoring, corpus top-k)
-    def _rake(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.rake_keywords_staged(spark)
-
-    cases["text_rake_keywords"] = Case(_rake, textops.rake_keywords_sql())
+    cases["text_rake_keywords"] = _case(textops.rake_keywords_staged, textops.rake_keywords_sql())
 
     # --- MOSS copy-pair report over shared winnowing fingerprints
     # (posting-capped fingerprint-keyed join, never all-pairs)
-    def _winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.winnowing_pairs_staged(spark)
-
-    cases["dedup_winnowing_pairs"] = Case(
-        _winnow_pairs, textops.winnowing_pairs_sql()
+    cases["dedup_winnowing_pairs"] = _case(
+        textops.winnowing_pairs_staged, textops.winnowing_pairs_sql()
     )
 
     # --- byte-level image dimension sniffing (PNG IHDR fixed offsets,
     # JPEG marker-stream walk) over synthesized REAL header bytes —
     # honest structural decode without codec libraries; the oracle
     # predicts dimensions arithmetically from the injection rule
-    def _image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _image_dims(spark: SparkSession) -> DataFrame:
         media = multimodal.synthesize_image_headers(spark.table("documents"))
         return multimodal.sniff_image_dims(media)
 
-    cases["media_image_dims_sniff"] = Case(_image_dims, multimodal.IMAGE_DIMS_ORACLE)
+    cases["media_image_dims_sniff"] = _case(_image_dims, multimodal.IMAGE_DIMS_ORACLE)
 
     # --- WAV RIFF metadata walk (little-endian fmt/data chunks) over
     # synthesized byte-exact headers — the audio twin
-    def _audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _audio_meta(spark: SparkSession) -> DataFrame:
         media = multimodal.synthesize_wav_headers(spark.table("documents"))
         return multimodal.sniff_audio_meta(media)
 
-    cases["media_audio_meta_sniff"] = Case(_audio_meta, multimodal.AUDIO_META_ORACLE)
+    cases["media_audio_meta_sniff"] = _case(_audio_meta, multimodal.AUDIO_META_ORACLE)
 
     # --- windowed RMS loudness over DECODED PCM (silence gating /
     # loudness-normalization prep): Spark synthesizes REAL mono-16-bit
@@ -4384,34 +4106,31 @@ GROUP BY a.event_type
     # arithmetically — the generate→encode→decode→aggregate round trip
     # is value-checked end to end (Σs² integer-exact; rms is one IEEE
     # sqrt). Output is windows-sized, never samples-sized.
-    def _wav_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _wav_rms(spark: SparkSession) -> DataFrame:
         media = multimodal.synthesize_wav_pcm(spark.table("documents"))
         return multimodal.wav_rms_windows(media)
 
-    cases["media_wav_rms_windows"] = Case(_wav_rms, multimodal.WAV_RMS_ORACLE)
+    cases["media_wav_rms_windows"] = _case(_wav_rms, multimodal.WAV_RMS_ORACLE)
 
     # --- MP4 box walk (ftyp validation, moov descent, mvhd v0 fields)
     # over synthesized ISO-BMFF bytes — the video leg of the triple
-    def _video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _video_meta(spark: SparkSession) -> DataFrame:
         media = multimodal.synthesize_mp4_headers(spark.table("documents"))
         return multimodal.sniff_video_meta(media)
 
-    cases["media_video_meta_sniff"] = Case(_video_meta, multimodal.VIDEO_META_ORACLE)
+    cases["media_video_meta_sniff"] = _case(_video_meta, multimodal.VIDEO_META_ORACLE)
 
     # --- PIL-free nearest-neighbor resize over synthesized raw-RGB
     # payloads (pure numpy under mapInPandas), probed on ACTUAL resized
     # bytes; the oracle recomputes every probe arithmetically from the
     # pixel function + the pinned floor index mapping — the full
     # generate→resize→probe pipeline is value-checked end to end
-    def _media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _media_resize(spark: SparkSession) -> DataFrame:
         raw = multimodal.synthesize_rgb_images(spark.table("documents"))
         resized = multimodal.resize_nearest(raw, out_w=10, out_h=6)
         return multimodal.probe_resized(resized)
 
-    cases["media_resize"] = Case(_media_resize, multimodal.resize_probe_oracle(10, 6))
+    cases["media_resize"] = _case(_media_resize, multimodal.resize_probe_oracle(10, 6))
 
     # --- key reconciliation across systems via FULL OUTER join (the
     # migration-validation staple: which keys exist where, with row
@@ -4424,82 +4143,59 @@ GROUP BY a.event_type
 
     # --- minhash estimator-quality audit: signature-agreement Jaccard
     # estimate vs exact hashset Jaccard per LSH candidate pair
-    def _minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.minhash_estimate_staged(spark)
-
-    cases["dedup_minhash_estimate_audit"] = Case(
-        _minhash_est, dedup.minhash_estimate_sql()
+    cases["dedup_minhash_estimate_audit"] = _case(
+        dedup.minhash_estimate_staged, dedup.minhash_estimate_sql()
     )
 
     # --- trailing-window distinct via HLL register merging (map-side
     # 1->W fan-out of per-hour registers, no raw rescans per window)
-    cases["sketch_hll_sliding_distinct"] = _pair_case(sketch.hll_sliding_sql())
+    cases["sketch_hll_sliding_distinct"] = _sql_case(*sketch.hll_sliding_sql())
 
     # --- filter-attribution waterfall (first failing rule per doc —
     # "which filter is eating my corpus"), one integer-exact scan
-    cases["corpus_filter_waterfall"] = _pair_case(textops.filter_waterfall_sql())
+    cases["corpus_filter_waterfall"] = _sql_case(*textops.filter_waterfall_sql())
 
     # --- deterministic A/B lift report (hash-parity arms, per-user
     # pre-aggregate, 2-row rollup + broadcast lift join)
-    cases["events_ab_lift"] = _pair_case(sketch.ab_lift_sql())
+    cases["events_ab_lift"] = _sql_case(*sketch.ab_lift_sql())
 
     # --- per-type skewness/kurtosis from exact shifted moments (the
     # heavy-tail gauge between z-score and MAD methods)
-    cases["events_moment_stats"] = _pair_case(sketch.moment_stats_sql())
+    cases["events_moment_stats"] = _sql_case(*sketch.moment_stats_sql())
 
     # --- pre-flight GROUP BY cardinality gauge (NDV-product estimate
     # vs actual distinct combinations, fill ppm)
-    cases["profile_group_cardinality"] = _pair_case(profile.group_cardinality_sql())
+    cases["profile_group_cardinality"] = _sql_case(*profile.group_cardinality_sql())
 
     # --- salted two-phase domain quota: mega-domain window salting,
     # hash-identical to the unsalted oracle (salt never leaks)
-    cases["corpus_domain_quota_salted"] = Case(
-        _sql_case(corpus.domain_quota_salted_sql(), "").spark,
-        corpus.domain_quota_sql()[1],
+    cases["corpus_domain_quota_salted"] = _sql_case(
+        corpus.domain_quota_salted_sql(), corpus.domain_quota_sql()[1]
     )
 
     # --- BPE merge training (3 unrolled rounds over the word-count
     # vocabulary; staged round loop, elected pair = scalar probe)
-    def _bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.bpe_merges_staged(spark)
-
-    cases["text_bpe_merges"] = Case(_bpe, textops.bpe_merges_sql())
+    cases["text_bpe_merges"] = _case(textops.bpe_merges_staged, textops.bpe_merges_sql())
 
     # --- apply the learned merges: TRUE BPE token counts per document
     # (closes round-4 VERDICT #3 — the budget planners ran on the
     # ceil(len/4) estimate), plus the per-language budget planner on
     # true counts with the estimate-vs-actual drift column
-    def _bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.bpe_encode_staged(spark)
+    cases["text_bpe_encode"] = _case(textops.bpe_encode_staged, textops.oracle_bpe_encode())
 
-    cases["text_bpe_encode"] = Case(_bpe_encode, textops.oracle_bpe_encode())
-
-    def _bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.bpe_token_budget_staged(spark)
-
-    cases["corpus_token_budget_bpe"] = Case(
-        _bpe_budget, textops.oracle_bpe_token_budget()
+    cases["corpus_token_budget_bpe"] = _case(
+        textops.bpe_token_budget_staged, textops.oracle_bpe_token_budget()
     )
 
     # --- incremental IVF maintenance (round-4 VERDICT #5): persisted
     # centroid + assignment snapshot tables, two incremental batch
     # ticks, churn-vs-full-rebuild drift gauge; the oracle is the
     # stateless single-statement unroll of the same computation
-    def _ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        import pyarrow.parquet as pq
-
-        views(spark, sf_dir)
-        n = pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet")).metadata.num_rows
-        big = "BIGINT" if n < similarity.KM_BIGINT_SAFE_ROWS else None
+    def _ivf_incremental(spark: SparkSession) -> DataFrame:
+        big = "BIGINT" if _embedding_rows(spark) < similarity.KM_BIGINT_SAFE_ROWS else None
         return similarity.ivf_incremental_staged(spark, big_t=big)
 
-    cases["ann_ivf_incremental"] = Case(
+    cases["ann_ivf_incremental"] = _case(
         _ivf_incremental, similarity.ivf_incremental_drift_sql()
     )
 
@@ -4509,44 +4205,28 @@ GROUP BY a.event_type
     # Spark side: staged Lloyd relations (one corpus explode per
     # session shared with emb_kmeans/dedup_semantic; the single-
     # statement chain re-derived the cascade 8x); oracle unchanged.
-    def _q_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.centroid_outliers_staged(spark)
-
-    cases["emb_centroid_outliers"] = Case(
-        _q_centroid_outliers, similarity.centroid_outliers_sql()
+    cases["emb_centroid_outliers"] = _case(
+        similarity.centroid_outliers_staged, similarity.centroid_outliers_sql()
     )
 
     # --- train/test leakage through near-duplicates: clusters from the
     # shared staged pair relation, split labels from the production
     # splitter's own bucket function
-    def _split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.split_leakage_staged(spark)
-
-    cases["corpus_split_leakage"] = Case(_split_leakage, corpus.split_leakage_sql())
+    cases["corpus_split_leakage"] = _case(corpus.split_leakage_staged, corpus.split_leakage_sql())
 
     # --- per-source quota (domain balancing): windowed keep-longest
     # cap with survival report
-    cases["corpus_domain_quota"] = _pair_case(corpus.domain_quota_sql())
+    cases["corpus_domain_quota"] = _sql_case(*corpus.domain_quota_sql())
 
     # --- DSIR importance weights (arXiv:2302.03169): hashed-unigram
     # target/raw bucket model (≤1024 rows, broadcast), exact integer
     # ratio arithmetic, per-doc mean importance in ppm
-    def _dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.dsir_weights_staged(spark)
-
-    cases["corpus_dsir_weights"] = Case(_dsir_weights, corpus.oracle_dsir_weights())
+    cases["corpus_dsir_weights"] = _case(corpus.dsir_weights_staged, corpus.oracle_dsir_weights())
 
     # --- DSIR resampling quota: per-source token budget proportional
     # to importance-weighted token mass (target-aware mixing, vs the
     # target-blind sqrt-temperature planners)
-    def _dsir_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return corpus.dsir_quota_staged(spark)
-
-    cases["corpus_dsir_quota"] = Case(_dsir_quota, corpus.oracle_dsir_quota())
+    cases["corpus_dsir_quota"] = _case(corpus.dsir_quota_staged, corpus.oracle_dsir_quota())
 
     # --- watermark-lateness audit for a batched-per-entity replay —
     # THE input to choosing withWatermark() before streaming a bulk
@@ -4748,65 +4428,49 @@ GROUP BY source
     # 4x16-bit signature words, pigeonhole-exact within Hamming radius
     # 3, candidate-only bit_count ranking. Shares the staged signature
     # relation with emb_hamming_knn_graph.
-    def _ham_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.hamming_banded_staged(spark, 3)
-
-    cases["ann_hamming_banded"] = Case(
-        _ham_banded, similarity.hamming_banded_sql(3)
+    cases["ann_hamming_banded"] = _case(
+        lambda spark: similarity.hamming_banded_staged(spark, 3),
+        similarity.hamming_banded_sql(3),
     )
 
     # --- measured recall of the banded path vs the exact global top-k
     # (sampled-query protocol), split at the pigeonhole boundary: the
     # within_radius3 row is a provable 100% whenever present, the
     # beyond row is the honest banding trade
-    def _ham_banded_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return similarity.hamming_banded_recall_staged(spark, 3, 64)
-
-    cases["ann_hamming_banded_recall"] = Case(
-        _ham_banded_recall, similarity.hamming_banded_recall_sql(3, 64)
+    cases["ann_hamming_banded_recall"] = _case(
+        lambda spark: similarity.hamming_banded_recall_staged(spark, 3, 64),
+        similarity.hamming_banded_recall_sql(3, 64),
     )
 
     # --- TRUE ExactSubstr spans (Lee et al.): maximal duplicated
     # k=8-token spans from the position-indexed gram relation —
     # the overlapping upgrade of dedup_chunk_exact's chunk proxy
-    def _ess_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.exact_substr_spans_staged(spark, 8)
-
-    cases["dedup_exact_substr_spans"] = Case(
-        _ess_spans, dedup.exact_substr_spans_oracle(8)
+    cases["dedup_exact_substr_spans"] = _case(
+        lambda spark: dedup.exact_substr_spans_staged(spark, 8),
+        dedup.exact_substr_spans_oracle(8),
     )
 
     # --- the removal action on those spans: per-doc duplicated-token
     # mass from MERGED token intervals, tokens kept after cutting
-    def _ess_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return dedup.exact_substr_removal_staged(spark, 8)
-
-    cases["dedup_exact_substr_removal"] = Case(
-        _ess_removal, dedup.exact_substr_removal_oracle(8)
+    cases["dedup_exact_substr_removal"] = _case(
+        lambda spark: dedup.exact_substr_removal_staged(spark, 8),
+        dedup.exact_substr_removal_oracle(8),
     )
 
     # --- tokenizer fertility per language on TRUE trained-BPE counts
     # (tokens/1000 words + tokens/100k chars)
-    def _bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return textops.bpe_fertility_staged(spark)
-
-    cases["text_bpe_fertility"] = Case(
-        _bpe_fertility, textops.oracle_bpe_fertility()
+    cases["text_bpe_fertility"] = _case(
+        textops.bpe_fertility_staged, textops.oracle_bpe_fertility()
     )
 
     # --- held-out bigram coverage per language (train/val vocabulary
     # overlap — the OOV-noise check beside corpus_split_leakage)
-    cases["text_ngram_coverage"] = _pair_case(textops.ngram_coverage_sql())
+    cases["text_ngram_coverage"] = _sql_case(*textops.ngram_coverage_sql())
 
     # --- per-dimension embedding moments for whitening/PCA prep:
     # integer-exact count/sum/sumsq on the 1e-4 grid, wide-decimal
     # variance numerator, deterministic variance rank
-    cases["emb_whitening_stats"] = _pair_case(similarity.whitening_stats_sql())
+    cases["emb_whitening_stats"] = _sql_case(*similarity.whitening_stats_sql())
 
     # --- CCNet-style sentence-level boilerplate report (Wenzek et al.
     # 2020 dedupe repeated paragraphs corpus-wide before LM filtering;
@@ -4861,10 +4525,8 @@ GROUP BY source
     # source. All sums are occurrence-mass preserving, so collisions
     # and per-group arithmetic land identically; the DuckDB oracle
     # keeps the two-reference textbook form.
-    def _boiler_1pass(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _boiler_1pass(spark: SparkSession) -> DataFrame:
         from pyspark.sql import Window
-
-        views(spark, sf_dir)
 
         # the sentence-hash relation (doc_id, source, sh, n_chars) is a
         # memoized staged view (round 12, guide §2.4): the explode +
@@ -4921,7 +4583,7 @@ GROUP BY source
         ),
         sent_hash=(P.spark_poly_hash("sentence"), P.duck_poly_hash("sentence")),
     )
-    cases["dedup_sentence_boilerplate"] = Case(_boiler_1pass, _boiler_duck)
+    cases["dedup_sentence_boilerplate"] = _case(_boiler_1pass, _boiler_duck)
 
     # --- Benford first-significant-digit audit on order totals
     # (Nigrini's forensic-accounting screen): first digit taken from
@@ -5168,8 +4830,7 @@ SELECT CAST(MAX(cum) AS BIGINT) AS peak_concurrency,
 FROM r
 """
 
-    def _peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _peak_concurrency(spark: SparkSession) -> DataFrame:
         # Round 12 (VERDICT r11 #5): the endpoint relation used to be
         # the oracle's UNION ALL of two full event scans (+1 starts,
         # -1 ends); inline() now emits both endpoints from ONE scan —
@@ -5201,7 +4862,7 @@ FROM events WHERE ts IS NOT NULL AND event_id IS NOT NULL
             )
         )
 
-    cases["events_peak_concurrency"] = Case(
+    cases["events_peak_concurrency"] = _case(
         _peak_concurrency, P.duck_sql(_SWEEP_ORACLE, ts_us=TS_US)
     )
 
@@ -5405,8 +5066,7 @@ GROUP BY layout, dim
         **_Z_FRAGS,
     )[0]
 
-    def _q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
+    def _q_zorder(spark: SparkSession) -> DataFrame:
         z_rel = P.stage_view(
             spark, lambda: spark.sql(_z_stage_sql), "zquant", "orders"
         )
@@ -5423,7 +5083,7 @@ GROUP BY layout, dim
         )[0]
         return spark.sql(body)
 
-    cases["layout_zorder_skipping"] = Case(_q_zorder, _z_duck)
+    cases["layout_zorder_skipping"] = _case(_q_zorder, _z_duck)
 
     # --- CDC log compaction (the Debezium→lakehouse materialization):
     # a deterministic change log synthesized from orders (every key
@@ -5735,11 +5395,7 @@ FROM agg
     # frontier expansion on Spark vs unrolled EXCEPT algebra in the
     # oracle — two independent BFS formulations must agree on every
     # layer census.
-    def _bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-        views(spark, sf_dir)
-        return graph.bfs_layers(spark)
-
-    cases["graph_bfs_layers"] = Case(_bfs, graph.bfs_layers_oracle_sql())
+    cases["graph_bfs_layers"] = _case(graph.bfs_layers, graph.bfs_layers_oracle_sql())
 
     # --- referential-integrity audit: orphan-FK rate for every edge
     # of the star schema (plus events→customer), each branch one
@@ -5867,11 +5523,10 @@ FROM d GROUP BY band
             F.coalesce("id_checksum", F.lit(0)).cast("long").alias("id_checksum"),
         )
 
-    def _incr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _incr_exact(spark: SparkSession) -> DataFrame:
         import os
         import tempfile
 
-        views(spark, sf_dir)
         state = os.path.join(tempfile.mkdtemp(prefix="etl_incr_exact_"), "fp")
         base = spark.table("documents").select("doc_id", "text")
         # planted duplicates (dedup.EXACT_FOLD_SHIFT docstring): the
@@ -5892,15 +5547,14 @@ FROM d GROUP BY band
             kept.append(fresh.select(F.lit(b).cast("long").alias("batch"), "doc_id"))
         return _fold_stats(spark, kept, docs)
 
-    cases["dedup_incremental_exact"] = Case(
+    cases["dedup_incremental_exact"] = _case(
         _incr_exact, dedup.incremental_exact_oracle_sql()
     )
 
-    def _incr_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    def _incr_neardup(spark: SparkSession) -> DataFrame:
         import os
         import tempfile
 
-        views(spark, sf_dir)
         state = os.path.join(tempfile.mkdtemp(prefix="etl_incr_near_"), "state")
         docs = spark.table("documents")
         kept = []
@@ -5915,7 +5569,7 @@ FROM d GROUP BY band
             )
         return _fold_stats(spark, kept, docs)
 
-    cases["dedup_incremental_neardup"] = Case(
+    cases["dedup_incremental_neardup"] = _case(
         _incr_neardup, dedup.incremental_neardup_oracle_sql()
     )
 

@@ -21,15 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 LEVELS = ("workflow", "package", "realization", "step")
 
-_LIFECYCLE_COLS = (
-    "Anforderungszeitpunkt",
-    "Startzeitpunkt",
-    "Endzeitpunkt",
-    "Ist_gestartet",
-    "Ist_abgeschlossen",
-    "Erfolgreich",
-)
-
 
 @dataclass
 class RunLog:

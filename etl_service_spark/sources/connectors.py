@@ -91,12 +91,10 @@ JDBC_TYPES: dict[str, tuple[str, str]] = {
 # types whose JDBC driver cannot run Spark's batched writer
 READ_ONLY_JDBC_TYPES = ("SparkThrift",)
 
-FILE_TYPES = ("FILE-PARQUET", "FILE-CSV", "FILE-JSON", "Excel", "CSV")
-
 # declared in every reference type switch but NYI there too
 # (CommandExecuter.cs:823-968) — we reject them with a clear error.
 # "JSON" here is the reference's CONNECTOR type (kept NYI-faithful);
-# the working Spark-native engine is FILE-JSON above (json-lines
+# the working Spark-native engine is FILE-JSON in ``reader_for`` (json-lines
 # directory reads with optional explicit schema), implemented beyond
 # the reference like D4/D5.
 DECLARED_NYI = ("Access", "Firebird", "HL7", "Infomix", "SAP", "WebRequest", "XML", "JSON")

@@ -26,49 +26,35 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
-def _event_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
+from ..sources.footer import footer_schema
+
+# Declared schema of an empty landing directory: the CURRENT testdata
+# encoding — ts as parquet TIMESTAMP(MICROS), surfaced as timestamp_ntz.
+EVENT_SCHEMA = StructType(
+    [
+        StructField("event_id", LongType()),
+        StructField("ts", TimestampNTZType()),
+        StructField("user_id", LongType()),
+        StructField("event_type", StringType()),
+        StructField("value", DoubleType()),
+        StructField("props", StringType()),
+    ]
+)
 
 
-# Default declared schema: the CURRENT testdata encoding — ts as parquet
-# TIMESTAMP(MICROS), surfaced as timestamp_ntz. read_event_stream probes
-# the landing directory and swaps in the legacy nanos form when needed.
-EVENT_SCHEMA = _event_schema(TimestampNTZType())
-
-
-def _probe_event_schema(landing_dir: str) -> StructType:
-    """Pick the declared ``ts`` type from the first landing file's
-    parquet footer. Two encodings exist across testdata generations:
-    TIMESTAMP(MICROS) (current — read natively as timestamp_ntz) and
-    TIMESTAMP(NANOS) (legacy — readable only as int64 under the
-    session's nanosAsLong flag, so the declared type must be LONG or
-    the stream fails with a parquet column-conversion error). A stream
-    needs ONE declared schema up front; mixing encodings in one landing
-    directory is not supported. Empty directory → current encoding."""
+def _landing_schema(spark: SparkSession, landing_dir: str) -> StructType:
+    """The stream's declared schema: the footer schema of the landing
+    directory's first parquet file in path order, converted by Spark's
+    own reader (``footer.footer_schema``), so a legacy TIMESTAMP(NANOS)
+    ``ts`` surfaces as LONG under the session's nanosAsLong flag and
+    TIMESTAMP(MICROS) as timestamp_ntz. A stream needs ONE declared
+    schema up front; mixing encodings in one landing directory is not
+    supported. Empty directory → :data:`EVENT_SCHEMA`."""
     import glob
     import os
 
     files = sorted(glob.glob(os.path.join(landing_dir, "**", "*.parquet"), recursive=True))
-    if not files:
-        return EVENT_SCHEMA
-    try:
-        import pyarrow.parquet as pq
-
-        ts = pq.ParquetFile(files[0]).schema_arrow.field("ts").type
-        if str(ts).startswith("timestamp[ns"):
-            return _event_schema(LongType())
-    except Exception:  # unreadable footer/missing col: let Spark report it
-        pass
-    return EVENT_SCHEMA
+    return footer_schema(spark, files[0]) if files else EVENT_SCHEMA
 
 
 def with_event_time(events: DataFrame) -> DataFrame:
@@ -86,9 +72,9 @@ def with_event_time(events: DataFrame) -> DataFrame:
 def read_event_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
     """File-source stream of raw event parquet drops (events-table
     layout). The declared schema adapts to the landing encoding (see
-    :func:`_probe_event_schema`); either way the stream surface after
+    :func:`_landing_schema`); either way the stream surface after
     :func:`with_event_time` is a session-zoned ``ts``."""
-    schema = _probe_event_schema(landing_dir)
+    schema = _landing_schema(spark, landing_dir)
     return with_event_time(spark.readStream.schema(schema).parquet(landing_dir))
 
 

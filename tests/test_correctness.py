@@ -64,6 +64,53 @@ def test_bench_partition_covers_registry():
     assert all(reason.strip() for reason in bench.EXCLUDED.values())
 
 
+def test_registry_has_no_per_query_catalog_plumbing():
+    """Temp views are registered in one place, the adapter that turns a
+    ``build(spark)`` into ``Case.spark(spark, sf_dir)``: no query in
+    ``registry()`` calls ``views()`` or sees ``sf_dir``, and no nested
+    ``def`` only forwards to an operator (``return mod.fn(spark)``),
+    which the adapter takes directly."""
+    import ast
+    import inspect
+
+    from etl_service_spark.plans import queries
+
+    tree = ast.parse(inspect.getsource(queries.registry))
+    root = tree.body[0]
+    nodes = list(ast.walk(root))
+    views_calls = [
+        n.lineno
+        for n in nodes
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "views"
+    ]
+    sf_dir = [
+        n.lineno
+        for n in nodes
+        if (isinstance(n, ast.Name) and n.id == "sf_dir")
+        or (isinstance(n, ast.arg) and n.arg == "sf_dir")
+    ]
+
+    def forwards(f: ast.FunctionDef) -> bool:
+        body = [s for s in f.body if not (isinstance(s, ast.Expr) and isinstance(s.value, ast.Constant))]
+        if len(body) != 1 or not isinstance(body[0], ast.Return):
+            return False
+        call = body[0].value
+        return (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and isinstance(call.func.value, ast.Name)
+            and not call.keywords
+            and [ast.dump(a) for a in call.args] == [ast.dump(ast.Name("spark", ast.Load()))]
+        )
+
+    pass_through = [
+        n.name for n in nodes if isinstance(n, ast.FunctionDef) and n is not root and forwards(n)
+    ]
+    assert not views_calls, f"views() called in registry() at lines {views_calls}"
+    assert not sf_dir, f"sf_dir in registry() at lines {sf_dir}"
+    assert not pass_through, pass_through
+
+
 def test_plan_audit_flags_single_partition_windows(spark, sf_dir):
     """The round-9 audit rule end-to-end: an unpartitioned NTILE over
     a fact table (the pre-fix layout_zorder_skipping / RFM shape)

@@ -281,8 +281,8 @@ def test_salted_pagerank_identical_and_two_stage(spark, sf_dir):
     from etl_service_spark.plans.queries import views
 
     views(spark, sf_dir)
-    plain = {(r["node"], r["rank"]) for r in pagerank(spark, sf_dir).collect()}
-    salted_df = pagerank(spark, sf_dir, salted=True)
+    plain = {(r["node"], r["rank"]) for r in pagerank(spark).collect()}
+    salted_df = pagerank(spark, salted=True)
     salted = {(r["node"], r["rank"]) for r in salted_df.collect()}
     assert salted == plain
 

@@ -474,12 +474,6 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     spark = get_spark("plan_audit")
     cases = registry()
-    if full:
-        from bench import EXCLUDED  # noqa: E402
-
-        missing = set(cases) - set(HEADLINERS) - set(EXCLUDED)
-        if missing:
-            raise SystemExit(f"registry entries in neither list: {sorted(missing)}")
     views(spark, sf_dir)
     P.warm_udfs(spark)
     for fact in FACTS:
