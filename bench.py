@@ -13,7 +13,9 @@ BENCH_r01.json ended up with "parsed": null because only a tail of the
 ~4 KB line survived).
 
 Each query is forced end-to-end with a noop sink (full computation, no
-driver collect overhead) after one warm-up of the session.
+driver collect overhead) after one warm-up of the session. This is the
+one code path that times registry queries; the record also keeps each
+query's Spark job and stage count (`jobs`, `stages`).
 
 Measurement protocol (round-9 verdict #2 — code, not folklore): the
 round-9 record lost hours to a ~1.25x COLD-PAGE-CACHE multiplier (the
@@ -183,9 +185,13 @@ def _warm_cache(sf_dir: str) -> None:
                     pass
 
 
-def _run_pass(cases, names, spark, sf_dir, repeats: int = 1) -> dict[str, float]:
+def _run_pass(
+    cases, names, spark, sf_dir, repeats: int = 1
+) -> dict[str, tuple[float, int, int]]:
     """One timed pass over the suite: each query end-to-end ``repeats``
-    times back-to-back, keeping the MIN. The record pass uses
+    times back-to-back, keeping the MIN as ``(wall, jobs, stages)`` —
+    the Spark job and stage count of the kept execution, read from the
+    status tracker outside the timed window. The record pass uses
     repeats=2 — per-query min-of-2 with the query's own staged
     relations cache-warm, the SAME per-query semantics every committed
     baseline was recorded under. (A single-execution record pass was
@@ -194,15 +200,38 @@ def _run_pass(cases, names, spark, sf_dir, repeats: int = 1) -> dict[str, float]
     query's two executions evicts its pinned staging, so the pass-2
     single run re-derived it — measuring cache pressure, not the
     plan.)"""
-    timings: dict[str, float] = {}
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    jvm_sc = sc._jsc.sc()
+
+    def job_ids() -> list[int]:
+        # the tracker is fed by the listener bus: drain it so every
+        # started job is visible. The ids cross py4j as ONE string;
+        # st.getJobIdsForGroup's list() of the Java int[] pays a round
+        # trip per retained job (~80 ms a call at 1000 retained jobs).
+        jvm_sc.listenerBus().waitUntilEmpty(30_000)
+        ids = sc._jvm.java.util.Arrays.toString(
+            jvm_sc.statusTracker().getJobIdsForGroup(None)
+        )
+        return [int(j) for j in ids[1:-1].split(",") if j]
+
+    runs: dict[str, tuple[float, int, int]] = {}
     for name in names:
-        best = float("inf")
+        best = (float("inf"), 0, 0)
         for _ in range(repeats):
+            last_job = max(job_ids(), default=-1)
             t0 = time.perf_counter()
             df = cases[name].spark(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+            wall = time.perf_counter() - t0
+            jobs = [j for j in job_ids() if j > last_job]
+            stages = sum(
+                len(info.stageIds)
+                for info in map(st.getJobInfo, jobs)
+                if info is not None
+            )
+            best = min(best, (wall, len(jobs), stages))
+        runs[name] = (round(best[0], 3), best[1], best[2])
         # periodic session hygiene: lingering Python references
         # (DataFrames over localCheckpoint RDDs, staged relations) keep
         # JVM-side state alive until the ContextCleaner sees the refs
@@ -211,16 +240,16 @@ def _run_pass(cases, names, spark, sf_dir, repeats: int = 1) -> dict[str, float]
         # schedules JVM cleaner work into the NEXT timed query, so
         # per-query collection added a measurable uniform tax.
         df = None
-        if len(timings) % 25 == 0:
+        if len(runs) % 25 == 0:
             gc.collect()
-    return timings
+    return runs
 
 
 def _drift_check(prev: dict, timings: dict[str, float], sf: float) -> dict | None:
     """Uniform-vs-concentrated delta vs the previously-committed record
     (same sf only). Median per-query ratio ~= the environment
-    multiplier; 'concentrated' rows (>2x AND +0.3s — the
-    regression_diff thresholds) point at code, not the box."""
+    multiplier; 'concentrated' rows (>2x AND +0.3s) point at code,
+    not the box. This is the repo's one per-query regression rule."""
     if not prev or prev.get("sf") != sf:
         return None
     common = [
@@ -244,7 +273,15 @@ def _drift_check(prev: dict, timings: dict[str, float], sf: float) -> dict | Non
 def main() -> None:
     full = "--full" in sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    # the scale factor comes from the directory name; parse it before
+    # the session starts, not after minutes of timing
+    try:
+        sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
+    except ValueError:
+        raise SystemExit(
+            f"bench.py: SPARK_GRAFT_SF_DIR={sf_dir!r} does not end in "
+            "sf<number> (e.g. /root/testdata/sf0.1)"
+        ) from None
     env = _env_stanza()
     # SPARK_GRAFT_BENCH_OUT names the record file so twin-scale records
     # (BENCH_SF1.json) drift-check against their OWN previous record
@@ -282,9 +319,10 @@ def main() -> None:
     # JIT, staging builds, and any residual cold I/O). The record pass
     # keeps the per-query min-of-2 semantics of every committed
     # baseline (see _run_pass docstring).
-    pass1 = _run_pass(cases, names, spark, sf_dir)
+    pass1 = {n: r[0] for n, r in _run_pass(cases, names, spark, sf_dir).items()}
     gc.collect()
-    timings = _run_pass(cases, names, spark, sf_dir, repeats=2)
+    record = _run_pass(cases, names, spark, sf_dir, repeats=2)
+    timings = {n: r[0] for n, r in record.items()}
 
     # Confirmation pass for drift suspects (round 11): this box shows
     # BURSTY co-tenant steal — consecutive same-code suite runs flag
@@ -298,15 +336,16 @@ def main() -> None:
     # extra cost is proportional to the suspect count (zero on a
     # quiet box), and a true regression survives both measurements
     # and is still flagged.
-    drift = _drift_check(prev, timings, float(sf))
+    drift = _drift_check(prev, timings, sf)
     if drift and drift["concentrated_regressions"]:
         gc.collect()
         confirm = _run_pass(
             cases, drift["concentrated_regressions"], spark, sf_dir, repeats=2
         )
-        for n, t in confirm.items():
-            timings[n] = min(timings[n], t)
-        drift = _drift_check(prev, timings, float(sf))
+        for n, r in confirm.items():
+            record[n] = min(record[n], r)
+            timings[n] = record[n][0]
+        drift = _drift_check(prev, timings, sf)
         drift["confirmed"] = True
 
     total = round(sum(timings.values()), 3)
@@ -317,7 +356,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf),
+        "sf": sf,
         "n_queries": len(timings),
         "env": env,
         "warm": True,
@@ -331,6 +370,11 @@ def main() -> None:
         # opaque pass1_total: a query whose pass-1/pass-2 ratio is
         # large is riding a staging table someone must build.
         "pass1_queries": pass1,
+        # Spark jobs and stages of each recorded execution: sequential
+        # job barriers are invisible in a plan but dominate multi-round
+        # folds, so a query with many jobs per second is overhead-bound
+        "jobs": {n: r[1] for n, r in record.items()},
+        "stages": {n: r[2] for n, r in record.items()},
         "drift_vs_prev": drift,
     }
     with open(out_path, "w") as fh:
@@ -351,7 +395,7 @@ def main() -> None:
                 "metric": metric,
                 "value": total,
                 "unit": "sec",
-                "sf": float(sf),
+                "sf": sf,
                 "n_queries": len(timings),
                 "env": env,
                 "warm": True,

@@ -127,41 +127,39 @@ def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 32) -> No
 
 def write_copy(df: DataFrame, path: str, *, mode: str = "append", slice_partitioned: bool = False) -> int:
     """Append the aligned relation to the destination. Returns the row
-    count of THIS write (the ErwarteteDaten metric), observed DURING
-    the write job via the Observation API — a destination re-read
-    would both pay an extra footer pass and, in append mode, report
-    the TOTAL table count (pre-existing rows included) instead of the
-    batch's own rows. write_copy_observed is the richer variant
-    (checksum column); this one keeps the count-only contract."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
-    if slice_partitioned and SLICE_COL in df.columns:
-        writer = writer.partitionBy(SLICE_COL)
-    writer.parquet(path)
-    return obs.get["n"]
+    count of THIS write (the ErwarteteDaten metric): the count-only
+    contract over write_copy_observed."""
+    return write_copy_observed(
+        df, path, mode=mode, slice_partitioned=slice_partitioned
+    )["n_rows"]
 
 
 def write_copy_observed(
-    df: DataFrame, path: str, *, mode: str = "append", checksum_col: str | None = None
+    df: DataFrame,
+    path: str,
+    *,
+    mode: str = "append",
+    checksum_col: str | None = None,
+    slice_partitioned: bool = False,
 ) -> dict:
-    """write_copy with the audit metrics collected DURING the write via
-    Spark's Observation API — zero extra scan (write_copy's re-read
-    count pays one footer pass; at 100 TB even footers are a listing
-    storm). The observation rides the write job itself: the returned
-    metrics describe exactly the rows that landed, the row-count twin
-    of the reference's ErwarteteDaten check plus an optional column
-    checksum for end-to-end transfer verification (sum over a numeric
-    column is order-independent, so it is stable across partitionings
-    and engines)."""
-    from pyspark.sql import Observation, functions as F
+    """Write the relation with the audit metrics collected DURING the
+    write via Spark's Observation API — zero extra scan; a destination
+    re-read would pay a footer pass and, in append mode, count the
+    pre-existing rows too. The metrics describe exactly the rows that
+    landed: the reference's ErwarteteDaten row count plus an optional
+    column checksum (a sum is order-independent, so stable across
+    partitionings and engines). The Observation is uuid-named because
+    concurrent workflow steps write in one session."""
+    from pyspark.sql import Observation
 
     metrics = [F.count(F.lit(1)).alias("n_rows")]
     if checksum_col is not None:
         metrics.append(F.sum(checksum_col).alias("checksum"))
-    obs = Observation("copy_audit")
-    df.observe(obs, *metrics).write.mode(mode).parquet(path)
+    obs = Observation()
+    writer = df.observe(obs, *metrics).write.mode(mode)
+    if slice_partitioned and SLICE_COL in df.columns:
+        writer = writer.partitionBy(SLICE_COL)
+    writer.parquet(path)
     return dict(obs.get)
 
 

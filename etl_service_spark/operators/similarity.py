@@ -1341,7 +1341,7 @@ def semantic_dedup_staged(
         ]
     )
 
-    def compute(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def compute(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         j, ba, bb = key
         empty = pd.DataFrame({"cluster": [], "vec_a": [], "vec_b": []}).astype(
             {"cluster": "int64", "vec_a": "int64", "vec_b": "int64"}

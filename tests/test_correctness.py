@@ -64,6 +64,90 @@ def test_bench_partition_covers_registry():
     assert all(reason.strip() for reason in bench.EXCLUDED.values())
 
 
+def test_bench_records_jobs_and_stages(spark, sf_dir):
+    """The bench's timing pass also records each query's Spark job and
+    stage count (status-tracker delta, read outside the timed window):
+    every registry query runs at least one job, and every job at least
+    one stage."""
+    import bench
+    from etl_service_spark.plans.queries import views
+
+    names = ["tpch_q6_forecast_revenue", "tpch_q3_shipping"]
+    assert set(names) <= set(bench.HEADLINERS)
+    views(spark, sf_dir)
+    runs = bench._run_pass(CASES, names, spark, sf_dir, repeats=2)
+    assert list(runs) == names
+    for name, (wall, jobs, stages) in runs.items():
+        assert wall > 0 and jobs >= 1 and stages >= jobs, (name, runs[name])
+
+
+def test_bench_rejects_sf_dir_without_scale_before_spark(monkeypatch, tmp_path):
+    """The scale factor is parsed from the directory name before the
+    session starts: a path without ``sf<number>`` exits naming the path
+    instead of failing after both timed passes with no record written."""
+    import bench
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("get_spark called before the sf_dir check")
+
+    monkeypatch.setattr(bench, "get_spark", no_spark)
+    monkeypatch.setattr("sys.argv", ["bench.py"])
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/tpch")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", str(tmp_path / "b.json"))
+    with pytest.raises(SystemExit) as exc:
+        bench.main()
+    assert "/data/tpch" in str(exc.value)
+    assert not (tmp_path / "b.json").exists()
+
+
+def test_bench_is_the_only_registry_timer():
+    """One measurement path: ``bench._run_pass`` is the only code that
+    times registry queries. Among ``tools/*.py`` and ``bench.py``, only
+    ``bench.py`` both references ``registry`` and reads a clock
+    (``time.perf_counter``/``monotonic``/``time``) or the Spark status
+    tracker; per-query wall, job and stage counts come from its record."""
+    import ast
+    import glob
+    import os
+
+    clocks = {"perf_counter", "monotonic", "time"}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def registry_and_clock(path: str) -> bool:
+        with open(path) as fh:
+            nodes = list(ast.walk(ast.parse(fh.read())))
+        registry = any(
+            (isinstance(n, ast.Name) and n.id == "registry")
+            or (isinstance(n, ast.Attribute) and n.attr == "registry")
+            or (isinstance(n, ast.alias) and n.name == "registry")
+            for n in nodes
+        )
+        clock = any(
+            (isinstance(n, ast.Attribute) and n.attr == "statusTracker")
+            or (
+                isinstance(n, ast.Attribute)
+                and n.attr in clocks
+                and isinstance(n.value, ast.Name)
+                and n.value.id == "time"
+            )
+            or (
+                isinstance(n, ast.ImportFrom)
+                and n.module == "time"
+                and any(a.name in clocks for a in n.names)
+            )
+            for n in nodes
+        )
+        return registry and clock
+
+    paths = [os.path.join(repo, "bench.py")] + sorted(
+        glob.glob(os.path.join(repo, "tools", "*.py"))
+    )
+    timers = [
+        os.path.splitext(os.path.basename(p))[0] for p in paths if registry_and_clock(p)
+    ]
+    assert timers == ["bench"], timers
+
+
 def test_registry_has_no_per_query_catalog_plumbing():
     """Temp views are registered in one place, the adapter that turns a
     ``build(spark)`` into ``Case.spark(spark, sf_dir)``: no query in

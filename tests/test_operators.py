@@ -1059,6 +1059,32 @@ def test_neardup_kernel_drops_zero_norm_like_oracle(spark):
     assert not any(r.vec_id == 0 or r.kept_id == 0 for r in sd.collect())
 
 
+def test_semantic_dedup_kernel_declares_its_eval_type(spark):
+    """The grouped-map kernel behind dedup_semantic annotates both of
+    its arguments, so ``applyInPandas`` infers the grouped-map eval type
+    from the hints instead of warning ``Cannot infer the eval type``
+    (TYPE_HINT_SHOULD_BE_SPECIFIED) and falling back."""
+    import warnings
+
+    from etl_service_spark.operators import similarity as sim
+
+    rows = [
+        (i, [float((i + 1) * (d + 2) % 7) + 0.5 for d in range(sim.DIM)])
+        for i in range(8)
+    ]
+    spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>"
+    ).createOrReplaceTempView("emb_type_hint_probe")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        sim.semantic_dedup_staged(
+            spark, k=2, view="emb_type_hint_probe", n_blocks=2
+        ).collect()
+    assert not [
+        str(w.message) for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
+
+
 def test_compact_state_log_converges_after_crash_windows(spark, tmp_path):
     """The compaction swap never deletes the live log in place; every
     crash window converges on re-run with the complete state. Simulates

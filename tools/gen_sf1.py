@@ -13,14 +13,17 @@ posting-list-growth surprises will appear"). This generates a COMPLETE
   cardinality LINEAR in the copy count — a naive row duplication would
   quadratically inflate every keyed self-join and measure nothing.
   Dimension tables region/nation are copied unscaled.
-- documents/embeddings: the distribution-matched generators from
-  tools/scale_bench (same vocabulary, length distribution, dup/near-dup
-  structure, ~unit-norm gaussian embeddings) at 50k docs / 20k vectors.
+- documents/embeddings: generated, distribution-matched to sf0.1 (same
+  vocabulary, length distribution, dup/near-dup structure, ~unit-norm
+  gaussian embeddings) at 50k docs / 20k vectors.
 
 Parity at this scale is engine-vs-engine over the same files, so the
 sweep is exactly as strict as at sf0.1 — just 10x the data.
 
 Run: python tools/gen_sf1.py   (then tools/parity_sweep.py /tmp/etl_sf1.0)
+Bench the twin with bench.py; the directory name carries the sf:
+  SPARK_GRAFT_SF_DIR=/tmp/etl_sf1.0 SPARK_GRAFT_BENCH_OUT=BENCH_SF1.json \
+    python bench.py
 """
 
 from __future__ import annotations
@@ -39,7 +42,7 @@ sys.path.insert(0, REPO)
 SF01 = "/root/testdata/sf0.1"
 # Defaults build the sf1.0 twin; `--copies N --out DIR` builds any
 # decade from the same sf0.1 base (e.g. --copies 100 --out
-# /tmp/etl_sf10 for the 100x TPC-H twin the exponent table needs).
+# /tmp/etl_sf10 for the 100x twin).
 OUT = "/tmp/etl_sf1.0"
 COPIES = 10
 OFF = 1_000_000  # > every sf0.1 key space; one offset for all key kinds
@@ -54,6 +57,76 @@ KEYED = {
     "events": ["event_id", "user_id"],
 }
 UNSCALED = ["region", "nation"]
+
+
+# the sf0.1 documents vocabulary is UNIFORM over these 30 tokens
+# (measured: each ~9k occurrences at sf0.1, plus a rare 'dup' marker)
+VOCAB = (
+    "spark window merge table column vector stream value data small join "
+    "filter big group hash customer sort order slow line part fast the row "
+    "agg key query a scan batch"
+).split()
+LANGS = ["en", "en", "en", "de", "fr", "es", "zh"]  # en-heavy like testdata
+# sf0.1-sized BASE counts; twins are N * mult (mult=10 -> the sf1.0
+# twin, 50k docs / 20k vecs; mult=100 -> the sf10 twin, 500k / 200k)
+N_DOCS, N_VECS, DIM, N_LABELS = 5_000, 2_000, 64, 10
+
+
+def _gen_documents(path: str, mult: int = 1) -> None:
+    rng = np.random.RandomState(1_000_003 + mult)
+    n_docs = N_DOCS * mult
+    texts: list[str] = []
+    langs, sources, n_chars = [], [], []
+    for doc_id in range(n_docs):
+        r = rng.rand()
+        if doc_id > 100 and r < 0.002:  # exact dup of an earlier doc
+            t = texts[int(rng.randint(0, doc_id))]
+        elif doc_id > 100 and r < 0.03:  # near-dup: ~10% token churn
+            base = texts[int(rng.randint(0, doc_id))].split()
+            t = " ".join(
+                w if rng.rand() > 0.1 else VOCAB[int(rng.randint(0, len(VOCAB)))]
+                for w in base
+            )
+        else:
+            n = max(4, int(rng.normal(42, 14)))
+            t = " ".join(VOCAB[int(i)] for i in rng.randint(0, len(VOCAB), n))
+        texts.append(t)
+        langs.append(LANGS[int(rng.randint(0, len(LANGS)))])
+        sources.append(f"src{int(rng.randint(0, 20))}")
+        n_chars.append(len(t))
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(n_docs), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": pa.array(langs, pa.string()),
+                "source": pa.array(sources, pa.string()),
+                "n_chars": pa.array(n_chars, pa.int64()),
+            }
+        ),
+        path,
+    )
+
+
+def _gen_embeddings(path: str, mult: int = 1) -> None:
+    # sf0.1 embeddings are ~unit-normalized gaussians with NEGLIGIBLE
+    # label structure (measured: centroid norm 0.06 vs residual 1.0) —
+    # mirror that, or the neardup/ANN candidate masses are incomparable.
+    rng = np.random.RandomState(2_000_003 + mult)
+    n_vecs = N_VECS * mult
+    labels = rng.randint(0, N_LABELS, n_vecs)
+    vecs = rng.randn(n_vecs, DIM).astype(np.float32)
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(n_vecs), pa.int64()),
+                "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+                "label": pa.array(labels.astype(np.int32), pa.int32()),
+            }
+        ),
+        path,
+    )
 
 
 # Key-DERIVED string columns must track their shifted key, or they stop
@@ -89,8 +162,6 @@ def _scale_table(name: str, out: str = OUT, copies: int = COPIES) -> None:
 
 
 def build_twin(out: str = OUT, copies: int = COPIES) -> str:
-    from tools.scale_bench import _gen_documents, _gen_embeddings
-
     if os.path.isdir(out):
         shutil.rmtree(out)
     os.makedirs(out)
@@ -99,7 +170,7 @@ def build_twin(out: str = OUT, copies: int = COPIES) -> str:
     for t in KEYED:
         _scale_table(t, out, copies)
     # COPIES x the sf0.1-sized base (5k docs / 2k vecs). Round 8
-    # re-based scale_bench's generators from 10x-baked-in constants to
+    # re-based the generators from 10x-baked-in constants to
     # (base, mult) WITHOUT updating these calls — the default mult=1
     # silently shrank the twin's documents/embeddings back to sf0.1
     # size, so every BENCH_SF1 record from round 8 through round 10

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Mechanical anti-pattern audit over every headline query's EXECUTED
-plan — the automated version of eyeballing PLANS.md. Flags the shapes
+plan — the repo's one reader of headliner plans. Flags the shapes
 that break at 100 TB:
 
 - CartesianProduct / BroadcastNestedLoopJoin with a non-trivial build
