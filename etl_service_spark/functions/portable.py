@@ -166,7 +166,7 @@ def pd_shingle_hash_sets_udf():
 LIGHT_BYTES_PER_TASK = 256 * 1024
 
 
-def fan_out(df, parts: int | None = None, light: bool = False):
+def fan_out(df, light: bool = False):
     """Round-robin repartition before an expensive Arrow kernel when the
     scan has fewer partitions than cores. A single small parquet file is
     one Spark partition, which would serialize the kernel on one worker
@@ -184,8 +184,8 @@ def fan_out(df, parts: int | None = None, light: bool = False):
     kernels (shingles, tokenization, sentence splits) stay full-width:
     their CPU mass per stats-byte is orders of magnitude higher. A
     missing/absurd estimate degrades to full width unchanged."""
-    target = parts or df.sparkSession.sparkContext.defaultParallelism
-    if light and parts is None:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if light:
         try:
             size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         except Exception:  # stats unavailable -> keep full width

@@ -114,7 +114,8 @@ def connected_components_twophase(
     equality exactly at the fixpoint (same argument as label
     propagation's probe). Returns the identical (doc_id, cluster_id =
     component min) relation — result-equality with the propagation
-    path is pinned by tests."""
+    path is pinned by tests — and, like it, raises RuntimeError when
+    ``max_rounds`` ends before the fixpoint."""
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # node universe BEFORE dropping self-loops: a node whose only edge
     # is (x, x) must still appear in the output (as its own singleton
@@ -178,6 +179,12 @@ def connected_components_twophase(
         if new_total == total:
             break
         total = new_total
+    else:
+        raise RuntimeError(
+            f"connected_components_twophase did not converge in {max_rounds} "
+            "rounds; unconverged labels would split a component into "
+            "several cluster_ids"
+        )
 
     out = labels.select(F.col("u").alias("doc_id"), F.col("m").alias("cluster_id"))
     return (

@@ -13,9 +13,12 @@ Two paths, as a 100 TB pipeline needs both:
 Each Spark path is checked against the DuckDB oracle its ``*_sql``
 builder renders. Determinism: the oracle's dot product is an EXPLICIT
 64-term left-associated expression chain, and the Arrow kernels replay
-the identical IEEE-754 operation sequence (``np_norms``), so cosine
-values are bit-identical and no tolerance is needed. The hyperplane
-coefficients come from an integer LCG, exact in both engines.
+the identical IEEE-754 operation sequence, so cosine values are
+bit-identical and no tolerance is needed. That sequence has exactly
+two definitions: ``np_norms`` (per-row norms) and ``np_dots`` (all-pairs
+dot products); every kernel here calls them rather than writing the
+chain out. The hyperplane coefficients come from an integer LCG, exact
+in both engines.
 """
 
 from __future__ import annotations
@@ -34,15 +37,88 @@ def np_norms(m):
     """Per-row vector norms via the LEFT-ASSOCIATED accumulation chain
     — replays the SQL `_norm` op order exactly (each step correctly
     rounded per IEEE 754, same sequence), so kernel cosines are
-    bit-identical to the oracle. Single definition: the kernels in
-    this file all broadcast against it (a diverging copy here would
-    silently break oracle parity)."""
+    bit-identical to the oracle. Single definition, with
+    :func:`np_dots` as its other half: the kernels in this file all
+    call these two (a diverging copy would silently break oracle
+    parity)."""
     import numpy as np
 
     acc = m[:, 0] * m[:, 0]
     for i in range(1, DIM):
         acc = acc + m[:, i] * m[:, i]
     return np.sqrt(acc)
+
+
+def np_dots(a, b):
+    """The ``len(a) x len(b)`` dot products via the same left-associated
+    chain as the SQL `_dot`: one outer-product accumulation per term is
+    one correctly-rounded multiply + add per pair (multiplication is
+    commutative, so operand order per term is irrelevant), without
+    gathering O(pairs x DIM) intermediates."""
+    import numpy as np
+
+    acc = np.multiply.outer(a[:, 0], b[:, 0])
+    for i in range(1, DIM):
+        acc += np.multiply.outer(a[:, i], b[:, i])
+    return acc
+
+
+def _id_matrix(pdf):
+    """A batch's (int64 vec_id, float64 ``len x DIM`` embedding
+    matrix); the f32 → f64 widening is exact."""
+    import numpy as np
+
+    m = np.array(list(pdf["embedding"]), dtype=np.float64).reshape(len(pdf), DIM)
+    return pdf["vec_id"].to_numpy(dtype=np.int64), m
+
+
+def _query_vectors(emb: DataFrame, n: int):
+    """The query (or centroid) set the broadcast kernels score against:
+    the vectors with ``vec_id < n`` — the SQL twins' ``WHERE vec_id <
+    n`` — collected to the driver in vec_id order as (int64 ids,
+    float64 ``n x DIM`` matrix)."""
+    import numpy as np
+
+    rows = sorted(emb.filter(f"vec_id < {n}").collect(), key=lambda r: r.vec_id)
+    m = np.array([r.embedding for r in rows], dtype=np.float64).reshape(len(rows), DIM)
+    return np.array([r.vec_id for r in rows], dtype=np.int64), m
+
+
+def _partition_topk(batches, ids_q, k: int, score, col: str):
+    """One partition's top-k candidates per query under the oracle's
+    total order (score DESC, n_id ASC), merged batch by batch:
+    ``score(pdf)`` returns a batch's (n_ids, ``len(ids_q) x n``
+    scores), and a query never lists itself (``n_id <> q_id``, like
+    the SQL joins). Any global top-k row is in its partition's local
+    top-k, so the final window ranks k·Q·partitions rows, never Q·N.
+    Spark and DuckDB rank NaN as GREATEST under DESC (a zero-norm
+    embedding yields a NaN cosine), but lexsort on -score would sort
+    it last — so NaN maps to -inf in the key while the candidates keep
+    the NaN itself."""
+    import numpy as np
+    import pandas as pd
+
+    cand_ids = [np.empty(0, dtype=np.int64) for _ in ids_q]
+    cand_s = [np.empty(0, dtype=np.float64) for _ in ids_q]
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        ids, s = score(pdf)
+        for qi, q_id in enumerate(ids_q):
+            keep = ids != q_id
+            all_ids = np.concatenate([cand_ids[qi], ids[keep]])
+            all_s = np.concatenate([cand_s[qi], s[qi][keep]])
+            key = -all_s
+            key[np.isnan(key)] = -np.inf
+            order = np.lexsort((all_ids, key))[:k]  # last key is primary
+            cand_ids[qi], cand_s[qi] = all_ids[order], all_s[order]
+    return pd.DataFrame(
+        {
+            "q_id": np.repeat(ids_q, [len(c) for c in cand_ids]),
+            "n_id": np.concatenate([np.empty(0, dtype=np.int64), *cand_ids]),
+            col: np.concatenate([np.empty(0, dtype=np.float64), *cand_s]),
+        }
+    )
 
 
 def _dot(a: str, b: str, *, one_based: bool) -> str:
@@ -123,59 +199,19 @@ def cosine_topk_staged(
     projection over Q·N rows (~3x slower at sf0.1, worse with corpus
     growth); values are bit-identical, so ties break identically."""
     import numpy as np
-    import pandas as pd
 
     emb = spark.table(view).select("vec_id", "embedding")
-    qrows = sorted(
-        ((r.vec_id, r.embedding) for r in emb.filter(f"vec_id < {n_queries}").collect()),
-        key=lambda t: t[0],
-    )
-    q_ids = np.array([t[0] for t in qrows], dtype=np.int64)
-    q_m = np.array([t[1] for t in qrows], dtype=np.float64)
-
-    _norms = np_norms
-
-    q_nrm = _norms(q_m)
-    bc = spark.sparkContext.broadcast((q_ids, q_m, q_nrm))
+    q_ids, q_m = _query_vectors(emb, n_queries)
+    bc = spark.sparkContext.broadcast((q_ids, q_m, np_norms(q_m)))
 
     def kernel(batches):
         ids_q, m_q, nrm_q = bc.value
-        nq = len(ids_q)
-        # running per-partition candidates per query
-        cand_ids = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        cand_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = _norms(m)
-            acc = np.multiply.outer(m_q[:, 0], m[:, 0])
-            for i in range(1, DIM):
-                acc += np.multiply.outer(m_q[:, i], m[:, i])
-            cos = acc / np.multiply.outer(nrm_q, nrm)
-            for qi in range(nq):
-                keep = ids != ids_q[qi]  # e.vec_id <> q_id, like the SQL join
-                all_ids = np.concatenate([cand_ids[qi], ids[keep]])
-                all_cos = np.concatenate([cand_cos[qi], cos[qi][keep]])
-                # oracle order: cosine DESC, n_id ASC (lexsort: last key
-                # primary). Spark and DuckDB both treat NaN as GREATEST
-                # under DESC (a zero-norm embedding yields NaN cosine),
-                # but lexsort on -cos would sort NaN last — map NaN to
-                # -inf in the key so NaN candidates rank first, like the
-                # engines, while cand_cos keeps the NaN value itself.
-                key = -all_cos
-                key[np.isnan(key)] = -np.inf
-                order = np.lexsort((all_ids, key))[:k]
-                cand_ids[qi], cand_cos[qi] = all_ids[order], all_cos[order]
-        out_q = np.repeat(ids_q, [len(c) for c in cand_ids])
-        yield pd.DataFrame(
-            {
-                "q_id": out_q,
-                "n_id": np.concatenate(cand_ids) if nq else np.empty(0, dtype=np.int64),
-                "cosine": np.concatenate(cand_cos) if nq else np.empty(0),
-            }
-        )
+
+        def score(pdf):
+            ids, m = _id_matrix(pdf)
+            return ids, np_dots(m_q, m) / np.multiply.outer(nrm_q, np_norms(m))
+
+        yield _partition_topk(batches, ids_q, k, score, "cosine")
 
     scored = P.fan_out(emb, light=True).mapInPandas(
         kernel, schema="q_id bigint, n_id bigint, cosine double"
@@ -243,6 +279,58 @@ def _neardup_blocks(n: int, rows_per_block: int) -> int:
     return max(1, -(-n // max(1, rows_per_block)))
 
 
+def _block_fan(
+    spark: SparkSession, emb: DataFrame, view: str, rows_per_block: int,
+    n_blocks: int | None,
+):
+    """The block-pair decomposition shared by the near-dup kernels:
+    (n_blocks, ``emb`` with its block id ``blk``, the fan-out relation
+    (blk, ba, bb, role)). Block ``blk`` joins pair (ba, bb) as role 0
+    (first block) or role 1 (second); a diagonal pair (ba == bb)
+    carries its block under BOTH roles and :func:`_block_pair_hits`
+    dedups the doubled orientation. ``n_blocks`` defaults to the
+    size-driven count over a scalar ``count()`` — no embedding rows
+    leave the executors — memoized per (session, view, files) like the
+    staging views."""
+    if n_blocks is None:
+        n = P.memo(spark, "neardup_count", (view,), emb, lambda _key: emb.count())
+        n_blocks = _neardup_blocks(n, rows_per_block)
+    rel = [
+        (blk, a, b, 0 if blk == a else 1)
+        for a in range(n_blocks)
+        for b in range(a, n_blocks)
+        for blk in {a, b}
+    ]
+    rel += [(a, a, a, 1) for a in range(n_blocks)]
+    fan = spark.createDataFrame(rel, "blk int, ba int, bb int, role int")
+    blk = emb.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
+    return n_blocks, blk, fan
+
+
+def _block_pair_hits(pdf, tau: float, diagonal: bool):
+    """One block-pair group's near-dup pairs as (vec_a, vec_b, cosine)
+    arrays: every role-0 row against every role-1 row, kept when
+    ``cos >= tau``. Zero-norm vectors give NaN, and ``NaN >= tau`` is
+    False, so the pair is DROPPED — exactly what the DuckDB oracle does
+    (0/0 -> NULL there, and NULL fails the predicate); the Spark-SQL
+    chain would raise DIVIDE_BY_ZERO under ANSI mode instead (pinned by
+    test_neardup_kernel_drops_zero_norm_like_oracle). A diagonal group
+    holds each unordered pair in both orientations, so only a < b is
+    kept; off-diagonal groups hold it once (blocks are disjoint). Ids
+    come out as (min, max), the oracle's a.vec_id < b.vec_id."""
+    import numpy as np
+
+    ids_a, m_a = _id_matrix(pdf[pdf["role"] == 0])
+    ids_b, m_b = _id_matrix(pdf[pdf["role"] == 1])
+    cos = np_dots(m_a, m_b) / np.multiply.outer(np_norms(m_a), np_norms(m_b))
+    mask = cos >= tau
+    if diagonal:
+        mask &= ids_a[:, None] < ids_b[None, :]
+    ia, ib = np.nonzero(mask)
+    va, vb = ids_a[ia], ids_b[ib]
+    return np.minimum(va, vb), np.maximum(va, vb), cos[ia, ib]
+
+
 def embedding_neardup_pandas(
     spark: SparkSession,
     tau: float = 0.4,
@@ -255,11 +343,9 @@ def embedding_neardup_pandas(
 
     Same values as :func:`embedding_neardup_sql` to the last bit: numpy
     replays the oracle's EXACT IEEE-754 operation sequence — float32
-    inputs widened to float64 (exact), a left-associated 64-term
-    multiply-add chain (one vectorized `acc += a[:,i] * b[:,i]` per
-    term, which is per-pair left association; multiplication is
-    commutative and correctly rounded, so operand order per term is
-    irrelevant), then dot/(nrm_a*nrm_b). The giant explicit SQL chain
+    inputs widened to float64 (exact), the left-associated 64-term
+    multiply-add chain of :func:`np_dots`, then dot/(nrm_a*nrm_b)
+    (:func:`_block_pair_hits`). The giant explicit SQL chain
     defeats whole-stage codegen (Spark falls back to interpreted
     projection over N² rows, ~60x slower); this path keeps the N² loop
     in BLAS-grade vector code.
@@ -278,34 +364,13 @@ def embedding_neardup_pandas(
     inherently quadratic: this stays the EXACT baseline, ``lsh_ann`` /
     ``ann_ivf`` are the linear scale paths for the same question.
     """
-    import numpy as np
     import pandas as pd
 
     emb = spark.table(view).select("vec_id", "embedding")
-    if n_blocks is None:
-        # scalar count only — no embedding rows leave the executors;
-        # memoized per (session, view, files) like the staging views
-        n = P.memo(spark, "neardup_count", (view,), emb, lambda _key: emb.count())
-        n_blocks = _neardup_blocks(n, rows_per_block)
-    # fan-out relation: block blk participates in pair (ba, bb) as
-    # role 0 (first block) or role 1 (second); a diagonal pair
-    # (ba == bb) carries its block under BOTH roles and the
-    # vec_a < vec_b mask below dedups the doubled orientation.
-    rel = [
-        (blk, a, b, 0 if blk == a else 1)
-        for a in range(n_blocks)
-        for b in range(a, n_blocks)
-        for blk in {a, b}
-    ]
-    rel += [(a, a, a, 1) for a in range(n_blocks)]
-    fan = spark.createDataFrame(rel, "blk int, ba int, bb int, role int")
-
-    blk = emb.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
+    _n, blk, fan = _block_fan(spark, emb, view, rows_per_block, n_blocks)
     both = blk.join(F.broadcast(fan), "blk").select(
         "ba", "bb", "role", "vec_id", "embedding"
     )
-
-    _norms = np_norms
 
     out_schema = StructType(
         [
@@ -317,44 +382,8 @@ def embedding_neardup_pandas(
 
     def compute(pdf: "pd.DataFrame") -> "pd.DataFrame":
         diagonal = pdf["ba"].iat[0] == pdf["bb"].iat[0]
-        a_pdf = pdf[pdf["role"] == 0]
-        b_pdf = pdf[pdf["role"] == 1]
-        if not len(a_pdf) or not len(b_pdf):
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cosine": "float64"}
-            )
-        ids_a = a_pdf["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b_pdf["vec_id"].to_numpy(dtype=np.int64)
-        m_a = np.array(list(a_pdf["embedding"]), dtype=np.float64)  # f32→f64 exact
-        m_b = np.array(list(b_pdf["embedding"]), dtype=np.float64)
-        nrm_a, nrm_b = _norms(m_a), _norms(m_b)
-        # all-pairs dot as 64 outer-product accumulations: each step
-        # is one correctly-rounded multiply + add per pair, i.e. the
-        # left-associated chain, without gathering O(pairs x DIM)
-        # intermediates (4M pairs would gather ~4 GB).
-        acc = np.multiply.outer(m_a[:, 0], m_b[:, 0])
-        for i in range(1, DIM):
-            acc += np.multiply.outer(m_a[:, i], m_b[:, i])
-        cos = acc / np.multiply.outer(nrm_a, nrm_b)
-        # Zero-norm vectors: numpy yields NaN, and `NaN >= tau` is
-        # False, so the pair is DROPPED — which is exactly what the
-        # DuckDB oracle does (0/0 -> NULL there, and NULL fails the
-        # predicate). The Spark-SQL twin would instead raise
-        # DIVIDE_BY_ZERO under this session's ANSI mode, so the kernel
-        # + oracle pair is the defined behavior for degenerate inputs
-        # (pinned by test_neardup_kernel_drops_zero_norm_like_oracle).
-        mask = cos >= tau
-        if diagonal:
-            # same block on both roles: each unordered pair appears in
-            # both orientations — keep the a < b one.
-            mask &= ids_a[:, None] < ids_b[None, :]
-        ia, ib = np.nonzero(mask)
-        # off-diagonal groups hold each unordered pair exactly once
-        # (blocks are disjoint); emit ids in (min, max) order to match
-        # the oracle's a.vec_id < b.vec_id orientation.
-        va = np.minimum(ids_a[ia], ids_b[ib])
-        vb = np.maximum(ids_a[ia], ids_b[ib])
-        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cosine": cos[ia, ib]})
+        va, vb, cos = _block_pair_hits(pdf, tau, diagonal)
+        return pd.DataFrame({"vec_a": va, "vec_b": vb, "cosine": cos})
 
     return both.groupBy("ba", "bb").applyInPandas(compute, schema=out_schema)
 
@@ -447,30 +476,17 @@ def ivf_assignment_rel(
         import pandas as pd
 
         emb = spark.table(view).select("vec_id", "embedding")
-        cent = sorted(
-            ((r.vec_id, r.embedding) for r in emb.filter(f"vec_id < {n_cells}").collect()),
-            key=lambda t: t[0],
-        )
-        c_ids = np.array([c[0] for c in cent], dtype=np.int64)
-        c_m = np.array([c[1] for c in cent], dtype=np.float64)
-
-        _norms = np_norms
-
-        c_nrm = _norms(c_m)
-        bc = spark.sparkContext.broadcast((c_ids, c_m, c_nrm))
+        c_ids, c_m = _query_vectors(emb, n_cells)
+        bc = spark.sparkContext.broadcast((c_ids, c_m, np_norms(c_m)))
 
         def kernel(batches):
             ids_c, m_c, nrm_c = bc.value
             for pdf in batches:
                 if not len(pdf):
                     continue
-                m = np.array(list(pdf["embedding"]), dtype=np.float64)
-                nrm = _norms(m)
-                # cos to every centroid: 64 outer-product accumulation steps
-                acc = np.multiply.outer(m[:, 0], m_c[:, 0])
-                for i in range(1, DIM):
-                    acc += np.multiply.outer(m[:, i], m_c[:, i])
-                cos = acc / np.multiply.outer(nrm, nrm_c)
+                vid, m = _id_matrix(pdf)
+                nrm = np_norms(m)
+                cos = np_dots(m, m_c) / np.multiply.outer(nrm, nrm_c)
                 # rank centroids per vector: cos DESC, then c_id ASC.
                 # ids_c is sorted ascending, so a stable argsort on -cos
                 # reproduces the SQL tie-break exactly.
@@ -478,7 +494,6 @@ def ivf_assignment_rel(
                 ranks = np.empty_like(order)
                 rows = np.arange(cos.shape[0])[:, None]
                 ranks[rows, order] = np.arange(cos.shape[1])[None, :] + 1
-                vid = pdf["vec_id"].to_numpy(dtype=np.int64)
                 n = cos.shape[1]
                 # embedding rides along ONLY on the rn=1 row (one per
                 # vector) so the stage carries each vector once, not
@@ -863,22 +878,16 @@ def lsh_ann_staged(
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)  # f32->f64 exact
-            bucket = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(planes):
-                acc = m[:, 0] * coef[j, 0]
-                for i in range(1, DIM):
-                    acc = acc + m[:, i] * coef[j, i]
-                bucket += (acc >= 0).astype(np.int64) << j
-            nacc = m[:, 0] * m[:, 0]
-            for i in range(1, DIM):
-                nacc = nacc + m[:, i] * m[:, i]
+            ids, m = _id_matrix(pdf)
+            # bit j set iff the plane-j dot is >= 0; the bits are
+            # distinct, so their sum is the bucket id
+            above = (np_dots(m, coef) >= 0).astype(np.int64)
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf["vec_id"],
+                    "vec_id": ids,
                     "embedding": pdf["embedding"],
-                    "bucket": bucket,
-                    "nrm": np.sqrt(nacc),
+                    "bucket": (above << np.arange(planes)).sum(axis=1),
+                    "nrm": np_norms(m),
                 }
             )
 
@@ -1312,26 +1321,12 @@ def semantic_dedup_staged(
     assign_df = spark.table(assigns[iters])
 
     emb = spark.table(view).select("vec_id", "embedding")
-    if n_blocks is None:
-        n = P.memo(spark, "neardup_count", (view,), emb, lambda _key: emb.count())
-        n_blocks = _neardup_blocks(n, rows_per_block)
-    rel = [
-        (blk, a, b, 0 if blk == a else 1)
-        for a in range(n_blocks)
-        for b in range(a, n_blocks)
-        for blk in {a, b}
-    ]
-    rel += [(a, a, a, 1) for a in range(n_blocks)]
-    fan = spark.createDataFrame(rel, "blk int, ba int, bb int, role int")
-
-    blk = emb.withColumn("blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
+    n_blocks, blk, fan = _block_fan(spark, emb, view, rows_per_block, n_blocks)
     both = (
         blk.join(assign_df, "vec_id")
         .join(F.broadcast(fan), "blk")
         .select("j", "ba", "bb", "role", "vec_id", "embedding")
     )
-
-    _norms = np_norms
 
     pair_schema = StructType(
         [
@@ -1343,30 +1338,7 @@ def semantic_dedup_staged(
 
     def compute(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         j, ba, bb = key
-        empty = pd.DataFrame({"cluster": [], "vec_a": [], "vec_b": []}).astype(
-            {"cluster": "int64", "vec_a": "int64", "vec_b": "int64"}
-        )
-        a_pdf = pdf[pdf["role"] == 0]
-        b_pdf = pdf[pdf["role"] == 1]
-        if not len(a_pdf) or not len(b_pdf):
-            return empty
-        ids_a = a_pdf["vec_id"].to_numpy(dtype=np.int64)
-        ids_b = b_pdf["vec_id"].to_numpy(dtype=np.int64)
-        m_a = np.array(list(a_pdf["embedding"]), dtype=np.float64)
-        m_b = np.array(list(b_pdf["embedding"]), dtype=np.float64)
-        nrm_a, nrm_b = _norms(m_a), _norms(m_b)
-        acc = np.multiply.outer(m_a[:, 0], m_b[:, 0])
-        for i in range(1, DIM):
-            acc += np.multiply.outer(m_a[:, i], m_b[:, i])
-        cos = acc / np.multiply.outer(nrm_a, nrm_b)
-        # zero-norm -> NaN -> dropped, matching the DuckDB oracle's
-        # 0/0 -> NULL predicate failure (see embedding_neardup_pandas)
-        mask = cos >= tau
-        if ba == bb:
-            mask &= ids_a[:, None] < ids_b[None, :]
-        ia, ib = np.nonzero(mask)
-        va = np.minimum(ids_a[ia], ids_b[ib])
-        vb = np.maximum(ids_a[ia], ids_b[ib])
+        va, vb, _cos = _block_pair_hits(pdf, tau, ba == bb)
         return pd.DataFrame({"cluster": np.full(len(va), j, dtype=np.int64), "vec_a": va, "vec_b": vb})
 
     def build() -> DataFrame:
@@ -1487,7 +1459,6 @@ def int8_topk_staged(
     top-k under the total order (cos8 DESC, n_id ASC), so the final
     window ranks k·Q·partitions candidates, never Q·N scores."""
     import numpy as np
-    import pandas as pd
 
     def _quant(m):
         # replays the SQL chain: scale = 127.0 / mx (one correctly-
@@ -1502,52 +1473,23 @@ def int8_topk_staged(
         return q, n2, ok
 
     emb = spark.table(view).select("vec_id", "embedding")
-    qrows = sorted(
-        ((r.vec_id, r.embedding) for r in emb.filter(f"vec_id < {n_queries}").collect()),
-        key=lambda t: t[0],
+    q_ids, q_m = _query_vectors(emb, n_queries)
+    q_q, q_n2, q_ok = _quant(q_m)
+    bc = spark.sparkContext.broadcast(
+        (q_ids[q_ok], q_q[q_ok], np.sqrt(q_n2[q_ok].astype(np.float64)))
     )
-    if qrows:
-        q_ids = np.array([t[0] for t in qrows], dtype=np.int64)
-        q_q, q_n2, q_ok = _quant(np.array([t[1] for t in qrows], dtype=np.float64))
-        q_ids, q_q, q_n2 = q_ids[q_ok], q_q[q_ok], q_n2[q_ok]
-    else:
-        q_ids = np.empty(0, dtype=np.int64)
-        q_q = np.empty((0, DIM), dtype=np.int64)
-        q_n2 = np.empty(0, dtype=np.int64)
-    bc = spark.sparkContext.broadcast((q_ids, q_q, np.sqrt(q_n2.astype(np.float64))))
 
     def kernel(batches):
         ids_q, m_q, sqn_q = bc.value
-        nq = len(ids_q)
-        cand_ids = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        cand_cos = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+
+        def score(pdf):
+            ids, m = _id_matrix(pdf)
             q, n2, ok = _quant(m)
-            ids, q, n2 = ids[ok], q[ok], n2[ok]
-            if not len(ids):
-                continue
-            d = m_q @ q.T  # exact: BIGINT dot, |d| ≤ 64·127² < 2^21
-            cos = d.astype(np.float64) / np.multiply.outer(
-                sqn_q, np.sqrt(n2.astype(np.float64))
-            )
-            for qi in range(nq):
-                keep = ids != ids_q[qi]  # c.vec_id <> qq.vec_id, like the SQL join
-                all_ids = np.concatenate([cand_ids[qi], ids[keep]])
-                all_cos = np.concatenate([cand_cos[qi], cos[qi][keep]])
-                order = np.lexsort((all_ids, -all_cos))[:k]
-                cand_ids[qi], cand_cos[qi] = all_ids[order], all_cos[order]
-        out_q = np.repeat(ids_q, [len(c) for c in cand_ids])
-        yield pd.DataFrame(
-            {
-                "q_id": out_q,
-                "n_id": np.concatenate(cand_ids) if nq else np.empty(0, dtype=np.int64),
-                "cos8": np.concatenate(cand_cos) if nq else np.empty(0),
-            }
-        )
+            d = m_q @ q[ok].T  # exact: BIGINT dot, |d| ≤ 64·127² < 2^21
+            sqn = np.sqrt(n2[ok].astype(np.float64))
+            return ids[ok], d.astype(np.float64) / np.multiply.outer(sqn_q, sqn)
+
+        yield _partition_topk(batches, ids_q, k, score, "cos8")
 
     scored = P.fan_out(emb, light=True).mapInPandas(
         kernel, schema="q_id bigint, n_id bigint, cos8 double"
@@ -1579,36 +1521,25 @@ def range_search_staged(
     interpreted mode ('ERROR CodeGenerator: failed to compile',
     round-10 bisect) and ran 2.2x the top-k sibling at sf0.1. The
     kernel also never shuffles: scan → mapInPandas, Q·N scores never
-    leave their corpus partition. NaN cosines (zero-norm embeddings)
-    PASS the filter, matching both engines' 'NaN is greatest'
-    comparison semantics."""
+    leave their corpus partition. A zero-norm embedding gives a NaN
+    cosine, and ``NaN >= tau`` is False, so its rows are dropped —
+    exactly what the DuckDB oracle does (0/0 -> NULL there, and NULL
+    fails the floor), as in :func:`_block_pair_hits`."""
     import numpy as np
     import pandas as pd
 
     emb = spark.table(view).select("vec_id", "embedding")
-    qrows = sorted(
-        ((r.vec_id, r.embedding) for r in emb.filter(f"vec_id < {n_queries}").collect()),
-        key=lambda t: t[0],
-    )
-    q_ids = np.array([t[0] for t in qrows], dtype=np.int64)
-    q_m = np.array([t[1] for t in qrows], dtype=np.float64)
-    q_nrm = np_norms(q_m)
-    bc = spark.sparkContext.broadcast((q_ids, q_m, q_nrm))
+    q_ids, q_m = _query_vectors(emb, n_queries)
+    bc = spark.sparkContext.broadcast((q_ids, q_m, np_norms(q_m)))
 
     def kernel(batches):
         ids_q, m_q, nrm_q = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            nrm = np_norms(m)
-            acc = np.multiply.outer(m_q[:, 0], m[:, 0])
-            for i in range(1, DIM):
-                acc += np.multiply.outer(m_q[:, i], m[:, i])
-            cos = acc / np.multiply.outer(nrm_q, nrm)
-            hit = (cos >= tau) | np.isnan(cos)
-            hit &= ids[None, :] != ids_q[:, None]  # e.vec_id <> q_id
+            ids, m = _id_matrix(pdf)
+            cos = np_dots(m_q, m) / np.multiply.outer(nrm_q, np_norms(m))
+            hit = (cos >= tau) & (ids[None, :] != ids_q[:, None])  # e.vec_id <> q_id
             qi, ni = np.nonzero(hit)
             yield pd.DataFrame(
                 {"q_id": ids_q[qi], "n_id": ids[ni], "cosine": cos[qi, ni]}

@@ -1722,6 +1722,45 @@ def _text_case(fn, oracle_fn) -> Case:
     return _case(lambda spark: fn(spark.table("documents")), oracle_fn())
 
 
+def _recall_case(approx: Callable[[SparkSession], DataFrame], approx_sql: str) -> Case:
+    """recall@k of an approximate top-k path against the exact cosine
+    top-k ground truth, per query: one (q_id, n_id) left join and a
+    query-grain aggregate — query-set sized, trivial next to the
+    searches themselves. ``approx`` is the Spark path, ``approx_sql``
+    its DuckDB oracle."""
+
+    def build(spark: SparkSession) -> DataFrame:
+        exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
+        hits = approx(spark).select("q_id", "n_id").withColumn("hit", F.lit(1))
+        return (
+            exact.join(hits, ["q_id", "n_id"], "left")
+            .groupBy("q_id")
+            .agg(
+                F.count("*").alias("k"),
+                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"),
+            )
+            .select(
+                "q_id",
+                "k",
+                "n_hits",
+                F.expr("CAST(n_hits * 1000000 DIV k AS BIGINT)").alias("recall_ppm"),
+            )
+        )
+
+    oracle = f"""
+WITH j AS (
+  SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
+  FROM ({similarity.cosine_topk_sql().strip()}) e
+  LEFT JOIN ({approx_sql.strip()}) a
+    ON a.q_id = e.q_id AND a.n_id = e.n_id
+)
+SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
+       CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
+FROM j GROUP BY q_id
+"""
+    return _case(build, oracle)
+
+
 _UNPIVOT_MEASURES = ("l_discount", "l_extendedprice", "l_quantity", "l_tax")
 
 
@@ -3073,111 +3112,27 @@ FROM d GROUP BY decile
     # ---- ANN self-evaluation: recall@k of the IVF path against the
     # exact top-k ground truth ("measure, don't guess" — the number
     # that justifies nprobe/n_cells before anyone trusts the ANN
-    # index). Reuses both staged relations; the comparison is one
-    # (q_id, n_id) left join + a query-grain aggregate — query-set
-    # sized, trivial next to the searches themselves.
-    def _ann_recall(spark: SparkSession) -> DataFrame:
-        exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
-        approx = similarity.ivf_ann_staged(spark).select("q_id", "n_id")
-        return (
-            exact.join(approx.withColumn("hit", F.lit(1)), ["q_id", "n_id"], "left")
-            .groupBy("q_id")
-            .agg(
-                F.count("*").alias("k"),
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"),
-            )
-            .select(
-                "q_id",
-                "k",
-                "n_hits",
-                F.expr("CAST(n_hits * 1000000 DIV k AS BIGINT)").alias("recall_ppm"),
-            )
-        )
-
-    _ann_recall_oracle = f"""
-WITH j AS (
-  SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql().strip()}) e
-  LEFT JOIN ({similarity.ivf_ann_sql().strip()}) a
-    ON a.q_id = e.q_id AND a.n_id = e.n_id
-)
-SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
-       CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
-FROM j GROUP BY q_id
-"""
-    cases["ann_recall_report"] = _case(_ann_recall, _ann_recall_oracle)
+    # index). Reuses both staged relations.
+    cases["ann_recall_report"] = _recall_case(
+        similarity.ivf_ann_staged, similarity.ivf_ann_sql()
+    )
 
     # Recall of int8-quantized retrieval against the same exact ground
     # truth — completes the quantization family's self-evaluation (PQ
     # and matryoshka have theirs): the number that says whether 4x
-    # smaller vectors still retrieve the right neighbors. Same
-    # query-grain join shape as ann_recall_report.
-    def _int8_recall(spark: SparkSession) -> DataFrame:
-        exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
-        approx = similarity.int8_topk_staged(spark).select("q_id", "n_id")
-        return (
-            exact.join(approx.withColumn("hit", F.lit(1)), ["q_id", "n_id"], "left")
-            .groupBy("q_id")
-            .agg(
-                F.count("*").alias("k"),
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"),
-            )
-            .select(
-                "q_id",
-                "k",
-                "n_hits",
-                F.expr("CAST(n_hits * 1000000 DIV k AS BIGINT)").alias("recall_ppm"),
-            )
-        )
-
-    _int8_recall_oracle = f"""
-WITH j AS (
-  SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql().strip()}) e
-  LEFT JOIN ({similarity.int8_topk_sql().strip()}) a
-    ON a.q_id = e.q_id AND a.n_id = e.n_id
-)
-SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
-       CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
-FROM j GROUP BY q_id
-"""
-    cases["ann_int8_recall"] = _case(_int8_recall, _int8_recall_oracle)
+    # smaller vectors still retrieve the right neighbors.
+    cases["ann_int8_recall"] = _recall_case(
+        similarity.int8_topk_staged, similarity.int8_topk_sql()
+    )
 
     # Recall of the composed IVF-PQ index against the same exact
     # ground truth — read NEXT TO ann_recall_report (IVF alone): the
     # delta is the price of scanning m-byte codes instead of 64-float
     # vectors inside the probed cells, the storage-vs-recall trade an
-    # IVF-PQ deployment actually tunes. Same query-grain join shape.
-    def _ivfpq_recall(spark: SparkSession) -> DataFrame:
-        exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
-        approx = similarity.ivfpq_topk_staged(spark).select("q_id", "n_id")
-        return (
-            exact.join(approx.withColumn("hit", F.lit(1)), ["q_id", "n_id"], "left")
-            .groupBy("q_id")
-            .agg(
-                F.count("*").alias("k"),
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"),
-            )
-            .select(
-                "q_id",
-                "k",
-                "n_hits",
-                F.expr("CAST(n_hits * 1000000 DIV k AS BIGINT)").alias("recall_ppm"),
-            )
-        )
-
-    _ivfpq_recall_oracle = f"""
-WITH j AS (
-  SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql().strip()}) e
-  LEFT JOIN ({similarity.ivfpq_adc_topk_sql().strip()}) a
-    ON a.q_id = e.q_id AND a.n_id = e.n_id
-)
-SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
-       CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
-FROM j GROUP BY q_id
-"""
-    cases["ann_ivfpq_recall"] = _case(_ivfpq_recall, _ivfpq_recall_oracle)
+    # IVF-PQ deployment actually tunes.
+    cases["ann_ivfpq_recall"] = _recall_case(
+        similarity.ivfpq_topk_staged, similarity.ivfpq_adc_topk_sql()
+    )
 
     # ---- nprobe sweep over the SAME staged IVF assignment relation:
     # recall-vs-candidate-mass per probe budget (see
@@ -3202,36 +3157,9 @@ FROM j GROUP BY q_id
     # same measurement for the PQ/ADC path — coarse 8-centroid
     # codebooks trade recall for ~21× storage; this query is the
     # number that trade is judged by.
-    def _pq_recall(spark: SparkSession) -> DataFrame:
-        exact = similarity.cosine_topk_staged(spark).select("q_id", "n_id")
-        approx = similarity.pq_adc_topk_staged(spark).select("q_id", "n_id")
-        return (
-            exact.join(approx.withColumn("hit", F.lit(1)), ["q_id", "n_id"], "left")
-            .groupBy("q_id")
-            .agg(
-                F.count("*").alias("k"),
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hits"),
-            )
-            .select(
-                "q_id",
-                "k",
-                "n_hits",
-                F.expr("CAST(n_hits * 1000000 DIV k AS BIGINT)").alias("recall_ppm"),
-            )
-        )
-
-    _pq_recall_oracle = f"""
-WITH j AS (
-  SELECT e.q_id, CASE WHEN a.n_id IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM ({similarity.cosine_topk_sql().strip()}) e
-  LEFT JOIN ({similarity.pq_adc_topk_sql().strip()}) a
-    ON a.q_id = e.q_id AND a.n_id = e.n_id
-)
-SELECT q_id, COUNT(*) AS k, CAST(SUM(hit) AS BIGINT) AS n_hits,
-       CAST(SUM(hit) * 1000000 // COUNT(*) AS BIGINT) AS recall_ppm
-FROM j GROUP BY q_id
-"""
-    cases["ann_pq_recall_report"] = _case(_pq_recall, _pq_recall_oracle)
+    cases["ann_pq_recall_report"] = _recall_case(
+        similarity.pq_adc_topk_staged, similarity.pq_adc_topk_sql()
+    )
 
     # --- skew handling: salted plans are RESULT-IDENTICAL to the plain
     # plans, so the oracles are the unsalted SQL — proving the salt

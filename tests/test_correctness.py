@@ -195,6 +195,45 @@ def test_registry_has_no_per_query_catalog_plumbing():
     assert not pass_through, pass_through
 
 
+def test_fp_chain_has_one_definition():
+    """The embedding kernels' bit-exact contract is the oracle's
+    left-associated 64-term chain, written out once: among the
+    top-level functions under ``etl_service_spark/``, only
+    ``similarity.np_norms`` and ``similarity.np_dots`` may loop ``for
+    ... in range(1, DIM)``. A hand-written copy elsewhere could drift
+    from the oracle's operation order and silently break parity."""
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "etl_service_spark")
+
+    def chain_loop(n: ast.AST) -> bool:
+        it = n.iter if isinstance(n, (ast.For, ast.comprehension)) else None
+        return (
+            isinstance(it, ast.Call)
+            and isinstance(it.func, ast.Name)
+            and it.func.id == "range"
+            and len(it.args) == 2
+            and isinstance(it.args[0], ast.Constant)
+            and it.args[0].value == 1
+            and (
+                (isinstance(it.args[1], ast.Name) and it.args[1].id == "DIM")
+                or (isinstance(it.args[1], ast.Attribute) and it.args[1].attr == "DIM")
+            )
+        )
+
+    findings = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for top in tree.body:
+            name = getattr(top, "name", f"{os.path.basename(path)}:{top.lineno}")
+            if name not in ("np_norms", "np_dots") and any(chain_loop(n) for n in ast.walk(top)):
+                findings.append(name)
+    assert not findings, findings
+
+
 def test_plan_audit_flags_single_partition_windows(spark, sf_dir):
     """The round-9 audit rule end-to-end: an unpartitioned NTILE over
     a fact table (the pre-fix layout_zorder_skipping / RFM shape)

@@ -722,6 +722,41 @@ def test_cosine_topk_staged_ranks_nan_first_like_engines(spark):
     assert len(got) == 3 and [r[2] for r in got] == [1, 2, 3]
 
 
+def test_range_search_drops_zero_norm_like_oracle(spark):
+    """A zero-norm embedding yields a NaN cosine in the range-search
+    kernel; ``NaN >= tau`` is False, so the row is dropped — exactly
+    what the DuckDB oracle does (0/0 -> NULL there, which fails the
+    floor). The kernel's rows equal range_search_sql's, bit for bit."""
+    import duckdb
+    import pandas as pd
+
+    from etl_service_spark.operators.similarity import DIM, range_search_sql, range_search_staged
+
+    rows = []
+    for vid in range(6):
+        if vid == 4:
+            vec = [0.0] * DIM  # zero norm -> NaN cosine vs any query
+        else:
+            vec = [float((vid + 1) * (i + 1) % 7) + 0.5 for i in range(DIM)]
+        rows.append((vid, vec))
+    spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").createOrReplaceTempView(
+        "__nan_emb"
+    )
+    got = sorted(
+        tuple(r) for r in range_search_staged(spark, tau=0.4, n_queries=1, view="__nan_emb").collect()
+    )
+
+    con = duckdb.connect()
+    con.register(
+        "__nan_emb",
+        pd.DataFrame({"vec_id": [r[0] for r in rows], "embedding": [r[1] for r in rows]}),
+    )
+    want = sorted(con.execute(range_search_sql(0.4, 1, view="__nan_emb")).fetchall())
+
+    assert got == want
+    assert [n for _q, n, _c in got] == [1, 2, 3, 5]  # zero-norm 4 dropped
+
+
 def test_unpivot_stats_drops_all_null_measure_group(spark):
     """ANSI UNPIVOT eliminates NULL values implicitly, so a measure
     column that is entirely NULL contributes zero long-form rows — its
@@ -1163,6 +1198,26 @@ def test_twophase_cc_matches_propagation_on_chain(spark):
     p2 = {(r.doc_id, r.cluster_id) for r in connected_components(loop).collect()}
     s2 = {(r.doc_id, r.cluster_id) for r in connected_components_twophase(loop).collect()}
     assert p2 == s2 == {(7, 7), (8, 8), (9, 8)}
+
+
+def test_twophase_cc_fails_closed_on_round_budget(spark):
+    """Star contraction, like label propagation, must raise when its
+    round budget ends before the fixpoint: unconverged labels split one
+    component into several cluster_ids (a 65-node chain after one round
+    reads as 63). With the default budget it still equals propagation."""
+    from etl_service_spark.operators.graph import (
+        connected_components,
+        connected_components_twophase,
+    )
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "doc_a bigint, doc_b bigint"
+    )
+    with pytest.raises(RuntimeError, match="1 rounds"):
+        connected_components_twophase(df, max_rounds=1).collect()
+    star = {(r.doc_id, r.cluster_id) for r in connected_components_twophase(df).collect()}
+    prop = {(r.doc_id, r.cluster_id) for r in connected_components(df, max_rounds=100).collect()}
+    assert star == prop == {(i, 0) for i in range(65)}
 
 
 def test_scale_twin_generator_scales_every_table(tmp_path):
