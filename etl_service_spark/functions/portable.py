@@ -22,6 +22,7 @@ Spark-side expressions are plain SQL strings usable with F.expr()
 
 from __future__ import annotations
 
+import re
 import threading
 
 HASH_MOD = 1_000_000_007
@@ -104,20 +105,13 @@ def pd_shingle_hash_sets(texts, n: int = 3):
     re-inlining the tokenizer into shingle lambdas (observed 20x
     slowdowns); a single vectorized UDF sidesteps the whole hazard
     class."""
-    import re
-
     import numpy as np
     import pandas as pd
 
-    splitter = re.compile(TOKEN_SPLIT_RE)
     all_shingles: list[str] = []
     offsets = [0]
     for txt in texts:
-        toks = [t for t in splitter.split(("" if txt is None else txt).lower()) if t]
-        if len(toks) >= n:
-            all_shingles.extend(
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            )
+        all_shingles.extend(py_ngrams(py_tokens(txt), n))
         offsets.append(len(all_shingles))
     hashes = pd_poly_hash_series(pd.Series(all_shingles, dtype=object)).to_numpy(dtype=np.int64) if all_shingles else np.array([], dtype=np.int64)
     return pd.Series(
@@ -410,6 +404,22 @@ def spark_tokens(col: str) -> str:
 
 def duck_tokens(col: str) -> str:
     return f"list_filter(regexp_split_to_array(lower({col}), '{TOKEN_SPLIT_RE}'), x -> x != '')"
+
+
+_TOKEN_SPLITTER = re.compile(TOKEN_SPLIT_RE)
+
+
+def py_tokens(text: str | None) -> list[str]:
+    """Python twin of spark_tokens/duck_tokens for the Arrow kernels:
+    None reads as "", then lower, split on TOKEN_SPLIT_RE, drop empty
+    tokens (multiplicity preserved)."""
+    return [t for t in _TOKEN_SPLITTER.split(("" if text is None else text).lower()) if t]
+
+
+def py_ngrams(tokens: list[str], n: int) -> list[str]:
+    """Space-joined token windows of length ``n`` in order; [] when
+    there are fewer than ``n`` tokens."""
+    return [" ".join(tokens[i : i + n]) for i in range(len(tokens) - n + 1)]
 
 
 def spark_shingles(tokens_expr: str, n: int = 3) -> str:

@@ -97,15 +97,14 @@ def write_copy_idempotent(df: DataFrame, path: str) -> int:
     converges to the same state — the Spark-native equivalent of the
     reference's rollback protocol (delete rows WHERE Dateiname=...,
     CommandExecuter.cs:1130-1283), without a delete pass. At 100 TB the
-    overwrite unit (one month partition) is also the recovery unit."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(SLICE_COL).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return spark.read.parquet(path).count()
+    overwrite unit (one month partition) is also the recovery unit.
+    Dynamic mode is this write's option, not the session conf: a
+    concurrent step's static overwrite on the shared session stays
+    static."""
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        SLICE_COL
+    ).parquet(path)
+    return df.sparkSession.read.parquet(path).count()
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 32) -> None:

@@ -37,6 +37,14 @@ from ..functions import portable as P
 # non-negative operands is identical in Spark and DuckDB.
 _BUCKET = "((doc_id * 2654435761) % 4294967296) % {mod}"
 
+# The 90/5/5 train/val/test assignment as one Spark SQL expression of
+# doc_id — the contract the streaming curation and the corpus build
+# runner both apply, so a document lands in the same split everywhere.
+SPLIT_EXPR = (
+    f"CASE WHEN {_BUCKET.format(mod=1000)} < 900 THEN 'train' "
+    f"WHEN {_BUCKET.format(mod=1000)} < 950 THEN 'val' ELSE 'test' END"
+)
+
 
 def split_assign_sql(
     view: str = "documents",

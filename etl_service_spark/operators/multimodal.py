@@ -357,9 +357,7 @@ def chunk_payload(media_text: DataFrame, window: int = 512) -> DataFrame:
     kernel is reproducible as pure SQL (substr + the portable token
     regex), giving this mapInPandas path a full value-level oracle —
     the UDF-equivalence check the codec stubs can't have."""
-    import re
-
-    token_re = re.compile("[^a-z0-9]+")
+    from ..functions.portable import py_tokens
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -374,9 +372,7 @@ def chunk_payload(media_text: DataFrame, window: int = 512) -> DataFrame:
                     out["media_id"].append(mid)
                     out["chunk_idx"].append(idx)
                     out["chunk_len"].append(len(chunk))
-                    out["n_tokens"].append(
-                        sum(1 for t in token_re.split(chunk.lower()) if t)
-                    )
+                    out["n_tokens"].append(len(py_tokens(chunk)))
             yield pd.DataFrame(out)
 
     return media_text.mapInPandas(kernel, schema=CHUNK_SCHEMA)

@@ -91,10 +91,9 @@ def _partition_topk(batches, ids_q, k: int, score, col: str):
     scores), and a query never lists itself (``n_id <> q_id``, like
     the SQL joins). Any global top-k row is in its partition's local
     top-k, so the final window ranks k·Q·partitions rows, never Q·N.
-    Spark and DuckDB rank NaN as GREATEST under DESC (a zero-norm
-    embedding yields a NaN cosine), but lexsort on -score would sort
-    it last — so NaN maps to -inf in the key while the candidates keep
-    the NaN itself."""
+    A zero-norm embedding yields a NaN cosine; lexsort puts NaN last,
+    like the oracle, where 0/0 is NULL and ``ORDER BY cosine DESC``
+    sorts NULL last."""
     import numpy as np
     import pandas as pd
 
@@ -108,9 +107,7 @@ def _partition_topk(batches, ids_q, k: int, score, col: str):
             keep = ids != q_id
             all_ids = np.concatenate([cand_ids[qi], ids[keep]])
             all_s = np.concatenate([cand_s[qi], s[qi][keep]])
-            key = -all_s
-            key[np.isnan(key)] = -np.inf
-            order = np.lexsort((all_ids, key))[:k]  # last key is primary
+            order = np.lexsort((all_ids, -all_s))[:k]  # last key is primary
             cand_ids[qi], cand_s[qi] = all_ids[order], all_s[order]
     return pd.DataFrame(
         {
@@ -217,17 +214,14 @@ def cosine_topk_staged(
         kernel, schema="q_id bigint, n_id bigint, cosine double"
     )
     # pandas->Arrow serialization maps the kernel's NaN cosines to SQL
-    # NULL (pandas uses NaN as its NA sentinel); the kernel never emits
-    # a legitimate NULL, so restore NULL -> NaN here and rank on the
-    # restored value — NaN is GREATEST under DESC in both Spark and
-    # DuckDB, so zero-norm candidates rank first, like the oracle.
+    # NULL (pandas uses NaN as its NA sentinel), and DESC orders NULL
+    # last — zero-norm candidates rank last with a NULL cosine, exactly
+    # as in the oracle, where 0/0 is NULL.
     return spark.sql(
         f"""
 SELECT q_id, n_id, rnk, cosine FROM (
-  SELECT q_id, n_id, coalesce(cosine, CAST('NaN' AS DOUBLE)) AS cosine,
-         ROW_NUMBER() OVER (
-           PARTITION BY q_id
-           ORDER BY coalesce(cosine, CAST('NaN' AS DOUBLE)) DESC, n_id) AS rnk
+  SELECT q_id, n_id, cosine,
+         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, n_id) AS rnk
   FROM {{scored}}
 ) WHERE rnk <= {k}
 """,

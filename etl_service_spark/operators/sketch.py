@@ -116,6 +116,24 @@ WHERE t.std > 0 AND ABS(e.value - t.mean) > {z_thresh} * t.std
     return template, template
 
 
+# Count-min row hashes, one (multiplier, add) per depth row d: the
+# streaming grid (streaming/sketch_stream.cms_grid) imports these, so
+# its cells stay mergeable with the batch sketch's.
+CMS_MULTS = (2654435761 % 2147483648, 2246822519 % 2147483648, 1540483477, 1274126177)
+CMS_ADDS = (1, 7, 13, 31)
+
+
+def cms_bucket(width: int, depth: int) -> str:
+    """The bucket of ``user_id`` in count-min row ``d`` (a column of
+    the enclosing relation), for ``depth`` rows of ``width`` counters."""
+    case_m = " ".join(f"WHEN {i} THEN {m}" for i, m in enumerate(CMS_MULTS[:depth]))
+    case_a = " ".join(f"WHEN {i} THEN {a}" for i, a in enumerate(CMS_ADDS[:depth]))
+    return (
+        f"(((user_id % 2147483648) * (CASE d {case_m} END)"
+        f" + (CASE d {case_a} END)) % 4294967296) % {width}"
+    )
+
+
 def cms_heavy_hitters_sql(
     depth: int = 4, width: int = 1024, view: str = "events"
 ) -> tuple[str, str]:
@@ -138,16 +156,8 @@ def cms_heavy_hitters_sql(
 
     Keys are masked to 31 bits and multipliers stay < 2^31 so the
     hash product fits in BIGINT with no overflow at any key range."""
-    mults = [2654435761 % 2147483648, 2246822519 % 2147483648,
-             1540483477, 1274126177][:depth]
-    adds = [1, 7, 13, 31][:depth]
-    case_m = " ".join(f"WHEN {i} THEN {m}" for i, m in enumerate(mults))
-    case_a = " ".join(f"WHEN {i} THEN {a}" for i, a in enumerate(adds))
     depths = " UNION ALL ".join(f"SELECT {i} AS d" for i in range(depth))
-    bucket = (
-        f"(((user_id % 2147483648) * (CASE d {case_m} END)"
-        f" + (CASE d {case_a} END)) % 4294967296) % {width}"
-    )
+    bucket = cms_bucket(width, depth)
     template = f"""
 WITH depths AS ({depths}),
 hashed AS (

@@ -339,11 +339,7 @@ def repetition_quality_staged(spark, view: str = "documents") -> DataFrame:
     tokenize to nothing are absent from the output exactly like the
     oracle's explode-based form. At 100 TB this is embarrassingly
     parallel over document partitions."""
-    import re
-
     import pandas as pd
-
-    splitter = re.compile(P.TOKEN_SPLIT_RE)
 
     def kernel(batches):
         from collections import Counter
@@ -355,9 +351,7 @@ def repetition_quality_staged(spark, view: str = "documents") -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
-                toks = [
-                    t for t in splitter.split(("" if txt is None else txt).lower()) if t
-                ]
+                toks = P.py_tokens(txt)
                 if not toks:
                     continue  # explode([]) emits nothing in both engines
                 uc = Counter(toks)
@@ -403,7 +397,6 @@ def quality_scores_df(docs: DataFrame) -> DataFrame:
 
     import pandas as pd
 
-    splitter = re.compile(P.TOKEN_SPLIT_RE)
     punct = re.compile(PUNCT_RE)
     stops = frozenset(STOPWORDS["en"])
 
@@ -414,7 +407,7 @@ def quality_scores_df(docs: DataFrame) -> DataFrame:
             for doc_id, txt in zip(pdf["doc_id"], pdf["text"]):
                 raw = "" if txt is None else txt
                 low = raw.lower()
-                toks = [t for t in splitter.split(low) if t]
+                toks = P.py_tokens(raw)
                 ntok = len(toks)
                 stop = sum(1 for t in toks if t in stops)
                 alpha = len(punct.sub("", low))
@@ -451,21 +444,20 @@ def quality_score_staged(spark, view: str = "documents") -> DataFrame:
     return quality_scores_df(spark.table(view))
 
 
-# The staged exploded token relation (doc_id, lang, tok, h), memoized
-# per (view, input files). The tokenizer + per-token poly-hash run ONCE
-# in an Arrow kernel (the SQL forms evaluate an interpreted HOF split
-# per row, and simhash additionally an interpreted per-character hash
-# fold per token occurrence); every token-mass consumer (simhash,
-# tf-idf, per-language top terms) joins the staged relation — at 100 TB
-# this is the tokenized-corpus staging table written next to the
-# fingerprint table.
+# The staged exploded token relation (doc_id, pos, lang, tok, h), pos
+# 1-based within the doc, memoized per (view, input files). The
+# tokenizer + per-token poly-hash run ONCE in an Arrow kernel (the SQL
+# forms evaluate an interpreted HOF split per row, and simhash
+# additionally an interpreted per-character hash fold per token
+# occurrence); every token-mass consumer (simhash, tf-idf, per-language
+# top terms) and RAKE's position-ordered segmentation read the staged
+# relation — the SQL alternative for positions (index explode +
+# element_at) rebuilds the token array per position, O(n²) per doc.
+# At 100 TB this is the tokenized-corpus staging table written next to
+# the fingerprint table.
 def materialize_tokens(spark, view: str = "documents") -> str:
-    import re
-
     import pandas as pd
     import pyarrow as pa
-
-    splitter = re.compile(P.TOKEN_SPLIT_RE)
 
     # mapInArrow, not mapInPandas: the kernel builds python lists either
     # way (tokenization is inherently per-string), so the pandas
@@ -473,15 +465,16 @@ def materialize_tokens(spark, view: str = "documents") -> str:
     # measured ~18% off the stage wall at sf0.1 going Arrow-direct.
     def kernel(batches):
         for b in batches:
-            doc_ids, langs, toks = [], [], []
+            doc_ids, poss, langs, toks = [], [], [], []
             for doc_id, lang, txt in zip(
                 b.column("doc_id").to_pylist(),
                 b.column("lang").to_pylist(),
                 b.column("text").to_pylist(),
             ):
-                tt = [t for t in splitter.split(("" if txt is None else txt).lower()) if t]
+                tt = P.py_tokens(txt)
                 toks.extend(tt)
                 doc_ids.extend([doc_id] * len(tt))
+                poss.extend(range(1, len(tt) + 1))
                 langs.extend([lang] * len(tt))
             h = (
                 P.pd_poly_hash_series(pd.Series(toks, dtype=object)).tolist()
@@ -491,6 +484,7 @@ def materialize_tokens(spark, view: str = "documents") -> str:
             yield pa.RecordBatch.from_pydict(
                 {
                     "doc_id": pa.array(doc_ids, pa.int64()),
+                    "pos": pa.array(poss, pa.int64()),
                     "lang": pa.array(langs, pa.string()),
                     "tok": pa.array(toks, pa.string()),
                     "h": pa.array(h, pa.int64()),
@@ -500,7 +494,7 @@ def materialize_tokens(spark, view: str = "documents") -> str:
     return P.stage_view(
         spark,
         lambda: P.fan_out(spark.table(view).select("doc_id", "lang", "text")).mapInArrow(
-            kernel, schema="doc_id bigint, lang string, tok string, h bigint"
+            kernel, schema="doc_id bigint, pos bigint, lang string, tok string, h bigint"
         ),
         "tokens",
         view,
@@ -1726,12 +1720,8 @@ def materialize_gram_positions(spark, k: int = 4, view: str = "documents") -> st
     after an index explode makes Catalyst rebuild the whole gram array
     once per POSITION (O(n²) per doc — measured 15.9 s vs 0.7 s at
     sf0.1)."""
-    import re
-
     import pandas as pd
     import pyarrow as pa
-
-    splitter = re.compile(P.TOKEN_SPLIT_RE)
 
     def kernel(batches):
         for b in batches:
@@ -1739,11 +1729,10 @@ def materialize_gram_positions(spark, k: int = 4, view: str = "documents") -> st
             for doc_id, txt in zip(
                 b.column("doc_id").to_pylist(), b.column("text").to_pylist()
             ):
-                toks = [t for t in splitter.split(("" if txt is None else txt).lower()) if t]
-                for i in range(len(toks) - k + 1):
-                    doc_ids.append(doc_id)
-                    poss.append(i + 1)
-                    grams.append(" ".join(toks[i : i + k]))
+                gg = P.py_ngrams(P.py_tokens(txt), k)
+                doc_ids.extend([doc_id] * len(gg))
+                poss.extend(range(1, len(gg) + 1))
+                grams.extend(gg)
             h = (
                 P.pd_poly_hash_series(pd.Series(grams, dtype=object)).tolist()
                 if grams
@@ -1857,46 +1846,6 @@ def winnowing_pairs_staged(
     )
 
 
-def materialize_token_positions(spark, view: str = "documents") -> str:
-    """Staged (doc_id, pos, tok) relation — position-indexed tokens as
-    STRINGS (the winnowing relation keeps only hashes). One Arrow
-    pass; same cache/staging discipline as every staged relation. The
-    SQL alternative (index explode + element_at) rebuilds the token
-    array per position (the measured O(n²)/doc hazard)."""
-    import re
-
-    import pyarrow as pa
-
-    splitter = re.compile(P.TOKEN_SPLIT_RE)
-
-    def kernel(batches):
-        for b in batches:
-            doc_ids, poss, toks = [], [], []
-            for doc_id, txt in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                tt = [t for t in splitter.split(("" if txt is None else txt).lower()) if t]
-                doc_ids.extend([doc_id] * len(tt))
-                poss.extend(range(1, len(tt) + 1))
-                toks.extend(tt)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "doc_id": pa.array(doc_ids, pa.int64()),
-                    "pos": pa.array(poss, pa.int64()),
-                    "tok": pa.array(toks, pa.string()),
-                }
-            )
-
-    return P.stage_view(
-        spark,
-        lambda: P.fan_out(spark.table(view).select("doc_id", "text")).mapInArrow(
-            kernel, "doc_id bigint, pos bigint, tok string"
-        ),
-        "tok_pos",
-        view,
-    )
-
-
 def _rake_words_body(tokpos_rel: str) -> str:
     """The segmentation prefix (flags → seg window → stopword-free
     words) — split out so the Spark path can materialize the words
@@ -2006,7 +1955,7 @@ def rake_keywords_staged(
     # relation in the before plan, 1 after. Values unchanged (the
     # oracle keeps the identical single statement; _rake_body is
     # byte-identical to the pre-split text).
-    rel = materialize_token_positions(spark, view)
+    rel = materialize_tokens(spark, view)
     # memoized staged relation (round-12, ADVICE r11): same leak fix as
     # tfidf_top_terms_staged — the per-call localCheckpoint + id()-named
     # view pinned one checkpoint + one catalog entry per execution and

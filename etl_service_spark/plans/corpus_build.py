@@ -46,15 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import graph, textops
+from ..operators.corpus import SPLIT_EXPR
 from ..sources import snapshots
-
-TRAIN_PER_MILLE = 900
-VAL_PER_MILLE = 950
-_BUCKET = "((doc_id * 2654435761) % 4294967296) % 1000"
-SPLIT_EXPR = (
-    f"CASE WHEN {_BUCKET} < {TRAIN_PER_MILLE} THEN 'train' "
-    f"WHEN {_BUCKET} < {VAL_PER_MILLE} THEN 'val' ELSE 'test' END"
-)
 
 
 def _write_report_json(table_dir: str, version: int, report: dict) -> None:

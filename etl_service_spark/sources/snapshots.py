@@ -84,16 +84,20 @@ def _stage_data_files(df: DataFrame, table_dir: str) -> tuple[list[str], int]:
     stage_id = uuid.uuid4().hex[:12]
     stage_dir = os.path.join(table_dir, "data", stage_id)
     df.write.parquet(stage_dir)
-    files, rows = [], 0
-    for f in sorted(os.listdir(stage_dir)):
-        if f.endswith(".parquet"):
-            files.append(os.path.join("data", stage_id, f))
-    # row count from parquet footers (no second scan of the data)
+    files = [
+        os.path.join("data", stage_id, f)
+        for f in sorted(os.listdir(stage_dir))
+        if f.endswith(".parquet")
+    ]
+    return files, _footer_rows(table_dir, files)
+
+
+def _footer_rows(table_dir: str, files: list[str]) -> int:
+    """Row count of table-relative data files from their parquet
+    footers — no scan of the data."""
     import pyarrow.parquet as pq
 
-    for rel in files:
-        rows += pq.ParquetFile(os.path.join(table_dir, rel)).metadata.num_rows
-    return files, rows
+    return sum(pq.ParquetFile(os.path.join(table_dir, f)).metadata.num_rows for f in files)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -224,8 +228,6 @@ def expire_snapshots(
     stage-then-publish window); deleting it would corrupt that
     writer's commit. An hour dwarfs any real stage-to-publish gap;
     pass 0 only when no writer can be in flight."""
-    import time
-
     versions = list_versions(table_dir)
     keep = versions[-keep_last:] if keep_last > 0 else []
     referenced: set[str] = set()
@@ -234,28 +236,42 @@ def expire_snapshots(
     dropped_manifests = [v for v in versions if v not in keep]
     for v in dropped_manifests:
         os.remove(_manifest_path(table_dir, v))
-    dropped_files = 0
-    now = time.time()
-    data_root = os.path.join(table_dir, "data")
-    if os.path.isdir(data_root):
-        for stage in sorted(os.listdir(data_root)):
-            stage_dir = os.path.join(data_root, stage)
-            for f in sorted(os.listdir(stage_dir)):
-                rel = os.path.join("data", stage, f)
-                path = os.path.join(stage_dir, f)
-                if (
-                    rel not in referenced
-                    and f.endswith(".parquet")
-                    and now - os.path.getmtime(path) >= orphan_grace_s
-                ):
-                    os.remove(path)
-                    dropped_files += 1
-            _maybe_remove_stage_dir(stage_dir, now, orphan_grace_s)
+    dropped_files, _ = _sweep_unreferenced(table_dir, referenced, orphan_grace_s)
     return {
         "dropped_manifests": dropped_manifests,
         "dropped_files": dropped_files,
         "kept_versions": keep,
     }
+
+
+def _sweep_unreferenced(
+    table_dir: str, referenced: set[str], grace_s: int
+) -> tuple[int, int]:
+    """Delete every data file under ``data/`` that no manifest in
+    ``referenced`` names and that is at least ``grace_s`` old, then
+    drop stage directories left abandoned (``_maybe_remove_stage_dir``).
+    Returns (files removed, bytes removed)."""
+    import time
+
+    removed = reclaimed = 0
+    now = time.time()
+    data_root = os.path.join(table_dir, "data")
+    if not os.path.isdir(data_root):
+        return 0, 0
+    for stage in sorted(os.listdir(data_root)):
+        stage_dir = os.path.join(data_root, stage)
+        for f in sorted(os.listdir(stage_dir)):
+            path = os.path.join(stage_dir, f)
+            if (
+                os.path.join("data", stage, f) not in referenced
+                and f.endswith(".parquet")
+                and now - os.path.getmtime(path) >= grace_s
+            ):
+                reclaimed += os.path.getsize(path)
+                os.remove(path)
+                removed += 1
+        _maybe_remove_stage_dir(stage_dir, now, grace_s)
+    return removed, reclaimed
 
 
 def _maybe_remove_stage_dir(stage_dir: str, now: float, grace_s: int) -> None:
@@ -302,31 +318,11 @@ def remove_orphan_files(table_dir: str, orphan_grace_s: int = 3600) -> dict:
     be a live writer's staged-but-unpublished data; deleting it would
     corrupt that writer's commit. Returns {orphans_removed,
     bytes_reclaimed, versions_kept}."""
-    import time
-
     versions = list_versions(table_dir)
     referenced: set[str] = set()
     for v in versions:
         referenced.update(_read_manifest(table_dir, v)["files"])
-    removed = 0
-    reclaimed = 0
-    now = time.time()
-    data_root = os.path.join(table_dir, "data")
-    if os.path.isdir(data_root):
-        for stage in sorted(os.listdir(data_root)):
-            stage_dir = os.path.join(data_root, stage)
-            for f in sorted(os.listdir(stage_dir)):
-                rel = os.path.join("data", stage, f)
-                path = os.path.join(stage_dir, f)
-                if (
-                    rel not in referenced
-                    and f.endswith(".parquet")
-                    and now - os.path.getmtime(path) >= orphan_grace_s
-                ):
-                    reclaimed += os.path.getsize(path)
-                    os.remove(path)
-                    removed += 1
-            _maybe_remove_stage_dir(stage_dir, now, orphan_grace_s)
+    removed, reclaimed = _sweep_unreferenced(table_dir, referenced, orphan_grace_s)
     return {
         "orphans_removed": removed,
         "bytes_reclaimed": reclaimed,
@@ -399,8 +395,6 @@ def merge_upsert(
     this is the snapshot-native equivalent with atomic publish and
     Iceberg-style file pruning.
     """
-    import pyarrow.parquet as pq
-
     from pyspark.sql import functions as F
 
     versions = list_versions(table_dir)
@@ -462,11 +456,9 @@ def merge_upsert(
         tbl_cols = footer_schema(spark, os.path.join(table_dir, all_files[0])).fieldNames()
         merged = keep.select(*tbl_cols)
     new_files, new_rows = _stage_data_files(merged, table_dir)
-    untouched_rows = sum(
-        pq.ParquetFile(os.path.join(table_dir, f)).metadata.num_rows for f in untouched
-    )
     return _commit(
-        table_dir, "merge", untouched + new_files, untouched_rows + new_rows,
+        table_dir, "merge", untouched + new_files,
+        _footer_rows(table_dir, untouched) + new_rows,
         parent_version=versions[-1],
     )
 
@@ -486,8 +478,6 @@ def compact_files(
     nothing crossed the threshold — no empty commit). Rows are
     preserved exactly; only layout changes. Crash-safe like every
     commit: staged files are invisible until the manifest rename."""
-    import pyarrow.parquet as pq
-
     versions = list_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no committed versions under {table_dir}")
@@ -505,11 +495,8 @@ def compact_files(
     n_out = max(1, (total + small_bytes - 1) // small_bytes)
     df = read_parquet(spark, small_abs).coalesce(int(n_out))
     new_files, new_rows = _stage_data_files(df, table_dir)
-    kept_rows = sum(
-        pq.ParquetFile(os.path.join(table_dir, f)).metadata.num_rows for f in kept
-    )
     version = _commit(
-        table_dir, "compact", kept + new_files, kept_rows + new_rows,
+        table_dir, "compact", kept + new_files, _footer_rows(table_dir, kept) + new_rows,
         parent_version=versions[-1],
     )
     return {"version": version, "compacted": len(small), "kept": len(kept)}

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .events_stream import drain
+
 VECTOR_SCHEMA = "vec_id bigint, embedding array<float>"
 
 
@@ -44,8 +46,8 @@ def run_ivf_assign_stream(
     big_t: str | None = None,
 ) -> None:
     """Drain all available vector files through the maintenance fold
-    (availableNow trigger — the batch-boundary-respecting drain used by
-    every foreachBatch sink here)."""
+    with ``events_stream.drain`` (the availableNow drain every sink
+    here runs)."""
     from ..operators import similarity
 
     def fold(batch_df: DataFrame, _batch_id: int) -> None:
@@ -55,10 +57,4 @@ def run_ivf_assign_stream(
             batch_df.sparkSession, index_dir, assign_dir, batch_df, big_t
         )
 
-    (
-        vectors.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(vectors.writeStream.foreachBatch(fold), checkpoint_dir)

@@ -12,9 +12,9 @@ runs them:
 2. quality gate (textops.quality_scores_df — the zero-shuffle Arrow
    kernel; identical text scores identically, so dedup-before-quality
    loses nothing);
-3. deterministic split assignment (the corpus._BUCKET pure function of
-   doc_id — a document can never migrate between train/val/test across
-   pipeline versions or replays);
+3. deterministic split assignment (``corpus.SPLIT_EXPR``, imported —
+   a pure function of doc_id, so a document can never migrate between
+   train/val/test across pipeline versions or replays);
 4. append to the curated store, partitioned by split (so training
    readers prune to their split at the directory level).
 
@@ -40,15 +40,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+from ..operators.corpus import SPLIT_EXPR
+from .events_stream import drain
 
-TRAIN_PER_MILLE = 900
-VAL_PER_MILLE = 950
-_BUCKET = "((doc_id * 2654435761) % 4294967296) % 1000"  # corpus._BUCKET mod 1000
-SPLIT_EXPR = (
-    f"CASE WHEN {_BUCKET} < {TRAIN_PER_MILLE} THEN 'train' "
-    f"WHEN {_BUCKET} < {VAL_PER_MILLE} THEN 'val' ELSE 'test' END"
-)
+DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 
 
 def read_document_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
@@ -134,21 +129,18 @@ def run_corpus_curation(
     benchmark_fps_dir: str | None = None,
     neardup_state_dir: str | None = None,
 ) -> None:
-    """Drain the landing backlog through the curation pipeline — the
-    production trigger would be processingTime, like the event poll."""
-    q = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(
+    """Drain the landing backlog through the curation pipeline with
+    ``events_stream.drain`` — the production trigger would be
+    processingTime, like the event poll."""
+    drain(
+        docs.writeStream.outputMode("append").foreachBatch(
             lambda df, _id: curate_batch(
                 df, fingerprint_dir, out_dir, q_min, benchmark_fps_dir,
                 neardup_state_dir,
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def read_curated(

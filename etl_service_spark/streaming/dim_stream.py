@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.scd import scd2_merge
 from ..sources import snapshots
+from .events_stream import drain
 
 
 def _empty_history(spark: SparkSession, updates: DataFrame) -> DataFrame:
@@ -110,11 +111,4 @@ def run_scd2_maintenance(
             batch_df, table_dir, key, tracked, ts_for_batch(batch_id)
         )
 
-    q = (
-        updates.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates.writeStream.outputMode("append").foreachBatch(fold), checkpoint_dir)

@@ -17,6 +17,7 @@ own tick.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -112,6 +113,18 @@ def windowed_event_counts(
     )
 
 
+def drain(writer: DataStreamWriter, checkpoint_dir: str) -> None:
+    """The poll tick every stream sink here runs: start ``writer``
+    (its sink and output mode set by the caller) on ``checkpoint_dir``
+    with ``Trigger.AvailableNow`` and block until the backlog is
+    drained. Re-invoking with the same checkpoint processes only what
+    arrived since the last drain — the reference's 10-second poll
+    (Processor.cs:1138-1152) as one restart-safe call."""
+    writer.option("checkpointLocation", checkpoint_dir).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+
+
 def run_available_now(result: DataFrame, checkpoint_dir: str, table_name: str) -> None:
     """Drain the current backlog into an in-memory sink.
 
@@ -119,15 +132,10 @@ def run_available_now(result: DataFrame, checkpoint_dir: str, table_name: str) -
     checkpoint, so each call needs a fresh ``checkpoint_dir``. For the
     restartable poll loop use :func:`run_available_now_to_parquet`.
     """
-    q = (
-        result.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(table_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        result.writeStream.outputMode("append").format("memory").queryName(table_name),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def run_available_now_to_parquet(result: DataFrame, checkpoint_dir: str, out_dir: str) -> None:
@@ -135,15 +143,10 @@ def run_available_now_to_parquet(result: DataFrame, checkpoint_dir: str, out_dir
     path. Re-invoking with the same checkpoint processes only files that
     arrived since the last drain: this IS the reference's 10-second poll
     tick (Processor.cs:1138-1152), restart-safe and exactly-once."""
-    q = (
-        result.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        result.writeStream.outputMode("append").format("parquet").option("path", out_dir),
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def windowed_ohlc(
@@ -287,8 +290,6 @@ def run_upsert_aggregate(
     recovery unit. Complete output mode keeps every window in state —
     bounded here by the windowed-aggregation watermark at production
     retention, or by compacting old windows out of the stream."""
-    from pyspark.sql import functions as F
-
     agg = (
         events.groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
@@ -300,19 +301,10 @@ def run_upsert_aggregate(
     )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            batch_df.write.mode("overwrite").partitionBy("win_part").parquet(out_dir)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # per-write option, not the session conf: a concurrent step's
+        # static overwrite on the shared session must stay static
+        batch_df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("win_part").parquet(out_dir)
 
-    q = (
-        agg.writeStream.outputMode("complete")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(agg.writeStream.outputMode("complete").foreachBatch(upsert), checkpoint_dir)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..sources import snapshots
+from .events_stream import drain
 
 
 def latest_per_key(batch_df: DataFrame, key: str, order_col: str) -> DataFrame:
@@ -102,11 +103,4 @@ def run_merge_maintenance(
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         merge_batch(batch_df, table_dir, key, order_col)
 
-    q = (
-        updates.writeStream.outputMode("append")
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates.writeStream.outputMode("append").foreachBatch(fold), checkpoint_dir)

@@ -21,11 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .corpus_stream import DOC_SCHEMA
-
-
-def read_document_stream(spark: SparkSession, landing_dir: str) -> DataFrame:
-    return spark.readStream.schema(DOC_SCHEMA).parquet(landing_dir)
+from .corpus_stream import read_document_stream  # noqa: F401  (the document source)
+from .events_stream import drain
 
 
 def quality_partials(docs: DataFrame) -> DataFrame:
@@ -56,14 +53,7 @@ def run_quality_rollup(docs: DataFrame, checkpoint_dir: str, table_dir: str) -> 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         quality_partials(batch_df).write.mode("append").parquet(table_dir)
 
-    q = (
-        docs.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(docs.writeStream.outputMode("append").foreachBatch(upsert), checkpoint_dir)
 
 
 def read_quality_stats(spark: SparkSession, table_dir: str) -> DataFrame:

@@ -21,34 +21,33 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# same integer pipeline as hll_distinct_sql (operators/sketch.py):
-# 32-bit bijective hash -> 6-bit register / 26-bit suffix -> rank from
-# length(bin(suffix))
-_HV = "((user_id * 2654435761) % 4294967296)"
-_RNK = f"CASE WHEN ({_HV} DIV 64) = 0 THEN 27 ELSE 27 - length(bin({_HV} DIV 64)) END"
+from ..operators.sketch import _HLL_M, _hll_frags, cms_bucket
+from .events_stream import drain
 
 
 def hll_registers(events: DataFrame) -> DataFrame:
-    """(event_type, reg, mx) register relation of a batch of events."""
+    """(event_type, reg, mx) register relation of a batch of events:
+    the hash and the register rank are the Spark halves of
+    ``sketch._hll_frags()``, the batch sketch's own definitions."""
+    frags = _hll_frags()
     return (
-        events.selectExpr("event_type", f"{_HV} % 64 AS reg", f"{_RNK} AS rnk")
+        events.selectExpr("event_type", f"{frags['hll_hash']} AS hv")
+        .selectExpr("event_type", "hv % 64 AS reg", f"{frags['hll_rnk'][0]} AS rnk")
         .groupBy("event_type", "reg")
         .agg(F.max("rnk").alias("mx"))
     )
 
 
 def hll_estimates(registers: DataFrame) -> DataFrame:
-    """Register table -> per-type estimate (same constants as the batch
-    sketch: m=64, scale 2^27, shared alpha numerator), WITH the
+    """Register table -> per-type estimate (m=64, scale 2^27 and the
+    alpha numerator ``num`` from ``sketch._hll_frags()``), WITH the
     standard small-range linear-counting correction (raw HLL is badly
     biased below ~2.5m): when zero registers remain, estimate
     m·ln(m/zeros) instead. The batch registry query stays raw because
     ln() is not correctly-rounded identically across engines and that
     query is value-checked against DuckDB; this streaming path is
     Spark-only, so the accuracy-correct form is the right one."""
-    m = 64
-    alpha = 0.7213 / (1 + 1.079 / m)
-    num = alpha * m * m * (1 << 27)
+    m = _HLL_M
     return (
         registers.groupBy("event_type")
         .agg(
@@ -57,8 +56,8 @@ def hll_estimates(registers: DataFrame) -> DataFrame:
         )
         .selectExpr(
             "event_type",
-            f"CAST(FLOOR({num!r} / CAST(s_present + (64 - n_regs) * 134217728 AS DOUBLE)) AS BIGINT)"
-            " AS hll_raw",
+            f"CAST(FLOOR({_hll_frags()['num']} / CAST(s_present + (64 - n_regs) * 134217728"
+            " AS DOUBLE)) AS BIGINT) AS hll_raw",
             f"CAST(64 - n_regs AS BIGINT) AS n_zero_regs",
         )
         .selectExpr(
@@ -98,46 +97,28 @@ def run_hll_register_rollup(events: DataFrame, checkpoint_dir: str, table_dir: s
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         hll_registers(batch_df).write.mode("append").parquet(table_dir)
 
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events.writeStream.outputMode("append").foreachBatch(upsert), checkpoint_dir)
 
 
 # ---- streaming count-min sketch (heavy-hitter grid) maintenance ----
-# Same constants as operators/sketch.cms_heavy_hitters_sql: d rows of
-# w counters, deterministic multiplicative hashes, 31-bit-masked keys.
-_CMS_MULTS = [2654435761 % 2147483648, 2246822519 % 2147483648, 1540483477, 1274126177]
-_CMS_ADDS = [1, 7, 13, 31]
-
-
-def _cms_bucket(width: int) -> str:
-    case_m = " ".join(f"WHEN {i} THEN {m}" for i, m in enumerate(_CMS_MULTS))
-    case_a = " ".join(f"WHEN {i} THEN {a}" for i, a in enumerate(_CMS_ADDS))
-    return (
-        f"(((user_id % 2147483648) * (CASE d {case_m} END)"
-        f" + (CASE d {case_a} END)) % 4294967296) % {width}"
-    )
 
 
 def cms_grid(events: DataFrame, depth: int = 4, width: int = 1024) -> DataFrame:
     """(d, bucket, cnt) count-min grid of a batch of events — the
     fixed-size (d×w cells) MERGEABLE summary; merge operator is
-    cell-wise SUM."""
+    cell-wise SUM. The row hashes are ``sketch.cms_bucket``, the one
+    the batch ``cms_heavy_hitters_sql`` uses."""
+    bucket = cms_bucket(width, depth)
     depths = " UNION ALL ".join(f"SELECT {i} AS d" for i in range(depth))
     # the batch goes in as a formatter argument: spark.sql registers it
     # under a generated name for the analysis and drops it again, so
     # concurrent streams never share a view and none outlives the call
     return events.sparkSession.sql(
         f"""
-SELECT d, {_cms_bucket(width)} AS bucket, COUNT(*) AS cnt
+SELECT d, {bucket} AS bucket, COUNT(*) AS cnt
 FROM {{ev}} CROSS JOIN ({depths}) depths
 WHERE user_id IS NOT NULL
-GROUP BY d, {_cms_bucket(width)}
+GROUP BY d, {bucket}
 """,
         ev=events,
     )
@@ -158,14 +139,7 @@ def run_cms_rollup(events: DataFrame, checkpoint_dir: str, table_dir: str) -> No
             "append"
         ).parquet(table_dir)
 
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events.writeStream.outputMode("append").foreachBatch(upsert), checkpoint_dir)
 
 
 def read_cms_grid(spark: SparkSession, table_dir: str) -> DataFrame:

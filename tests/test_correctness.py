@@ -234,6 +234,96 @@ def test_fp_chain_has_one_definition():
     assert not findings, findings
 
 
+def _source_findings(patterns, hit, allowed_def=None):
+    """``path:line`` of every AST node in the repo files matching the
+    glob ``patterns`` for which ``hit(node)`` holds, skipping the body
+    of any function named ``allowed_def``."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = sorted({p for g in patterns for p in glob.glob(os.path.join(root, g), recursive=True)})
+    findings = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        allowed = {
+            id(m)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef) and n.name == allowed_def
+            for m in ast.walk(n)
+        }
+        findings += [
+            f"{os.path.relpath(path, root)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if id(n) not in allowed and hit(n)
+        ]
+    return findings
+
+
+def test_stream_sinks_share_one_drain():
+    """Every stream sink runs the poll tick through
+    ``events_stream.drain``: no ``.trigger(`` call under ``streaming/``
+    outside it, so the checkpoint + availableNow + await chain that
+    restart safety rests on is written once."""
+    import ast
+
+    findings = _source_findings(
+        ["etl_service_spark/streaming/*.py"],
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "trigger",
+        allowed_def="drain",
+    )
+    assert not findings, findings
+
+
+def test_stream_twins_import_batch_hashes():
+    """The stream and pipeline twins take the Knuth multiplicative
+    hash (HLL and CMS rows, the train/val/test split) from their batch
+    operators: the constant 2654435761 appears nowhere under
+    ``streaming/`` or in ``plans/corpus_build.py``, so a twin cannot
+    drift from the oracle-checked batch form."""
+    import ast
+
+    findings = _source_findings(
+        ["etl_service_spark/streaming/*.py", "etl_service_spark/plans/corpus_build.py"],
+        lambda n: isinstance(n, ast.Constant)
+        and (n.value == 2654435761 or (isinstance(n.value, str) and "2654435761" in n.value)),
+    )
+    assert not findings, findings
+
+
+def test_python_tokenizer_has_one_definition():
+    """The Python third of the tokenizer is ``portable.py_tokens``:
+    no module but ``functions/portable.py`` compiles TOKEN_SPLIT_RE or
+    its literal ``[^a-z0-9]+``."""
+    import ast
+
+    def compiles_token_re(n) -> bool:
+        if not (
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "compile"
+            and isinstance(n.func.value, ast.Name)
+            and n.func.value.id == "re"
+            and n.args
+        ):
+            return False
+        a = n.args[0]
+        return (isinstance(a, ast.Constant) and a.value == "[^a-z0-9]+") or getattr(
+            a, "attr", getattr(a, "id", None)
+        ) == "TOKEN_SPLIT_RE"
+
+    findings = [
+        f
+        for f in _source_findings(["etl_service_spark/**/*.py"], compiles_token_re)
+        if not f.startswith("etl_service_spark/functions/portable.py:")
+    ]
+    assert not findings, findings
+
+
 def test_plan_audit_flags_single_partition_windows(spark, sf_dir):
     """The round-9 audit rule end-to-end: an unpartitioned NTILE over
     a fact table (the pre-fix layout_zorder_skipping / RFM shape)

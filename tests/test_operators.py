@@ -696,14 +696,16 @@ def test_scd2_merge_semantics_and_idempotence(spark):
     assert {tuple(r) for r in again.collect()} == rows
 
 
-def test_cosine_topk_staged_ranks_nan_first_like_engines(spark):
-    """A zero-norm embedding yields NaN cosine; Spark and DuckDB ORDER BY
-    cosine DESC rank NaN as GREATEST, so the staged Arrow kernel must
-    keep NaN candidates at the top of its per-partition top-k instead of
-    lexsort-dropping them past the cut."""
-    import math
+def test_cosine_topk_staged_ranks_zero_norm_last_like_oracle(spark):
+    """A zero-norm embedding yields a 0/0 cosine: NaN in the Arrow
+    kernel, NULL in DuckDB, whose ``ORDER BY cosine DESC`` sorts it
+    LAST. The kernel's rows equal cosine_topk_sql's: the zero-norm
+    candidate misses the top 3 and takes rank 5 of 5 with a NULL
+    cosine."""
+    import duckdb
+    import pandas as pd
 
-    from etl_service_spark.operators.similarity import DIM, cosine_topk_staged
+    from etl_service_spark.operators.similarity import DIM, cosine_topk_sql, cosine_topk_staged
 
     rows = []
     for vid in range(6):
@@ -715,11 +717,23 @@ def test_cosine_topk_staged_ranks_nan_first_like_engines(spark):
     spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").createOrReplaceTempView(
         "__nan_emb"
     )
-    out = cosine_topk_staged(spark, k=3, n_queries=1, view="__nan_emb").collect()
-    got = [(r["q_id"], r["n_id"], r["rnk"]) for r in out]
-    assert [(q, n) for q, n, _ in got][0] == (0, 4)  # NaN candidate ranks first
-    assert math.isnan(out[0]["cosine"])
-    assert len(got) == 3 and [r[2] for r in got] == [1, 2, 3]
+    con = duckdb.connect()
+    con.register(
+        "__nan_emb",
+        pd.DataFrame({"vec_id": [r[0] for r in rows], "embedding": [r[1] for r in rows]}),
+    )
+    for k in (3, 5):
+        by_rank = lambda t: (t[0], t[2])  # noqa: E731  (q_id, rnk)
+        got = sorted(
+            (tuple(r) for r in cosine_topk_staged(spark, k=k, n_queries=1, view="__nan_emb").collect()),
+            key=by_rank,
+        )
+        want = sorted(con.execute(cosine_topk_sql(k, 1, view="__nan_emb")).fetchall(), key=by_rank)
+        assert got == want
+        if k == 3:
+            assert 4 not in [n for _q, n, _r, _c in got]
+        else:
+            assert got[-1] == (0, 4, 5, None)
 
 
 def test_range_search_drops_zero_norm_like_oracle(spark):

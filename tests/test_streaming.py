@@ -345,6 +345,47 @@ def test_foreachbatch_upsert_keeps_aggregate_table_fresh(spark, sf_dir, tmp_path
     assert got == expect
 
 
+def test_dynamic_overwrites_leave_session_conf_alone(spark, sf_dir, tmp_path, monkeypatch):
+    """The two dynamic partition overwrites (write_copy_idempotent and
+    run_upsert_aggregate's foreachBatch) ask for dynamic mode on their
+    own write, never through the shared session's
+    spark.sql.sources.partitionOverwriteMode — a concurrent step's
+    static overwrite in that window would otherwise turn dynamic. The
+    per-write option still replaces only the written partition."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from etl_service_spark.operators.copy import SLICE_COL, write_copy_idempotent
+    from etl_service_spark.streaming.events_stream import run_upsert_aggregate
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    set_keys = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, k, v):
+        set_keys.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    before = spark.conf.get(key)
+
+    target = str(tmp_path / "copy")
+    rows = lambda month, ids: spark.createDataFrame(  # noqa: E731
+        [(i, month) for i in ids], f"id bigint, {SLICE_COL} string"
+    )
+    write_copy_idempotent(rows("202401", [1, 2]), target)
+    write_copy_idempotent(rows("202402", [3]), target)
+    assert write_copy_idempotent(rows("202402", [4, 5]), target) == 4  # 202401 kept
+
+    landing = str(tmp_path / "landing")
+    spark.read.parquet(os.path.join(sf_dir, "events.parquet")).write.parquet(landing)
+    run_upsert_aggregate(
+        read_event_stream(spark, landing), str(tmp_path / "ckpt"), str(tmp_path / "agg")
+    )
+    assert spark.read.parquet(str(tmp_path / "agg")).count() > 0
+
+    assert key not in set_keys
+    assert spark.conf.get(key) == before
+
 def test_streaming_hll_rollup_matches_batch(spark, sf_dir, tmp_path):
     """The maintained register table must equal the batch recompute over
     everything seen, however the stream was chopped — union+MAX is the
